@@ -38,6 +38,7 @@ class SearchEngine:
             BlockCache,
             DirectBlockReader,
             DirectDocMapReader,
+            DirectTermStatsReader,
         )
 
         sp = self.spark
@@ -47,28 +48,29 @@ class SearchEngine:
         self.n_docs = corpus["n_docs"]
         self.avgdl = corpus["avgdl"]
         self.doc_map = sp.read.parquet(f"{self.base_path}/doc_map")
-        # cold-path misses read the block files directly through Arrow
-        # (footer-pruned row groups, zero Spark jobs) when the index is
-        # on a locally readable path; remote/URI paths fall back to the
-        # pruned Spark scan
-        try:
-            direct = DirectBlockReader(f"{self.base_path}/blocks")
-        except Exception:
-            direct = None
-        self.block_cache = BlockCache(self.blocks, direct=direct)
-        # same treatment for the URL resolve: doc_ids are ascending and
-        # contiguous per doc_map file, so row-group stats prune the
-        # k-id lookup — no Spark job on the serving path
-        try:
-            self._doc_map_direct = DirectDocMapReader(
-                f"{self.base_path}/doc_map"
-            )
-        except Exception:
-            self._doc_map_direct = None
-        #: LRU-bounded like the adjacent BlockCache — an open-ended
-        #: query stream (typos included) must not grow driver memory
-        #: monotonically (int values are tiny, but 10^8 distinct terms
-        #: of key strings are not)
+
+        def direct(reader, table: str):
+            # the serving reads (df lookup, cold-path block fetch, URL
+            # resolve) go straight to the parquet files through Arrow —
+            # footer-pruned row groups, zero Spark jobs — when the index
+            # is on a locally readable path; remote/URI paths get None
+            # and fall back to pruned Spark scans
+            try:
+                return reader(f"{self.base_path}/{table}")
+            except Exception:
+                return None
+
+        self.block_cache = BlockCache(
+            self.blocks, direct=direct(DirectBlockReader, "blocks")
+        )
+        self._doc_map_direct = direct(DirectDocMapReader, "doc_map")
+        self._term_stats_direct = direct(DirectTermStatsReader, "term_stats")
+        #: df cache in front of the Spark fallback only (a direct
+        #: reader's decoded row groups are its own cache); LRU-bounded
+        #: like the adjacent BlockCache — an open-ended query stream
+        #: (typos included) must not grow driver memory monotonically
+        #: (int values are tiny, but 10^8 distinct terms of key strings
+        #: are not)
         self._df_cache: "OrderedDict[str, int]" = OrderedDict()
         self._df_cache_max = 100_000
         #: route taken by the last search/count call — "driver" (WAND
@@ -77,8 +79,14 @@ class SearchEngine:
         self.last_route: str | None = None
 
     def _dfs(self, terms: list[str]) -> dict[str, int]:
-        """Per-term df with a driver-side cache; misses go through one
-        pushed-down IN filter on ``term_stats`` (≤ |query| rows)."""
+        """Per-term df, 0 for terms the index lacks. A locally readable
+        index answers from the term_stats files
+        (:class:`~.query.wand.DirectTermStatsReader`, no Spark job);
+        otherwise misses of the driver-side LRU go through
+        ``router.term_dfs`` — one Spark job, a pushed-down IN filter on
+        ``term_stats`` (≤ |query| rows)."""
+        if self._term_stats_direct is not None:
+            return self._term_stats_direct.fetch(terms)
         from .query.router import term_dfs
 
         misses = sorted({t for t in terms if t not in self._df_cache})

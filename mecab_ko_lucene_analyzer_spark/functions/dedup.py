@@ -73,7 +73,6 @@ def ngram_jaccard_pairs(
     min_common: int = 5,
     n: int = 3,
     text: str = "text",
-    prefilter: bool = True,
     hash_impl: str = "md5",
     pack_ids: bool = False,
 ) -> DataFrame:
@@ -105,8 +104,7 @@ def ngram_jaccard_pairs(
     nested ``transform``+``flatten`` struct build it replaces (HOF
     expressions allocate per-element structs outside codegen; a
     Generate unrolls in the generated loop). The ``size > 1`` bucket
-    filter subsumes the old ``df > 1`` prefilter (``prefilter`` is
-    kept for API compatibility and ignored). Caveat shared with all
+    filter drops single-doc shingles. Caveat shared with all
     exact-Jaccard formulations:
     a degenerate stop-shingle makes its bucket quadratic — the member
     list is bounded by the shingle's df either way (the join would emit

@@ -600,6 +600,15 @@ def _stats_from_partials(partials: DataFrame):
     return term_stats, doc_stats
 
 
+def _write_term_stats(term_stats: DataFrame, path: str) -> None:
+    """Write term_stats sorted by term within each file — a partition-
+    local sort, no exchange and no extra job — so row-group footer
+    ranges are disjoint and a serving df lookup
+    (``query/wand.py::DirectTermStatsReader``) reads at most one row
+    group per file at any index size."""
+    term_stats.sortWithinPartitions("term").write.mode("overwrite").parquet(path)
+
+
 def _write_corpus_stats(spark, path: str, n_docs: int, avgdl: float) -> None:
     """corpus_stats is ONE row, but a Spark write is a full job
     (scheduling + task launch + commit protocol ≈ 0.5 s of pure fixed
@@ -933,7 +942,7 @@ def build_and_write(
 
         def _write_terms():
             try:
-                term_stats.write.mode("overwrite").parquet(f"{base_path}/term_stats")
+                _write_term_stats(term_stats, f"{base_path}/term_stats")
             except BaseException as e:
                 ts_err.append(e)
 
@@ -974,10 +983,12 @@ def build_and_write(
         term_stats, doc_stats = _stats_from_partials(partials)
         ts = term_stats.persist()
         ts_err: list[BaseException] = []
+        ts_done: list[float] = []
 
         def _write_terms():
             try:
-                ts.write.mode("overwrite").parquet(f"{base_path}/term_stats")
+                _write_term_stats(ts, f"{base_path}/term_stats")
+                ts_done.append(_time.perf_counter())
             except BaseException as e:
                 ts_err.append(e)
 
@@ -1010,11 +1021,13 @@ def build_and_write(
             ts.unpersist()
         if ts_err:
             raise ts_err[0]
+        # the stats stage ends when its last sink does: the threaded
+        # term_stats write may outlast the corpus write
         manifest.record(
             "stats",
             f"{base_path}/term_stats",
             {"n_docs": n_docs, "avgdl": avgdl},
-            t_stats - t0,
+            max(t_stats, *ts_done) - t0,
         )
         manifest.record(
             "blocks",

@@ -80,7 +80,10 @@ _PARTIAL_SCHEMA = T.StructType(
 
 def term_dfs(term_stats: DataFrame, terms: list[str]) -> dict[str, int]:
     """df per query term via a pushed-down IN filter on ``term_stats``
-    — the driver receives at most ``len(terms)`` rows. Terms absent
+    — one Spark job; the driver receives at most ``len(terms)`` rows.
+    ``SearchEngine`` calls it only when the index is not locally
+    readable: a local index answers from the parquet files through
+    ``wand.DirectTermStatsReader`` (same contract, no job). Terms absent
     from the index come back as df 0, NOT missing: the lookup covered
     them, so absence is knowledge — ``phrase_match_docs`` treats a
     missing key as "df unknown, skip pruning" but a 0 as the instant

@@ -14,6 +14,7 @@ the heap — matching the oracle's deterministic sort.
 
 from __future__ import annotations
 
+import bisect
 import heapq
 from dataclasses import dataclass, field
 
@@ -34,6 +35,7 @@ __all__ = [
     "BlockCache",
     "DirectBlockReader",
     "DirectDocMapReader",
+    "DirectTermStatsReader",
 ]
 
 _INF = 1 << 62
@@ -307,20 +309,21 @@ class DirectBlockReader:
         return out
 
 
-class DirectDocMapReader:
-    """Serving-node URL resolution without a Spark job — the doc_map
-    sibling of :class:`DirectBlockReader`. ``build.py::_doc_map_df``
-    writes ascending, per-partition-contiguous doc_ids, so parquet
-    row-group statistics prune a k-id lookup to the row groups that
-    can contain them. Removes the last per-query Spark job from
-    ``engine.search`` (the ``doc_map.filter(isin).collect()`` URL
-    resolve)."""
+class _DirectKeyedReader:
+    """Point lookups ``key → value`` straight from a parquet table via
+    Arrow — NO Spark job. Footer (min, max) statistics of ``key`` prune
+    each lookup to the row groups whose range can hold a wanted key;
+    each such row group decodes once into a bounded cache (a 10^12-doc
+    table can't accrete unboundedly on one serving node) and answers
+    later lookups with a binary search over its sorted keys. Row groups
+    whose keys are not sorted (a foreign writer) fall back to a dict:
+    still exact, they just prune less. Lookups are per key, not
+    vectorized: a serving request asks for a handful of keys, where
+    numpy's per-call overhead would dominate."""
 
-    def __init__(self, path: str):
-        self._files = _footer_index(path, "doc_id", "doc_map")
-        # row groups decode once and serve from memory afterwards
-        # (searchsorted lookups on the sorted doc_id array); bounded so
-        # a 10^12-doc map can't accrete unboundedly on one serving node
+    def __init__(self, path: str, key: str, value: str, what: str):
+        self._files = _footer_index(path, key, what)
+        self._key, self._value = key, value
         self._rg_cache: dict[tuple[int, int], tuple] = {}
         self._rg_cache_max = 256
 
@@ -329,48 +332,66 @@ class DirectDocMapReader:
         ent = self._rg_cache.get(key)
         if ent is None:
             tbl = self._files[fid][0].read_row_groups(
-                [rgid], columns=["doc_id", "url"]
+                [rgid], columns=[self._key, self._value]
             )
-            dids = tbl.column("doc_id").to_numpy()
-            urls = tbl.column("url")
-            if dids.size > 1 and not bool(np.all(np.diff(dids) >= 0)):
-                # unsorted (foreign writer): fall back to a dict
-                ent = (None, dict(zip(dids.tolist(), urls.to_pylist())))
+            keys = tbl.column(self._key).to_numpy()
+            vals = tbl.column(self._value)
+            if not bool(np.all(keys[1:] >= keys[:-1])):
+                ent = (None, dict(zip(keys.tolist(), vals.to_pylist())))
             else:
-                ent = (dids, urls)
+                ent = (keys, vals)
             if len(self._rg_cache) >= self._rg_cache_max:
                 self._rg_cache.clear()
             self._rg_cache[key] = ent
         return ent
 
-    def fetch(self, ids: list[int]) -> dict[int, str]:
-        want = np.unique(np.asarray(list(ids), dtype=np.int64))
-        if want.size == 0:
-            return {}
-        out: dict[int, str] = {}
+    def fetch(self, keys) -> dict:
+        """``{key: value}`` for the wanted keys present in the table."""
+        want = sorted(set(keys))
+        out: dict = {}
         for fid, (_, ranges) in enumerate(self._files):
             for rgid, (lo, hi) in enumerate(ranges):
-                if lo is None:
-                    sel = want
-                else:
-                    if want[-1] < lo or want[0] > hi:
-                        continue
-                    sel = want[(want >= lo) & (want <= hi)]
-                    if sel.size == 0:
-                        continue
-                dids, urls = self._row_group(fid, rgid)
-                if dids is None:  # dict fallback
-                    for d in sel.tolist():
-                        if d in urls:
-                            out[d] = urls[d]
+                sel = want if lo is None else [k for k in want if lo <= k <= hi]
+                if not sel:
                     continue
-                idx = np.searchsorted(dids, sel)
-                ok = idx < dids.size
-                idx_c = np.where(ok, idx, 0)
-                ok &= dids[idx_c] == sel
-                for d, i in zip(sel[ok].tolist(), idx_c[ok].tolist()):
-                    out[d] = urls[i].as_py()
+                rg_keys, vals = self._row_group(fid, rgid)
+                if rg_keys is None:  # dict fallback
+                    out.update((k, vals[k]) for k in sel if k in vals)
+                    continue
+                for k in sel:
+                    i = bisect.bisect_left(rg_keys, k)
+                    if i < rg_keys.size and rg_keys[i] == k:
+                        out[k] = vals[i].as_py()
         return out
+
+
+class DirectDocMapReader(_DirectKeyedReader):
+    """Serving-node URL resolution without a Spark job — the doc_map
+    sibling of :class:`DirectBlockReader`. ``build.py::_doc_map_df``
+    writes ascending, per-partition-contiguous doc_ids, so parquet
+    row-group statistics prune a k-id lookup to the row groups that
+    can contain them. Replaces the ``doc_map.filter(isin).collect()``
+    URL-resolve job of ``engine.search``."""
+
+    def __init__(self, path: str):
+        super().__init__(path, "doc_id", "url", "doc_map")
+
+
+class DirectTermStatsReader(_DirectKeyedReader):
+    """Serving-node df lookup without a Spark job — the term_stats
+    sibling of :class:`DirectDocMapReader`. Every writer sorts
+    term_stats by term within each file, so a lookup reads at most one
+    row group per file at any index size; the decoded row groups are
+    the df cache."""
+
+    def __init__(self, path: str):
+        super().__init__(path, "term", "df", "term_stats")
+
+    def fetch(self, terms: list[str]) -> dict[str, int]:
+        """Same contract as ``router.term_dfs``: every distinct term
+        gets an entry, df 0 when the index lacks it."""
+        found = super().fetch(terms)
+        return {t: found.get(t, 0) for t in set(terms)}
 
 
 class BlockCache:
@@ -432,8 +453,10 @@ def load_query_cursors(
     with_positions: bool = False,
     cache: BlockCache | None = None,
 ) -> list[TermCursor]:
-    """Build driver-side cursors for the query terms (one Spark job, or
-    zero on a warm ``cache``). ``term_stats`` is accepted for API
+    """Build driver-side cursors for the query terms. Blocks come from
+    ``cache`` when given — no Spark job on a hit, nor on a miss when
+    the cache has a :class:`DirectBlockReader` — else from one
+    term-pruned Spark scan. ``term_stats`` is accepted for API
     compatibility but unused — df derives from block metadata."""
     if cache is not None:
         by_term = cache.get(list(query_terms), with_positions)

@@ -374,7 +374,7 @@ def compact_incremental(
     recomputed stats describe the post-delete corpus.
     """
     from ..index.blocks import build_blocks
-    from ..index.build import _stats_from_postings
+    from ..index.build import _stats_from_postings, _write_term_stats
 
     version = None
     if out_path is None:
@@ -417,7 +417,7 @@ def compact_incremental(
         postings = postings.join(doc_map.select("doc_id"), "doc_id", "left_semi")
     term_stats, doc_stats, corpus_stats = _stats_from_postings(postings)
     doc_stats.write.mode("overwrite").parquet(f"{out}/doc_stats")
-    term_stats.write.mode("overwrite").parquet(f"{out}/term_stats")
+    _write_term_stats(term_stats, f"{out}/term_stats")
     corpus_stats.write.mode("overwrite").parquet(f"{out}/corpus_stats")
     corpus = spark.read.parquet(f"{out}/corpus_stats").first()
 

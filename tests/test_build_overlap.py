@@ -3,10 +3,14 @@ pure scheduling change: every table a fresh overlapped build writes is
 row-identical to the sequential (resume-path) build, and the manifest
 records the same stage set with the same counters."""
 
+import glob
 import json
 import shutil
+import time
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.readwriter import DataFrameWriter
 
 from mecab_ko_lucene_analyzer_spark.index import build_and_write
 from mecab_ko_lucene_analyzer_spark.sources import synthesize_webpages
@@ -36,6 +40,14 @@ def test_overlapped_build_tables_identical_to_sequential(
         a = sorted(map(repr, spark.read.parquet(f"{seq}/{t}").collect()))
         b = sorted(map(repr, spark.read.parquet(f"{ov}/{t}").collect()))
         assert a == b, f"table {t} differs between sequential and overlapped build"
+    # both paths write term_stats term-sorted within each file (what the
+    # serving df reader's one-row-group-per-file lookup relies on)
+    for base in (seq, ov):
+        files = glob.glob(f"{base}/term_stats/*.parquet")
+        assert files
+        for fn in files:
+            terms = pq.read_table(fn, columns=["term"]).column("term").to_pylist()
+            assert terms == sorted(terms), f"{fn} is not term-sorted"
     with open(f"{seq}/manifest.json") as f:
         ms = json.load(f)
     with open(f"{ov}/manifest.json") as f:
@@ -72,3 +84,25 @@ def test_overlapped_build_resumes_via_sequential_path(
         sorted(map(repr, spark.read.parquet(f"{base}/blocks").collect()))
         == before_blocks
     )
+
+
+def test_overlapped_stats_seconds_cover_the_term_stats_write(
+    spark, pages, tmp_path_factory, monkeypatch
+):
+    """The overlapped path writes term_stats on a thread that can outlast
+    the rest of the stats stage; the manifest's stats seconds must run
+    to the end of that write."""
+    delay = 5.0
+    real_parquet = DataFrameWriter.parquet
+
+    def slow_parquet(self, path, *args, **kwargs):
+        if str(path).endswith("/term_stats"):
+            time.sleep(delay)
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", slow_parquet)
+    base = str(tmp_path_factory.mktemp("slow") / "idx")
+    _build(spark, pages, base, monkeypatch, overlap=True)
+    with open(f"{base}/manifest.json") as f:
+        stages = json.load(f)["stages"]
+    assert stages["stats"]["seconds"] >= delay

@@ -305,6 +305,94 @@ def test_direct_doc_map_matches_spark_resolve(engine):
     assert all(h["url"] == via_spark[h["doc_id"]] for h in hits)
 
 
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by the statusTracker under a job
+    group of its own. A marker job in a second group closes the count:
+    the listener bus delivers job starts in order, so once the marker
+    shows, every job ``fn`` ran shows too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, marker = f"audit-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "serving audit")
+    try:
+        fn()
+        sc.setJobGroup(marker, "serving audit marker")
+        sc.parallelize([0], 1).count()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(marker):
+            assert time.monotonic() < deadline, "marker job never showed"
+            time.sleep(0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_search_runs_no_spark_job_on_a_local_index(spark):
+    """On a locally readable index every serving read — df lookup,
+    block fetch, URL resolve — bypasses Spark: a fresh engine's first
+    tail query (a noun plus an unseen number) and first head query run
+    zero Spark jobs. A term hotter than ``max_driver_df`` still routes
+    the query to the distributed scorer, with its answer."""
+    from mecab_ko_lucene_analyzer_spark.query.ast import ast_terms
+    from mecab_ko_lucene_analyzer_spark.query.router import (
+        distributed_ast_topk,
+        term_dfs,
+    )
+
+    opt = AnalyzerOption(synonyms=SynonymDictionary({"검색": ["서치"]}))
+    fresh = SearchEngine(spark, BASE, opt)
+    head, tail = "검색 엔진", "엔진 7351"
+    hits = {}
+
+    def serve():
+        hits[tail] = fresh.search(tail, k=10)
+        hits[head] = fresh.search(head, k=10)
+
+    assert _spark_jobs(spark, serve) == 0
+    assert fresh.last_route == "driver" and hits[head]
+    ast = fresh.build_query(head)
+    dfs = term_dfs(fresh.term_stats, sorted(ast_terms(ast)))
+    want = distributed_ast_topk(ast, fresh.blocks, dfs, fresh.n_docs, fresh.avgdl, 10)
+    hot = SearchEngine(spark, BASE, opt, max_driver_df=dfs["엔진"] - 1)
+    got = hot.search(head, k=10)
+    assert hot.last_route == "distributed"
+    for served in (hits[head], got):
+        assert [h["doc_id"] for h in served] == [d for d, _ in want]
+        for h, (_, s) in zip(served, want):
+            assert h["score"] == pytest.approx(s, abs=1e-9)
+
+
+def test_dfs_fall_back_to_term_dfs_when_the_index_is_not_local(
+    spark, engine, monkeypatch
+):
+    """Where the term_stats files cannot be opened directly (a remote
+    index), ``_dfs`` answers through the Spark lookup ``term_dfs``."""
+    import mecab_ko_lucene_analyzer_spark.query.wand as wand_mod
+    from mecab_ko_lucene_analyzer_spark.query import router
+
+    def unreadable(path):
+        raise OSError(f"not a local path: {path}")
+
+    monkeypatch.setattr(wand_mod, "DirectTermStatsReader", unreadable)
+    remote = SearchEngine(spark, BASE, AnalyzerOption())
+    assert remote._term_stats_direct is None
+    calls = []
+    real = router.term_dfs
+
+    def counted(term_stats, terms):
+        calls.append(list(terms))
+        return real(term_stats, terms)
+
+    monkeypatch.setattr(router, "term_dfs", counted)
+    terms = ["검색", "엔진", "없는용어", "검색"]
+    assert remote._dfs(terms) == engine._term_stats_direct.fetch(terms)
+    assert calls == [["검색", "없는용어", "엔진"]]
+
+
 def test_query_cli_bulk(engine, spark, tmp_path, capsys, monkeypatch):
     """jobs/query.py --bulk: a query file scored in one job, JSON-lines
     out, ranks agreeing with the serving path."""
@@ -465,9 +553,11 @@ def test_highlight_synonym_expanded_terms():
 def test_df_cache_is_lru_bounded(engine):
     """The per-term df cache must evict (LRU) instead of growing with
     every distinct query term forever — a long-lived serving node sees
-    an open-ended term stream (typos included)."""
+    an open-ended term stream (typos included). The cache sits in front
+    of the Spark fallback, so the test takes that path."""
     engine._df_cache.clear()
     old_max = engine._df_cache_max
+    direct, engine._term_stats_direct = engine._term_stats_direct, None
     try:
         engine._df_cache_max = 4
         for i in range(10):
@@ -481,6 +571,7 @@ def test_df_cache_is_lru_bounded(engine):
         assert dfs["없는용어0"] == 0
     finally:
         engine._df_cache_max = old_max
+        engine._term_stats_direct = direct
 
 
 def test_whitespace_highlight_spans_semantics():
