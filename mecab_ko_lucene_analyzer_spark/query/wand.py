@@ -244,7 +244,84 @@ def _footer_index(path: str, stats_col: str, what: str) -> list:
     return files
 
 
-class DirectBlockReader:
+class _DirectKeyedReader:
+    """Point lookups by ``key`` straight from a parquet table via Arrow
+    — NO Spark job. Footer (min, max) statistics of ``key`` prune each
+    lookup to the row groups whose range can hold a wanted key; each
+    such row group decodes once into a byte-bounded LRU cache (a
+    10^12-doc table can't accrete unboundedly on one serving node) and
+    answers later lookups with a binary search over its keys. A row
+    group whose keys are not sorted (a foreign writer) is sorted once
+    as it decodes — a stable sort, so a key's rows keep their file
+    order: still exact, it just prunes less. A key may own several
+    rows (a term's blocks). Lookups are per key, not vectorized: a
+    serving request asks for a handful of keys, where numpy's per-call
+    overhead would dominate."""
+
+    #: decoded bytes kept per reader (Arrow buffers plus a rough
+    #: per-key cost of the Python key list)
+    cache_bytes = 256 << 20
+
+    def __init__(self, path: str, key: str, what: str):
+        from collections import OrderedDict
+
+        self._files = _footer_index(path, key, what)
+        self._key = key
+        self._rg_cache: "OrderedDict[tuple, tuple[list, object, int]]" = OrderedDict()
+        self._rg_bytes = 0
+
+    def _row_group(self, fid: int, rgid: int, columns: tuple) -> tuple[list, object, int]:
+        """(sorted keys, Arrow table of ``columns`` in key order, cached
+        bytes) of one row group, from the cache or decoded once."""
+        import pyarrow.compute as pc
+
+        ck = (fid, rgid, columns)
+        ent = self._rg_cache.get(ck)
+        if ent is not None:
+            self._rg_cache.move_to_end(ck)
+            return ent
+        tbl = self._files[fid][0].read_row_groups([rgid], columns=[self._key, *columns])
+        keys = tbl.column(self._key)
+        n = tbl.num_rows
+        if n > 1 and not pc.all(
+            pc.less_equal(keys.slice(0, n - 1), keys.slice(1))
+        ).as_py():
+            tbl = tbl.take(pc.sort_indices(keys))
+        vals = tbl.select(list(columns))
+        ent = (tbl.column(self._key).to_pylist(), vals, vals.nbytes + 64 * n)
+        while self._rg_cache and self._rg_bytes + ent[2] > self.cache_bytes:
+            self._rg_bytes -= self._rg_cache.popitem(last=False)[1][2]
+        self._rg_cache[ck] = ent
+        self._rg_bytes += ent[2]
+        return ent
+
+    def _rows(self, keys, columns: tuple):
+        """Yield ``(key, Arrow table of its rows)`` for every wanted key
+        present, row groups in file order."""
+        want = sorted(set(keys))
+        if not want:
+            return
+        for fid, (_, ranges) in enumerate(self._files):
+            for rgid, (lo, hi) in enumerate(ranges):
+                sel = want if lo is None else [k for k in want if lo <= k <= hi]
+                if not sel:
+                    continue
+                rg_keys, tbl, _ = self._row_group(fid, rgid, columns)
+                for k in sel:
+                    i = bisect.bisect_left(rg_keys, k)
+                    j = bisect.bisect_right(rg_keys, k, i)
+                    if i < j:
+                        yield k, tbl.slice(i, j - i)
+
+    def _values(self, keys, value: str) -> dict:
+        """``{key: value}`` for the wanted keys present (one row each)."""
+        return {k: rows.column(0)[0].as_py() for k, rows in self._rows(keys, (value,))}
+
+
+_BLOCK_COLS = ("first_doc", "n_docs", "doc_deltas", "tfs", "doc_lens", "block_max_impact")
+
+
+class DirectBlockReader(_DirectKeyedReader):
     """Serving-node cold-path reader: term-pruned block fetch straight
     from the parquet files via Arrow — NO Spark job.
 
@@ -254,7 +331,8 @@ class DirectBlockReader:
     groups that can contain it — the Lucene-segment access shape. File
     handles and per-row-group (min, max) term ranges load once from the
     footers (a few KB each) and are kept for the reader's lifetime;
-    each subsequent miss costs only the matching row-group reads.
+    a row group decodes on its first miss and later misses in it are
+    a binary search over the decoded terms, with no file read.
 
     Round-3 measured the cold serving path at ~180 ms vs ~43 warm: the
     cost was the per-miss Spark job (scheduler + task launch over every
@@ -263,38 +341,18 @@ class DirectBlockReader:
     O(row groups containing its terms)."""
 
     def __init__(self, path: str):
-        self._files = _footer_index(path, "term", "block")
+        super().__init__(path, "term", "block")
 
     def fetch(
         self, terms: list[str], with_positions: bool = False
     ) -> dict[str, tuple[list[_Block], int]]:
         """Same contract as :func:`fetch_term_blocks`."""
-        want = sorted(set(terms))
-        if not want:
-            return {}
-        cols = ["term", "first_doc", "n_docs", "doc_deltas", "tfs", "doc_lens",
-                "block_max_impact"]
-        if with_positions:
-            cols.append("pos_deltas")
+        cols = _BLOCK_COLS + (("pos_deltas",) if with_positions else ())
         out: dict[str, tuple[list[_Block], int]] = {}
-        for pf, ranges in self._files:
-            rgs = [
-                i
-                for i, (lo, hi) in enumerate(ranges)
-                if lo is None or any(lo <= t <= hi for t in want)
-            ]
-            if not rgs:
-                continue
-            tbl = pf.read_row_groups(rgs, columns=cols)
-            want_set = set(want)
-            terms_col = tbl.column("term").to_pylist()
-            keep = [i for i, t in enumerate(terms_col) if t in want_set]
-            if not keep:
-                continue
-            data = {c: tbl.column(c).take(keep).to_pylist() for c in cols}
-            for i in range(len(keep)):
-                t = data["term"][i]
-                blks, df = out.get(t, ([], 0))
+        for t, rows in self._rows(terms, cols):
+            data = {c: rows.column(c).to_pylist() for c in cols}
+            blks, df = out.get(t, ([], 0))
+            for i in range(rows.num_rows):
                 blks.append(
                     _Block(
                         data["first_doc"][i],
@@ -305,63 +363,7 @@ class DirectBlockReader:
                         bytes(data["pos_deltas"][i]) if with_positions else b"",
                     )
                 )
-                out[t] = (blks, df + data["n_docs"][i])
-        return out
-
-
-class _DirectKeyedReader:
-    """Point lookups ``key → value`` straight from a parquet table via
-    Arrow — NO Spark job. Footer (min, max) statistics of ``key`` prune
-    each lookup to the row groups whose range can hold a wanted key;
-    each such row group decodes once into a bounded cache (a 10^12-doc
-    table can't accrete unboundedly on one serving node) and answers
-    later lookups with a binary search over its sorted keys. Row groups
-    whose keys are not sorted (a foreign writer) fall back to a dict:
-    still exact, they just prune less. Lookups are per key, not
-    vectorized: a serving request asks for a handful of keys, where
-    numpy's per-call overhead would dominate."""
-
-    def __init__(self, path: str, key: str, value: str, what: str):
-        self._files = _footer_index(path, key, what)
-        self._key, self._value = key, value
-        self._rg_cache: dict[tuple[int, int], tuple] = {}
-        self._rg_cache_max = 256
-
-    def _row_group(self, fid: int, rgid: int):
-        key = (fid, rgid)
-        ent = self._rg_cache.get(key)
-        if ent is None:
-            tbl = self._files[fid][0].read_row_groups(
-                [rgid], columns=[self._key, self._value]
-            )
-            keys = tbl.column(self._key).to_numpy()
-            vals = tbl.column(self._value)
-            if not bool(np.all(keys[1:] >= keys[:-1])):
-                ent = (None, dict(zip(keys.tolist(), vals.to_pylist())))
-            else:
-                ent = (keys, vals)
-            if len(self._rg_cache) >= self._rg_cache_max:
-                self._rg_cache.clear()
-            self._rg_cache[key] = ent
-        return ent
-
-    def fetch(self, keys) -> dict:
-        """``{key: value}`` for the wanted keys present in the table."""
-        want = sorted(set(keys))
-        out: dict = {}
-        for fid, (_, ranges) in enumerate(self._files):
-            for rgid, (lo, hi) in enumerate(ranges):
-                sel = want if lo is None else [k for k in want if lo <= k <= hi]
-                if not sel:
-                    continue
-                rg_keys, vals = self._row_group(fid, rgid)
-                if rg_keys is None:  # dict fallback
-                    out.update((k, vals[k]) for k in sel if k in vals)
-                    continue
-                for k in sel:
-                    i = bisect.bisect_left(rg_keys, k)
-                    if i < rg_keys.size and rg_keys[i] == k:
-                        out[k] = vals[i].as_py()
+            out[t] = (blks, df + sum(data["n_docs"]))
         return out
 
 
@@ -374,7 +376,11 @@ class DirectDocMapReader(_DirectKeyedReader):
     URL-resolve job of ``engine.search``."""
 
     def __init__(self, path: str):
-        super().__init__(path, "doc_id", "url", "doc_map")
+        super().__init__(path, "doc_id", "doc_map")
+
+    def fetch(self, ids: list[int]) -> dict[int, str]:
+        """``{doc_id: url}`` for the wanted ids present."""
+        return self._values(ids, "url")
 
 
 class DirectTermStatsReader(_DirectKeyedReader):
@@ -385,12 +391,12 @@ class DirectTermStatsReader(_DirectKeyedReader):
     the df cache."""
 
     def __init__(self, path: str):
-        super().__init__(path, "term", "df", "term_stats")
+        super().__init__(path, "term", "term_stats")
 
     def fetch(self, terms: list[str]) -> dict[str, int]:
         """Same contract as ``router.term_dfs``: every distinct term
         gets an entry, df 0 when the index lacks it."""
-        found = super().fetch(terms)
+        found = self._values(terms, "df")
         return {t: found.get(t, 0) for t in set(terms)}
 
 

@@ -437,6 +437,71 @@ def test_direct_block_reader_positions_and_errors(spark, materialized):
         DirectBlockReader("/tmp/definitely_missing_block_dir_xyz")
 
 
+def _payloads(fetched):
+    """Block payloads per term, order-free (cursors sort by first_doc)."""
+    return {
+        t: (df, sorted(
+            (b.first_doc, b.doc_deltas, b.tfs, b.doc_lens, b.max_impact, b.pos_deltas)
+            for b in blks
+        ))
+        for t, (blks, df) in fetched.items()
+    }
+
+
+def test_direct_block_reader_decodes_each_row_group_once(spark, materialized):
+    """A row group decodes on its first miss; later misses in it are
+    answered from memory with no file read, and a byte budget too small
+    for two row groups keeps one and still answers exactly."""
+    from mecab_ko_lucene_analyzer_spark.query.wand import DirectBlockReader
+
+    vocab = sorted(
+        r["term"]
+        for r in spark.read.parquet(f"{BASE}/blocks").select("term").distinct().collect()
+    )
+    direct = DirectBlockReader(f"{BASE}/blocks")
+    reads = []
+    for pf, _ in direct._files:
+        read = pf.read_row_groups
+        pf.read_row_groups = lambda *a, _read=read, **kw: reads.append(a) or _read(*a, **kw)
+    n_row_groups = sum(len(ranges) for _, ranges in direct._files)
+    first = direct.fetch(vocab)
+    assert len(first) == len(vocab) and len(reads) == n_row_groups
+    assert direct.fetch(vocab[::-3]) == {t: first[t] for t in vocab[::-3]}
+    assert len(reads) == n_row_groups
+    direct.fetch(vocab, with_positions=True)  # other columns: decoded once more
+    assert len(reads) == 2 * n_row_groups
+
+    small = DirectBlockReader(f"{BASE}/blocks")
+    small.cache_bytes = 1
+    assert _payloads(small.fetch(vocab)) == _payloads(first)
+    assert len(small._rg_cache) == 1
+
+
+def test_direct_block_reader_unsorted_files(spark, materialized, tmp_path):
+    """Block files of a foreign writer — rows shuffled across two files
+    of small row groups — answer exactly what the term-sorted files do."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    from mecab_ko_lucene_analyzer_spark.query.wand import DirectBlockReader
+
+    tbl = pq.read_table(f"{BASE}/blocks")
+    order = list(range(tbl.num_rows))
+    random.Random(3).shuffle(order)
+    tbl = tbl.take(order)
+    half = tbl.num_rows // 2
+    (tmp_path / "blocks").mkdir()
+    pq.write_table(tbl.slice(0, half), tmp_path / "blocks/part-0.parquet", row_group_size=50)
+    pq.write_table(tbl.slice(half), tmp_path / "blocks/part-1.parquet", row_group_size=50)
+    vocab = sorted(set(tbl.column("term").to_pylist()))
+    probe = vocab[::7] + [vocab[-1], "없는단어쿼리"]
+    for pos in (False, True):
+        got = DirectBlockReader(str(tmp_path / "blocks")).fetch(probe, with_positions=pos)
+        want = DirectBlockReader(f"{BASE}/blocks").fetch(probe, with_positions=pos)
+        assert _payloads(got) == _payloads(want) and len(got) == len(probe) - 1
+
+
 def test_arrow_blocks_byte_identical_to_pandas(spark, materialized):
     """The Arrow-native pack/reblock stages (the default) must produce
     BYTE-identical block rows to the pandas reference stages — same
