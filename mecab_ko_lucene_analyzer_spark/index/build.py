@@ -4,24 +4,28 @@ it is a native Spark plan.
 
 Plan discipline (the part that must survive 100×):
 
-* tokenization (the expensive Arrow UDF) happens **exactly once**: every
-  derived table (term/doc/corpus stats) is computed *from the postings
-  relation*, never from a second scan of the corpus. ``doc_len`` is
-  ``sum(tf)`` over a doc's postings — identical to the token count.
-* the corpus is pruned to ``(url, text)`` before the docID range
-  shuffle, so page ``html`` bytes never cross the wire.
-* one wide exchange builds postings (``groupBy(term, doc_id)`` with
-  map-side partial aggregation); stats reuse that output.
+* tokenization (the expensive Arrow UDF) happens **exactly once**: the
+  tokenize pass emits compressed partial blocks (:func:`corpus_partials`)
+  and every derived table (term/doc/corpus stats, blocks, the decoded
+  row-postings view) is computed *from the partials*, never from a
+  second scan of the corpus. ``doc_len`` rides each partial, so doc
+  stats need no tf sum.
+* the corpus is pruned to ``(url, text)`` before tokenizing, so page
+  ``html`` bytes never cross the wire.
+* a document's tokens never leave their partition, so the tokenize
+  pass needs no token-level shuffle; the only wide exchange of the
+  build is the salted term repartition of the blocks stage.
 """
 
 from __future__ import annotations
 
+import threading
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.udfs import tokens_table
 from .docids import assign_doc_ids
 
 __all__ = [
@@ -82,7 +86,7 @@ def _stable_plan(jplan) -> bool:
 
 
 def _docid_partitions(pages, lang_filter, num_partitions, order):
-    """Shared docID scaffold for the posting/partial emitters:
+    """docID scaffold for :func:`corpus_partials`:
     prune → (optionally) canonical-order shuffle → per-partition row
     counts → docID base offsets. Returns ``(text_parts, map_parts,
     offsets, n_docs)``.
@@ -161,22 +165,23 @@ def _doc_map_df(map_parts, offsets):
     return map_parts.mapInPandas(emit_map, map_schema)
 
 
-def corpus_postings(
+def corpus_partials(
     pages: DataFrame,
     lang_filter: str | None = "ko",
     mode: str = "standard",
     compound_noun_min_length: int = 3,
     num_partitions: int | None = None,
     order: str = "input",
+    block_size: int | None = None,
 ):
-    """Corpus → ``(postings, doc_map)`` with ZERO token-level shuffle.
-
-    A document's tokens never leave their partition, so the
-    ``(term, doc_id)`` aggregation is partition-local by construction —
-    the emitter aggregates tf/positions per doc in Python and emits
-    posting rows directly. The only wide exchange in the whole index
-    build is the salted term repartition of the block stage (I4),
-    exactly the shuffle the format needs.
+    """Corpus → ``(partials, doc_map)`` with ZERO token-level shuffle:
+    the tokenize pass emits partial-block rows (the compressed map-side-
+    combined form, :data:`..index.blocks.PARTIAL_SCHEMA`) directly, so
+    the ~35× larger row-postings relation never crosses the Python↔JVM
+    boundary and is never materialized. This is the 100×-scale shape:
+    the only thing a build ever writes or shuffles is ≈ the compressed
+    index size. Row postings, term/doc stats are all DERIVABLE from
+    partials (:func:`postings_from_partials`, :func:`_stats_from_partials`).
 
     docID order (both dense + deterministic, I1):
 
@@ -190,125 +195,6 @@ def corpus_postings(
       partition-count independent) via one range shuffle of the pruned
       corpus, persisted so both passes share it.
 
-    Returns ``(postings, doc_map, n_docs, counters)`` — the doc count
-    falls out of the docID offset pass, and ``counters`` is a pair of
-    Spark accumulators ``(total_tokens, postings_rows)`` updated inside
-    the tokenize ``mapInPandas``. Accumulator updates in a
-    TRANSFORMATION can replay under task retries / speculation, so
-    these are informational lineage counters only — anything that feeds
-    scoring (avgdl → block_max_impact → BM25) is derived retry-exactly
-    from the written doc_stats via ``Observation`` in the stats stage.
-    """
-    import pandas as pd
-    import pyspark.sql.types as T
-    from pyspark import StorageLevel
-
-    from ..analysis.tokenizer import (
-        get_lattice_provider,
-        index_token_stream,
-        tokenize,
-    )
-
-    spark = pages.sparkSession
-    text_parts, map_parts, offsets, acc = _docid_partitions(
-        pages, lang_filter, num_partitions, order
-    )
-
-    postings_schema = T.StructType(
-        [
-            T.StructField("term", T.StringType(), False),
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("tf", T.IntegerType(), False),
-            # per-doc positions as delta+varint bytes: ~2 bytes/posting
-            # through the term shuffle instead of a 12+ byte array slot,
-            # and block encoding becomes pure byte concatenation
-            T.StructField("positions", T.BinaryType(), False),
-            T.StructField("doc_len", T.IntegerType(), False),
-        ]
-    )
-
-    acc_tokens = spark.sparkContext.accumulator(0)
-    acc_postings = spark.sparkContext.accumulator(0)
-
-    def emit_postings(batches):
-        from .codec import encode_varint_groups
-
-        provider = get_lattice_provider()
-        seen = 0
-        base = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if base is None:
-                base = offsets[int(pdf["_pid"].iloc[0])]
-            terms: list[str] = []
-            doc_ids: list[int] = []
-            tfs: list[int] = []
-            doc_lens: list[int] = []
-            flat_deltas: list[int] = []  # all position deltas, batch-wide
-            for off, txt in enumerate(pdf["text"]):
-                d = base + seen + off
-                # flat cached stream — no per-occurrence Pos objects
-                # (the build is allocator-bandwidth-bound without this)
-                t_terms, t_incrs = index_token_stream(
-                    txt or "", mode, compound_noun_min_length, provider
-                )
-                per_term: dict[str, list[int]] = {}
-                position = -1
-                for term_s, inc in zip(t_terms, t_incrs):
-                    position += inc
-                    per_term.setdefault(term_s, []).append(position)
-                dl = len(t_terms)
-                for term, plist in per_term.items():
-                    terms.append(term)
-                    doc_ids.append(d)
-                    tfs.append(len(plist))
-                    doc_lens.append(dl)
-                    prev = 0
-                    for q in plist:
-                        flat_deltas.append(q - prev)
-                        prev = q
-            # ONE vectorized varint pass for the whole batch
-            positions = encode_varint_groups(flat_deltas, tfs)
-            seen += len(pdf)
-            acc_tokens.add(len(flat_deltas))
-            acc_postings.add(len(terms))
-            yield pd.DataFrame(
-                {
-                    "term": terms,
-                    "doc_id": pd.Series(doc_ids, dtype="int64"),
-                    "tf": pd.Series(tfs, dtype="int32"),
-                    "positions": positions,
-                    "doc_len": pd.Series(doc_lens, dtype="int32"),
-                }
-            )
-
-    return (
-        text_parts.mapInPandas(emit_postings, postings_schema),
-        _doc_map_df(map_parts, offsets),
-        acc,
-        (acc_tokens, acc_postings),
-    )
-
-
-def corpus_partials(
-    pages: DataFrame,
-    lang_filter: str | None = "ko",
-    mode: str = "standard",
-    compound_noun_min_length: int = 3,
-    num_partitions: int | None = None,
-    order: str = "input",
-    block_size: int | None = None,
-):
-    """Corpus → ``(partials, doc_map)`` — the FUSED build path: the
-    tokenize pass emits partial-block rows (the compressed map-side-
-    combined form, :data:`..index.blocks.PARTIAL_SCHEMA`) directly, so
-    the ~35× larger row-postings relation never crosses the Python↔JVM
-    boundary and is never materialized. This is the 100×-scale shape:
-    the only thing a build ever writes or shuffles is ≈ the compressed
-    index size. Row postings, term/doc stats are all DERIVABLE from
-    partials (:func:`postings_from_partials`, :func:`_stats_from_partials`).
-
     Salting is NOT applied here (hot-term dfs aren't known until the
     stats stage); the blocks stage assigns ``salt = first_doc >>
     SALT_SHIFT`` per partial row for hot terms — partials are
@@ -316,7 +202,14 @@ def corpus_partials(
     remain doc-contiguous and the salted groups concatenate without a
     re-merge, exactly as with per-doc salting.
 
-    Same docID determinism and counters as :func:`corpus_postings`.
+    Returns ``(partials, doc_map, n_docs, counters)`` — the doc count
+    falls out of the docID offset pass, and ``counters`` is a pair of
+    Spark accumulators ``(total_tokens, postings_rows)`` updated inside
+    the tokenize ``mapInArrow``. Accumulator updates in a
+    TRANSFORMATION can replay under task retries / speculation, so
+    these are informational lineage counters only — anything that feeds
+    scoring (avgdl → block_max_impact → BM25) is derived retry-exactly
+    from the written doc_stats via ``Observation`` in the stats stage.
     """
     import numpy as np
 
@@ -461,12 +354,12 @@ def corpus_partials(
 
 
 def postings_from_partials(partials: DataFrame) -> DataFrame:
-    """Row-postings VIEW decoded from partial blocks — same rows as the
-    legacy materialized ``postings`` table (term, doc_id, tf, positions,
-    doc_len), computed on demand with vectorized varint decodes and
-    zero-copy per-doc position slicing (per-doc payload bounds come
-    from the varint continuation bits; the position bytes themselves
-    are never re-encoded)."""
+    """Row-postings VIEW decoded from partial blocks — same rows as a
+    materialized ``postings`` table (term, doc_id, tf, positions,
+    doc_len; compacted and older builds), computed on demand with
+    vectorized varint decodes and zero-copy per-doc position slicing
+    (per-doc payload bounds come from the varint continuation bits; the
+    position bytes themselves are never re-encoded)."""
     import numpy as np
     import pyspark.sql.types as T
 
@@ -701,22 +594,18 @@ def _footer_row_count(spark: SparkSession, path: str, name: str) -> int:
 
 
 def _stats_from_postings(postings: DataFrame):
+    """Stats of a row-postings relation without ``doc_len`` (streaming
+    compaction's deltas): ``doc_len`` is ``sum(tf)`` over a doc's
+    postings — identical to the token count."""
     term_stats = postings.groupBy("term").agg(F.count("*").alias("df"))
-    if "doc_len" in postings.columns:
-        # doc_len is denormalized onto every posting row → the per-doc
-        # "aggregation" is a partial-agg first(): the exchange carries
-        # ~1 row/doc. (A zero-shuffle mapInPandas dedup was considered
-        # and rejected: a parquet file bigger than maxPartitionBytes
-        # splits mid-document and would double-count — not 100×-safe.)
-        doc_stats = postings.groupBy("doc_id").agg(
-            F.first("doc_len").cast("long").alias("doc_len")
-        )
-    else:
-        doc_stats = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
-    corpus_stats = doc_stats.agg(
+    doc_stats = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
+    return term_stats, doc_stats, _corpus_stats(doc_stats)
+
+
+def _corpus_stats(doc_stats: DataFrame) -> DataFrame:
+    return doc_stats.agg(
         F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
     )
-    return term_stats, doc_stats, corpus_stats
 
 
 @dataclass
@@ -729,14 +618,15 @@ class InvertedIndex:
     min/max row-group stats cannot prune (docIDs spread across every
     term's row groups) — a full postings scan at 100x scale."""
 
-    postings: DataFrame  # term, doc_id, tf, positions array<int>
+    postings: DataFrame  # term, doc_id, tf, positions (varint bytes), doc_len
     term_stats: DataFrame  # term, df
     doc_stats: DataFrame  # doc_id, doc_len
     corpus_stats: DataFrame  # n_docs, avgdl
     forward: DataFrame | None = None  # doc_id, terms array<struct<term,tf>>
 
     def cache(self) -> "InvertedIndex":
-        # caching postings makes the derived stats single-pass too
+        # a lazy build_index result derives every member from its own
+        # tokenize pass; caching each computes it once
         self.postings.cache()
         for df in (self.term_stats, self.doc_stats, self.corpus_stats):
             df.cache()
@@ -748,27 +638,46 @@ def build_index(
     mode: str = "standard",
     compound_noun_min_length: int = 3,
     lang_filter: str | None = "ko",
-    with_doc_ids: bool = True,
 ) -> InvertedIndex:
-    """webpages → inverted index (lazy: call ``.cache()`` or use
-    :func:`build_and_write` to avoid recomputing tokenization when more
-    than one member table is consumed)."""
-    if not with_doc_ids and "doc_id" in pages.columns:
-        docs = pages if lang_filter is None else pages.filter(F.col("lang") == lang_filter)
-        tokens = tokens_table(docs, "doc_id", "text", mode, compound_noun_min_length)
-        from ..functions.udfs import encode_positions_udf
+    """webpages → inverted index: the :func:`corpus_partials` emitter
+    read as the decoded row-postings view plus partials-derived stats
+    (lazy: call ``.cache()`` or use :func:`build_and_write` to avoid
+    recomputing tokenization when more than one member table is
+    consumed)."""
+    partials, _, _, _ = corpus_partials(
+        pages, lang_filter, mode, compound_noun_min_length
+    )
+    term_stats, doc_stats = _stats_from_partials(partials)
+    return InvertedIndex(
+        postings_from_partials(partials),
+        term_stats,
+        doc_stats,
+        _corpus_stats(doc_stats),
+    )
 
-        postings = tokens.groupBy("term", "doc_id").agg(
-            F.count("*").alias("tf"),
-            F.sort_array(F.collect_list("position")).alias("positions_arr"),
-        ).withColumn(
-            "positions", encode_positions_udf()(F.col("positions_arr"))
-        ).drop("positions_arr")
-    else:
-        postings, _, _, _ = corpus_postings(
-            pages, lang_filter, mode, compound_noun_min_length
-        )
-    return InvertedIndex(postings, *_stats_from_postings(postings))
+
+@contextmanager
+def _in_background(fn):
+    """Run ``fn`` on a daemon thread for the duration of the ``with``
+    body, so an independent Spark sink overlaps the body's jobs. The
+    thread is always joined on exit; its exception is re-raised on the
+    calling thread (an exception of the body takes precedence)."""
+    err: list[BaseException] = []
+
+    def run():
+        try:
+            fn()
+        except BaseException as e:  # re-raised on the calling thread
+            err.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    try:
+        yield
+    finally:
+        t.join()
+    if err:
+        raise err[0]
 
 
 def build_and_write(
@@ -777,7 +686,7 @@ def build_and_write(
     mode: str = "standard",
     compound_noun_min_length: int = 3,
     lang_filter: str | None = "ko",
-    with_blocks: bool = False,
+    with_blocks: bool = True,
     hot_min_df: int = 1000,
     salt_shift: int | None = None,
     doc_order: str = "input",
@@ -790,23 +699,18 @@ def build_and_write(
 ) -> InvertedIndex:
     """Materialize the index with per-stage checkpoints (I6):
 
-    1. ``postings``  — ONE tokenize + shuffle pass (+ ``doc_map``)
-    2. ``stats``     — derived from the written postings
-    3. ``blocks``    — salted sorted shuffle → compressed block postings
+    1. ``partials`` — ONE tokenize pass emitting compressed partial
+       blocks (:func:`corpus_partials`), plus ``doc_map``
+    2. ``stats``    — term/doc/corpus stats derived from the partials
+    3. ``blocks``   — salted sorted shuffle → compressed block postings
+
+    Row postings are never materialized (≈35× less data written and
+    scanned between stages); ``load_index(...).postings`` is a decoded
+    view. ``with_blocks=False`` skips stage 3 only.
 
     A rerun skips completed stages (manifest + ``_SUCCESS``); docIDs are
     deterministic, so resumed output is byte-identical.
-
-    ``with_blocks=True`` (a serving build) uses the FUSED pipeline:
-    stage 1 is ``partials`` — the tokenize pass emits compressed
-    partial blocks directly (``corpus_partials``), row postings are
-    never materialized (≈35× less data written/scanned between
-    stages), and ``load_index(...).postings`` is a decoded view.
-    ``with_blocks=False`` keeps the legacy row-postings layout (the
-    postings table IS the requested product there).
     """
-    from contextlib import contextmanager
-
     from .manifest import BuildManifest, run_stage
 
     spark = pages.sparkSession
@@ -873,34 +777,18 @@ def build_and_write(
         },
     )
 
-    fused = with_blocks
-    emit_stage = "partials" if fused else "postings"
-
     def stage_emit():
-        import threading
-
-        maker = corpus_partials if fused else corpus_postings
-        emitted, doc_map, n_docs, (acc_tokens, acc_postings) = maker(
+        partials, doc_map, n_docs, (acc_tokens, acc_postings) = corpus_partials(
             pages, lang_filter, mode, compound_noun_min_length, order=doc_order
         )
         # doc_map is independent of the main sink — submit it
         # concurrently so its (url-pruned, Python-thin) job fills task
         # slots the tokenize pass leaves idle in its tail, instead of
         # paying a second full job latency serially
-        map_err: list[BaseException] = []
-
-        def _write_map():
-            try:
-                doc_map.write.mode("overwrite").parquet(f"{base_path}/doc_map")
-            except BaseException as e:  # re-raised on the main thread
-                map_err.append(e)
-
-        t = threading.Thread(target=_write_map, daemon=True)
-        t.start()
-        emitted.write.mode("overwrite").parquet(f"{base_path}/{emit_stage}")
-        t.join()
-        if map_err:
-            raise map_err[0]
+        with _in_background(
+            lambda: doc_map.write.mode("overwrite").parquet(f"{base_path}/doc_map")
+        ):
+            partials.write.mode("overwrite").parquet(f"{base_path}/partials")
         # docs_tokenized falls out of the docID offset pass (exact);
         # token/posting totals are transformation-side accumulators —
         # informational lineage only (may over-count on task retries;
@@ -912,147 +800,103 @@ def build_and_write(
         }
 
     with _build_confs():
-        run_stage(manifest, emit_stage, f"{base_path}/{emit_stage}", stage_emit)
+        run_stage(manifest, "partials", f"{base_path}/partials", stage_emit)
 
-    def stage_stats():
-        import threading
-
-        from pyspark.sql import Observation
-
-        if fused:
-            partials = _read_stage_table(spark, base_path, "partials")
-            term_stats, doc_stats = _stats_from_partials(partials)
-        else:
-            postings = _read_stage_table(spark, base_path, "postings")
-            term_stats, doc_stats, _ = _stats_from_postings(postings)
-        # corpus stats ride the doc_stats write via Observation — exact
-        # under task retries / speculation (observed metrics are action-
-        # consistent), unlike transformation-side accumulators which
-        # double-count replayed batches; avgdl feeds block_max_impact
-        # and BM25, so it must be retry-exact. Zero extra pass.
-        obs = Observation("corpus")
-        doc_stats = doc_stats.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("doc_len").alias("dl_sum"),
-        )
-        # the two aggregations are independent — overlap their job
-        # latencies instead of paying them back-to-back
-        ts_err: list[BaseException] = []
-
-        def _write_terms():
-            try:
-                _write_term_stats(term_stats, f"{base_path}/term_stats")
-            except BaseException as e:
-                ts_err.append(e)
-
-        t = threading.Thread(target=_write_terms, daemon=True)
-        t.start()
-        doc_stats.write.mode("overwrite").parquet(f"{base_path}/doc_stats")
-        vals = obs.get
-        n_docs = int(vals["n_docs"])
-        avgdl = (vals["dl_sum"] or 0) / n_docs if n_docs else 0.0
-        t.join()
-        if ts_err:
-            raise ts_err[0]
-        _write_corpus_stats(spark, f"{base_path}/corpus_stats", n_docs, avgdl)
-        return {"n_docs": n_docs, "avgdl": avgdl}
-
-    def stats_blocks_overlapped():
-        """Fresh fused build: overlap the stats-stage writes with the
-        blocks stage (guide §2.6 — concurrent independent jobs). Only
-        ``avgdl`` (the Observation riding the doc_stats write) is on
-        the blocks stage's critical path; the term_stats write and the
-        driver-side corpus write are not, so they run while the blocks
-        exchange/re-block executes. The blocks join consumes the
-        CACHED term_stats DataFrame (same rows the parquet write
-        persists), so it neither waits for that write nor re-reads it.
-        Both stages are recorded in the manifest only after every sink
-        (incl. the threaded term_stats write) has its ``_SUCCESS`` —
-        a crash mid-way records nothing and the sequential resume path
-        re-runs from the last completed stage, byte-identical."""
-        import threading
-        import time as _time
+    def stage_stats_blocks():
+        """The ``stats`` and ``blocks`` stages as ONE overlapped
+        schedule, on fresh and resumed builds alike; each half runs
+        only when its manifest stage is incomplete (blocks only when
+        ``with_blocks``). Only ``avgdl`` (the Observation riding the
+        doc_stats write) is on the blocks' critical path: the
+        term_stats write runs in the background while the blocks
+        exchange/re-block executes, and the blocks join consumes the
+        CACHED term_stats DataFrame (same rows the write persists), so
+        it neither waits for that write nor re-reads it. A resumed
+        blocks half reads term_stats and corpus_stats back from disk.
+        ``stats`` is recorded only after every stats sink has its
+        ``_SUCCESS``, then ``blocks`` — a crash mid-way records
+        nothing new, and the rerun is byte-identical."""
+        import time
 
         from pyspark.sql import Observation
 
         from .blocks import SALT_SHIFT, build_blocks_from_partials
 
-        t0 = _time.perf_counter()
+        do_stats = not manifest.stage_complete("stats")
+        do_blocks = with_blocks and not manifest.stage_complete("blocks")
+        if not (do_stats or do_blocks):
+            return
+        t0 = time.perf_counter()
         partials = _read_stage_table(spark, base_path, "partials")
-        term_stats, doc_stats = _stats_from_partials(partials)
-        ts = term_stats.persist()
-        ts_err: list[BaseException] = []
         ts_done: list[float] = []
+        with ExitStack() as stack:
+            if do_stats:
+                term_stats, doc_stats = _stats_from_partials(partials)
+                term_stats = term_stats.persist()
+                stack.callback(term_stats.unpersist)
 
-        def _write_terms():
-            try:
-                _write_term_stats(ts, f"{base_path}/term_stats")
-                ts_done.append(_time.perf_counter())
-            except BaseException as e:
-                ts_err.append(e)
+                def write_terms():
+                    _write_term_stats(term_stats, f"{base_path}/term_stats")
+                    ts_done.append(time.perf_counter())
 
-        th = threading.Thread(target=_write_terms, daemon=True)
-        th.start()
-        try:
-            obs = Observation("corpus")
-            doc_stats = doc_stats.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("doc_len").alias("dl_sum"),
+                stack.enter_context(_in_background(write_terms))
+                # corpus stats ride the doc_stats write via Observation —
+                # exact under task retries / speculation (observed
+                # metrics are action-consistent), unlike transformation-
+                # side accumulators which double-count replayed batches;
+                # avgdl feeds block_max_impact and BM25, so it must be
+                # retry-exact. Zero extra pass.
+                obs = Observation("corpus")
+                doc_stats.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n_docs"),
+                    F.sum("doc_len").alias("dl_sum"),
+                ).write.mode("overwrite").parquet(f"{base_path}/doc_stats")
+                vals = obs.get
+                n_docs = int(vals["n_docs"])
+                avgdl = (vals["dl_sum"] or 0) / n_docs if n_docs else 0.0
+                _write_corpus_stats(spark, f"{base_path}/corpus_stats", n_docs, avgdl)
+            else:
+                term_stats = _read_stage_table(spark, base_path, "term_stats")
+                corpus = _read_stage_table(spark, base_path, "corpus_stats").first()
+                n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
+            t_stats = time.perf_counter()
+            if do_blocks:
+                # block rows leave the re-blocker (term, first_doc)-sorted
+                # within partitions, so parquet row-group min/max stats
+                # prune term-filtered scans
+                build_blocks_from_partials(
+                    partials,
+                    term_stats,
+                    n_docs=n_docs,
+                    avgdl=avgdl,
+                    hot_min_df=hot_min_df,
+                    salt_shift=salt_shift if salt_shift is not None else SALT_SHIFT,
+                ).write.mode("overwrite").parquet(f"{base_path}/blocks")
+        if do_stats:
+            # the stats stage ends when its last sink does: the
+            # background term_stats write may outlast the corpus write
+            manifest.record(
+                "stats",
+                f"{base_path}/term_stats",
+                {"n_docs": n_docs, "avgdl": avgdl},
+                max(t_stats, *ts_done) - t0,
             )
-            doc_stats.write.mode("overwrite").parquet(f"{base_path}/doc_stats")
-            vals = obs.get
-            n_docs = int(vals["n_docs"])
-            avgdl = (vals["dl_sum"] or 0) / n_docs if n_docs else 0.0
-            _write_corpus_stats(spark, f"{base_path}/corpus_stats", n_docs, avgdl)
-            t_stats = _time.perf_counter()
-            blocks = build_blocks_from_partials(
-                partials,
-                ts,
-                n_docs=n_docs,
-                avgdl=avgdl,
-                hot_min_df=hot_min_df,
-                salt_shift=salt_shift if salt_shift is not None else SALT_SHIFT,
+        if do_blocks:
+            # footer-only count (driver-side on local paths — no job)
+            manifest.record(
+                "blocks",
+                f"{base_path}/blocks",
+                {
+                    "blocks_written": _footer_row_count(
+                        spark, f"{base_path}/blocks", "blocks"
+                    )
+                },
+                time.perf_counter() - t_stats,
             )
-            blocks.write.mode("overwrite").parquet(f"{base_path}/blocks")
-        finally:
-            th.join()
-            ts.unpersist()
-        if ts_err:
-            raise ts_err[0]
-        # the stats stage ends when its last sink does: the threaded
-        # term_stats write may outlast the corpus write
-        manifest.record(
-            "stats",
-            f"{base_path}/term_stats",
-            {"n_docs": n_docs, "avgdl": avgdl},
-            max(t_stats, *ts_done) - t0,
-        )
-        manifest.record(
-            "blocks",
-            f"{base_path}/blocks",
-            {
-                "blocks_written": _footer_row_count(
-                    spark, f"{base_path}/blocks", "blocks"
-                )
-            },
-            _time.perf_counter() - t_stats,
-        )
 
-    import os as _os
-
-    fresh_fused = (
-        fused
-        and _os.environ.get("SPARK_GRAFT_FUSED_OVERLAP", "1") != "0"
-        and not manifest.stage_complete("stats")
-        and not manifest.stage_complete("blocks")
-    )
     with _build_confs():
-        if fresh_fused:
-            stats_blocks_overlapped()
-        else:
-            run_stage(manifest, "stats", f"{base_path}/term_stats", stage_stats)
+        stage_stats_blocks()
 
     def _field_stage(name: str, postings_maker):
         """Extra-field stage (``index/anchors.py`` tables): postings
@@ -1164,45 +1008,6 @@ def build_and_write(
         with _build_confs():
             run_stage(manifest, "boosts", f"{base_path}/doc_boosts", stage_boosts)
 
-    if with_blocks:
-
-        def stage_blocks():
-            from .blocks import SALT_SHIFT, build_blocks_from_partials
-
-            partials = _read_stage_table(spark, base_path, "partials")
-            term_stats = _read_stage_table(spark, base_path, "term_stats")
-            # corpus stats come from the stats stage's manifest counters
-            # (present even on resume); parquet is the fallback for
-            # manifests written before these counters existed
-            st = manifest.stages.get("stats", {}).get("counters", {})
-            if "n_docs" in st and "avgdl" in st:
-                n_docs, avgdl = st["n_docs"], st["avgdl"]
-            else:
-                corpus = spark.read.parquet(f"{base_path}/corpus_stats").first()
-                n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
-
-            blocks = build_blocks_from_partials(
-                partials,
-                term_stats,
-                n_docs=n_docs,
-                avgdl=avgdl,
-                hot_min_df=hot_min_df,
-                salt_shift=salt_shift if salt_shift is not None else SALT_SHIFT,
-            )
-            # block rows leave the re-blocker (term, first_doc)-
-            # sorted within partitions, so parquet row-group min/max
-            # stats prune term-filtered scans
-            blocks.write.mode("overwrite").parquet(f"{base_path}/blocks")
-            # footer-only count (driver-side on local paths — no job)
-            return {
-                "blocks_written": _footer_row_count(
-                    spark, f"{base_path}/blocks", "blocks"
-                )
-            }
-
-        with _build_confs():
-            run_stage(manifest, "blocks", f"{base_path}/blocks", stage_blocks)
-
     if with_forward:
 
         def stage_forward():
@@ -1216,14 +1021,9 @@ def build_and_write(
             to one row group. Opt-in: it costs one postings-sized
             shuffle + write, which builds that never serve by-doc
             access should not pay."""
-            if fused:
-                rows = postings_from_partials(
-                    _read_stage_table(spark, base_path, "partials")
-                ).select("doc_id", "term", "tf")
-            else:
-                rows = _read_stage_table(spark, base_path, "postings").select(
-                    "doc_id", "term", "tf"
-                )
+            rows = postings_from_partials(
+                _read_stage_table(spark, base_path, "partials")
+            ).select("doc_id", "term", "tf")
             agg = rows.groupBy("doc_id").agg(
                 F.sort_array(F.collect_list(F.struct("term", "tf"))).alias(
                     "terms"
@@ -1272,8 +1072,9 @@ def load_index(spark: SparkSession, base_path: str) -> InvertedIndex:
         # probe via the Hadoop FS API (file://, hdfs://, s3a:// all
         # work) instead of letting spark.read throw PATH_NOT_FOUND —
         # the thrown probe dumps a full Java stacktrace into every
-        # serving log for fused builds, which never materialize the
-        # row-postings directory
+        # serving log for build_and_write builds, which never
+        # materialize the row-postings directory (compacted indexes and
+        # older builds still have one)
         from ..streaming.incremental import _fs_and_path
 
         fs, jpath, _jvm = _fs_and_path(spark, f"{base_path}/postings")
@@ -1289,8 +1090,8 @@ def load_index(spark: SparkSession, base_path: str) -> InvertedIndex:
     if has_postings:
         postings = read(f"{base_path}{sep}postings")
     else:
-        # fused build: row postings were never materialized — serve the
-        # decoded view over the partial blocks (row-identical)
+        # row postings were never materialized — serve the decoded
+        # view over the partial blocks (row-identical)
         postings = postings_from_partials(read(f"{base_path}{sep}partials"))
     forward = None
     if sep == "/":

@@ -55,9 +55,10 @@ INDEX_TABLES = (
     "forward",
 )
 
-#: members a build may legitimately lack: with_blocks=False builds have
-#: no blocks/partials; fused builds (with_blocks=True) materialize
-#: partials instead of row postings; forward is the opt-in doc-keyed
+#: members a build may legitimately lack: build_and_write builds
+#: materialize partials instead of row postings, and with_blocks=False
+#: ones have no blocks; compacted indexes and older builds have row
+#: postings and no partials; forward is the opt-in doc-keyed
 #: projection (with_forward=True)
 _OPTIONAL_TABLES = frozenset({"blocks", "partials", "postings", "forward"})
 
@@ -193,8 +194,8 @@ def publish_index(
             if name not in _OPTIONAL_TABLES:  # e.g. with_blocks=False builds
                 raise
     if not ({"postings", "partials"} & frames.keys()):
-        # both are optional INDIVIDUALLY (legacy builds have postings,
-        # fused builds have partials) — but an index with NEITHER has
+        # both are optional INDIVIDUALLY (compacted and older builds
+        # have postings, build_and_write builds have partials) — but an index with NEITHER has
         # no posting data at all: a truncated/mis-pathed directory,
         # not a valid build. Probed BEFORE any write so nothing is
         # half-published.

@@ -6,7 +6,7 @@ import shutil
 import pytest
 
 from mecab_ko_lucene_analyzer_spark.analysis.tokenizer import token_records
-from mecab_ko_lucene_analyzer_spark.index import build_and_write, build_index
+from mecab_ko_lucene_analyzer_spark.index import build_and_write
 from mecab_ko_lucene_analyzer_spark.index.blocks import build_blocks
 from mecab_ko_lucene_analyzer_spark.index.codec import decode_block, decode_varints
 from mecab_ko_lucene_analyzer_spark.query import bm25_oracle
@@ -505,86 +505,9 @@ def test_direct_block_reader_unsorted_files(spark, materialized, tmp_path):
 def test_arrow_blocks_byte_identical_to_pandas(spark, materialized):
     """The Arrow-native pack/reblock stages (the default) must produce
     BYTE-identical block rows to the pandas reference stages — same
-    cuts, same varint payloads, same metadata — with salting active
-    (salt_shift=3 genuinely splits terms) and without."""
-    postings = materialized.postings
-    term_stats = spark.read.parquet(f"{BASE}/term_stats")
-    corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
-    for kwargs in (
-        dict(hot_min_df=1, salt_shift=3, num_partitions=48),
-        dict(hot_min_df=10**9),
-    ):
-        frames = {}
-        for impl in ("arrow", "pandas"):
-            df = build_blocks(
-                postings,
-                term_stats,
-                n_docs=corpus["n_docs"],
-                avgdl=corpus["avgdl"],
-                impl=impl,
-                **kwargs,
-            )
-            frames[impl] = sorted(
-                (
-                    (
-                        r["term"],
-                        r["first_doc"],
-                        r["n_docs"],
-                        bytes(r["doc_deltas"]),
-                        bytes(r["tfs"]),
-                        bytes(r["pos_deltas"]),
-                        bytes(r["doc_lens"]),
-                        r["block_max_tf"],
-                        round(r["block_max_impact"], 12),
-                    )
-                    for r in df.collect()
-                )
-            )
-            df._partials_df.unpersist()
-        assert frames["arrow"] == frames["pandas"]
-        assert len(frames["arrow"]) > 0
-
-
-def test_fused_build_row_identical_to_legacy(spark, materialized, tmp_path):
-    """The fused serving build (partials checkpoint, decoded row-postings
-    view) and the legacy layout (with_blocks=False materializes the row
-    table) must agree row-for-row — postings (incl. position payload
-    bytes) and every stats table — over the same corpus."""
-    from mecab_ko_lucene_analyzer_spark.index.build import load_index
-
-    pages = synthesize_webpages(spark, N_DOCS, partitions=4)
-    legacy = build_and_write(
-        pages, f"{tmp_path}/legacy", lang_filter=None, with_blocks=False
-    )
-    # fresh load: the module fixture's captured stats plans go stale
-    # when the resume test rewrites those directories
-    fused = load_index(spark, BASE)
-
-    def rows(df, cols, key):
-        return sorted(
-            (tuple(bytes(v) if isinstance(v, bytearray) else v for v in t)
-             for t in df.select(*cols).collect()),
-            key=key,
-        )
-
-    pcols = ["term", "doc_id", "tf", "positions", "doc_len"]
-    a = rows(fused.postings, pcols, lambda t: (t[0], t[1]))
-    b = rows(legacy.postings, pcols, lambda t: (t[0], t[1]))
-    assert len(a) == len(b) > 0 and a == b
-    for attr, cols, key in [
-        ("term_stats", ["term", "df"], lambda t: t[0]),
-        ("doc_stats", ["doc_id", "doc_len"], lambda t: t[0]),
-        ("corpus_stats", ["n_docs", "avgdl"], lambda t: t[0]),
-    ]:
-        assert rows(getattr(fused, attr), cols, key) == rows(
-            getattr(legacy, attr), cols, key
-        ), attr
-
-
-def test_pack_reblock_arrow_equals_pandas(spark, materialized):
-    """The Arrow-native pack/reblock stages must be BYTE-identical to
-    the pandas reference implementation — same block rows, same varint
-    payloads, same impacts — including under aggressive salting."""
+    cuts, same varint payloads, same metadata and exactly equal
+    impacts — unsalted, with salting active (salt_shift=3 genuinely
+    splits terms), and salted over 48 partitions."""
     postings = materialized.postings
     term_stats = spark.read.parquet(f"{BASE}/term_stats")
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
@@ -602,10 +525,58 @@ def test_pack_reblock_arrow_equals_pandas(spark, materialized):
         df._partials_df.unpersist()
         return out
 
-    for kw in ({"hot_min_df": 10**9}, {"hot_min_df": 1, "salt_shift": 3}):
+    for kw in (
+        {"hot_min_df": 10**9},
+        {"hot_min_df": 1, "salt_shift": 3},
+        {"hot_min_df": 1, "salt_shift": 3, "num_partitions": 48},
+    ):
         a = rows("arrow", **kw)
         p = rows("pandas", **kw)
         assert len(a) == len(p) > 0 and a == p, kw
+
+
+def test_no_blocks_build_row_identical_to_blocks_build(
+    spark, materialized, tmp_path
+):
+    """``with_blocks=False`` runs the same pipeline minus the blocks
+    sink: it writes partials, the stats tables and doc_map — and no
+    ``postings`` or ``blocks`` directory — and every table, plus the
+    decoded ``load_index(...).postings`` view (incl. position payload
+    bytes), equals the ``with_blocks=True`` build's row for row."""
+    import json
+    import os
+
+    from mecab_ko_lucene_analyzer_spark.index.build import load_index
+
+    # the fixture's corpus and partitioning: partials are per tokenize
+    # partition, so only the same input split gives the same rows
+    pages = synthesize_webpages(spark, N_DOCS, partitions=5)
+    base = f"{tmp_path}/no_blocks"
+    build_and_write(pages, base, lang_filter=None, with_blocks=False)
+    for t in ("partials", "term_stats", "doc_stats", "corpus_stats", "doc_map"):
+        assert os.path.exists(f"{base}/{t}/_SUCCESS"), t
+    assert not os.path.exists(f"{base}/postings")
+    assert not os.path.exists(f"{base}/blocks")
+    with open(f"{base}/manifest.json") as f:
+        assert set(json.load(f)["stages"]) == {"partials", "stats"}
+
+    def rows(df, key=lambda t: t):
+        return sorted(
+            (tuple(bytes(v) if isinstance(v, bytearray) else v for v in t)
+             for t in df.collect()),
+            key=key,
+        )
+
+    for t in ("partials", "term_stats", "doc_stats", "corpus_stats", "doc_map"):
+        a = rows(spark.read.parquet(f"{base}/{t}"), key=repr)
+        b = rows(spark.read.parquet(f"{BASE}/{t}"), key=repr)
+        assert len(a) == len(b) > 0 and a == b, t
+    # fresh load of the module fixture: its captured stats plans go
+    # stale when the resume test rewrites those directories
+    pcols = ["term", "doc_id", "tf", "positions", "doc_len"]
+    a = rows(load_index(spark, base).postings.select(*pcols))
+    b = rows(load_index(spark, BASE).postings.select(*pcols))
+    assert len(a) == len(b) > 0 and a == b
 
 
 def test_arrow_stages_sliced_emission_identical(spark, materialized, monkeypatch):

@@ -99,7 +99,7 @@ def test_rows_stable_classifier(spark, tmp_path):
     """The unordered docID path may only run count/text/url as three
     independent jobs when the input is a deterministic scan; anything
     with an upstream shuffle must be classified unstable (and is then
-    materialized once inside corpus_postings)."""
+    materialized once inside corpus_partials)."""
     import pyspark.sql.functions as F
 
     from mecab_ko_lucene_analyzer_spark.index.build import _rows_stable_across_jobs
@@ -151,12 +151,16 @@ def test_shuffled_input_keeps_postings_docmap_consistent(spark):
     persist fallback this relied on per-job row-order luck."""
     import pyspark.sql.functions as F
 
-    from mecab_ko_lucene_analyzer_spark.index.build import corpus_postings
+    from mecab_ko_lucene_analyzer_spark.index.build import (
+        corpus_partials,
+        postings_from_partials,
+    )
 
     pages = synthesize_webpages(spark, 40, partitions=3)
     pages.write.mode("overwrite").parquet("/tmp/test_shuffled_input_pages")
     shuffled = spark.read.parquet("/tmp/test_shuffled_input_pages").repartition(7)
-    postings, doc_map, n_docs, _ = corpus_postings(shuffled, lang_filter=None)
+    partials, doc_map, n_docs, _ = corpus_partials(shuffled, lang_filter=None)
+    postings = postings_from_partials(partials)
     dm = {r["doc_id"]: r["url"] for r in doc_map.collect()}
     assert len(dm) == n_docs == 40
     # ground truth: tokenize each url's text on the driver
