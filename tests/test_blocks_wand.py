@@ -502,17 +502,14 @@ def test_direct_block_reader_unsorted_files(spark, materialized, tmp_path):
         assert _payloads(got) == _payloads(want) and len(got) == len(probe) - 1
 
 
-def test_arrow_blocks_byte_identical_to_pandas(spark, materialized):
-    """The Arrow-native pack/reblock stages (the default) must produce
-    BYTE-identical block rows to the pandas reference stages — same
-    cuts, same varint payloads, same metadata and exactly equal
-    impacts — unsalted, with salting active (salt_shift=3 genuinely
-    splits terms), and salted over 48 partitions."""
+def _arrow_and_pandas_block_rows(spark, materialized, **kw):
+    """Block rows built by the Arrow and the pandas pack/reblock stages
+    over the module corpus, each sorted by (term, first_doc)."""
     postings = materialized.postings
     term_stats = spark.read.parquet(f"{BASE}/term_stats")
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
 
-    def rows(impl, **kw):
+    def rows(impl):
         df = build_blocks(
             postings, term_stats, corpus["n_docs"], corpus["avgdl"],
             impl=impl, **kw,
@@ -525,13 +522,29 @@ def test_arrow_blocks_byte_identical_to_pandas(spark, materialized):
         df._partials_df.unpersist()
         return out
 
+    return rows("arrow"), rows("pandas")
+
+
+def test_arrow_blocks_byte_identical_to_pandas(spark, materialized):
+    """The Arrow-native pack/reblock stages (the default) must produce
+    BYTE-identical block rows to the pandas reference stages — same
+    cuts, same varint payloads, same metadata and exactly equal
+    impacts — unsalted and salted over 48 partitions."""
     for kw in (
         {"hot_min_df": 10**9},
-        {"hot_min_df": 1, "salt_shift": 3},
         {"hot_min_df": 1, "salt_shift": 3, "num_partitions": 48},
     ):
-        a = rows("arrow", **kw)
-        p = rows("pandas", **kw)
+        a, p = _arrow_and_pandas_block_rows(spark, materialized, **kw)
+        assert len(a) == len(p) > 0 and a == p, kw
+
+
+def test_pack_reblock_arrow_equals_pandas(spark, materialized):
+    """The Arrow-native pack/reblock stages must be BYTE-identical to
+    the pandas reference implementation — same block rows, same varint
+    payloads, same impacts — including under aggressive salting
+    (salt_shift=3 genuinely splits terms)."""
+    for kw in ({"hot_min_df": 10**9}, {"hot_min_df": 1, "salt_shift": 3}):
+        a, p = _arrow_and_pandas_block_rows(spark, materialized, **kw)
         assert len(a) == len(p) > 0 and a == p, kw
 
 
