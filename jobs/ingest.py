@@ -2,7 +2,7 @@
 index (the continuous-crawl counterpart of jobs/build_index.py).
 
     # catch-up ingest: process the backlog of crawl drops, append
-    # doc-disjoint postings deltas, then stop (availableNow trigger)
+    # doc-disjoint partial-block deltas, then stop (availableNow trigger)
     spark-submit --py-files mecab_ko_lucene_analyzer_spark.zip \
         jobs/ingest.py ingest --input /path/crawl_drops \
         --index /path/idx --checkpoint /path/ckpt --lang ko
@@ -15,9 +15,8 @@ index (the continuous-crawl counterpart of jobs/build_index.py).
     ... jobs/ingest.py compact --index /path/idx [--output /path/out]
 
 Ingest appends cheap doc-disjoint deltas (no block rebuild on the hot
-path); compact pays one doc_id range shuffle and rebuilds postings +
-stats + blocks over the union — run it on whatever cadence serving
-freshness requires.
+path); compact runs the batch build's stats + blocks stage over their
+union — run it on whatever cadence serving freshness requires.
 """
 
 from __future__ import annotations

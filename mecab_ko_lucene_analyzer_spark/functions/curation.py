@@ -636,7 +636,7 @@ def pack_manifest(
     toks = whitespace_tokens(text)
     n = F.size(F.coalesce(toks, F.array().cast("array<string>")))
     d = docs.select("doc_id", n.cast("long").alias("n_tokens"))
-    parts, offsets = range_partition_offsets(
+    parts, offsets, _ = range_partition_offsets(
         d, "doc_id", weight="n_tokens", num_partitions=num_partitions
     )
 

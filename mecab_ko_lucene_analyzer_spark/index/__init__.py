@@ -1,8 +1,6 @@
-from .docids import assign_doc_ids
 from .build import InvertedIndex, build_and_write, build_index, load_index
 
 __all__ = [
-    "assign_doc_ids",
     "InvertedIndex",
     "build_and_write",
     "build_index",

@@ -19,14 +19,12 @@ Plan discipline (the part that must survive 100×):
 
 from __future__ import annotations
 
-import threading
+import time
 from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-
-from .docids import assign_doc_ids
 
 __all__ = [
     "InvertedIndex",
@@ -35,6 +33,7 @@ __all__ = [
     "load_index",
     "corpus_partials",
     "postings_from_partials",
+    "partials_from_postings",
 ]
 
 K1 = 1.2
@@ -85,11 +84,13 @@ def _stable_plan(jplan) -> bool:
     return all(_stable_plan(kids.apply(i)) for i in range(kids.size()))
 
 
-def _docid_partitions(pages, lang_filter, num_partitions, order):
+def _docid_partitions(pages, lang_filter, num_partitions, order, doc_base=0):
     """docID scaffold for :func:`corpus_partials`:
     prune → (optionally) canonical-order shuffle → per-partition row
-    counts → docID base offsets. Returns ``(text_parts, map_parts,
-    offsets, n_docs)``.
+    counts → docID base offsets (+ ``doc_base``). Returns ``(text_parts,
+    map_parts, offsets, n_docs, release)``; ``release()`` unpersists what
+    the scaffold pinned, once the last pass has run. ``order="url"``
+    passes share one cached ``docids.range_partition_offsets`` relation.
 
     For ``order="input"`` the two passes are separate pruned frames:
     mapInPandas/mapInArrow carry EVERY input column across Arrow, so
@@ -104,65 +105,47 @@ def _docid_partitions(pages, lang_filter, num_partitions, order):
     against InMemoryRelation)."""
     from pyspark import StorageLevel
 
-    spark = pages.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+    from .docids import partition_offsets, range_partition_offsets
+
     if lang_filter is not None:
         pages = pages.filter(F.col("lang") == lang_filter)
     pruned = pages.select("url", "text")
+    pinned = None
     if order == "url":
-        parts = (
-            pruned.repartitionByRange(num_partitions, "url")
-            .sortWithinPartitions("url")
-            .withColumn("_pid", F.spark_partition_id())
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        parts, offsets, n_docs = range_partition_offsets(
+            pruned, "url", num_partitions=num_partitions
         )
-        text_parts = map_parts = parts  # both passes hit the one cache
+        text_parts = map_parts = pinned = parts
     else:
         if not _rows_stable_across_jobs(pruned):
-            pruned = pruned.persist(StorageLevel.MEMORY_AND_DISK)
-        parts = pruned.withColumn("_pid", F.spark_partition_id())
+            pruned = pinned = pruned.persist(StorageLevel.MEMORY_AND_DISK)
+        offsets, n_docs = partition_offsets(
+            pruned.withColumn("_pid", F.spark_partition_id())
+        )
         text_parts = pruned.select("text").withColumn("_pid", F.spark_partition_id())
         map_parts = pruned.select("url").withColumn("_pid", F.spark_partition_id())
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in parts.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    return text_parts, map_parts, offsets, acc
+    if doc_base:
+        offsets = {pid: off + doc_base for pid, off in offsets.items()}
+
+    release = pinned.unpersist if pinned is not None else (lambda: None)
+    return text_parts, map_parts, offsets, n_docs, release
 
 
-def _doc_map_df(map_parts, offsets):
-    """``(doc_id, url)`` resolution table from the url-pruned pass."""
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    map_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("url", T.StringType(), False),
-        ]
+def _doc_map_df(map_parts, offsets, *carry):
+    """``(doc_id, url, *carry)`` from the url pass, as a JVM-side
+    projection: a row's docID is its partition's base offset plus its
+    rank within the partition — the low 33 bits of
+    ``monotonically_increasing_id`` (documented layout), counted in the
+    same row order the tokenize pass numbers its documents in."""
+    n_parts = max(offsets, default=-1) + 1
+    base = F.element_at(
+        F.array(*[F.lit(offsets.get(p, 0)) for p in range(n_parts)]),
+        F.col("_pid") + 1,
     )
-
-    def emit_map(batches):
-        seen = 0
-        base = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if base is None:
-                base = offsets[int(pdf["_pid"].iloc[0])]
-            ids = range(base + seen, base + seen + len(pdf))
-            seen += len(pdf)
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"), "url": pdf["url"].values}
-            )
-
-    return map_parts.mapInPandas(emit_map, map_schema)
+    rank = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+    return map_parts.select(
+        (base + rank).cast("long").alias("doc_id"), "url", *carry
+    )
 
 
 def corpus_partials(
@@ -173,6 +156,7 @@ def corpus_partials(
     num_partitions: int | None = None,
     order: str = "input",
     block_size: int | None = None,
+    doc_base: int = 0,
 ):
     """Corpus → ``(partials, doc_map)`` with ZERO token-level shuffle:
     the tokenize pass emits partial-block rows (the compressed map-side-
@@ -195,6 +179,9 @@ def corpus_partials(
       partition-count independent) via one range shuffle of the pruned
       corpus, persisted so both passes share it.
 
+    ``doc_base`` offsets every docID (a streaming micro-batch numbers
+    its documents after every earlier batch's).
+
     Salting is NOT applied here (hot-term dfs aren't known until the
     stats stage); the blocks stage assigns ``salt = first_doc >>
     SALT_SHIFT`` per partial row for hot terms — partials are
@@ -202,8 +189,9 @@ def corpus_partials(
     remain doc-contiguous and the salted groups concatenate without a
     re-merge, exactly as with per-doc salting.
 
-    Returns ``(partials, doc_map, n_docs, counters)`` — the doc count
-    falls out of the docID offset pass, and ``counters`` is a pair of
+    Returns ``(partials, doc_map, n_docs, counters, release)`` — the doc
+    count falls out of the docID offset pass, ``release()`` unpersists
+    the docID scaffold after the sinks ran, and ``counters`` is a pair of
     Spark accumulators ``(total_tokens, postings_rows)`` updated inside
     the tokenize ``mapInArrow``. Accumulator updates in a
     TRANSFORMATION can replay under task retries / speculation, so
@@ -219,8 +207,8 @@ def corpus_partials(
 
     bs = block_size or _DEFAULT_BS
     spark = pages.sparkSession
-    text_parts, map_parts, offsets, acc = _docid_partitions(
-        pages, lang_filter, num_partitions, order
+    text_parts, map_parts, offsets, acc, release = _docid_partitions(
+        pages, lang_filter, num_partitions, order, doc_base
     )
     acc_tokens = spark.sparkContext.accumulator(0)
     acc_postings = spark.sparkContext.accumulator(0)
@@ -350,13 +338,14 @@ def corpus_partials(
         _doc_map_df(map_parts, offsets),
         acc,
         (acc_tokens, acc_postings),
+        release,
     )
 
 
 def postings_from_partials(partials: DataFrame) -> DataFrame:
     """Row-postings VIEW decoded from partial blocks — same rows as a
     materialized ``postings`` table (term, doc_id, tf, positions,
-    doc_len; compacted and older builds), computed on demand with
+    doc_len; earlier builds and compactions), computed on demand with
     vectorized varint decodes and zero-copy per-doc position slicing
     (per-doc payload bounds come from the varint continuation bits; the
     position bytes themselves are never re-encoded)."""
@@ -422,6 +411,23 @@ def postings_from_partials(partials: DataFrame) -> DataFrame:
                 yield out.slice(i, 131072)
 
     return pruned.mapInArrow(unpack, schema)
+
+
+def partials_from_postings(postings: DataFrame) -> DataFrame:
+    """Unsalted partial blocks from row postings — the inverse of
+    :func:`postings_from_partials`. The range repartition by ``doc_id``
+    makes each partition a disjoint docID range, so the Arrow pack
+    stage's per-partition term runs are doc-contiguous segments."""
+    from .blocks import PARTIAL_SCHEMA, _pack_stage_arrow
+    from .codec import BLOCK_SIZE
+
+    spark = postings.sparkSession
+    return (
+        postings.select("term", "doc_id", "tf", "positions", "doc_len")
+        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .mapInArrow(_pack_stage_arrow(frozenset(), 0, BLOCK_SIZE), PARTIAL_SCHEMA)
+    )
 
 
 def _stats_from_partials(partials: DataFrame):
@@ -593,21 +599,6 @@ def _footer_row_count(spark: SparkSession, path: str, name: str) -> int:
     return _read_stage_table(spark, path.rsplit("/", 1)[0], name).count()
 
 
-def _stats_from_postings(postings: DataFrame):
-    """Stats of a row-postings relation without ``doc_len`` (streaming
-    compaction's deltas): ``doc_len`` is ``sum(tf)`` over a doc's
-    postings — identical to the token count."""
-    term_stats = postings.groupBy("term").agg(F.count("*").alias("df"))
-    doc_stats = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
-    return term_stats, doc_stats, _corpus_stats(doc_stats)
-
-
-def _corpus_stats(doc_stats: DataFrame) -> DataFrame:
-    return doc_stats.agg(
-        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
-    )
-
-
 @dataclass
 class InvertedIndex:
     """The queryable index: four DataFrames (≙ Iceberg tables), plus
@@ -644,15 +635,15 @@ def build_index(
     (lazy: call ``.cache()`` or use :func:`build_and_write` to avoid
     recomputing tokenization when more than one member table is
     consumed)."""
-    partials, _, _, _ = corpus_partials(
+    partials, _, _, _, _ = corpus_partials(
         pages, lang_filter, mode, compound_noun_min_length
     )
     term_stats, doc_stats = _stats_from_partials(partials)
+    corpus = doc_stats.agg(
+        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
+    )
     return InvertedIndex(
-        postings_from_partials(partials),
-        term_stats,
-        doc_stats,
-        _corpus_stats(doc_stats),
+        postings_from_partials(partials), term_stats, doc_stats, corpus
     )
 
 
@@ -660,8 +651,12 @@ def build_index(
 def _in_background(fn):
     """Run ``fn`` on a daemon thread for the duration of the ``with``
     body, so an independent Spark sink overlaps the body's jobs. The
-    thread is always joined on exit; its exception is re-raised on the
-    calling thread (an exception of the body takes precedence)."""
+    thread is an ``InheritableThread``: its jobs carry the caller's
+    Spark local properties (job group, description, scheduler pool).
+    The thread is always joined on exit; its exception is re-raised on
+    the calling thread (an exception of the body takes precedence)."""
+    from pyspark import InheritableThread
+
     err: list[BaseException] = []
 
     def run():
@@ -670,7 +665,7 @@ def _in_background(fn):
         except BaseException as e:  # re-raised on the calling thread
             err.append(e)
 
-    t = threading.Thread(target=run, daemon=True)
+    t = InheritableThread(run, daemon=True)
     t.start()
     try:
         yield
@@ -678,6 +673,126 @@ def _in_background(fn):
         t.join()
     if err:
         raise err[0]
+
+
+@contextmanager
+def _build_confs(spark: SparkSession):
+    """Size scans and Arrow batches to the build's row shapes for the
+    duration of every stage action:
+
+    * 16384-row Arrow batches — the session default (2048, sized for
+      page-text rows) quadruples Python-crossing overhead on the narrow
+      posting/partial rows; measured 3× on the pack stage.
+    * 4MB scan splits + 256KB open cost — Spark's bytes-per-core
+      targeting yields ~1 split per core, so every stage runs one task
+      wave and a single straggler stretches the whole stage (and the
+      postings table inherits that coarse file layout, capping
+      downstream parallelism). ~4 waves of small tasks smooth
+      stragglers at any core count; override per deployment via
+      SPARK_GRAFT_MAX_PARTITION_BYTES when input files are large enough
+      that Spark's own targeting is already fine.
+    """
+    import os as _os
+
+    overrides = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "16384",
+        "spark.sql.files.maxPartitionBytes": _os.environ.get(
+            "SPARK_GRAFT_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)
+        ),
+        "spark.sql.files.openCostInBytes": str(256 * 1024),
+    }
+    saved = {}
+    for key, val in overrides.items():
+        try:
+            saved[key] = spark.conf.get(key)
+        except Exception:
+            saved[key] = None
+        spark.conf.set(key, val)
+    try:
+        yield
+    finally:
+        for key, val in saved.items():
+            if val is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, val)
+
+
+def _stats_and_blocks(
+    spark: SparkSession,
+    base_path: str,
+    stats: bool = True,
+    blocks: bool = True,
+    hot_min_df: int = 1000,
+    salt_shift: int | None = None,
+) -> tuple[int, float, float, float]:
+    """The stats+blocks stage over ``{base_path}/partials``, shared by
+    :func:`build_and_write` and streaming compaction, so a compacted
+    index equals a batch build by construction. Returns ``(n_docs,
+    avgdl, stats_seconds, blocks_seconds)``.
+
+    Both halves run as ONE overlapped schedule. Only ``avgdl`` (the
+    Observation riding the doc_stats write) is on the blocks' critical
+    path: the term_stats write runs in the background while the blocks
+    exchange/re-block executes, and the blocks join consumes the CACHED
+    term_stats DataFrame (same rows the write persists), so it neither
+    waits for that write nor re-reads it. A blocks-only run reads
+    term_stats and corpus_stats back from disk. ``stats_seconds`` run
+    to the end of the last stats sink (the background term_stats write
+    may outlast the corpus write)."""
+    from pyspark.sql import Observation
+
+    from .blocks import SALT_SHIFT, build_blocks_from_partials
+
+    t0 = time.perf_counter()
+    partials = _read_stage_table(spark, base_path, "partials")
+    ts_done: list[float] = []
+    with ExitStack() as stack:
+        if stats:
+            term_stats, doc_stats = _stats_from_partials(partials)
+            term_stats = term_stats.persist()
+            stack.callback(term_stats.unpersist)
+
+            def write_terms():
+                _write_term_stats(term_stats, f"{base_path}/term_stats")
+                ts_done.append(time.perf_counter())
+
+            stack.enter_context(_in_background(write_terms))
+            # corpus stats ride the doc_stats write via Observation —
+            # exact under task retries / speculation (observed metrics
+            # are action-consistent), unlike transformation-side
+            # accumulators which double-count replayed batches; avgdl
+            # feeds block_max_impact and BM25, so it must be
+            # retry-exact. Zero extra pass.
+            obs = Observation("corpus")
+            doc_stats.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("doc_len").alias("dl_sum"),
+            ).write.mode("overwrite").parquet(f"{base_path}/doc_stats")
+            vals = obs.get
+            n_docs = int(vals["n_docs"])
+            avgdl = (vals["dl_sum"] or 0) / n_docs if n_docs else 0.0
+            _write_corpus_stats(spark, f"{base_path}/corpus_stats", n_docs, avgdl)
+        else:
+            term_stats = _read_stage_table(spark, base_path, "term_stats")
+            corpus = _read_stage_table(spark, base_path, "corpus_stats").first()
+            n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
+        t_stats = time.perf_counter()
+        if blocks:
+            # block rows leave the re-blocker (term, first_doc)-sorted
+            # within partitions, so parquet row-group min/max stats
+            # prune term-filtered scans
+            build_blocks_from_partials(
+                partials,
+                term_stats,
+                n_docs=n_docs,
+                avgdl=avgdl,
+                hot_min_df=hot_min_df,
+                salt_shift=salt_shift if salt_shift is not None else SALT_SHIFT,
+            ).write.mode("overwrite").parquet(f"{base_path}/blocks")
+    stats_s = max(t_stats, *ts_done) - t0 if stats else 0.0
+    return n_docs, avgdl, stats_s, time.perf_counter() - t_stats
 
 
 def build_and_write(
@@ -714,50 +829,6 @@ def build_and_write(
     from .manifest import BuildManifest, run_stage
 
     spark = pages.sparkSession
-
-    @contextmanager
-    def _build_confs():
-        """Size scans and Arrow batches to the build's row shapes for
-        the duration of every stage action:
-
-        * 16384-row Arrow batches — the session default (2048, sized
-          for page-text rows) quadruples Python-crossing overhead on
-          the narrow posting/partial rows; measured 3× on the pack
-          stage.
-        * 4MB scan splits + 256KB open cost — Spark's bytes-per-core
-          targeting yields ~1 split per core, so every stage runs one
-          task wave and a single straggler stretches the whole stage
-          (and the postings table inherits that coarse file layout,
-          capping downstream parallelism). ~4 waves of small tasks
-          smooth stragglers at any core count; override per deployment
-          via SPARK_GRAFT_MAX_PARTITION_BYTES when input files are
-          large enough that Spark's own targeting is already fine.
-        """
-        import os as _os
-
-        overrides = {
-            "spark.sql.execution.arrow.maxRecordsPerBatch": "16384",
-            "spark.sql.files.maxPartitionBytes": _os.environ.get(
-                "SPARK_GRAFT_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)
-            ),
-            "spark.sql.files.openCostInBytes": str(256 * 1024),
-        }
-        saved = {}
-        for key, val in overrides.items():
-            try:
-                saved[key] = spark.conf.get(key)
-            except Exception:
-                saved[key] = None
-            spark.conf.set(key, val)
-        try:
-            yield
-        finally:
-            for key, val in saved.items():
-                if val is None:
-                    spark.conf.unset(key)
-                else:
-                    spark.conf.set(key, val)
-
     manifest = BuildManifest.load_or_create(
         base_path,
         {
@@ -778,17 +849,22 @@ def build_and_write(
     )
 
     def stage_emit():
-        partials, doc_map, n_docs, (acc_tokens, acc_postings) = corpus_partials(
-            pages, lang_filter, mode, compound_noun_min_length, order=doc_order
+        partials, doc_map, n_docs, (acc_tokens, acc_postings), release = (
+            corpus_partials(
+                pages, lang_filter, mode, compound_noun_min_length, order=doc_order
+            )
         )
         # doc_map is independent of the main sink — submit it
         # concurrently so its (url-pruned, Python-thin) job fills task
         # slots the tokenize pass leaves idle in its tail, instead of
         # paying a second full job latency serially
-        with _in_background(
-            lambda: doc_map.write.mode("overwrite").parquet(f"{base_path}/doc_map")
-        ):
-            partials.write.mode("overwrite").parquet(f"{base_path}/partials")
+        try:
+            with _in_background(
+                lambda: doc_map.write.mode("overwrite").parquet(f"{base_path}/doc_map")
+            ):
+                partials.write.mode("overwrite").parquet(f"{base_path}/partials")
+        finally:
+            release()
         # docs_tokenized falls out of the docID offset pass (exact);
         # token/posting totals are transformation-side accumulators —
         # informational lineage only (may over-count on task retries;
@@ -799,104 +875,30 @@ def build_and_write(
             "postings_emitted": acc_postings.value,
         }
 
-    with _build_confs():
+    with _build_confs(spark):
         run_stage(manifest, "partials", f"{base_path}/partials", stage_emit)
 
-    def stage_stats_blocks():
-        """The ``stats`` and ``blocks`` stages as ONE overlapped
-        schedule, on fresh and resumed builds alike; each half runs
-        only when its manifest stage is incomplete (blocks only when
-        ``with_blocks``). Only ``avgdl`` (the Observation riding the
-        doc_stats write) is on the blocks' critical path: the
-        term_stats write runs in the background while the blocks
-        exchange/re-block executes, and the blocks join consumes the
-        CACHED term_stats DataFrame (same rows the write persists), so
-        it neither waits for that write nor re-reads it. A resumed
-        blocks half reads term_stats and corpus_stats back from disk.
-        ``stats`` is recorded only after every stats sink has its
-        ``_SUCCESS``, then ``blocks`` — a crash mid-way records
-        nothing new, and the rerun is byte-identical."""
-        import time
-
-        from pyspark.sql import Observation
-
-        from .blocks import SALT_SHIFT, build_blocks_from_partials
-
-        do_stats = not manifest.stage_complete("stats")
-        do_blocks = with_blocks and not manifest.stage_complete("blocks")
-        if not (do_stats or do_blocks):
-            return
-        t0 = time.perf_counter()
-        partials = _read_stage_table(spark, base_path, "partials")
-        ts_done: list[float] = []
-        with ExitStack() as stack:
-            if do_stats:
-                term_stats, doc_stats = _stats_from_partials(partials)
-                term_stats = term_stats.persist()
-                stack.callback(term_stats.unpersist)
-
-                def write_terms():
-                    _write_term_stats(term_stats, f"{base_path}/term_stats")
-                    ts_done.append(time.perf_counter())
-
-                stack.enter_context(_in_background(write_terms))
-                # corpus stats ride the doc_stats write via Observation —
-                # exact under task retries / speculation (observed
-                # metrics are action-consistent), unlike transformation-
-                # side accumulators which double-count replayed batches;
-                # avgdl feeds block_max_impact and BM25, so it must be
-                # retry-exact. Zero extra pass.
-                obs = Observation("corpus")
-                doc_stats.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum("doc_len").alias("dl_sum"),
-                ).write.mode("overwrite").parquet(f"{base_path}/doc_stats")
-                vals = obs.get
-                n_docs = int(vals["n_docs"])
-                avgdl = (vals["dl_sum"] or 0) / n_docs if n_docs else 0.0
-                _write_corpus_stats(spark, f"{base_path}/corpus_stats", n_docs, avgdl)
-            else:
-                term_stats = _read_stage_table(spark, base_path, "term_stats")
-                corpus = _read_stage_table(spark, base_path, "corpus_stats").first()
-                n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
-            t_stats = time.perf_counter()
-            if do_blocks:
-                # block rows leave the re-blocker (term, first_doc)-sorted
-                # within partitions, so parquet row-group min/max stats
-                # prune term-filtered scans
-                build_blocks_from_partials(
-                    partials,
-                    term_stats,
-                    n_docs=n_docs,
-                    avgdl=avgdl,
-                    hot_min_df=hot_min_df,
-                    salt_shift=salt_shift if salt_shift is not None else SALT_SHIFT,
-                ).write.mode("overwrite").parquet(f"{base_path}/blocks")
-        if do_stats:
-            # the stats stage ends when its last sink does: the
-            # background term_stats write may outlast the corpus write
-            manifest.record(
-                "stats",
-                f"{base_path}/term_stats",
-                {"n_docs": n_docs, "avgdl": avgdl},
-                max(t_stats, *ts_done) - t0,
+    # the ``stats`` and ``blocks`` stages as ONE overlapped schedule, on
+    # fresh and resumed builds alike; each half runs only when its
+    # manifest stage is incomplete. ``stats`` is recorded only after
+    # every stats sink has its ``_SUCCESS``, then ``blocks`` — a crash
+    # mid-way records nothing new, and the rerun is byte-identical
+    do_stats = not manifest.stage_complete("stats")
+    do_blocks = with_blocks and not manifest.stage_complete("blocks")
+    if do_stats or do_blocks:
+        with _build_confs(spark):
+            n_docs, avgdl, stats_s, blocks_s = _stats_and_blocks(
+                spark, base_path, do_stats, do_blocks, hot_min_df, salt_shift
             )
+        if do_stats:
+            counters = {"n_docs": n_docs, "avgdl": avgdl}
+            manifest.record("stats", f"{base_path}/term_stats", counters, stats_s)
         if do_blocks:
             # footer-only count (driver-side on local paths — no job)
+            n_blocks = _footer_row_count(spark, f"{base_path}/blocks", "blocks")
             manifest.record(
-                "blocks",
-                f"{base_path}/blocks",
-                {
-                    "blocks_written": _footer_row_count(
-                        spark, f"{base_path}/blocks", "blocks"
-                    )
-                },
-                time.perf_counter() - t_stats,
+                "blocks", f"{base_path}/blocks", {"blocks_written": n_blocks}, blocks_s
             )
-
-    with _build_confs():
-        stage_stats_blocks()
 
     def _field_stage(name: str, postings_maker):
         """Extra-field stage (``index/anchors.py`` tables): postings
@@ -933,7 +935,7 @@ def build_and_write(
             )
             return {f"n_{name}_docs": n_fd, f"{name}_len_sum": fls}
 
-        with _build_confs():
+        with _build_confs(spark):
             run_stage(manifest, f"{name}s", f"{base_path}/{name}_postings", stage)
 
     if with_anchors:
@@ -1005,7 +1007,7 @@ def build_and_write(
                 ).count()
             }
 
-        with _build_confs():
+        with _build_confs(spark):
             run_stage(manifest, "boosts", f"{base_path}/doc_boosts", stage_boosts)
 
     if with_forward:
@@ -1050,7 +1052,7 @@ def build_and_write(
                 )
             }
 
-        with _build_confs():
+        with _build_confs(spark):
             run_stage(manifest, "forward", f"{base_path}/forward", stage_forward)
 
     return load_index(spark, base_path)
@@ -1073,8 +1075,8 @@ def load_index(spark: SparkSession, base_path: str) -> InvertedIndex:
         # work) instead of letting spark.read throw PATH_NOT_FOUND —
         # the thrown probe dumps a full Java stacktrace into every
         # serving log for build_and_write builds, which never
-        # materialize the row-postings directory (compacted indexes and
-        # older builds still have one)
+        # materialize the row-postings directory (earlier builds and
+        # compactions still have one)
         from ..streaming.incremental import _fs_and_path
 
         fs, jpath, _jvm = _fs_and_path(spark, f"{base_path}/postings")

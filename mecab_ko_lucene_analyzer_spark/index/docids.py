@@ -9,7 +9,9 @@ scalable deterministic scheme is the classic two-pass rank:
    per-partition posting builds;
 2. count rows per partition (tiny driver-side cumsum → base offsets);
 3. per-partition sequential ids on top of the base offset
-   (``mapInPandas``, order within the sorted partition is defined).
+   (``mapInArrow``/``mapInPandas``, order within the sorted partition
+   is defined) — ``index/build.py::corpus_partials`` with
+   ``order="url"``.
 
 docID therefore equals the global rank of ``url`` — reproducible under
 any cluster size, retry, or input split, which is what makes the build
@@ -18,15 +20,10 @@ resumable (I6) and docID-delta encoding meaningful.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-__all__ = ["assign_doc_ids", "range_partition_offsets"]
+__all__ = ["partition_offsets", "range_partition_offsets"]
 
 
 def range_partition_offsets(
@@ -35,20 +32,22 @@ def range_partition_offsets(
     weight: str | None = None,
     num_partitions: int | None = None,
     persist: bool = True,
-) -> tuple[DataFrame, dict[int, int]]:
+) -> tuple[DataFrame, dict[int, int], int]:
     """Shared first half of the two-pass global prefix scheme: range-
     partition + sort ``df`` by ``key`` (adding a ``_pid`` column) and
     return it with ``offsets[pid]`` = the total of ``weight`` (row
-    count when None) over all earlier partitions. ``assign_doc_ids``
-    consumes it for global ranks; ``functions.curation.pack_manifest``
-    for the global token-offset cumsum — one home for the subtle
-    invariant instead of two copies.
+    count when None) over all earlier partitions, and the grand total.
+    ``index/build.py``'s url-ordered docID scaffold consumes it for
+    global ranks; ``functions.curation.pack_manifest`` for the global
+    token-offset cumsum — one home for the subtle invariant instead of
+    two copies.
 
     ``persist`` pins the range-shuffled relation (memory-and-disk) so
     the offsets pass and the caller's consume pass share ONE shuffle —
     and, critically, see the *same* range boundaries (RangePartitioner
-    samples per-job otherwise). The collect is one row per partition,
-    never per row of ``df``."""
+    samples per-job otherwise). The caller unpersists it once its last
+    consume pass has run. The collect is one row per partition, never
+    per row of ``df``."""
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
@@ -58,6 +57,16 @@ def range_partition_offsets(
         from pyspark import StorageLevel
 
         parts = parts.persist(StorageLevel.MEMORY_AND_DISK)
+    return (parts, *partition_offsets(parts, weight))
+
+
+def partition_offsets(
+    parts: DataFrame, weight: str | None = None
+) -> tuple[dict[int, int], int]:
+    """``(offsets, total)`` over a relation carrying a ``_pid`` column:
+    ``offsets[pid]`` = the total of ``weight`` (row count when None)
+    over all earlier partitions. One aggregate job, one collected row
+    per partition."""
     agg = F.count("*") if weight is None else F.sum(weight)
     sums = {
         r["_pid"]: r["w"]
@@ -68,38 +77,4 @@ def range_partition_offsets(
     for pid in sorted(sums):
         offsets[pid] = acc
         acc += sums[pid]
-    return parts, offsets
-
-
-def assign_doc_ids(
-    pages: DataFrame,
-    key: str = "url",
-    num_partitions: int | None = None,
-    persist: bool = True,
-) -> DataFrame:
-    """Return ``pages`` with a dense deterministic ``doc_id`` column,
-    partitioned by contiguous docID range (ascending ``key`` order)."""
-    parts, offsets = range_partition_offsets(
-        pages, key, num_partitions=num_partitions, persist=persist
-    )
-
-    out_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType(), False)]
-        + [f for f in pages.schema.fields]
-    )
-
-    def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seen = 0
-        base = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if base is None:
-                base = offsets[int(pdf["_pid"].iloc[0])]
-            ids = range(base + seen, base + seen + len(pdf))
-            seen += len(pdf)
-            out = pdf.drop(columns=["_pid"])
-            out.insert(0, "doc_id", pd.Series(ids, index=pdf.index, dtype="int64"))
-            yield out
-
-    return parts.mapInPandas(tag, out_schema)
+    return offsets, acc

@@ -57,7 +57,7 @@ INDEX_TABLES = (
 
 #: members a build may legitimately lack: build_and_write builds
 #: materialize partials instead of row postings, and with_blocks=False
-#: ones have no blocks; compacted indexes and older builds have row
+#: ones have no blocks; earlier builds and compactions have row
 #: postings and no partials; forward is the opt-in doc-keyed
 #: projection (with_forward=True)
 _OPTIONAL_TABLES = frozenset({"blocks", "partials", "postings", "forward"})
@@ -194,8 +194,8 @@ def publish_index(
             if name not in _OPTIONAL_TABLES:  # e.g. with_blocks=False builds
                 raise
     if not ({"postings", "partials"} & frames.keys()):
-        # both are optional INDIVIDUALLY (compacted and older builds
-        # have postings, build_and_write builds have partials) — but an index with NEITHER has
+        # both are optional INDIVIDUALLY (earlier builds and compactions
+        # have postings, newer ones have partials) — but an index with NEITHER has
         # no posting data at all: a truncated/mis-pathed directory,
         # not a valid build. Probed BEFORE any write so nothing is
         # half-published.

@@ -138,3 +138,27 @@ def test_overlapped_stats_seconds_cover_the_term_stats_write(
     base = str(tmp_path_factory.mktemp("slow") / "idx")
     _build(pages, base)
     assert _manifest(base)["stages"]["stats"]["seconds"] >= delay
+
+
+def test_background_writes_carry_the_callers_job_group(spark, pages, tmp_path):
+    """The doc_map and term_stats writes run on background threads that
+    inherit the caller's job group: a build under ``setJobGroup`` adds
+    no job to the ungrouped set. A marker job in a second group closes
+    the count (the listener bus delivers job starts in order)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "build under a job group")
+    try:
+        _build(pages, str(tmp_path / "idx"))
+        sc.setJobGroup("g-marker", "marker")
+        sc.parallelize([0], 1).count()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup("g-marker"):
+            assert time.monotonic() < deadline, "marker job never showed"
+            time.sleep(0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("g")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()

@@ -5,7 +5,8 @@ oracle (rank-identical docIDs, scores within 1e-9)."""
 import pytest
 
 from mecab_ko_lucene_analyzer_spark.analysis.tokenizer import token_records
-from mecab_ko_lucene_analyzer_spark.index import assign_doc_ids, build_index
+from mecab_ko_lucene_analyzer_spark.index import build_index
+from mecab_ko_lucene_analyzer_spark.index.build import corpus_partials
 from mecab_ko_lucene_analyzer_spark.query import bm25_oracle, bm25_topk
 from mecab_ko_lucene_analyzer_spark.sources import synthesize_webpages
 
@@ -29,11 +30,19 @@ def test_corpus_deterministic(pages, spark):
     assert a == b
 
 
+def _url_order_doc_map(pages, num_partitions):
+    _, doc_map, _, _, release = corpus_partials(
+        pages, lang_filter=None, order="url", num_partitions=num_partitions
+    )
+    try:
+        return {r["url"]: r["doc_id"] for r in doc_map.collect()}
+    finally:
+        release()
+
+
 def test_doc_ids_dense_and_deterministic(spark, pages):
-    ids1 = assign_doc_ids(pages, num_partitions=4).select("doc_id", "url").collect()
-    ids2 = assign_doc_ids(pages, num_partitions=7).select("doc_id", "url").collect()
-    m1 = {r["url"]: r["doc_id"] for r in ids1}
-    m2 = {r["url"]: r["doc_id"] for r in ids2}
+    m1 = _url_order_doc_map(pages, 4)
+    m2 = _url_order_doc_map(pages, 7)
     assert m1 == m2  # partition-count independent
     assert sorted(m1.values()) == list(range(N_DOCS))  # dense 0..N-1
     # doc_id order == url order (global rank)
@@ -151,15 +160,12 @@ def test_shuffled_input_keeps_postings_docmap_consistent(spark):
     persist fallback this relied on per-job row-order luck."""
     import pyspark.sql.functions as F
 
-    from mecab_ko_lucene_analyzer_spark.index.build import (
-        corpus_partials,
-        postings_from_partials,
-    )
+    from mecab_ko_lucene_analyzer_spark.index.build import postings_from_partials
 
     pages = synthesize_webpages(spark, 40, partitions=3)
     pages.write.mode("overwrite").parquet("/tmp/test_shuffled_input_pages")
     shuffled = spark.read.parquet("/tmp/test_shuffled_input_pages").repartition(7)
-    partials, doc_map, n_docs, _ = corpus_partials(shuffled, lang_filter=None)
+    partials, doc_map, n_docs, _, _ = corpus_partials(shuffled, lang_filter=None)
     postings = postings_from_partials(partials)
     dm = {r["doc_id"]: r["url"] for r in doc_map.collect()}
     assert len(dm) == n_docs == 40

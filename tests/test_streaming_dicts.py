@@ -128,10 +128,10 @@ def test_compact_incremental_equals_batch_build(spark, tmp_path):
         return sorted((tuple(r) for r in df.select(*cols).collect()), key=key)
 
     pcols = ["term", "doc_id", "tf", "positions", "doc_len"]
-    a = rows(f"{out}/postings", pcols, lambda t: (t[0], t[1]))
-    # fused serving build: row postings are a decoded view over partials
+    # both indexes serve row postings as a decoded view over partials
     from mecab_ko_lucene_analyzer_spark.index.build import load_index
 
+    a = df_rows(load_index(spark, out).postings, pcols, lambda t: (t[0], t[1]))
     b = df_rows(
         load_index(spark, f"{B}/batch").postings, pcols, lambda t: (t[0], t[1])
     )
@@ -401,7 +401,7 @@ def test_incremental_replay_is_idempotent(spark, tmp_path):
     ).awaitTermination(120)
     read = lambda: sorted(  # noqa: E731
         tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
-        for r in spark.read.parquet(f"{B}/idx/postings_delta").collect()
+        for r in spark.read.parquet(f"{B}/idx/partials_delta").collect()
     )
     before = read()
     # simulate the crash window: drop the latest commit marker so the
@@ -479,7 +479,7 @@ def test_compact_latest_only_upserts_by_url(spark, tmp_path):
             for r in postings_df.collect()
         )
 
-    got = keyed(spark.read.parquet(f"{out}/postings"),
+    got = keyed(load_index(spark, out).postings,
                 {v: k for k, v in doc_map.items()})
     batch = load_index(spark, f"{B}/batch")
     batch_map = {
@@ -547,6 +547,7 @@ def test_delete_tombstones_fold_at_compaction(spark, tmp_path):
     compaction with nothing rewritten on the ingest path."""
     import datetime
 
+    from mecab_ko_lucene_analyzer_spark.index.build import load_index
     from mecab_ko_lucene_analyzer_spark.sources.webpages import WEBPAGES_SCHEMA
     from mecab_ko_lucene_analyzer_spark.streaming.incremental import (
         compact_incremental,
@@ -594,7 +595,7 @@ def test_delete_tombstones_fold_at_compaction(spark, tmp_path):
     # postings carry no doc_id outside the surviving doc_map
     alive = set(doc_map2.values())
     posting_docs = {r["doc_id"] for r in
-                    spark.read.parquet(f"{out2}/postings").collect()}
+                    load_index(spark, out2).postings.collect()}
     assert posting_docs == alive
 
     # a second delete of the (re-crawled) url takes the max horizon:
@@ -648,3 +649,127 @@ def test_delete_cli_and_canonicalized_tombstones(spark, tmp_path, capsys, monkey
     out = compact_incremental(spark, f"{B}/idx", out_path=f"{B}/compact")
     assert spark.read.parquet(f"{out}/doc_map").count() == 0
     assert spark.read.parquet(f"{out}/corpus_stats").first()["n_docs"] == 0
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_url_order_build_and_ingest_release_docid_scaffold(spark, tmp_path):
+    """The url-ranked docID scaffold is persisted for its two passes
+    (partials and doc_map) and released once both sinks have written:
+    neither a ``doc_order="url"`` build nor a two-batch ingest leaves a
+    cached copy of its ``(url, text)`` rows behind."""
+    from mecab_ko_lucene_analyzer_spark.index import build_and_write
+
+    B = str(tmp_path)
+    pages = synthesize_webpages(spark, 40, partitions=2)
+    before = _persistent_rdd_ids(spark)
+    build_and_write(pages, f"{B}/batch", lang_filter=None, doc_order="url")
+    assert _persistent_rdd_ids(spark) == before
+
+    pages.filter(F.col("url") < "https://example-00000020").write.parquet(f"{B}/in")
+    incremental_index_stream(
+        spark, f"{B}/in", f"{B}/idx", f"{B}/ckpt", lang_filter=None
+    ).awaitTermination(120)
+    pages.filter(F.col("url") >= "https://example-00000020").write.mode(
+        "append"
+    ).parquet(f"{B}/in")
+    incremental_index_stream(
+        spark, f"{B}/in", f"{B}/idx", f"{B}/ckpt", lang_filter=None
+    ).awaitTermination(120)
+    assert read_incremental_postings(spark, f"{B}/idx").select(
+        "doc_id"
+    ).distinct().count() == 40
+    assert _persistent_rdd_ids(spark) == before
+
+
+def test_empty_micro_batch_writes_no_delta(spark, tmp_path):
+    """A micro-batch whose every row the ``lang_filter`` drops writes no
+    delta partition and leaves the doc base where it was."""
+    import datetime
+    import glob
+    import os
+
+    from mecab_ko_lucene_analyzer_spark.sources.webpages import WEBPAGES_SCHEMA
+    from mecab_ko_lucene_analyzer_spark.streaming.incremental import (
+        _read_doc_state,
+    )
+
+    B = str(tmp_path)
+    ts = datetime.datetime(2026, 1, 1)
+
+    def drop(rows, mode):
+        spark.createDataFrame(
+            [(u, ts, b"", t, lang) for u, t, lang in rows], WEBPAGES_SCHEMA
+        ).write.mode(mode).parquet(f"{B}/in")
+
+    def ingest():
+        incremental_index_stream(
+            spark, f"{B}/in", f"{B}/idx", f"{B}/ckpt", lang_filter="ko"
+        ).awaitTermination(120)
+
+    def partitions(table):
+        return sorted(
+            os.path.basename(d) for d in glob.glob(f"{B}/idx/{table}/batch_id=*")
+        )
+
+    state = f"{B}/idx/_stream_state/doc_base.json"
+    drop([("u://a", "검색 엔진", "ko"), ("u://b", "데이터 처리", "ko")], "overwrite")
+    ingest()
+    assert _read_doc_state(spark, state)["next_doc_base"] == 2
+    drop([("u://c", "search engine", "en")], "append")
+    ingest()
+    commits = [
+        f for f in glob.glob(f"{B}/ckpt/commits/*") if not f.endswith(".crc")
+    ]
+    assert len(commits) == 2  # the filtered-out batch did run
+    assert partitions("partials_delta") == ["batch_id=0"]
+    assert partitions("doc_map_delta") == ["batch_id=0"]
+    st = _read_doc_state(spark, state)
+    assert st["next_doc_base"] == 2 and st["last_batch_id"] == 0
+
+
+def test_compact_refuses_row_format_deltas(spark, tmp_path):
+    """An index holding row-format ``postings_delta`` deltas from an
+    earlier ingest cannot be compacted from the partials deltas alone:
+    compaction raises, naming the directory, instead of silently
+    dropping those documents."""
+    from mecab_ko_lucene_analyzer_spark.streaming.incremental import (
+        compact_incremental,
+    )
+
+    B = str(tmp_path)
+    synthesize_webpages(spark, 10, partitions=1).write.parquet(f"{B}/in")
+    incremental_index_stream(
+        spark, f"{B}/in", f"{B}/idx", f"{B}/ckpt", lang_filter=None
+    ).awaitTermination(120)
+    spark.createDataFrame(
+        [("검색", 100, 1, bytearray(b"\x00"), 0)],
+        "term string, doc_id long, tf long, positions binary, batch_id long",
+    ).write.partitionBy("batch_id").parquet(f"{B}/idx/postings_delta")
+    with pytest.raises(RuntimeError, match=f"{B}/idx/postings_delta"):
+        compact_incremental(spark, f"{B}/idx", out_path=f"{B}/compact")
+
+
+def test_compact_into_an_earlier_layout_replaces_its_row_postings(spark, tmp_path):
+    """Compacting into an ``out_path`` that holds an earlier compaction
+    layout's row ``postings`` removes them, so ``load_index`` serves the
+    new partials instead of the stale rows."""
+    from mecab_ko_lucene_analyzer_spark.index.build import load_index
+    from mecab_ko_lucene_analyzer_spark.streaming.incremental import (
+        compact_incremental,
+    )
+
+    B = str(tmp_path)
+    synthesize_webpages(spark, 10, partitions=1).write.parquet(f"{B}/in")
+    incremental_index_stream(
+        spark, f"{B}/in", f"{B}/idx", f"{B}/ckpt", lang_filter=None
+    ).awaitTermination(120)
+    spark.createDataFrame(
+        [("stale", 999, 1, bytearray(b"\x00"), 1)],
+        "term string, doc_id long, tf int, positions binary, doc_len int",
+    ).write.parquet(f"{B}/compact/postings")
+    out = compact_incremental(spark, f"{B}/idx", out_path=f"{B}/compact")
+    got = {r["doc_id"] for r in load_index(spark, out).postings.collect()}
+    assert got == set(range(10))
