@@ -2367,17 +2367,27 @@ _WS_INDEX_CACHE: dict[str, tuple] = {}
 
 def _ws_block_index(spark, sf_dir):
     """Positions-carrying block index over the whitespace tokens (the
-    SQL-replicable tokenization): the real codec + block-max build
-    (`index/blocks.py::build_blocks`), shared by the bulk-retrieval,
-    phrase, and count contract queries. Memoized per sf_dir — the
-    driver runs all three in one process, and the cache owns the
-    persisted partials (callers must NOT unpersist). Returns
+    SQL-replicable tokenization), shared by the bulk-retrieval, phrase,
+    and count contract queries: the token rows pack into partial blocks
+    (`index/build.py::partials_from_tokens`), stats derive from the
+    partials, and the index build's own blocks stage
+    (`index/blocks.py::build_blocks_from_partials`) re-blocks them.
+    Memoized per sf_dir — the contract runs all of them in one process,
+    and the cache owns the persisted partials (callers must NOT
+    unpersist; the blocks read them as an InMemoryRelation). Returns
     (blocks, term_stats, n, avgdl)."""
     cached = _WS_INDEX_CACHE.get(sf_dir)
     if cached is not None and cached[0].sparkSession is spark:
         return cached
-    from mecab_ko_lucene_analyzer_spark.functions.udfs import encode_positions_udf
-    from mecab_ko_lucene_analyzer_spark.index.blocks import build_blocks
+    from pyspark import StorageLevel
+
+    from mecab_ko_lucene_analyzer_spark.index.blocks import (
+        build_blocks_from_partials,
+    )
+    from mecab_ko_lucene_analyzer_spark.index.build import (
+        _stats_from_partials,
+        partials_from_tokens,
+    )
 
     toks = _docs(spark, sf_dir).select(
         "doc_id",
@@ -2385,21 +2395,13 @@ def _ws_block_index(spark, sf_dir):
             F.filter(F.split("text", " "), lambda x: x != F.lit(""))
         ).alias("position", "term"),
     )
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("doc_len"))
-    postings = (
-        toks.groupBy("term", "doc_id")
-        .agg(
-            F.count("*").alias("tf"),
-            F.sort_array(F.collect_list("position")).alias("parr"),
-        )
-        .withColumn("positions", encode_positions_udf()(F.col("parr")))
-        .drop("parr")
-        .join(dl, "doc_id")
-    )
-    term_stats = postings.groupBy("term").agg(F.count("*").alias("df"))
-    row = dl.agg(F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")).first()
-    blocks = build_blocks(
-        postings, term_stats, row["n"], float(row["avgdl"]), hot_min_df=10**9
+    partials = partials_from_tokens(toks).persist(StorageLevel.MEMORY_AND_DISK)
+    term_stats, doc_stats = _stats_from_partials(partials)
+    row = doc_stats.agg(
+        F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
+    ).first()
+    blocks = build_blocks_from_partials(
+        partials, term_stats, row["n"], float(row["avgdl"]), hot_min_df=10**9
     )
     entry = (blocks, term_stats, row["n"], float(row["avgdl"]))
     _WS_INDEX_CACHE[sf_dir] = entry

@@ -172,25 +172,3 @@ def product_tokens_table(
             )
 
     return narrow.mapInPandas(emit, FLAT_TOKENS_SCHEMA)
-
-
-def encode_positions_udf():
-    """array<int> sorted positions → per-doc delta+varint bytes (the
-    postings wire format) — for paths that aggregate positions with
-    ``collect_list`` instead of the fused emitter."""
-    import numpy as np
-
-    from ..index.codec import encode_varints
-
-    def fn(col: pd.Series) -> pd.Series:
-        out = []
-        for plist in col:
-            arr = np.asarray(plist, dtype=np.uint64)
-            deltas = np.empty_like(arr)
-            if arr.size:
-                deltas[0] = arr[0]
-                np.subtract(arr[1:], arr[:-1], out=deltas[1:])
-            out.append(encode_varints(deltas))
-        return pd.Series(out)
-
-    return pandas_udf(fn, T.BinaryType())

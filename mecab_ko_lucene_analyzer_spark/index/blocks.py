@@ -1,12 +1,22 @@
-"""Block-compressed posting lists with block-max metadata (I3/I4).
+"""Block-compressed posting lists with block-max metadata (I3/I4), and
+the one codec of the partial-block wire format.
 
-Input: row postings ``(term, doc_id, tf, positions, doc_len)`` (the
-``build.py`` output; ``positions`` is the per-doc delta+varint byte
-string, so block position payloads are plain concatenation). Output: ``blocks`` table::
+Input: partial blocks (:data:`PARTIAL_SCHEMA`) — runs of ≤
+``BLOCK_SIZE`` docs of one term over a contiguous docID range, emitted
+map-side by the tokenize pass (``build.py::corpus_partials``), from
+token rows (``build.py::partials_from_tokens``) or from row postings
+(``build.py::partials_from_postings``). Output: ``blocks`` table::
 
     term string, first_doc long, n_docs int,
     doc_deltas binary, tfs binary, pos_deltas binary, doc_lens binary,
     block_max_tf int, block_max_impact double
+
+Every producer cuts and encodes through :func:`encode_blocks` and emits
+through :func:`_emit`; every consumer decodes through
+:func:`decode_partials`. A partial and a block share one payload
+layout (first doc absolute, then gaps; ``pos_deltas`` is the per-doc
+delta+varint position bytes back to back), so re-blocking slices the
+position payloads instead of re-encoding them.
 
 ``doc_lens`` (varint per doc) makes WAND scoring self-contained: the
 exact BM25 impact is recomputable from (tf, doc_len, avgdl) without a
@@ -20,33 +30,32 @@ Ding & Suel 2011).
 Skew handling (I4): hot terms (df above a corpus-share threshold — in
 Korean web text exactly the josa/particle terms the reference hardcodes,
 ``KoreanWordExtractor.java:62``) are salted by docID range
-(``doc_id >> SALT_SHIFT``); salt ranges are doc-contiguous, so per-salt
-block runs concatenate into a globally doc-ordered posting list without
-any re-merge pass.
+(``first_doc >> SALT_SHIFT``); salt ranges are doc-contiguous, so
+per-salt block runs concatenate into a globally doc-ordered posting
+list without any re-merge pass.
 
-Shuffle discipline (the 100× story): the wide exchange carries
+Shuffle discipline (the 100× story): the one wide exchange carries
 MAP-SIDE-COMBINED partial blocks, not posting rows — see
-:func:`build_blocks`.
+:func:`build_blocks_from_partials`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from .build import B, K1
-from .codec import BLOCK_SIZE
+from .codec import BLOCK_SIZE, decode_varints, encode_varint_groups_concat
 
 __all__ = [
-    "build_blocks",
     "build_blocks_from_partials",
+    "decode_partials",
+    "encode_blocks",
     "BLOCKS_SCHEMA",
+    "PARTIAL_SCHEMA",
     "SALT_SHIFT",
 ]
 
@@ -54,6 +63,10 @@ __all__ = [
 #: salt, and a 10^12-doc corpus spreads a ubiquitous josa term over
 #: ~15M salt keys instead of 1.
 SALT_SHIFT = 16
+
+#: a term is hot (salted) when its df reaches this share of the corpus
+#: and the build's ``hot_min_df``
+HOT_SHARE = 0.05
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -83,80 +96,10 @@ PARTIAL_SCHEMA = T.StructType(
 )
 
 
-def _hot_terms(
-    term_stats: DataFrame, n_docs: int, share: float, min_df: int
-) -> list[str]:
-    thresh = max(int(n_docs * share), min_df)
+def _hot_terms(term_stats: DataFrame, n_docs: int, min_df: int) -> list[str]:
+    thresh = max(int(n_docs * HOT_SHARE), min_df)
     rows = term_stats.filter(F.col("df") >= thresh).select("term").collect()
     return [r["term"] for r in rows]
-
-
-def _pack_stage(hot: frozenset, salt_shift: int, block_size: int):
-    """Narrow map-side combine: one input partition (a contiguous docID
-    range — the postings emitter is doc-local) → partial-block rows in
-    the block wire format, ≤ ``block_size`` docs each."""
-
-    def pack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codec import encode_varint_groups
-
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        terms = pdf["term"].to_numpy()
-        docs = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tfs = pdf["tf"].to_numpy(dtype=np.uint64)
-        dls = pdf["doc_len"].to_numpy(dtype=np.uint64)
-        poslists = pdf["positions"].to_numpy()
-        salts = np.where(
-            pdf["term"].isin(hot).to_numpy() if hot else False,
-            docs >> salt_shift,
-            0,
-        ).astype(np.int64)
-        # int term codes for the sort: lexsort over an object (string)
-        # array falls back to per-element Python comparisons; grouping
-        # only needs EQUAL terms adjacent, not alphabetical order
-        codes = pd.factorize(pdf["term"], sort=False)[0]
-        order = np.lexsort((docs, salts, codes))
-        codes = codes[order]
-        terms, docs, tfs, dls = terms[order], docs[order], tfs[order], dls[order]
-        salts, poslists = salts[order], poslists[order]
-        n = len(docs)
-        run_change = np.empty(n, dtype=bool)
-        run_change[0] = True
-        run_change[1:] = (codes[1:] != codes[:-1]) | (salts[1:] != salts[:-1])
-        run_id = np.cumsum(run_change) - 1
-        run_starts = np.flatnonzero(run_change)
-        offset_in_run = np.arange(n, dtype=np.int64) - run_starts[run_id]
-        gstarts = np.flatnonzero(offset_in_run % block_size == 0)
-        gsizes = np.diff(np.append(gstarts, n))
-        deltas = docs.astype(np.uint64).copy()
-        deltas[1:] = docs[1:].astype(np.uint64) - docs[:-1].astype(np.uint64)
-        deltas[gstarts] = docs[gstarts].astype(np.uint64)
-        dd = encode_varint_groups(deltas, gsizes)
-        tt = encode_varint_groups(tfs, gsizes)
-        ll = encode_varint_groups(dls, gsizes)
-        pos_lens = np.fromiter((len(x) for x in poslists), np.int64, count=n)
-        allpos = b"".join(poslists)
-        pos_bounds = np.zeros(len(gstarts) + 1, dtype=np.int64)
-        np.cumsum(np.add.reduceat(pos_lens, gstarts), out=pos_bounds[1:])
-        yield pd.DataFrame(
-            {
-                "term": terms[gstarts],
-                "salt": salts[gstarts],
-                "first_doc": docs[gstarts],
-                "n_docs": gsizes.astype(np.int32),
-                "doc_deltas": dd,
-                "tfs": tt,
-                "pos_deltas": [
-                    allpos[pos_bounds[i] : pos_bounds[i + 1]]
-                    for i in range(len(gstarts))
-                ],
-                "doc_lens": ll,
-            }
-        )
-
-    return pack
 
 
 def _bin_offsets(col):
@@ -206,13 +149,12 @@ def _pa_binary(data, bounds):
 
 
 def _combine_large(chunks):
-    """Concatenate input batches into ONE chunk safely: binary/string
-    columns are upcast to their ``large_`` variants (int64 offsets)
-    first, so a multi-GiB partition payload cannot overflow the int32
-    offsets mid-``combine_chunks`` (ArrowInvalid) — nor can a
+    """Concatenate input batches into ONE record batch safely:
+    binary/string columns are upcast to their ``large_`` variants (int64
+    offsets) first, so a multi-GiB partition payload cannot overflow the
+    int32 offsets mid-``combine_chunks`` (ArrowInvalid) — nor can a
     still-chunked column silently desync from the numpy views of the
-    numeric columns (``.chunk(0)`` on a multi-chunk column would
-    process a row subset)."""
+    numeric columns."""
     import pyarrow as pa
 
     tbl = pa.Table.from_batches(chunks)
@@ -226,7 +168,7 @@ def _combine_large(chunks):
         )
         for f in tbl.schema
     ]
-    return tbl.cast(pa.schema(fields)).combine_chunks()
+    return tbl.cast(pa.schema(fields)).combine_chunks().to_batches()[0]
 
 
 def _binary_row_slices(bounds_cols, n_rows, max_bytes=1 << 30):
@@ -264,431 +206,262 @@ def _gather_bytes(data, src_starts, src_lens):
     return data[gather]
 
 
-def _pack_stage_arrow(hot: frozenset, salt_shift: int, block_size: int):
-    """Arrow-native map-side combine — same output bytes as
-    :func:`_pack_stage`, but the partition's payloads never become
-    per-row Python objects: term strings stay dictionary-encoded Arrow
-    buffers, position payloads stay one contiguous byte buffer sliced
-    by offsets, and the output binary columns are built straight from
-    (buffer, bounds) pairs. At 16 threads the pandas version's ~10^7
-    per-row ``bytes``/``str`` allocations are pure DRAM traffic — the
-    dominant scaling cost of the whole blocks job."""
+def encode_blocks(
+    run_start, docs, tfs, dls, pos_data, pos_lens, block_size=BLOCK_SIZE
+):
+    """The one cut-and-encode of the block wire format.
 
-    def pack(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    Rows are postings grouped into runs — one term, or one (term, salt)
+    — with docs ascending inside a run: ``run_start`` marks each run's
+    first row, ``pos_data`` holds the rows' position payloads back to
+    back in row order and ``pos_lens`` their byte lengths. Every run is
+    cut into blocks of ``block_size`` docs (its last block shorter).
+    Returns ``(starts, sizes, payload)``: each block's first row, its
+    doc count, and its ``doc_deltas``, ``tfs``, ``pos_deltas`` and
+    ``doc_lens`` columns as (buffer, int64 bounds) pairs. A block's
+    first doc is absolute, the rest are gaps; positions are sliced, not
+    re-encoded."""
+    n = len(docs)
+    run_id = np.cumsum(run_start) - 1
+    offset = np.arange(n, dtype=np.int64) - np.flatnonzero(run_start)[run_id]
+    starts = np.flatnonzero(offset % block_size == 0)
+    sizes = np.diff(np.append(starts, n))
+    deltas = docs.astype(np.uint64)
+    deltas[1:] = (docs[1:] - docs[:-1]).astype(np.uint64)
+    deltas[starts] = docs[starts].astype(np.uint64)
+    pos_bounds = np.zeros(len(starts) + 1, dtype=np.int64)
+    np.cumsum(np.add.reduceat(pos_lens, starts), out=pos_bounds[1:])
+    payload = [
+        encode_varint_groups_concat(deltas, sizes),
+        encode_varint_groups_concat(tfs, sizes),
+        (pos_data, pos_bounds),
+        encode_varint_groups_concat(dls, sizes),
+    ]
+    return starts, sizes, payload
 
-        from .codec import encode_varint_groups_concat
 
-        chunks = [c for c in batches if c.num_rows]
-        if not chunks:
-            return
-        tbl = _combine_large(chunks)
-        term_col = tbl.column("term").chunk(0)
-        docs = tbl.column("doc_id").to_numpy()
-        tfs = tbl.column("tf").to_numpy().astype(np.uint64)
-        dls = tbl.column("doc_len").to_numpy().astype(np.uint64)
-        pos_data, pos_bnd = _bin_offsets(tbl.column("positions").chunk(0))
-        dict_col = pc.dictionary_encode(term_col)
-        codes = dict_col.indices.to_numpy()
-        if hot:
-            hot_uniq = pc.is_in(
-                dict_col.dictionary, value_set=pa.array(sorted(hot))
-            ).to_numpy(zero_copy_only=False)
-            salts = np.where(hot_uniq[codes], docs >> salt_shift, 0).astype(
-                np.int64
-            )
-        else:
-            salts = np.zeros(len(docs), dtype=np.int64)
-        n = len(docs)
-        if bool(np.all(docs[1:] >= docs[:-1])):
-            # doc-major input (emitter/file order — the common case): a
-            # stable sort on term codes alone IS the (code, salt, doc)
-            # lexsort, because salt = doc >> shift is monotone within a
-            # term's doc run. One sort pass instead of three.
-            order = np.argsort(codes, kind="stable")
-        else:
-            order = np.lexsort((docs, salts, codes))
-        codes_s, docs_s = codes[order], docs[order]
-        tfs_s, dls_s, salts_s = tfs[order], dls[order], salts[order]
-        run_change = np.empty(n, dtype=bool)
-        run_change[0] = True
-        run_change[1:] = (codes_s[1:] != codes_s[:-1]) | (
-            salts_s[1:] != salts_s[:-1]
+def _emit(names, cols):
+    """Arrow batches of per-block columns — Arrow arrays, numpy arrays,
+    or binary (buffer, bounds) pairs — in byte-budgeted row slices
+    (:func:`_binary_row_slices`): one partition's payload can exceed
+    Arrow's 2 GiB int32-offset ceiling."""
+    import pyarrow as pa
+
+    binary = [c[1] for c in cols if isinstance(c, tuple)]
+    for lo, hi in _binary_row_slices(binary, len(binary[0]) - 1):
+        yield pa.RecordBatch.from_arrays(
+            [
+                _pa_binary(c[0], c[1][lo : hi + 1])
+                if isinstance(c, tuple)
+                else c.slice(lo, hi - lo)
+                if isinstance(c, pa.Array)
+                else pa.array(c[lo:hi])
+                for c in cols
+            ],
+            names=names,
         )
-        run_starts = np.flatnonzero(run_change)
-        run_id = np.cumsum(run_change) - 1
-        offset_in_run = np.arange(n, dtype=np.int64) - run_starts[run_id]
-        gstarts = np.flatnonzero(offset_in_run % block_size == 0)
-        gsizes = np.diff(np.append(gstarts, n))
-        deltas = docs_s.astype(np.uint64).copy()
-        deltas[1:] = docs_s[1:].astype(np.uint64) - docs_s[:-1].astype(np.uint64)
-        deltas[gstarts] = docs_s[gstarts].astype(np.uint64)
-        dd, dd_b = encode_varint_groups_concat(deltas, gsizes)
-        tt, tt_b = encode_varint_groups_concat(tfs_s, gsizes)
-        ll, ll_b = encode_varint_groups_concat(dls_s, gsizes)
-        src_lens = (pos_bnd[1:] - pos_bnd[:-1])[order]
-        allpos = _gather_bytes(pos_data, pos_bnd[:-1][order], src_lens)
-        pos_b = np.zeros(len(gstarts) + 1, dtype=np.int64)
-        np.cumsum(np.add.reduceat(src_lens, gstarts), out=pos_b[1:])
-        names = [f.name for f in PARTIAL_SCHEMA.fields]
-        for lo, hi in _binary_row_slices(
-            (dd_b, tt_b, pos_b, ll_b), len(gstarts)
-        ):
-            yield pa.RecordBatch.from_arrays(
-                [
-                    dict_col.dictionary.take(
-                        pa.array(codes_s[gstarts][lo:hi])
-                    ).cast(pa.string()),
-                    pa.array(salts_s[gstarts][lo:hi]),
-                    pa.array(docs_s[gstarts][lo:hi]),
-                    pa.array(gsizes[lo:hi].astype(np.int32)),
-                    _pa_binary(dd, dd_b[lo : hi + 1]),
-                    _pa_binary(tt, tt_b[lo : hi + 1]),
-                    _pa_binary(allpos, pos_b[lo : hi + 1]),
-                    _pa_binary(ll, ll_b[lo : hi + 1]),
-                ],
-                names=names,
-            )
-
-    return pack
 
 
-def _reblock_stage_arrow(avgdl: float, k1: float, b: float, block_size: int):
-    """Arrow-native partial→final re-blocker — same bytes as
-    :func:`_reblock_stage` with the same geometry tricks (segmented
-    cumsum docIDs, positions sliced not re-encoded), plus two Arrow
-    wins: per-doc position byte widths come from the varint
-    continuation bits directly (no value decode of the position
-    stream), and the common already-doc-sorted case skips the sort and
-    the byte gather entirely."""
+def pack_partials(terms, codes, docs, tfs, dls, pos_data, pos_lens):
+    """Posting rows of one contiguous docID range → unsalted partial
+    batches. ``codes`` index the string array ``terms``; rows come
+    doc-major (docs ascending), so a stable sort on the term codes is
+    the (term, doc) order. ``pos_data``/``pos_lens`` are the rows'
+    position payloads back to back and their byte lengths."""
+    import pyarrow as pa
+
+    order = np.argsort(codes, kind="stable")
+    codes = codes[order]
+    run_start = np.empty(len(codes), dtype=bool)
+    run_start[0] = True
+    run_start[1:] = codes[1:] != codes[:-1]
+    pos_starts = np.zeros(len(pos_lens), dtype=np.int64)
+    np.cumsum(pos_lens[:-1], out=pos_starts[1:])
+    pos_lens = pos_lens[order]
+    docs = docs[order]
+    starts, sizes, payload = encode_blocks(
+        run_start,
+        docs,
+        tfs[order],
+        dls[order],
+        _gather_bytes(pos_data, pos_starts[order], pos_lens),
+        pos_lens,
+    )
+    yield from _emit(
+        PARTIAL_SCHEMA.fieldNames(),
+        [
+            terms.take(pa.array(codes[starts])).cast(pa.string()),
+            np.zeros(len(starts), dtype=np.int64),
+            docs[starts],
+            sizes.astype(np.int32),
+            *payload,
+        ],
+    )
+
+
+def decode_partials(batch):
+    """The one decode of the partial/block wire format, over an Arrow
+    batch of partial (or block) rows. Returns ``(row, docs, tfs, dls,
+    pos_data, pos_bounds)`` per doc: the batch row it came from, its
+    absolute docID (a segmented cumsum — each row's first value is
+    absolute), tf, doc_len, and the position bytes with per-doc int64
+    bounds. The bounds come off the varint continuation bits: a value
+    ends at a byte < 128, and doc d's payload ends at the
+    (cumsum tf)[d]-th value end (tf ≥ 1 per posting). ``tfs`` and the
+    positions are None when the batch does not carry their columns."""
+    nd = batch.column("n_docs").to_numpy(zero_copy_only=False).astype(np.int64)
+    npart = len(nd)
+    raw = decode_varints(_bin_offsets(batch.column("doc_deltas"))[0])
+    part_starts = np.zeros(npart, dtype=np.int64)
+    np.cumsum(nd[:-1], out=part_starts[1:])
+    csum = np.cumsum(raw.astype(np.int64))
+    prefix = np.zeros(npart, dtype=np.int64)
+    prefix[1:] = csum[part_starts[1:] - 1]
+    row = np.repeat(np.arange(npart), nd)
+    docs = csum - prefix[row]
+    dls = decode_varints(_bin_offsets(batch.column("doc_lens"))[0])
+    names = batch.schema.names
+    tfs = pos_data = pos_bounds = None
+    if "tfs" in names:
+        tfs = decode_varints(_bin_offsets(batch.column("tfs"))[0])
+    if "pos_deltas" in names:
+        pos_data = _bin_offsets(batch.column("pos_deltas"))[0]
+        pos_bounds = np.zeros(len(docs) + 1, dtype=np.int64)
+        if pos_data.size:
+            val_ends = np.flatnonzero(pos_data < 128)
+            pos_bounds[1:] = val_ends[np.cumsum(tfs.astype(np.int64)) - 1] + 1
+    return row, docs, tfs, dls, pos_data, pos_bounds
+
+
+def _pack_stage_arrow(batches):
+    """Row postings ``(term, doc_id, tf, positions, doc_len)`` of one
+    contiguous, doc-sorted docID range → unsalted partials. Payloads
+    stay in Arrow buffers: term strings are dictionary-encoded and the
+    position payloads one byte buffer sliced by offsets."""
+    import pyarrow.compute as pc
+
+    chunks = [c for c in batches if c.num_rows]
+    if not chunks:
+        return
+    batch = _combine_large(chunks)
+    terms = pc.dictionary_encode(batch.column("term"))
+    pos_data, pos_bounds = _bin_offsets(batch.column("positions"))
+    yield from pack_partials(
+        terms.dictionary,
+        terms.indices.to_numpy(),
+        batch.column("doc_id").to_numpy(),
+        batch.column("tf").to_numpy(),
+        batch.column("doc_len").to_numpy(),
+        pos_data,
+        np.diff(pos_bounds),
+    )
+
+
+def _pack_tokens_arrow(batches):
+    """Token rows ``(doc_id, term, position)`` of one contiguous docID
+    range → unsalted partials: tf is a (term, doc) pair's token count,
+    doc_len the doc's token count, and positions ascend within a
+    posting (delta+varint encoded, the first absolute)."""
+    import pyarrow.compute as pc
+
+    chunks = [c for c in batches if c.num_rows]
+    if not chunks:
+        return
+    batch = _combine_large(chunks)
+    terms = pc.dictionary_encode(batch.column("term"))
+    codes = terms.indices.to_numpy()
+    docs = batch.column("doc_id").to_numpy()
+    pos = batch.column("position").to_numpy().astype(np.int64)
+    order = np.lexsort((pos, codes, docs))
+    codes, docs, pos = codes[order], docs[order], pos[order]
+    n = len(docs)
+    new_doc = np.empty(n, dtype=bool)
+    new_doc[0] = True
+    new_doc[1:] = docs[1:] != docs[:-1]
+    new_posting = new_doc.copy()
+    new_posting[1:] |= codes[1:] != codes[:-1]
+    heads = np.flatnonzero(new_posting)
+    tfs = np.diff(np.append(heads, n))
+    doc_lens = np.diff(np.append(np.flatnonzero(new_doc), n))
+    gaps = pos.copy()
+    gaps[1:] -= pos[:-1]
+    gaps[heads] = pos[heads]
+    pos_data, pos_bounds = encode_varint_groups_concat(gaps, tfs)
+    yield from pack_partials(
+        terms.dictionary,
+        codes[heads],
+        docs[heads],
+        tfs,
+        doc_lens[np.cumsum(new_doc)[heads] - 1],
+        np.frombuffer(pos_data, dtype=np.uint8),
+        np.diff(pos_bounds),
+    )
+
+
+def _reblock_stage_arrow(avgdl: float):
+    """Arranged partials → final blocks: decode the partition once,
+    re-sort docs within each (term, salt) group (identity in the common
+    case — partials arrive (term, salt, first_doc)-sorted with disjoint
+    doc ranges, so the sort and the position byte gather are skipped;
+    required when the scan coalesced small files and partition doc
+    ranges interleave), and re-cut every ``BLOCK_SIZE`` docs within a
+    group — the same boundaries as a row-level global encode."""
 
     def reblock(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from .codec import decode_varints, encode_varint_groups_concat
-
         chunks = [c for c in batches if c.num_rows]
         if not chunks:
             return
-        tbl = _combine_large(chunks)
-        term_col = tbl.column("term").chunk(0)
-        p_salts = tbl.column("salt").to_numpy()
-        p_ndocs = tbl.column("n_docs").to_numpy().astype(np.int64)
-        npart = len(p_salts)
-        p_codes = pc.dictionary_encode(term_col).indices.to_numpy()
-        dd_data, _ = _bin_offsets(tbl.column("doc_deltas").chunk(0))
-        tt_data, _ = _bin_offsets(tbl.column("tfs").chunk(0))
-        ll_data, _ = _bin_offsets(tbl.column("doc_lens").chunk(0))
-        raw_docs = decode_varints(dd_data)
-        tfs = decode_varints(tt_data)
-        dls = decode_varints(ll_data)
-        n = len(raw_docs)
-        part_starts = np.zeros(npart, dtype=np.int64)
-        np.cumsum(p_ndocs[:-1], out=part_starts[1:])
-        csum = np.cumsum(raw_docs.astype(np.int64))
-        prefix = np.zeros(npart, dtype=np.int64)
-        prefix[1:] = csum[part_starts[1:] - 1]
-        part_of_row = np.repeat(np.arange(npart), p_ndocs)
-        docs = csum - prefix[part_of_row]
-        grp_change = np.empty(npart, dtype=bool)
+        batch = _combine_large(chunks)
+        row, docs, tfs, dls, pos_data, pos_bounds = decode_partials(batch)
+        p_codes = pc.dictionary_encode(batch.column("term")).indices.to_numpy()
+        p_salts = batch.column("salt").to_numpy()
+        grp_change = np.empty(batch.num_rows, dtype=bool)
         grp_change[0] = True
         grp_change[1:] = (p_codes[1:] != p_codes[:-1]) | (
             p_salts[1:] != p_salts[:-1]
         )
-        row_grp_change = np.zeros(n, dtype=bool)
-        row_grp_change[part_starts[grp_change]] = True
-        grp_id = np.cumsum(row_grp_change) - 1
-        # per-doc position byte widths straight from the wire format:
-        # a varint's last byte has the high bit clear, so value ends =
-        # flatnonzero(byte < 128) and doc d's payload ends at the
-        # (cumsum tf)[d]-th value end (tf ≥ 1 per posting row)
-        allpos, _ = _bin_offsets(tbl.column("pos_deltas").chunk(0))
-        doc_byte_starts = np.zeros(n, dtype=np.int64)
-        if allpos.size:
-            val_ends = np.flatnonzero(allpos < 128)
-            doc_byte_ends = val_ends[np.cumsum(tfs.astype(np.int64)) - 1] + 1
-            doc_byte_starts[1:] = doc_byte_ends[:-1]
-            per_doc_bytes = doc_byte_ends - doc_byte_starts
-        else:
-            per_doc_bytes = np.zeros(n, dtype=np.int64)
-        in_order = not bool(
-            np.any((docs[1:] < docs[:-1]) & (grp_id[1:] == grp_id[:-1]))
+        run_start = np.ones(len(row), dtype=bool)
+        run_start[1:] = row[1:] != row[:-1]
+        run_start &= grp_change[row]
+        pos_lens = np.diff(pos_bounds)
+        if np.any((docs[1:] < docs[:-1]) & ~run_start[1:]):
+            order = np.lexsort((docs, np.cumsum(run_start)))
+            docs, tfs, dls, row = docs[order], tfs[order], dls[order], row[order]
+            pos_lens = pos_lens[order]
+            pos_data = _gather_bytes(pos_data, pos_bounds[:-1][order], pos_lens)
+        starts, sizes, payload = encode_blocks(
+            run_start, docs, tfs, dls, pos_data, pos_lens
         )
-        if in_order:
-            # partials arrived (term, salt, first_doc)-sorted with
-            # non-overlapping doc ranges — identity permutation, and
-            # the position buffer is already in final byte order
-            terms_head = part_of_row
-            src_lens = per_doc_bytes
-            allpos_sorted = allpos
-        else:
-            order = np.lexsort((docs, grp_id))
-            docs, tfs, dls = docs[order], tfs[order], dls[order]
-            terms_head = part_of_row[order]
-            src_lens = per_doc_bytes[order]
-            allpos_sorted = _gather_bytes(
-                allpos, doc_byte_starts[order], src_lens
-            )
-        grp_row_starts = np.flatnonzero(row_grp_change)
-        offset_in_grp = np.arange(n, dtype=np.int64) - grp_row_starts[grp_id]
-        bstarts = np.flatnonzero(offset_in_grp % block_size == 0)
-        bsizes = np.diff(np.append(bstarts, n))
-        deltas = docs.astype(np.uint64).copy()
-        deltas[1:] = (docs[1:] - docs[:-1]).astype(np.uint64)
-        deltas[bstarts] = docs[bstarts].astype(np.uint64)
-        dd, dd_b = encode_varint_groups_concat(deltas, bsizes)
-        tt, tt_b = encode_varint_groups_concat(tfs, bsizes)
-        ll, ll_b = encode_varint_groups_concat(dls, bsizes)
-        pos_b = np.zeros(len(bstarts) + 1, dtype=np.int64)
-        np.cumsum(np.add.reduceat(src_lens, bstarts), out=pos_b[1:])
         tfs_f = tfs.astype(np.float64)
         impacts = tfs_f / (
-            tfs_f + k1 * (1 - b + b * dls.astype(np.float64) / avgdl)
+            tfs_f + K1 * (1 - B + B * dls.astype(np.float64) / avgdl)
         )
-        max_tfs = np.maximum.reduceat(tfs, bstarts).astype(np.int32)
-        max_impacts = np.maximum.reduceat(impacts, bstarts)
-        names = [f.name for f in BLOCKS_SCHEMA.fields]
-        for lo, hi in _binary_row_slices(
-            (dd_b, tt_b, pos_b, ll_b), len(bstarts)
-        ):
-            out = pa.RecordBatch.from_arrays(
-                [
-                    term_col.take(
-                        pa.array(terms_head[bstarts][lo:hi])
-                    ).cast(pa.string()),
-                    pa.array(docs[bstarts][lo:hi]),
-                    pa.array(bsizes[lo:hi].astype(np.int32)),
-                    _pa_binary(dd, dd_b[lo : hi + 1]),
-                    _pa_binary(tt, tt_b[lo : hi + 1]),
-                    _pa_binary(allpos_sorted, pos_b[lo : hi + 1]),
-                    _pa_binary(ll, ll_b[lo : hi + 1]),
-                    pa.array(max_tfs[lo:hi]),
-                    pa.array(max_impacts[lo:hi]),
-                ],
-                names=names,
-            )
+        cols = [
+            batch.column("term").take(pa.array(row[starts])).cast(pa.string()),
+            docs[starts],
+            sizes.astype(np.int32),
+            *payload,
+            np.maximum.reduceat(tfs, starts).astype(np.int32),
+            np.maximum.reduceat(impacts, starts),
+        ]
+        for out in _emit(BLOCKS_SCHEMA.fieldNames(), cols):
             for i in range(0, out.num_rows, 4096):
                 yield out.slice(i, 4096)
 
     return reblock
 
 
-def _reblock_stage(avgdl: float, k1: float, b: float, block_size: int):
-    """Partials → final ≤block_size blocks, fully vectorized.
-
-    The whole partition's payload streams are decoded in ONE
-    `decode_varints` call each (varint streams concatenate safely),
-    docIDs are reconstructed with a segmented cumsum (each partial's
-    first value is absolute), rows are re-sorted by docID within each
-    (term, salt) group (identity in the common case; required when the
-    scan coalesced small files and partition doc ranges interleave),
-    and block cuts fall every ``block_size`` docs within a group —
-    byte-identical boundaries to a row-level global encode. Position
-    payloads are never re-encoded: per-doc byte widths (from
-    ``varint_byte_lens``) let the re-blocker slice the original bytes.
-    """
-
-    def reblock(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codec import decode_varints, encode_varint_groups, varint_byte_lens
-
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        p_terms = pdf["term"].to_numpy()
-        p_salts = pdf["salt"].to_numpy(dtype=np.int64)
-        p_ndocs = pdf["n_docs"].to_numpy(dtype=np.int64)
-        npart = len(p_terms)
-        # --- batch-decode doc/tf/doclen streams --------------------
-        raw_docs = decode_varints(b"".join(pdf["doc_deltas"]))
-        tfs = decode_varints(b"".join(pdf["tfs"]))
-        dls = decode_varints(b"".join(pdf["doc_lens"]))
-        n = len(raw_docs)
-        part_starts = np.zeros(npart, dtype=np.int64)
-        np.cumsum(p_ndocs[:-1], out=part_starts[1:])
-        # segmented cumsum: partial-first values are absolute, so
-        # subtracting the running prefix before each partial restores
-        # absolute docIDs throughout
-        csum = np.cumsum(raw_docs.astype(np.int64))
-        prefix = np.zeros(npart, dtype=np.int64)
-        prefix[1:] = csum[part_starts[1:] - 1]
-        part_of_row = np.repeat(np.arange(npart), p_ndocs)
-        docs = csum - prefix[part_of_row]
-        # --- group membership per row -------------------------------
-        grp_change = np.empty(npart, dtype=bool)
-        grp_change[0] = True
-        grp_change[1:] = (p_terms[1:] != p_terms[:-1]) | (
-            p_salts[1:] != p_salts[:-1]
-        )
-        row_grp_change = np.zeros(n, dtype=bool)
-        row_grp_change[part_starts[grp_change]] = True
-        grp_id = np.cumsum(row_grp_change) - 1
-        # --- positions byte geometry (ORIGINAL row order) ------------
-        allpos = b"".join(pdf["pos_deltas"])
-        pos_vals = decode_varints(allpos)
-        val_widths = varint_byte_lens(pos_vals)
-        doc_pos_starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(tfs.astype(np.int64)[:-1], out=doc_pos_starts[1:])
-        per_doc_bytes = np.add.reduceat(val_widths, doc_pos_starts)
-        doc_byte_starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(per_doc_bytes[:-1], out=doc_byte_starts[1:])
-        # --- per-group doc sort --------------------------------------
-        order = np.lexsort((docs, grp_id))
-        docs, tfs, dls = docs[order], tfs[order], dls[order]
-        terms_by_row = np.repeat(p_terms, p_ndocs)[order]
-        src_starts = doc_byte_starts[order]
-        src_lens = per_doc_bytes[order]
-        total_pos_bytes = int(src_lens.sum())
-        out_starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(src_lens[:-1], out=out_starts[1:])
-        gather = (
-            np.repeat(src_starts - out_starts, src_lens)
-            + np.arange(total_pos_bytes, dtype=np.int64)
-        )
-        allpos_sorted = np.frombuffer(allpos, dtype=np.uint8)[gather].tobytes()
-        # --- block cuts every block_size docs within a group ---------
-        grp_row_starts = np.flatnonzero(row_grp_change)
-        offset_in_grp = np.arange(n, dtype=np.int64) - grp_row_starts[grp_id]
-        bstarts = np.flatnonzero(offset_in_grp % block_size == 0)
-        bsizes = np.diff(np.append(bstarts, n))
-        # --- re-encode docs/tfs/doclens at the new cuts --------------
-        deltas = docs.astype(np.uint64).copy()
-        deltas[1:] = (docs[1:] - docs[:-1]).astype(np.uint64)
-        deltas[bstarts] = docs[bstarts].astype(np.uint64)
-        dd = encode_varint_groups(deltas, bsizes)
-        tt = encode_varint_groups(tfs, bsizes)
-        ll = encode_varint_groups(dls, bsizes)
-        pos_bounds = np.zeros(len(bstarts) + 1, dtype=np.int64)
-        np.cumsum(np.add.reduceat(src_lens, bstarts), out=pos_bounds[1:])
-        # --- block metadata ------------------------------------------
-        tfs_f = tfs.astype(np.float64)
-        impacts = tfs_f / (tfs_f + k1 * (1 - b + b * dls.astype(np.float64) / avgdl))
-        out = pd.DataFrame(
-            {
-                "term": terms_by_row[bstarts],
-                "first_doc": docs[bstarts],
-                "n_docs": bsizes.astype(np.int32),
-                "doc_deltas": dd,
-                "tfs": tt,
-                "pos_deltas": [
-                    allpos_sorted[pos_bounds[i] : pos_bounds[i + 1]]
-                    for i in range(len(bstarts))
-                ],
-                "doc_lens": ll,
-                "block_max_tf": np.maximum.reduceat(tfs, bstarts).astype(np.int32),
-                "block_max_impact": np.maximum.reduceat(impacts, bstarts),
-            }
-        )
-        for i in range(0, len(out), 4096):
-            yield out.iloc[i : i + 4096]
-
-    return reblock
-
-
-def build_blocks(
-    postings: DataFrame,
-    term_stats: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    num_partitions: int | None = None,
-    hot_share: float = 0.05,
-    hot_min_df: int = 1000,
-    k1: float = K1,
-    b: float = B,
-    block_size: int = BLOCK_SIZE,
-    salt_shift: int = SALT_SHIFT,
-    impl: str = "arrow",
-) -> DataFrame:
-    """Row postings → block postings in two phases with a MAP-SIDE
-    COMBINE, so the one wide exchange carries partial blocks, not rows.
-
-    Phase 1 (:func:`_pack_stage`, narrow): each input partition covers
-    a contiguous docID range (the postings emitter is doc-local), so
-    its (term, salt) runs are globally doc-contiguous SEGMENTS of the
-    final posting lists — encode them into partial-block payloads.
-    Shuffle volume drops ~15–30×: ~13M posting rows → ~400k compact
-    partials on the 240k-doc bench.
-
-    Phase 2 (:func:`_reblock_stage`): range-partition the partials by
-    (term, salt) — a group never splits, and the parquet file layout
-    stays globally term-sorted for pruned serving scans — sort by
-    first_doc, batch-decode, and re-cut into exactly the blocks a
-    row-level global encode would produce (same boundaries, same
-    bytes).
-    """
-    from pyspark import StorageLevel
-
-    spark = postings.sparkSession
+def _arrange(partials, term_stats, n_docs, num_partitions, hot_min_df, salt_shift):
+    """The blocks exchange: salt hot terms' partials (``salt =
+    first_doc >> salt_shift``), range-partition by (term, salt) — a
+    group never splits, and the file layout stays globally term-sorted
+    for pruned serving scans — and sort by first_doc within a group."""
     if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
-    hot = frozenset(_hot_terms(term_stats, n_docs, hot_share, hot_min_df))
-    if impl == "arrow":
-        # default: Arrow-native stages — payloads stay in Arrow buffers
-        # end-to-end (no per-row bytes/str materialization); byte-
-        # identical to the pandas stages (equivalence-tested)
-        partials = postings.mapInArrow(
-            _pack_stage_arrow(hot, salt_shift, block_size), PARTIAL_SCHEMA
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        partials = postings.mapInPandas(
-            _pack_stage(hot, salt_shift, block_size), PARTIAL_SCHEMA
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    # persist on purpose: repartitionByRange SAMPLES its input with an
-    # extra job, which would re-run the whole pack pass — the cache
-    # makes the sampler a cache read. The partials ARE the compact
-    # combined form (≈ the compressed index size), the natural
-    # checkpoint unit at scale; spills to disk if memory-tight.
-    # Range partitioning keeps the FILE layout globally term-sorted
-    # (cold term-pruned scans hit 1–2 files).
-    arranged = partials.repartitionByRange(
-        num_partitions, "term", "salt"
-    ).sortWithinPartitions("term", "salt", "first_doc")
-    if impl == "arrow":
-        out = arranged.mapInArrow(
-            _reblock_stage_arrow(avgdl, k1, b, block_size), BLOCKS_SCHEMA
-        )
-    else:
-        out = arranged.mapInPandas(
-            _reblock_stage(avgdl, k1, b, block_size), BLOCKS_SCHEMA
-        )
-    out._partials_df = partials  # callers may unpersist after the action
-    return out
-
-
-def build_blocks_from_partials(
-    partials: DataFrame,
-    term_stats: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    num_partitions: int | None = None,
-    hot_share: float = 0.05,
-    hot_min_df: int = 1000,
-    k1: float = K1,
-    b: float = B,
-    block_size: int = BLOCK_SIZE,
-    salt_shift: int = SALT_SHIFT,
-) -> DataFrame:
-    """Partial blocks (the fused tokenize pass's output,
-    ``corpus_partials``) → final block postings: the map-side combine
-    already happened at emit time, so this is JUST the wide exchange +
-    re-block — no row-postings scan, no pack pass.
-
-    Skew salting happens HERE (hot dfs aren't known at emit time):
-    ``salt = first_doc >> salt_shift`` per partial row of a hot term.
-    Partials are doc-contiguous and pairwise disjoint, so
-    first_doc-derived salt ranges stay doc-contiguous per term — the
-    per-salt block runs concatenate into a globally doc-ordered posting
-    list exactly as with per-doc salting (block CUT positions may
-    differ from the row-postings pipeline for hot terms whose partials
-    straddle a salt boundary; contents are identical — the semantics
-    the salted-merge equivalence test pins).
-    """
-    spark = partials.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
-    hot = _hot_terms(term_stats, n_docs, hot_share, hot_min_df)
+        num_partitions = partials.sparkSession.sparkContext.defaultParallelism * 2
+    hot = _hot_terms(term_stats, n_docs, hot_min_df)
     salt = (
         F.when(
             F.col("term").isin(hot),
@@ -697,11 +470,37 @@ def build_blocks_from_partials(
         if hot
         else F.lit(0)
     )
-    arranged = (
+    return (
         partials.withColumn("salt", salt.cast("long"))
         .repartitionByRange(num_partitions, "term", "salt")
         .sortWithinPartitions("term", "salt", "first_doc")
     )
-    return arranged.mapInArrow(
-        _reblock_stage_arrow(avgdl, k1, b, block_size), BLOCKS_SCHEMA
+
+
+def build_blocks_from_partials(
+    partials: DataFrame,
+    term_stats: DataFrame,
+    n_docs: int,
+    avgdl: float,
+    num_partitions: int | None = None,
+    hot_min_df: int = 1000,
+    salt_shift: int = SALT_SHIFT,
+) -> DataFrame:
+    """Partial blocks → final block postings: the map-side combine
+    already happened where the partials were emitted, so this is JUST
+    the wide exchange (:func:`_arrange`) + re-block.
+
+    Skew salting happens HERE (hot dfs aren't known at emit time):
+    ``salt = first_doc >> salt_shift`` per partial row of a hot term.
+    Partials are doc-contiguous and pairwise disjoint, so
+    first_doc-derived salt ranges stay doc-contiguous per term — the
+    per-salt block runs concatenate into a globally doc-ordered posting
+    list exactly as with per-doc salting (block CUT positions of a hot
+    term may move where its partials straddle a salt boundary; contents
+    are identical — the semantics the salted-merge equivalence test
+    pins).
+    """
+    arranged = _arrange(
+        partials, term_stats, n_docs, num_partitions, hot_min_df, salt_shift
     )
+    return arranged.mapInArrow(_reblock_stage_arrow(avgdl), BLOCKS_SCHEMA)

@@ -34,6 +34,7 @@ __all__ = [
     "corpus_partials",
     "postings_from_partials",
     "partials_from_postings",
+    "partials_from_tokens",
 ]
 
 K1 = 1.2
@@ -155,7 +156,6 @@ def corpus_partials(
     compound_noun_min_length: int = 3,
     num_partitions: int | None = None,
     order: str = "input",
-    block_size: int | None = None,
     doc_base: int = 0,
 ):
     """Corpus → ``(partials, doc_map)`` with ZERO token-level shuffle:
@@ -202,10 +202,9 @@ def corpus_partials(
     import numpy as np
 
     from ..analysis.tokenizer import get_lattice_provider, index_token_stream
-    from .blocks import PARTIAL_SCHEMA
-    from .codec import BLOCK_SIZE as _DEFAULT_BS
+    from .blocks import PARTIAL_SCHEMA, pack_partials
+    from .codec import encode_varint_groups_concat
 
-    bs = block_size or _DEFAULT_BS
     spark = pages.sparkSession
     text_parts, map_parts, offsets, acc, release = _docid_partitions(
         pages, lang_filter, num_partitions, order, doc_base
@@ -215,9 +214,6 @@ def corpus_partials(
 
     def emit_partials(batches):
         import pyarrow as pa
-
-        from .blocks import _gather_bytes, _pa_binary
-        from .codec import encode_varint_groups_concat
 
         provider = get_lattice_provider()
         seen = 0
@@ -274,63 +270,17 @@ def corpus_partials(
                 docs_p.append(np.asarray(b_docs, dtype=np.int64))
                 tfs_p.append(np.asarray(b_tfs, dtype=np.uint64))
                 dls_p.append(np.asarray(b_dls, dtype=np.uint64))
-        if not codes_p:
-            return
-        codes = np.concatenate(codes_p)
-        docs = np.concatenate(docs_p)
-        tfs = np.concatenate(tfs_p)
-        dls = np.concatenate(dls_p)
-        pos_lens = np.concatenate(lens_p)
-        pos_data = np.frombuffer(b"".join(pos_bufs), dtype=np.uint8)
-        n = len(codes)
-        # docIDs are emitted ascending (base + running row offset), so a
-        # stable sort on term codes IS the (term, doc) lexsort
-        order = np.argsort(codes, kind="stable")
-        codes_s, docs_s = codes[order], docs[order]
-        tfs_s, dls_s = tfs[order], dls[order]
-        run_change = np.empty(n, dtype=bool)
-        run_change[0] = True
-        run_change[1:] = codes_s[1:] != codes_s[:-1]
-        run_starts = np.flatnonzero(run_change)
-        run_id = np.cumsum(run_change) - 1
-        offset_in_run = np.arange(n, dtype=np.int64) - run_starts[run_id]
-        gstarts = np.flatnonzero(offset_in_run % bs == 0)
-        gsizes = np.diff(np.append(gstarts, n))
-        deltas = docs_s.astype(np.uint64).copy()
-        deltas[1:] = (docs_s[1:] - docs_s[:-1]).astype(np.uint64)
-        deltas[gstarts] = docs_s[gstarts].astype(np.uint64)
-        dd, dd_b = encode_varint_groups_concat(deltas, gsizes)
-        tt, tt_b = encode_varint_groups_concat(tfs_s, gsizes)
-        ll, ll_b = encode_varint_groups_concat(dls_s, gsizes)
-        pos_starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(pos_lens[:-1], out=pos_starts[1:])
-        src_lens = pos_lens[order]
-        allpos = _gather_bytes(pos_data, pos_starts[order], src_lens)
-        pos_b = np.zeros(len(gstarts) + 1, dtype=np.int64)
-        np.cumsum(np.add.reduceat(src_lens, gstarts), out=pos_b[1:])
-        uniq_arr = pa.array(uniques, type=pa.string())
-        names = [f.name for f in PARTIAL_SCHEMA.fields]
-        # byte-budgeted row slices, same as the blocks-stage emitters:
-        # one tokenize partition's concatenated payload can exceed
-        # Arrow's 2 GiB int32-offset ceiling with a raised
-        # maxPartitionBytes override
-        from .blocks import _binary_row_slices
-
-        for lo, hi in _binary_row_slices(
-            (dd_b, tt_b, pos_b, ll_b), len(gstarts)
-        ):
-            yield pa.RecordBatch.from_arrays(
-                [
-                    uniq_arr.take(pa.array(codes_s[gstarts][lo:hi])),
-                    pa.array(np.zeros(hi - lo, dtype=np.int64)),
-                    pa.array(docs_s[gstarts][lo:hi]),
-                    pa.array(gsizes[lo:hi].astype(np.int32)),
-                    _pa_binary(dd, dd_b[lo : hi + 1]),
-                    _pa_binary(tt, tt_b[lo : hi + 1]),
-                    _pa_binary(allpos, pos_b[lo : hi + 1]),
-                    _pa_binary(ll, ll_b[lo : hi + 1]),
-                ],
-                names=names,
+        if codes_p:
+            # docIDs are emitted ascending (base + running row offset):
+            # the rows are doc-major, as the shared packer expects
+            yield from pack_partials(
+                pa.array(uniques, type=pa.string()),
+                np.concatenate(codes_p),
+                np.concatenate(docs_p),
+                np.concatenate(tfs_p),
+                np.concatenate(dls_p),
+                np.frombuffer(b"".join(pos_bufs), dtype=np.uint8),
+                np.concatenate(lens_p),
             )
 
     return (
@@ -350,17 +300,9 @@ def postings_from_partials(partials: DataFrame) -> DataFrame:
     (per-doc payload bounds come from the varint continuation bits; the
     position bytes themselves are never re-encoded)."""
     import numpy as np
-    import pyspark.sql.types as T
 
-    schema = T.StructType(
-        [
-            T.StructField("term", T.StringType(), False),
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("tf", T.IntegerType(), False),
-            T.StructField("positions", T.BinaryType(), False),
-            T.StructField("doc_len", T.IntegerType(), False),
-        ]
-    )
+    from .blocks import _pa_binary, decode_partials
+
     pruned = partials.select(
         "term", "n_docs", "doc_deltas", "tfs", "pos_deltas", "doc_lens"
     )
@@ -368,41 +310,16 @@ def postings_from_partials(partials: DataFrame) -> DataFrame:
     def unpack(batches):
         import pyarrow as pa
 
-        from .blocks import _bin_offsets, _pa_binary
-        from .codec import decode_varints
-
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            nd = batch.column("n_docs").to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            npart = len(nd)
-            dd_data, _ = _bin_offsets(batch.column("doc_deltas"))
-            tt_data, _ = _bin_offsets(batch.column("tfs"))
-            ll_data, _ = _bin_offsets(batch.column("doc_lens"))
-            pos_data, _ = _bin_offsets(batch.column("pos_deltas"))
-            raw = decode_varints(dd_data)
-            tfs = decode_varints(tt_data)
-            dls = decode_varints(ll_data)
-            n = len(raw)
-            part_starts = np.zeros(npart, dtype=np.int64)
-            np.cumsum(nd[:-1], out=part_starts[1:])
-            csum = np.cumsum(raw.astype(np.int64))
-            prefix = np.zeros(npart, dtype=np.int64)
-            prefix[1:] = csum[part_starts[1:] - 1]
-            part_of_row = np.repeat(np.arange(npart), nd)
-            docs = csum - prefix[part_of_row]
-            bounds = np.zeros(n + 1, dtype=np.int64)
-            if pos_data.size:
-                val_ends = np.flatnonzero(pos_data < 128)
-                bounds[1:] = val_ends[np.cumsum(tfs.astype(np.int64)) - 1] + 1
+            row, docs, tfs, dls, pos_data, pos_bounds = decode_partials(batch)
             out = pa.RecordBatch.from_arrays(
                 [
-                    batch.column("term").take(pa.array(part_of_row)),
+                    batch.column("term").take(pa.array(row)),
                     pa.array(docs),
                     pa.array(tfs.astype(np.int32)),
-                    _pa_binary(pos_data, bounds),
+                    _pa_binary(pos_data, pos_bounds),
                     pa.array(dls.astype(np.int32)),
                 ],
                 names=["term", "doc_id", "tf", "positions", "doc_len"],
@@ -410,23 +327,43 @@ def postings_from_partials(partials: DataFrame) -> DataFrame:
             for i in range(0, out.num_rows, 131072):
                 yield out.slice(i, 131072)
 
+    schema = (
+        "term string not null, doc_id bigint not null, tf int not null, "
+        "positions binary not null, doc_len int not null"
+    )
     return pruned.mapInArrow(unpack, schema)
 
 
 def partials_from_postings(postings: DataFrame) -> DataFrame:
     """Unsalted partial blocks from row postings — the inverse of
     :func:`postings_from_partials`. The range repartition by ``doc_id``
-    makes each partition a disjoint docID range, so the Arrow pack
-    stage's per-partition term runs are doc-contiguous segments."""
+    makes each partition a disjoint docID range, sorted by doc, so its
+    per-partition term runs are doc-contiguous segments."""
     from .blocks import PARTIAL_SCHEMA, _pack_stage_arrow
-    from .codec import BLOCK_SIZE
 
     spark = postings.sparkSession
     return (
         postings.select("term", "doc_id", "tf", "positions", "doc_len")
         .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
         .sortWithinPartitions("doc_id")
-        .mapInArrow(_pack_stage_arrow(frozenset(), 0, BLOCK_SIZE), PARTIAL_SCHEMA)
+        .mapInArrow(_pack_stage_arrow, PARTIAL_SCHEMA)
+    )
+
+
+def partials_from_tokens(tokens: DataFrame) -> DataFrame:
+    """Unsalted partial blocks from token rows ``(doc_id, term,
+    position)`` — e.g. a Catalyst whitespace tokenizer's
+    ``posexplode``. One ``doc_id`` range exchange puts each doc's
+    tokens in one partition of disjoint docID ranges; a partition-local
+    pack then derives tf, the sorted positions and ``doc_len`` (the
+    doc's token count) — no ``groupBy``, no per-posting Python rows."""
+    from .blocks import PARTIAL_SCHEMA, _pack_tokens_arrow
+
+    spark = tokens.sparkSession
+    return (
+        tokens.select("doc_id", "term", "position")
+        .repartitionByRange(spark.sparkContext.defaultParallelism, "doc_id")
+        .mapInArrow(_pack_tokens_arrow, PARTIAL_SCHEMA)
     )
 
 
@@ -443,45 +380,24 @@ def _stats_from_partials(partials: DataFrame):
     bigger than ``maxPartitionBytes`` can split mid-doc-run and
     duplicate a boundary doc across scan partitions."""
     import numpy as np
-    import pyspark.sql.types as T
+
+    from .blocks import decode_partials
 
     term_stats = partials.groupBy("term").agg(
         F.sum("n_docs").cast("long").alias("df")
-    )
-
-    ds_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("doc_len", T.LongType(), False),
-        ]
     )
     pruned = partials.select("n_docs", "doc_deltas", "doc_lens")
 
     def decode_doc_stats(batches):
         import pyarrow as pa
 
-        from .blocks import _bin_offsets
-        from .codec import decode_varints
-
         all_docs, all_lens = [], []
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            nd = batch.column("n_docs").to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            npart = len(nd)
-            dd_data, _ = _bin_offsets(batch.column("doc_deltas"))
-            ll_data, _ = _bin_offsets(batch.column("doc_lens"))
-            raw = decode_varints(dd_data)
-            part_starts = np.zeros(npart, dtype=np.int64)
-            np.cumsum(nd[:-1], out=part_starts[1:])
-            csum = np.cumsum(raw.astype(np.int64))
-            prefix = np.zeros(npart, dtype=np.int64)
-            prefix[1:] = csum[part_starts[1:] - 1]
-            docs = csum - prefix[np.repeat(np.arange(npart), nd)]
+            _, docs, _, lens, _, _ = decode_partials(batch)
             all_docs.append(docs)
-            all_lens.append(decode_varints(ll_data).astype(np.int64))
+            all_lens.append(lens.astype(np.int64))
         if not all_docs:
             return
         docs = np.concatenate(all_docs)
@@ -492,7 +408,9 @@ def _stats_from_partials(partials: DataFrame):
         )
 
     doc_stats = (
-        pruned.mapInArrow(decode_doc_stats, ds_schema)
+        pruned.mapInArrow(
+            decode_doc_stats, "doc_id bigint not null, doc_len bigint not null"
+        )
         .groupBy("doc_id")
         .agg(F.first("doc_len").alias("doc_len"))
     )

@@ -22,9 +22,7 @@ import numpy as np
 __all__ = [
     "encode_varints",
     "decode_varints",
-    "encode_varint_groups",
     "encode_varint_groups_concat",
-    "varint_byte_lens",
     "encode_block",
     "decode_block",
     "BLOCK_SIZE",
@@ -32,11 +30,13 @@ __all__ = [
 
 
 def encode_varint_groups_concat(values, group_sizes):
-    """Like :func:`encode_varint_groups` but returns the encoding as
-    ONE buffer plus int64 group bounds (``len(group_sizes)+1``) instead
-    of per-group bytes objects — the Arrow block stages build binary
-    columns straight from (buffer, bounds) with zero per-group Python
-    allocations."""
+    """Encode many small varint groups in ONE vectorized pass:
+    ``values`` is the concatenation of all groups' ints, ``group_sizes``
+    gives each group's length. Returns the encoding as ONE buffer plus
+    int64 group bounds (``len(group_sizes)+1``) — byte-identical to
+    :func:`encode_varints` per group, with no per-group NumPy dispatch
+    and no per-group Python allocation (the Arrow block stages build
+    binary columns straight from (buffer, bounds))."""
     vals = np.asarray(values, dtype=np.uint64)
     sizes = np.asarray(group_sizes, dtype=np.int64)
     bounds = np.zeros(len(sizes) + 1, dtype=np.int64)
@@ -54,17 +54,6 @@ def encode_varint_groups_concat(values, group_sizes):
     )
     return buf, bounds
 
-
-def encode_varint_groups(values, group_sizes) -> list[bytes]:
-    """Encode many small varint groups in ONE vectorized pass.
-
-    ``values`` is the concatenation of all groups' ints; ``group_sizes``
-    gives each group's length. Returns one bytes object per group —
-    byte-identical to calling :func:`encode_varints` per group, but
-    ~100x faster for millions of tiny groups (no per-group NumPy
-    dispatch)."""
-    buf, bounds = encode_varint_groups_concat(values, group_sizes)
-    return [buf[bounds[i] : bounds[i + 1]] for i in range(len(bounds) - 1)]
 
 BLOCK_SIZE = 128
 
@@ -90,17 +79,6 @@ def encode_varints(values: np.ndarray) -> bytes:
         cont = (nbytes[mask] - 1 > k).astype(np.uint8) << 7
         out[idx] = chunk.astype(np.uint8) | cont
     return out.tobytes()
-
-
-def varint_byte_lens(values: np.ndarray) -> np.ndarray:
-    """Encoded byte width per value (1 + crossed 7-bit thresholds) —
-    lets a re-blocker slice an existing varint stream at value
-    boundaries without re-encoding it."""
-    vals = np.asarray(values, dtype=np.uint64)
-    nbytes = np.ones(vals.shape, dtype=np.int64)
-    for k in range(1, 10):
-        nbytes += vals >= np.uint64(1 << (7 * k))
-    return nbytes
 
 
 def decode_varints(data) -> np.ndarray:

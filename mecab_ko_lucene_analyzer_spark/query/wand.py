@@ -325,8 +325,9 @@ class DirectBlockReader(_DirectKeyedReader):
     """Serving-node cold-path reader: term-pruned block fetch straight
     from the parquet files via Arrow — NO Spark job.
 
-    The block files are globally term-sorted (``build_blocks`` range-
-    partitions by (term, salt) and sorts within partitions), so parquet
+    The block files are globally term-sorted
+    (``build_blocks_from_partials`` range-partitions by (term, salt) and
+    sorts within partitions), so parquet
     row-group statistics on ``term`` prune a query to the 1–2 row
     groups that can contain it — the Lucene-segment access shape. File
     handles and per-row-group (min, max) term ranges load once from the

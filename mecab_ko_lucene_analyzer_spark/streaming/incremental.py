@@ -140,7 +140,13 @@ def incremental_index_stream(
     state_path = f"{index_path}/_stream_state/doc_base.json"
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..index.build import _in_background, corpus_partials
+        from ..index.build import (
+            _doc_map_df,
+            _docid_partitions,
+            _in_background,
+            corpus_partials,
+            partials_from_tokens,
+        )
 
         spark = batch_df.sparkSession
         base = _batch_doc_base(spark, state_path, batch_id)
@@ -150,9 +156,13 @@ def incremental_index_stream(
                 batch_df, None, mode, 3, order="url", doc_base=base
             )
         else:
-            partials, doc_map, n_docs, release = _tokens_fn_partials(
-                batch_df, tokens_fn, base
+            # the same url-ranked docIDs; doc_len = the doc's token count
+            _, parts, offsets, n_docs, release = _docid_partitions(
+                batch_df, None, None, "url", base
             )
+            docs = _doc_map_df(parts, offsets, "text")
+            partials = partials_from_tokens(tokens_fn(docs))
+            doc_map = docs.select("doc_id", "url")
 
         def write(df: DataFrame, name: str) -> None:
             # dynamic partition OVERWRITE of this batch's partition (not
@@ -182,35 +192,6 @@ def incremental_index_stream(
     if trigger_once:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def _tokens_fn_partials(batch_df: DataFrame, tokens_fn, base: int):
-    """``(partials, doc_map, n_docs, release)`` of one micro-batch
-    through a caller's ``tokens_fn``: the same url-ranked docIDs as
-    :func:`..index.build.corpus_partials`, a Catalyst aggregation of its
-    ``(doc_id, term, position)`` rows into postings (``doc_len`` =
-    ``sum(tf)``, the token count), packed into the one delta format."""
-    from pyspark.sql import Window
-
-    from ..functions.udfs import encode_positions_udf
-    from ..index.build import _doc_map_df, _docid_partitions, partials_from_postings
-
-    _, parts, offsets, n_docs, release = _docid_partitions(
-        batch_df, None, None, "url", base
-    )
-    docs = _doc_map_df(parts, offsets, "text")
-    postings = (
-        tokens_fn(docs)
-        .groupBy("term", "doc_id")
-        .agg(
-            F.count("*").alias("tf"),
-            F.sort_array(F.collect_list("position")).alias("positions_arr"),
-        )
-        .withColumn("positions", encode_positions_udf()(F.col("positions_arr")))
-        .withColumn("doc_len", F.sum("tf").over(Window.partitionBy("doc_id")))
-    )
-    doc_map = docs.select("doc_id", "url")
-    return partials_from_postings(postings), doc_map, n_docs, release
 
 
 def _read_delta_partials(spark: SparkSession, index_path: str) -> DataFrame:

@@ -7,7 +7,7 @@ import pytest
 
 from mecab_ko_lucene_analyzer_spark.analysis.tokenizer import token_records
 from mecab_ko_lucene_analyzer_spark.index import build_and_write
-from mecab_ko_lucene_analyzer_spark.index.blocks import build_blocks
+from mecab_ko_lucene_analyzer_spark.index.blocks import build_blocks_from_partials
 from mecab_ko_lucene_analyzer_spark.index.codec import decode_block, decode_varints
 from mecab_ko_lucene_analyzer_spark.query import bm25_oracle
 from mecab_ko_lucene_analyzer_spark.query.wand import load_query_cursors, wand_topk
@@ -62,17 +62,17 @@ def test_blocks_roundtrip_equals_row_postings(spark, materialized, blocks_df):
 
 
 def test_salted_merge_same_as_unsalted(spark, materialized):
-    postings = materialized.postings
+    partials = spark.read.parquet(f"{BASE}/partials")
     term_stats = spark.read.parquet(f"{BASE}/term_stats")
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
     # every term hot with 8-doc salt ranges (so salting GENUINELY splits
     # terms across many salt groups/partitions) vs no term hot
-    salted = build_blocks(
-        postings, term_stats, corpus["n_docs"], corpus["avgdl"],
+    salted = build_blocks_from_partials(
+        partials, term_stats, corpus["n_docs"], corpus["avgdl"],
         hot_min_df=1, salt_shift=3, num_partitions=48,
     ).collect()
-    unsalted = build_blocks(
-        postings, term_stats, corpus["n_docs"], corpus["avgdl"], hot_min_df=10**9
+    unsalted = build_blocks_from_partials(
+        partials, term_stats, corpus["n_docs"], corpus["avgdl"], hot_min_df=10**9
     ).collect()
     # hot terms really get split across partitions (block runs start at
     # partition edges → >1 block for a ≤128-doc list proves the salted
@@ -502,50 +502,98 @@ def test_direct_block_reader_unsorted_files(spark, materialized, tmp_path):
         assert _payloads(got) == _payloads(want) and len(got) == len(probe) - 1
 
 
-def _arrow_and_pandas_block_rows(spark, materialized, **kw):
-    """Block rows built by the Arrow and the pandas pack/reblock stages
-    over the module corpus, each sorted by (term, first_doc)."""
-    postings = materialized.postings
+def _sorted_rows(df):
+    return sorted(
+        tuple(bytes(v) if isinstance(v, bytearray) else v for v in t)
+        for t in df.collect()
+    )
+
+
+def _pack_rows(materialized):
+    """Partial rows packed by the Arrow and by the pandas reference
+    pack stage from the same doc-sorted postings, plus that input."""
+    from block_reference import _pack_stage
+
+    from mecab_ko_lucene_analyzer_spark.index.blocks import (
+        PARTIAL_SCHEMA,
+        _pack_stage_arrow,
+    )
+    from mecab_ko_lucene_analyzer_spark.index.codec import BLOCK_SIZE
+
+    postings = (
+        materialized.postings.repartitionByRange(4, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .persist()
+    )
+    arrow = postings.mapInArrow(_pack_stage_arrow, PARTIAL_SCHEMA)
+    pandas = postings.mapInPandas(
+        _pack_stage(frozenset(), 0, BLOCK_SIZE), PARTIAL_SCHEMA
+    )
+    return arrow, pandas, postings
+
+
+def _reblock_rows(spark, partials, **kw):
+    """Sorted block rows re-blocked by the Arrow and by the pandas
+    reference stage from the same arranged partials."""
+    from block_reference import _reblock_stage
+
+    from mecab_ko_lucene_analyzer_spark.index.blocks import (
+        BLOCKS_SCHEMA,
+        SALT_SHIFT,
+        _arrange,
+        _reblock_stage_arrow,
+    )
+    from mecab_ko_lucene_analyzer_spark.index.build import B, K1
+    from mecab_ko_lucene_analyzer_spark.index.codec import BLOCK_SIZE
+
     term_stats = spark.read.parquet(f"{BASE}/term_stats")
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
-
-    def rows(impl):
-        df = build_blocks(
-            postings, term_stats, corpus["n_docs"], corpus["avgdl"],
-            impl=impl, **kw,
+    arranged = _arrange(
+        partials, term_stats, corpus["n_docs"], kw.get("num_partitions"),
+        kw["hot_min_df"], kw.get("salt_shift", SALT_SHIFT),
+    ).persist()
+    try:
+        a = _sorted_rows(
+            arranged.mapInArrow(_reblock_stage_arrow(corpus["avgdl"]), BLOCKS_SCHEMA)
         )
-        out = sorted(
-            (tuple(bytes(v) if isinstance(v, bytearray) else v for v in t)
-             for t in df.collect()),
-            key=lambda t: (t[0], t[1]),
+        p = _sorted_rows(
+            arranged.mapInPandas(
+                _reblock_stage(corpus["avgdl"], K1, B, BLOCK_SIZE), BLOCKS_SCHEMA
+            )
         )
-        df._partials_df.unpersist()
-        return out
-
-    return rows("arrow"), rows("pandas")
+    finally:
+        arranged.unpersist()
+    return a, p
 
 
 def test_arrow_blocks_byte_identical_to_pandas(spark, materialized):
-    """The Arrow-native pack/reblock stages (the default) must produce
-    BYTE-identical block rows to the pandas reference stages — same
-    cuts, same varint payloads, same metadata and exactly equal
+    """The Arrow-native reblock stage must produce BYTE-identical block
+    rows to the pandas reference stage over the same arranged partials
+    — same cuts, same varint payloads, same metadata and exactly equal
     impacts — unsalted and salted over 48 partitions."""
+    partials = spark.read.parquet(f"{BASE}/partials")
     for kw in (
         {"hot_min_df": 10**9},
         {"hot_min_df": 1, "salt_shift": 3, "num_partitions": 48},
     ):
-        a, p = _arrow_and_pandas_block_rows(spark, materialized, **kw)
+        a, p = _reblock_rows(spark, partials, **kw)
         assert len(a) == len(p) > 0 and a == p, kw
 
 
 def test_pack_reblock_arrow_equals_pandas(spark, materialized):
-    """The Arrow-native pack/reblock stages must be BYTE-identical to
-    the pandas reference implementation — same block rows, same varint
-    payloads, same impacts — including under aggressive salting
-    (salt_shift=3 genuinely splits terms)."""
-    for kw in ({"hot_min_df": 10**9}, {"hot_min_df": 1, "salt_shift": 3}):
-        a, p = _arrow_and_pandas_block_rows(spark, materialized, **kw)
-        assert len(a) == len(p) > 0 and a == p, kw
+    """The Arrow-native pack stage must be BYTE-identical to the pandas
+    reference pack over the same doc-sorted postings, and re-blocking
+    those partials must match the pandas reblock too — including under
+    aggressive salting (salt_shift=3 genuinely splits terms)."""
+    arrow, pandas, postings = _pack_rows(materialized)
+    try:
+        a, p = _sorted_rows(arrow), _sorted_rows(pandas)
+        assert len(a) == len(p) > 0 and a == p
+        for kw in ({"hot_min_df": 10**9}, {"hot_min_df": 1, "salt_shift": 3}):
+            a, p = _reblock_rows(spark, arrow, **kw)
+            assert len(a) == len(p) > 0 and a == p, kw
+    finally:
+        postings.unpersist()
 
 
 def test_no_blocks_build_row_identical_to_blocks_build(
@@ -594,38 +642,95 @@ def test_no_blocks_build_row_identical_to_blocks_build(
 
 def test_arrow_stages_sliced_emission_identical(spark, materialized, monkeypatch):
     """Forcing a tiny per-batch byte budget (the 2 GiB int32-offset
-    guard path) through the Arrow pack/reblock stages must change
-    NOTHING about the output rows — multi-slice emission is purely a
-    batch-boundary concern."""
-    import mecab_ko_lucene_analyzer_spark.index.blocks as blocks_mod
+    guard path) through every Arrow emitter — the tokenize pass's
+    partials and the blocks re-block — must change NOTHING about the
+    output rows: multi-slice emission is purely a batch-boundary
+    concern. An accumulator proves the budget engaged on the workers."""
+    from pyspark import cloudpickle
 
-    postings = materialized.postings
+    import mecab_ko_lucene_analyzer_spark.index.blocks as blocks_mod
+    from mecab_ko_lucene_analyzer_spark.index.build import corpus_partials
+
     term_stats = spark.read.parquet(f"{BASE}/term_stats")
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
 
-    def rows():
-        df = build_blocks(
-            postings, term_stats, corpus["n_docs"], corpus["avgdl"],
-            impl="arrow", hot_min_df=1, salt_shift=3,
+    def emitted_partials():
+        partials, _, _, _, release = corpus_partials(
+            synthesize_webpages(spark, N_DOCS, partitions=5), lang_filter=None
         )
-        out = sorted(
-            (tuple(bytes(v) if isinstance(v, bytearray) else v for v in t)
-             for t in df.collect()),
-            key=lambda t: (t[0], t[1]),
-        )
-        df._partials_df.unpersist()
-        return out
+        try:
+            return _sorted_rows(partials)
+        finally:
+            release()
 
-    baseline = rows()
+    def blocks():
+        return _sorted_rows(
+            build_blocks_from_partials(
+                spark.read.parquet(f"{BASE}/partials"), term_stats,
+                corpus["n_docs"], corpus["avgdl"], hot_min_df=1, salt_shift=3,
+            )
+        )
+
+    baseline = [emitted_partials(), blocks()]
+    extra_slices = spark.sparkContext.accumulator(0)
     orig = blocks_mod._binary_row_slices
 
     def tiny_budget(bounds_cols, n_rows, max_bytes=1 << 30):
-        return orig(bounds_cols, n_rows, max_bytes=64)
+        slices = list(orig(bounds_cols, n_rows, max_bytes=64))
+        extra_slices.add(len(slices) - 1)
+        return iter(slices)
 
     monkeypatch.setattr(blocks_mod, "_binary_row_slices", tiny_budget)
-    sliced = rows()
-    assert len(sliced) == len(baseline) > 0
-    assert sliced == baseline
+    # ship the block module by value, so the workers run the patched
+    # slicer instead of re-importing the module
+    cloudpickle.register_pickle_by_value(blocks_mod)
+    try:
+        for rows, want in zip((emitted_partials, blocks), baseline):
+            before = extra_slices.value
+            got = rows()
+            assert extra_slices.value > before  # the budget engaged
+            assert len(got) == len(want) > 0
+            assert got == want
+    finally:
+        cloudpickle.unregister_pickle_by_value(blocks_mod)
+
+
+def test_partials_from_tokens_equals_catalyst_postings(spark):
+    """``partials_from_tokens`` decodes to exactly the postings of the
+    Catalyst chain it replaced (groupBy + collect_list + a positions
+    UDF + a doc_len join), over a whitespace corpus with an empty doc,
+    terms repeated within a doc and a term in more than 128 docs. The
+    raw partial rows may split differently (the range bounds are
+    sampled); the decoded rows may not differ."""
+    import pyspark.sql.functions as F
+    from block_reference import postings_from_tokens_reference
+
+    from mecab_ko_lucene_analyzer_spark.index.build import (
+        partials_from_tokens,
+        postings_from_partials,
+    )
+
+    base = 2**33
+    texts = [""] + [
+        " ".join(["common", *[f"w{i % 7}"] * (1 + i % 3), f"x{i % 13}", "common"])
+        for i in range(1, 300)
+    ]
+    docs = spark.createDataFrame(
+        [(base + i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    ).repartition(3)
+    toks = docs.select(
+        "doc_id",
+        F.posexplode(
+            F.filter(F.split("text", " "), lambda x: x != F.lit(""))
+        ).alias("position", "term"),
+    )
+    got = _sorted_rows(postings_from_partials(partials_from_tokens(toks)))
+    want = _sorted_rows(postings_from_tokens_reference(toks))
+    assert len(got) == len(want) > 0 and got == want
+    assert base not in {r[1] for r in got}  # the empty doc has no posting
+    common = [r for r in got if r[0] == "common"]
+    assert len(common) > 128 and {r[2] for r in common} == {2}
+    assert {r[2] for r in got if r[0].startswith("w")} == {1, 2, 3}
 
 
 def test_blocks_params_change_invalidates_manifest(spark, tmp_path):

@@ -2,6 +2,8 @@
 decode(encode(x)) == x, plus golden byte checks)."""
 
 import numpy as np
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -137,7 +139,7 @@ def test_pack_stage_multi_slice_emission_direct(monkeypatch):
             ]
         ),
     )
-    pack = _pack_stage_arrow(frozenset(), 16, 128)
+    pack = _pack_stage_arrow
     single = list(pack(iter([batch])))
     assert len(single) == 1
 
@@ -152,3 +154,125 @@ def test_pack_stage_multi_slice_emission_direct(monkeypatch):
     merged = pa.Table.from_batches(sliced)
     base = pa.Table.from_batches(single)
     assert merged.to_pylist() == base.to_pylist()
+
+
+@pytest.mark.parametrize("block_size", [2, 3, 128])
+@pytest.mark.parametrize("seed", range(4))
+def test_shared_encoder_decoder_roundtrip(block_size, seed):
+    """decode_partials(encode_blocks(x)) == x for the one block codec
+    (no Spark): docIDs above 2^33, tf up to 300, position gaps above
+    2^21, and per-doc position byte bounds equal to the encoded
+    lengths."""
+    from mecab_ko_lucene_analyzer_spark.index.blocks import (
+        PARTIAL_SCHEMA,
+        _emit,
+        decode_partials,
+        encode_blocks,
+    )
+
+    rng = np.random.default_rng(seed)
+    docs, tfs, dls, positions, run_start = [], [], [], [], []
+    for _ in range(rng.integers(1, 12)):
+        n_run = int(rng.integers(1, 300))
+        run_docs = (2**33 + rng.integers(0, 2**20)) + np.cumsum(
+            rng.integers(1, 2**25, size=n_run)
+        )
+        for i, d in enumerate(run_docs):
+            tf = int(rng.integers(1, 301))
+            gaps = rng.integers(0, 2**23, size=tf)
+            gaps[rng.random(tf) < 0.5] = rng.integers(0, 4)
+            docs.append(int(d))
+            tfs.append(tf)
+            dls.append(int(rng.integers(tf, 10**6)))
+            positions.append(encode_varints(gaps.astype(np.uint64)))
+            run_start.append(i == 0)
+    docs = np.array(docs, dtype=np.int64)
+    tfs = np.array(tfs, dtype=np.uint64)
+    dls = np.array(dls, dtype=np.uint64)
+    pos_lens = np.array([len(p) for p in positions], dtype=np.int64)
+    run_start = np.array(run_start)
+    pos_data = np.frombuffer(b"".join(positions), dtype=np.uint8)
+
+    starts, sizes, payload = encode_blocks(
+        run_start, docs, tfs, dls, pos_data, pos_lens, block_size=block_size
+    )
+    # every run cut into block_size-doc blocks, its last one shorter
+    heads = np.flatnonzero(run_start)
+    tails = np.append(heads[1:], len(docs))
+    want = np.concatenate(
+        [np.arange(lo, hi, block_size) for lo, hi in zip(heads, tails)]
+    )
+    assert np.array_equal(starts, want)
+    batches = list(
+        _emit(
+            PARTIAL_SCHEMA.fieldNames(),
+            [
+                pa.array(["t"] * len(starts)),
+                np.zeros(len(starts), dtype=np.int64),
+                docs[starts],
+                sizes.astype(np.int32),
+                *payload,
+            ],
+        )
+    )
+    got = {k: [] for k in ("row", "docs", "tfs", "dls", "pos_lens", "pos")}
+    n_rows = 0
+    for batch in batches:
+        row, d, t, dl, pdata, pbounds = decode_partials(batch)
+        for k, v in zip(got, (row + n_rows, d, t, dl, np.diff(pbounds))):
+            got[k].append(v)
+        got["pos"] += [bytes(pdata[lo:hi]) for lo, hi in zip(pbounds, pbounds[1:])]
+        n_rows += batch.num_rows
+    block_of_doc = np.repeat(np.arange(len(starts)), sizes)
+    assert np.array_equal(np.concatenate(got["row"]), block_of_doc)
+    assert np.array_equal(np.concatenate(got["docs"]), docs)
+    assert np.array_equal(np.concatenate(got["tfs"]), tfs)
+    assert np.array_equal(np.concatenate(got["dls"]), dls)
+    assert np.array_equal(np.concatenate(got["pos_lens"]), pos_lens)
+    assert got["pos"] == positions
+
+
+def test_reblock_interleaved_partials_equal_reference():
+    """Partials of one term whose doc ranges interleave take the Arrow
+    re-blocker's sort-and-gather path; its block rows must equal the
+    pandas reference stage's, byte for byte (no Spark)."""
+    from block_reference import _reblock_stage
+
+    from mecab_ko_lucene_analyzer_spark.index.blocks import (
+        _reblock_stage_arrow,
+        pack_partials,
+    )
+    from mecab_ko_lucene_analyzer_spark.index.build import B, K1
+
+    rng = np.random.default_rng(5)
+    docs = np.sort(rng.choice(10**6, size=500, replace=False)).astype(np.int64)
+    tfs = rng.integers(1, 6, size=len(docs))
+    positions = [encode_varints(rng.integers(0, 300, size=t)) for t in tfs]
+    codes = rng.integers(0, 2, size=len(docs))
+    batches = []
+    for sel in (slice(0, None, 2), slice(1, None, 2)):  # even / odd docs
+        pos = positions[sel]
+        batches += pack_partials(
+            pa.array(["t", "u"]),
+            codes[sel],
+            docs[sel],
+            tfs[sel],
+            tfs[sel] + 7,
+            np.frombuffer(b"".join(pos), dtype=np.uint8),
+            np.array([len(p) for p in pos]),
+        )
+    arranged = (
+        pa.Table.from_batches(batches)
+        .sort_by([("term", "ascending"), ("first_doc", "ascending")])
+        .combine_chunks()
+    )
+    got = pa.Table.from_batches(
+        list(_reblock_stage_arrow(9.5)(iter(arranged.to_batches())))
+    ).to_pylist()
+    want = [
+        r
+        for pdf in _reblock_stage(9.5, K1, B, 128)(iter([arranged.to_pandas()]))
+        for r in pdf.to_dict("records")
+    ]
+    assert len(got) == len(want) > 2
+    assert got == want

@@ -178,10 +178,13 @@ def test_wildcard_no_match_is_empty(ws_index):
 
 @pytest.fixture(scope="module")
 def ws_blocks(spark):
-    from mecab_ko_lucene_analyzer_spark.functions.udfs import (
-        encode_positions_udf,
+    from mecab_ko_lucene_analyzer_spark.index.blocks import (
+        build_blocks_from_partials,
     )
-    from mecab_ko_lucene_analyzer_spark.index.blocks import build_blocks
+    from mecab_ko_lucene_analyzer_spark.index.build import (
+        _stats_from_partials,
+        partials_from_tokens,
+    )
 
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(TEXTS)], "doc_id long, text string"
@@ -190,21 +193,13 @@ def ws_blocks(spark):
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("position", "term"),
     )
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("doc_len"))
-    postings = (
-        toks.groupBy("term", "doc_id")
-        .agg(
-            F.count("*").alias("tf"),
-            F.sort_array(F.collect_list("position")).alias("parr"),
-        )
-        .withColumn("positions", encode_positions_udf()(F.col("parr")))
-        .drop("parr")
-        .join(dl, "doc_id")
-    )
-    term_stats = postings.groupBy("term").agg(F.count("*").alias("df"))
-    row = dl.agg(F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")).first()
-    blocks = build_blocks(
-        postings, term_stats, row["n"], float(row["avgdl"]), hot_min_df=10**9
+    partials = partials_from_tokens(toks).persist()
+    term_stats, doc_stats = _stats_from_partials(partials)
+    row = doc_stats.agg(
+        F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
+    ).first()
+    blocks = build_blocks_from_partials(
+        partials, term_stats, row["n"], float(row["avgdl"]), hot_min_df=10**9
     ).cache()
     return blocks
 

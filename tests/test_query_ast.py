@@ -414,10 +414,13 @@ def test_dismax_tb0_equals_or_and_blend_law(spark):
     engine's Or (best child); 0<tb<1 blends max + tb*(sum-max)."""
     import pyspark.sql.functions as F
 
-    from mecab_ko_lucene_analyzer_spark.functions.udfs import (
-        encode_positions_udf,
+    from mecab_ko_lucene_analyzer_spark.index.blocks import (
+        build_blocks_from_partials,
     )
-    from mecab_ko_lucene_analyzer_spark.index.blocks import build_blocks
+    from mecab_ko_lucene_analyzer_spark.index.build import (
+        _stats_from_partials,
+        partials_from_tokens,
+    )
     from mecab_ko_lucene_analyzer_spark.query.ast import DisMax, Or, Term
     from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast
 
@@ -429,21 +432,13 @@ def test_dismax_tb0_equals_or_and_blend_law(spark):
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("position", "term"),
     )
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("doc_len"))
-    postings = (
-        toks.groupBy("term", "doc_id")
-        .agg(
-            F.count("*").alias("tf"),
-            F.sort_array(F.collect_list("position")).alias("parr"),
-        )
-        .withColumn("positions", encode_positions_udf()(F.col("parr")))
-        .drop("parr")
-        .join(dl, "doc_id")
-    )
-    term_stats = postings.groupBy("term").agg(F.count("*").alias("df"))
-    row = dl.agg(F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")).first()
-    blocks = build_blocks(
-        postings, term_stats, row["n"], float(row["avgdl"]), hot_min_df=10**9
+    partials = partials_from_tokens(toks)
+    term_stats, doc_stats = _stats_from_partials(partials)
+    row = doc_stats.agg(
+        F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
+    ).first()
+    blocks = build_blocks_from_partials(
+        partials, term_stats, row["n"], float(row["avgdl"]), hot_min_df=10**9
     )
     args = (blocks, term_stats, row["n"], float(row["avgdl"]))
 
