@@ -235,11 +235,12 @@ class SearchEngine:
             cursor.next_geq(doc_id)
             if cursor.cur_doc != doc_id:
                 continue  # term does not match this doc
+            tf, doc_len = cursor.tf_dl_current()
             per_term.append(
                 {
                     "term": r["term"],
-                    "tf": int(cursor._tfs[cursor._pos]),
-                    "doc_len": int(cursor._dls[cursor._pos]),
+                    "tf": tf,
+                    "doc_len": doc_len,
                     "df": df,
                     "idf": cursor.idf,
                     "avgdl": self.avgdl,
@@ -1228,8 +1229,9 @@ class SearchEngine:
 
         * single term: df = sum of block ``n_docs`` (exact, ZERO decode
           and zero Spark jobs on a warm :class:`BlockCache`);
-        * multi term: decode the terms' docID arrays from their blocks
-          (one term-pruned scan at most) and intersect/union in NumPy.
+        * multi term: the terms' decoded docID arrays (one term-pruned
+          scan at most; each cache entry decodes once) intersected or
+          unioned in NumPy.
 
         ``exclude`` text counts with must_not semantics through the
         full AST evaluator (:meth:`count_ast` — conjunctive only, the
@@ -1238,8 +1240,6 @@ class SearchEngine:
         Round 1 ran a groupBy over the full row-postings parquet per
         call — an avoidable whole-table scan at serving time."""
         import numpy as np
-
-        from .index.codec import decode_varints
 
         if exclude:
             if not conjunctive:
@@ -1272,16 +1272,8 @@ class SearchEngine:
         if not by_term:
             return 0
         if len(terms) == 1:
-            return by_term[terms[0]][1]
-        doc_sets = [
-            np.concatenate(
-                [
-                    np.cumsum(decode_varints(b.doc_deltas).astype(np.int64))
-                    for b in blks
-                ]
-            )
-            for blks, _df in by_term.values()
-        ]
+            return by_term[terms[0]].df
+        doc_sets = [p.decode().docs for p in by_term.values()]
         doc_sets.sort(key=len)
         if conjunctive:
             acc = doc_sets[0]

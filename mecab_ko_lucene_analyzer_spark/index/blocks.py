@@ -98,6 +98,8 @@ PARTIAL_SCHEMA = T.StructType(
 
 def _hot_terms(term_stats: DataFrame, n_docs: int, min_df: int) -> list[str]:
     thresh = max(int(n_docs * HOT_SHARE), min_df)
+    if thresh > n_docs:
+        return []  # df <= n_docs: no term can be hot, so no job
     rows = term_stats.filter(F.col("df") >= thresh).select("term").collect()
     return [r["term"] for r in rows]
 

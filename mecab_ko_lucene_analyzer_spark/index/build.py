@@ -742,7 +742,10 @@ def build_and_write(
     view. ``with_blocks=False`` skips stage 3 only.
 
     A rerun skips completed stages (manifest + ``_SUCCESS``); docIDs are
-    deterministic, so resumed output is byte-identical.
+    deterministic, so a resumed build writes the same rows in every
+    table. The split of rows into part files can differ: the blocks
+    exchange's ``repartitionByRange`` seeds its range sampler from the
+    RDD id, which depends on the jobs the session ran before.
     """
     from .manifest import BuildManifest, run_stage
 
@@ -800,7 +803,7 @@ def build_and_write(
     # fresh and resumed builds alike; each half runs only when its
     # manifest stage is incomplete. ``stats`` is recorded only after
     # every stats sink has its ``_SUCCESS``, then ``blocks`` — a crash
-    # mid-way records nothing new, and the rerun is byte-identical
+    # mid-way records nothing new, and the rerun writes the same rows
     do_stats = not manifest.stage_complete("stats")
     do_blocks = with_blocks and not manifest.stage_complete("blocks")
     if do_stats or do_blocks:

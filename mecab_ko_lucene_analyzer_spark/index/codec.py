@@ -25,6 +25,8 @@ __all__ = [
     "encode_varint_groups_concat",
     "encode_block",
     "decode_block",
+    "decode_block_arrays",
+    "decode_positions",
     "BLOCK_SIZE",
 ]
 
@@ -139,14 +141,37 @@ def decode_block(
     doc_deltas: bytes, tfs: bytes, pos_deltas: bytes
 ) -> tuple[np.ndarray, np.ndarray, list[np.ndarray]]:
     """Inverse of :func:`encode_block`."""
+    docs, tf, _, positions = decode_block_arrays(
+        doc_deltas, tfs, pos_deltas=pos_deltas or None
+    )
+    return docs, tf, positions or []
+
+
+def decode_positions(pos_deltas: bytes, tfs: np.ndarray) -> list[np.ndarray]:
+    """One block's per-doc positions. The position deltas restart at
+    every doc and ``tfs`` delimits the runs, so one segmented cumsum
+    rebuilds them all: no per-doc numpy call."""
+    cs = np.cumsum(decode_varints(pos_deltas).astype(np.int64))
+    ends = np.cumsum(tfs)
+    starts = ends - tfs
+    base = np.where(starts > 0, cs[starts - 1], 0)
+    return np.split(cs - np.repeat(base, tfs), ends[:-1])
+
+
+def decode_block_arrays(
+    doc_deltas: bytes,
+    tfs: bytes = b"",
+    doc_lens: bytes = b"",
+    pos_deltas: bytes | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, list[np.ndarray] | None]:
+    """The serving-side decode of one block's payload columns →
+    ``(docs, tfs, doc_lens, positions)``. ``docs`` is the doc-gap
+    chain's cumsum (its first delta is the absolute docID); the three
+    arrays are int64, and a column passed empty decodes to an empty
+    array. ``positions`` holds the per-doc position arrays when
+    ``pos_deltas`` is given, else None."""
     docs = np.cumsum(decode_varints(doc_deltas).astype(np.int64))
     tf = decode_varints(tfs).astype(np.int64)
-    positions: list[np.ndarray] = []
-    if pos_deltas:
-        flat = decode_varints(pos_deltas).astype(np.int64)
-        bounds = np.cumsum(tf)
-        start = 0
-        for end in bounds:
-            positions.append(np.cumsum(flat[start:end]))
-            start = int(end)
-    return docs, tf, positions
+    dl = decode_varints(doc_lens).astype(np.int64)
+    positions = None if pos_deltas is None else decode_positions(pos_deltas, tf)
+    return docs, tf, dl, positions

@@ -321,24 +321,19 @@ def phrase_prefix_docs(
         import numpy as np
         import pandas as pd
 
-        from ..index.codec import decode_varints
+        from ..index.codec import decode_block_arrays
 
         for pdf in batches:
             ids_out, terms_out, pos_out = [], [], []
             for term, dd, tfs_b, pos_b in zip(
                 pdf["term"], pdf["doc_deltas"], pdf["tfs"], pdf["pos_deltas"]
             ):
-                docs = np.cumsum(decode_varints(bytes(dd)).astype(np.int64))
-                tfs = decode_varints(bytes(tfs_b)).astype(np.int64)
-                flat = decode_varints(bytes(pos_b)).astype(np.int64)
-                cs = np.cumsum(flat)
-                ends = np.cumsum(tfs)
-                starts = ends - tfs
-                base = np.where(starts > 0, cs[starts - 1], 0)
-                pos = cs - np.repeat(base, tfs)
+                docs, _, _, positions = decode_block_arrays(
+                    bytes(dd), bytes(tfs_b), pos_deltas=bytes(pos_b)
+                )
                 ids_out.append(docs)
                 terms_out.extend([term] * len(docs))
-                pos_out.extend(np.split(pos, ends[:-1]))
+                pos_out.extend(positions)
             if ids_out:
                 yield pd.DataFrame(
                     {

@@ -210,8 +210,8 @@ def _take_cursor(term: str, cursors: dict[str, TermCursor], used: set[str]):
     Phrase/And branch advance it out from under a sibling Term branch,
     silently dropping matching docs (e.g. the Q2 shape
     ``Or(Term(t), Phrase((s, t)))`` when a synonym phrase contains the
-    token's own word). Blocks are shared (decode is lazy and
-    cursor-local); only the iteration state is duplicated."""
+    token's own word). The postings entry is shared (blocks and any
+    decoded arrays); only the iteration state is duplicated."""
     c = cursors.get(term)
     if c is None:
         return None
@@ -219,10 +219,11 @@ def _take_cursor(term: str, cursors: dict[str, TermCursor], used: set[str]):
         return TermCursor(
             term=c.term,
             idf=c.idf,
-            blocks=list(c.blocks),
+            blocks=c.blocks,
             k1=c.k1,
             b=c.b,
             avgdl=c.avgdl,
+            postings=c.postings,
         )
     used.add(term)
     return c
@@ -302,12 +303,12 @@ def _vectorized_and_or_topk(
     evaluator's scoring semantics: a doc matches iff every group has a
     matching member; each group contributes the MAX over its matching
     members (synonym-Or, ``_OrNode.score``); the doc's score is the
-    sum over groups in child order (``_AndNode.score`` — numpy adds in
-    the same order, so floats agree bit-for-bit). Replaces the
-    per-posting ``next_geq`` Python walk for the serving-dominant
-    query shape."""
-    import numpy as np
-
+    sum over groups in child order (``_AndNode.score``). A group is a
+    sorted, unique doc array with its scores — a one-member group is
+    its term's decoded postings as they are — and the groups intersect
+    left to right, adding each group's scores as they go, so floats
+    agree with the tree bit for bit. Replaces the per-posting
+    ``next_geq`` Python walk for the serving-dominant query shape."""
     from .wand import _decode_term_postings
 
     per_group: list[tuple[np.ndarray, np.ndarray]] = []
@@ -316,22 +317,23 @@ def _vectorized_and_or_topk(
         if not live:
             return []  # an empty AND branch matches nothing
         parts = [_decode_term_postings(c) for c in live]
+        if len(parts) == 1:
+            per_group.append(parts[0])
+            continue
         docs = np.concatenate([p[0] for p in parts])
         scores = np.concatenate([p[1] for p in parts])
         uniq, inv = np.unique(docs, return_inverse=True)
         gmax = np.full(len(uniq), -np.inf)
         np.maximum.at(gmax, inv, scores)
         per_group.append((uniq, gmax))
-    all_docs = np.concatenate([g[0] for g in per_group])
-    all_scores = np.concatenate([g[1] for g in per_group])
-    uniq, inv = np.unique(all_docs, return_inverse=True)
-    acc = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(acc, inv, all_scores)
-    cnt = np.bincount(inv, minlength=len(uniq))
-    keep = cnt == len(per_group)
-    uniq, acc = uniq[keep], acc[keep]
-    order = np.lexsort((uniq, -acc))[:k]
-    return [(int(uniq[i]), float(acc[i])) for i in order]
+    docs, acc = per_group[0]
+    for g_docs, g_scores in per_group[1:]:
+        docs, i_acc, i_g = np.intersect1d(
+            docs, g_docs, assume_unique=True, return_indices=True
+        )
+        acc = acc[i_acc] + g_scores[i_g]
+    order = np.lexsort((docs, -acc))[:k]
+    return [(int(docs[i]), float(acc[i])) for i in order]
 
 
 def execute_ast_cursors(
@@ -355,10 +357,9 @@ def execute_ast_cursors(
         groups = _and_or_groups(ast)
         if groups is not None:
             payload = sum(
-                len(b.doc_deltas)
+                cursors[t].postings.doc_bytes
                 for t in {m for g in groups for m in g}
                 if t in cursors
-                for b in cursors[t].blocks
             )
             if strategy == "vectorized" or payload <= TAAT_MAX_BYTES:
                 return _vectorized_and_or_topk(groups, cursors, k)

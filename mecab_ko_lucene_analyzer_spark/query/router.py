@@ -107,7 +107,7 @@ def _decode_stage(idf_by_term: dict[str, float], avgdl: float, k1: float, b: flo
         import numpy as np
         import pandas as pd
 
-        from ..index.codec import decode_varints
+        from ..index.codec import decode_block_arrays
 
         for pdf in batches:
             docs_out, terms_out, partial_out = [], [], []
@@ -120,9 +120,8 @@ def _decode_stage(idf_by_term: dict[str, float], avgdl: float, k1: float, b: flo
                 idf = idf_by_term.get(term)
                 if idf is None:
                     continue
-                docs = np.cumsum(decode_varints(bytes(dd)).astype(np.int64))
-                tf = decode_varints(bytes(tfs)).astype(np.float64)
-                dl = decode_varints(bytes(dls)).astype(np.float64)
+                docs, tf, dl, _ = decode_block_arrays(bytes(dd), bytes(tfs), bytes(dls))
+                tf, dl = tf.astype(np.float64), dl.astype(np.float64)
                 partial = idf * tf / (tf + k1 * (1 - b + b * dl / avgdl))
                 docs_out.append(docs)
                 terms_out.extend([term] * len(docs))
@@ -201,12 +200,12 @@ def decoded_doc_ids(
         import numpy as np
         import pandas as pd
 
-        from ..index.codec import decode_varints
+        from ..index.codec import decode_block_arrays
 
         for pdf in batches:
             docs_out, terms_out = [], []
             for term, dd in zip(pdf["term"], pdf["doc_deltas"]):
-                docs = np.cumsum(decode_varints(bytes(dd)).astype(np.int64))
+                docs = decode_block_arrays(bytes(dd))[0]
                 docs_out.append(docs)
                 if with_term:
                     terms_out.extend([term] * len(docs))
@@ -341,26 +340,19 @@ def phrase_match_docs(
         import numpy as np
         import pandas as pd
 
-        from ..index.codec import decode_varints
+        from ..index.codec import decode_block_arrays
 
         for pdf in batches:
             ids_out, terms_out, pos_out = [], [], []
             for term, dd, tfs_b, pos_b in zip(
                 pdf["term"], pdf["doc_deltas"], pdf["tfs"], pdf["pos_deltas"]
             ):
-                docs = np.cumsum(decode_varints(bytes(dd)).astype(np.int64))
-                tfs = decode_varints(bytes(tfs_b)).astype(np.int64)
-                flat = decode_varints(bytes(pos_b)).astype(np.int64)
-                # segmented cumsum: per-doc positions from the per-doc
-                # delta encoding, one vector pass for the whole block
-                cs = np.cumsum(flat)
-                ends = np.cumsum(tfs)
-                starts = ends - tfs
-                base = np.where(starts > 0, cs[starts - 1], 0)
-                pos = cs - np.repeat(base, tfs)
+                docs, _, _, positions = decode_block_arrays(
+                    bytes(dd), bytes(tfs_b), pos_deltas=bytes(pos_b)
+                )
                 ids_out.append(docs)
                 terms_out.extend([term] * len(docs))
-                pos_out.extend(np.split(pos, ends[:-1]))
+                pos_out.extend(positions)
             if ids_out:
                 yield pd.DataFrame(
                     {

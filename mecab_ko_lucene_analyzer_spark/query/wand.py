@@ -17,6 +17,7 @@ from __future__ import annotations
 import bisect
 import heapq
 from dataclasses import dataclass, field
+from functools import partial
 
 import numpy as np
 
@@ -24,11 +25,12 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from ..index.build import B, K1
-from ..index.codec import decode_varints
+from ..index.codec import decode_block_arrays, decode_positions, decode_varints
 from .bm25 import lucene_idf
 
 __all__ = [
     "TermCursor",
+    "TermPostings",
     "wand_topk",
     "load_query_cursors",
     "fetch_term_blocks",
@@ -51,10 +53,92 @@ class _Block:
     pos_deltas: bytes = b""
 
 
+class TermPostings:
+    """One term's postings as the serving cache holds them: the
+    compressed blocks in docID order, the df and the block metadata a
+    cursor skips by. The first scorer that needs the whole term calls
+    :meth:`decode`, which fills in the decoded doc ID, tf and doc_len
+    arrays once (block ``i`` owns ``[offsets[i], offsets[i + 1])``);
+    later cursors and scorers over the same entry slice them instead
+    of decoding again. Until then a cursor decodes only the blocks it
+    opens. ``on_decode(entry, added_bytes)`` tells the owning cache
+    that the entry grew."""
+
+    __slots__ = (
+        "blocks", "df", "firsts", "max_impact", "doc_bytes", "nbytes",
+        "docs", "tfs", "dls", "offsets", "on_decode",
+    )
+
+    def __init__(self, blocks: list[_Block], df: int = 0, on_decode=None):
+        self.blocks = sorted(blocks, key=lambda blk: blk.first_doc)
+        self.df = df
+        self.firsts = np.array([blk.first_doc for blk in self.blocks], dtype=np.int64)
+        self.max_impact = max((blk.max_impact for blk in self.blocks), default=0.0)
+        #: compressed doc-delta bytes: the scorers' decode-cost proxy
+        self.doc_bytes = sum(len(blk.doc_deltas) for blk in self.blocks)
+        #: bytes the entry holds: payloads plus a rough per-block object
+        #: cost, and the decoded arrays once filled in
+        self.nbytes = 256 * len(self.blocks) + sum(
+            len(blk.doc_deltas) + len(blk.tfs) + len(blk.doc_lens) + len(blk.pos_deltas)
+            for blk in self.blocks
+        )
+        self.docs = self.tfs = self.dls = self.offsets = None
+        self.on_decode = on_decode
+
+    def decode(self) -> "TermPostings":
+        """Decode every block in three vectorized passes, once per entry.
+        Varint payloads are concatenated and decoded together; each
+        block's doc-delta chain (its first delta is the absolute docID,
+        codec.py::encode_block) is rebased with a segmented cumsum, so
+        the cost is O(total bytes), not O(blocks). Blocks cover disjoint
+        docID ranges, so ``docs`` is sorted and unique."""
+        if self.docs is not None:
+            return self
+        d_bytes = b"".join(blk.doc_deltas for blk in self.blocks)
+        deltas = decode_varints(d_bytes).astype(np.int64)
+        # varints per block: count delta-payload end bytes before each
+        # block's byte boundary (a varint's last byte is < 0x80)
+        byte_ends = np.flatnonzero(np.frombuffer(d_bytes, dtype=np.uint8) < 128)
+        bounds = np.cumsum([len(blk.doc_deltas) for blk in self.blocks], dtype=np.int64)
+        offsets = np.concatenate(([0], np.searchsorted(byte_ends, bounds, side="left")))
+        counts = np.diff(offsets)
+        csum = np.cumsum(deltas)
+        base = np.where(offsets[:-1] > 0, csum[offsets[:-1] - 1], 0)
+        self.docs = csum - np.repeat(base, counts)
+        self.tfs = decode_varints(b"".join(blk.tfs for blk in self.blocks)).astype(np.int64)
+        self.dls = decode_varints(b"".join(blk.doc_lens for blk in self.blocks)).astype(
+            np.int64
+        )
+        self.offsets = offsets
+        for arr in (self.docs, self.tfs, self.dls, offsets):
+            arr.flags.writeable = False  # shared by every query over the entry
+        added = self.docs.nbytes + self.tfs.nbytes + self.dls.nbytes + offsets.nbytes
+        self.nbytes += added
+        if self.on_decode is not None:
+            self.on_decode(self, added)
+        return self
+
+    def block(self, bi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(docs, tfs, doc_lens) of block ``bi``: slices of the decoded
+        arrays when the entry is decoded, else that block's decode."""
+        if self.docs is not None:
+            lo, hi = self.offsets[bi], self.offsets[bi + 1]
+            return self.docs[lo:hi], self.tfs[lo:hi], self.dls[lo:hi]
+        blk = self.blocks[bi]
+        return decode_block_arrays(blk.doc_deltas, blk.tfs, blk.doc_lens)[:3]
+
+
 @dataclass
 class TermCursor:
-    """Posting-list iterator over compressed blocks with skipping.
-    Blocks decode lazily — a skipped block is never decompressed."""
+    """Posting-list iterator over one term's compressed blocks, with
+    skipping. ``postings`` is the term's :class:`TermPostings` (a cache
+    entry, shared by every cursor over the term); a cursor built from
+    raw ``blocks`` alone makes its own. Blocks open lazily: a block's
+    first doc is its ``first_doc``, so moving onto a block decodes
+    nothing, and the block's arrays are read (sliced from the decoded
+    entry, or decoded from this one block) only when the cursor must
+    score a doc or look past the first. A skipped block is never
+    decompressed."""
 
     term: str
     idf: float
@@ -62,6 +146,7 @@ class TermCursor:
     k1: float = K1
     b: float = B
     avgdl: float = 1.0
+    postings: TermPostings | None = None
     _bi: int = -1
     _docs: np.ndarray | None = None
     _tfs: np.ndarray | None = None
@@ -72,9 +157,11 @@ class TermCursor:
     _firsts: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int64))
 
     def __post_init__(self):
-        self.blocks.sort(key=lambda blk: blk.first_doc)
-        self._firsts = np.array([blk.first_doc for blk in self.blocks], dtype=np.int64)
-        self.max_impact = max((blk.max_impact for blk in self.blocks), default=0.0)
+        if self.postings is None:
+            self.postings = TermPostings(self.blocks)
+        self.blocks = self.postings.blocks
+        self._firsts = self.postings.firsts
+        self.max_impact = self.postings.max_impact
         self._open(0)
 
     @property
@@ -85,11 +172,6 @@ class TermCursor:
         if self._bi >= len(self.blocks):
             return 0.0
         return self.idf * self.blocks[self._bi].max_impact
-
-    def block_last_doc(self) -> int:
-        if self._docs is None:
-            return _INF
-        return int(self._docs[-1])
 
     def _block_index_for(self, doc: int) -> int:
         """Index of the only block that can contain ``doc`` (may be the
@@ -117,56 +199,66 @@ class TermCursor:
         return _INF
 
     def _open(self, bi: int) -> None:
+        """Move onto block ``bi`` (past the last: exhausted) at its first
+        doc, without reading the block."""
+        self._docs = None
+        self._pos = 0
         if bi >= len(self.blocks):
             self._bi = len(self.blocks)
-            self._docs = None
             self.cur_doc = _INF
             return
-        blk = self.blocks[bi]
         self._bi = bi
-        self._docs = np.cumsum(decode_varints(blk.doc_deltas).astype(np.int64))
-        self._tfs = decode_varints(blk.tfs).astype(np.int64)
-        self._dls = decode_varints(blk.doc_lens).astype(np.int64)
+        self.cur_doc = int(self._firsts[bi])
+
+    def _read(self) -> None:
+        """Read the current block's arrays (once per block visit)."""
+        self._docs, self._tfs, self._dls = self.postings.block(self._bi)
         self._positions = None  # decoded on demand (phrase queries only)
-        self._pos = 0
-        self.cur_doc = int(self._docs[0])
 
     def positions_current(self) -> np.ndarray:
         """Positions of the current doc (lazy per-block decode)."""
+        if self._docs is None:
+            self._read()
         if self._positions is None:
-            flat = decode_varints(self.blocks[self._bi].pos_deltas).astype(np.int64)
-            bounds = np.cumsum(self._tfs)
-            self._positions = []
-            start = 0
-            for end in bounds:
-                self._positions.append(np.cumsum(flat[start:end]))
-                start = int(end)
+            self._positions = decode_positions(
+                self.blocks[self._bi].pos_deltas, self._tfs
+            )
         return self._positions[self._pos]
 
     def advance(self) -> None:
+        if self._docs is None:
+            self._read()
         self._pos += 1
-        if self._docs is not None and self._pos < len(self._docs):
+        if self._pos < len(self._docs):
             self.cur_doc = int(self._docs[self._pos])
         else:
             self._open(self._bi + 1)
 
     def next_geq(self, target: int) -> None:
+        target = min(target, _INF)  # an exhausted cursor is past any target
         if self.cur_doc >= target:
             return
         bi = int(np.searchsorted(self._firsts, target, side="right")) - 1
         if bi > self._bi:
             self._open(bi)
-        while self._bi < len(self.blocks):
-            assert self._docs is not None
+        while self.cur_doc < target:
+            if self._docs is None:
+                self._read()
             if int(self._docs[-1]) >= target:
                 self._pos = int(np.searchsorted(self._docs, target, side="left"))
                 self.cur_doc = int(self._docs[self._pos])
                 return
             self._open(self._bi + 1)
 
+    def tf_dl_current(self) -> tuple[int, int]:
+        """(tf, doc_len) of the current doc."""
+        if self._docs is None:
+            self._read()
+        return int(self._tfs[self._pos]), int(self._dls[self._pos])
+
     def score_current(self) -> float:
-        tf = float(self._tfs[self._pos])
-        dl = float(self._dls[self._pos])
+        tf, dl = self.tf_dl_current()
+        tf, dl = float(tf), float(dl)
         return self.idf * tf / (tf + self.k1 * (1 - self.b + self.b * dl / self.avgdl))
 
     def exhausted(self) -> bool:
@@ -254,12 +346,14 @@ class _DirectKeyedReader:
     group whose keys are not sorted (a foreign writer) is sorted once
     as it decodes — a stable sort, so a key's rows keep their file
     order: still exact, it just prunes less. A key may own several
-    rows (a term's blocks). Lookups are per key, not vectorized: a
-    serving request asks for a handful of keys, where numpy's per-call
-    overhead would dominate."""
+    rows (a term's blocks). A one-value lookup (a df, a URL) keeps the
+    row group's value column as a Python list in the same entry, so a
+    hit is a bisect plus a list index. Lookups are per key, not
+    vectorized: a serving request asks for a handful of keys, where
+    numpy's per-call overhead would dominate."""
 
     #: decoded bytes kept per reader (Arrow buffers plus a rough
-    #: per-key cost of the Python key list)
+    #: per-item cost of the Python key and value lists)
     cache_bytes = 256 << 20
 
     def __init__(self, path: str, key: str, what: str):
@@ -270,12 +364,16 @@ class _DirectKeyedReader:
         self._rg_cache: "OrderedDict[tuple, tuple[list, object, int]]" = OrderedDict()
         self._rg_bytes = 0
 
-    def _row_group(self, fid: int, rgid: int, columns: tuple) -> tuple[list, object, int]:
-        """(sorted keys, Arrow table of ``columns`` in key order, cached
-        bytes) of one row group, from the cache or decoded once."""
+    def _row_group(
+        self, fid: int, rgid: int, columns: tuple, as_list: bool
+    ) -> tuple[list, object, int]:
+        """(sorted keys, the values in key order, cached bytes) of one
+        row group, from the cache or decoded once. The values are an
+        Arrow table of ``columns``, or with ``as_list`` the one
+        column's Python list."""
         import pyarrow.compute as pc
 
-        ck = (fid, rgid, columns)
+        ck = (fid, rgid, columns, as_list)
         ent = self._rg_cache.get(ck)
         if ent is not None:
             self._rg_cache.move_to_end(ck)
@@ -288,16 +386,20 @@ class _DirectKeyedReader:
         ).as_py():
             tbl = tbl.take(pc.sort_indices(keys))
         vals = tbl.select(list(columns))
-        ent = (tbl.column(self._key).to_pylist(), vals, vals.nbytes + 64 * n)
+        nbytes = vals.nbytes + 64 * n
+        if as_list:
+            vals, nbytes = vals.column(0).to_pylist(), nbytes + 64 * n
+        ent = (tbl.column(self._key).to_pylist(), vals, nbytes)
         while self._rg_cache and self._rg_bytes + ent[2] > self.cache_bytes:
             self._rg_bytes -= self._rg_cache.popitem(last=False)[1][2]
         self._rg_cache[ck] = ent
         self._rg_bytes += ent[2]
         return ent
 
-    def _rows(self, keys, columns: tuple):
-        """Yield ``(key, Arrow table of its rows)`` for every wanted key
-        present, row groups in file order."""
+    def _spans(self, keys, columns: tuple, as_list: bool = False):
+        """Yield ``(key, values, i, j)`` for every wanted key present,
+        row groups in file order: the key's rows are ``values[i:j]``
+        of its row group (see :meth:`_row_group`)."""
         want = sorted(set(keys))
         if not want:
             return
@@ -306,16 +408,22 @@ class _DirectKeyedReader:
                 sel = want if lo is None else [k for k in want if lo <= k <= hi]
                 if not sel:
                     continue
-                rg_keys, tbl, _ = self._row_group(fid, rgid, columns)
+                rg_keys, vals, _ = self._row_group(fid, rgid, columns, as_list)
                 for k in sel:
                     i = bisect.bisect_left(rg_keys, k)
                     j = bisect.bisect_right(rg_keys, k, i)
                     if i < j:
-                        yield k, tbl.slice(i, j - i)
+                        yield k, vals, i, j
+
+    def _rows(self, keys, columns: tuple):
+        """Yield ``(key, Arrow table of its rows)`` for every wanted key
+        present, row groups in file order."""
+        for k, tbl, i, j in self._spans(keys, columns):
+            yield k, tbl.slice(i, j - i)
 
     def _values(self, keys, value: str) -> dict:
         """``{key: value}`` for the wanted keys present (one row each)."""
-        return {k: rows.column(0)[0].as_py() for k, rows in self._rows(keys, (value,))}
+        return {k: vals[i] for k, vals, i, _ in self._spans(keys, (value,), as_list=True)}
 
 
 _BLOCK_COLS = ("first_doc", "n_docs", "doc_deltas", "tfs", "doc_lens", "block_max_impact")
@@ -402,10 +510,19 @@ class DirectTermStatsReader(_DirectKeyedReader):
 
 
 class BlockCache:
-    """Driver-side LRU of term → (blocks, df) — the serving-node warm
-    cache. Misses batch into one term-pruned fetch: a footer-pruned
-    direct Arrow read when ``direct`` is given (no Spark job — the
-    serving configuration), else a pruned Spark scan."""
+    """Driver-side LRU of (term, with_positions) → :class:`TermPostings`
+    — the serving-node warm cache. Misses batch into one term-pruned
+    fetch: a footer-pruned direct Arrow read when ``direct`` is given
+    (no Spark job — the serving configuration), else a pruned Spark
+    scan. An entry holds the term's compressed blocks and, once a
+    scorer has needed the whole term, its decoded arrays, so a warm
+    query decodes nothing. The cache keeps at most ``max_terms``
+    entries and ``cache_bytes`` bytes (compressed plus decoded): an
+    entry that grows past the budget as it decodes evicts the least
+    recently used terms."""
+
+    #: bytes kept (:attr:`TermPostings.nbytes` summed over the entries)
+    cache_bytes = 256 << 20
 
     def __init__(
         self,
@@ -418,20 +535,21 @@ class BlockCache:
         self.blocks = blocks
         self.max_terms = max_terms
         self.direct = direct
-        self._cache: "OrderedDict[tuple[str, bool], tuple[list[_Block], int]]" = (
-            OrderedDict()
-        )
+        self._cache: "OrderedDict[tuple[str, bool], TermPostings]" = OrderedDict()
+        self._bytes = 0
 
     def get(
         self, terms: list[str], with_positions: bool = False
-    ) -> dict[str, tuple[list[_Block], int]]:
+    ) -> dict[str, TermPostings]:
+        """``{term: entry}`` for the wanted terms the index holds."""
         out = {}
         misses = []
         for t in sorted(set(terms)):
             key = (t, with_positions)
-            if key in self._cache:
+            ent = self._cache.get(key)
+            if ent is not None:
                 self._cache.move_to_end(key)
-                out[t] = self._cache[key]
+                out[t] = ent
             else:
                 misses.append(t)
         if misses:
@@ -440,13 +558,26 @@ class BlockCache:
             else:
                 fetched = fetch_term_blocks(self.blocks, misses, with_positions)
             for t in misses:
-                entry = fetched.get(t, ([], 0))
-                self._cache[(t, with_positions)] = entry
-                if entry[1] > 0:
-                    out[t] = entry
-                while len(self._cache) > self.max_terms:
-                    self._cache.popitem(last=False)
-        return {t: e for t, e in out.items() if e[1] > 0}
+                key = (t, with_positions)
+                ent = TermPostings(
+                    *fetched.get(t, ([], 0)), on_decode=partial(self._grew, key)
+                )
+                self._cache[key] = ent
+                self._bytes += ent.nbytes
+                out[t] = ent
+            self._evict()
+        return {t: e for t, e in out.items() if e.df > 0}
+
+    def _grew(self, key: tuple[str, bool], ent: TermPostings, added: int) -> None:
+        if self._cache.get(key) is ent:  # an evicted entry no longer counts
+            self._bytes += added
+            self._evict()
+
+    def _evict(self) -> None:
+        while self._cache and (
+            len(self._cache) > self.max_terms or self._bytes > self.cache_bytes
+        ):
+            self._bytes -= self._cache.popitem(last=False)[1].nbytes
 
 
 def load_query_cursors(
@@ -460,7 +591,7 @@ def load_query_cursors(
     with_positions: bool = False,
     cache: BlockCache | None = None,
 ) -> list[TermCursor]:
-    """Build driver-side cursors for the query terms. Blocks come from
+    """Build driver-side cursors for the query terms. Postings come from
     ``cache`` when given — no Spark job on a hit, nor on a miss when
     the cache has a :class:`DirectBlockReader` — else from one
     term-pruned Spark scan. ``term_stats`` is accepted for API
@@ -468,24 +599,30 @@ def load_query_cursors(
     if cache is not None:
         by_term = cache.get(list(query_terms), with_positions)
     else:
-        by_term = fetch_term_blocks(blocks, list(query_terms), with_positions)
+        by_term = {
+            t: TermPostings(blks, df)
+            for t, (blks, df) in fetch_term_blocks(
+                blocks, list(query_terms), with_positions
+            ).items()
+        }
     return [
         TermCursor(
             term=t,
-            idf=lucene_idf(n_docs, df),
-            blocks=blks,
+            idf=lucene_idf(n_docs, p.df),
+            blocks=p.blocks,
             k1=k1,
             b=b,
             avgdl=avgdl,
+            postings=p,
         )
-        for t, (blks, df) in by_term.items()
-        if df > 0
+        for t, p in by_term.items()
+        if p.df > 0
     ]
 
 
 def _single_term_topk(c: TermCursor, k: int) -> list[tuple[int, float]]:
-    """Vectorized term-at-a-time top-k for one-term queries: one
-    segmented decode (:func:`_decode_term_postings`), score the whole
+    """Vectorized term-at-a-time top-k for one-term queries: score the
+    term's decoded postings (:func:`_decode_term_postings`) as one
     array, keep a running candidate pool — no per-posting Python
     loop."""
     docs, scores = _decode_term_postings(c)
@@ -511,31 +648,13 @@ def _single_term_topk(c: TermCursor, k: int) -> list[tuple[int, float]]:
 
 
 def _decode_term_postings(c: TermCursor) -> tuple[np.ndarray, np.ndarray]:
-    """Decode ALL of a cursor's blocks in three vectorized passes →
-    (docs, scores). Varint payloads are concatenated and decoded once;
-    per-block doc-delta chains (each block's first delta is the absolute
-    docID, codec.py::encode_block) are rebased with a segmented cumsum —
-    no per-block numpy round-trips, so cost is O(total bytes), not
-    O(blocks)."""
-    d_bytes = b"".join(blk.doc_deltas for blk in c.blocks)
-    deltas = decode_varints(d_bytes).astype(np.int64)
-    if deltas.size == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    tf = decode_varints(b"".join(blk.tfs for blk in c.blocks)).astype(np.float64)
-    dl = decode_varints(b"".join(blk.doc_lens for blk in c.blocks)).astype(
-        np.float64
-    )
-    # varints per block: count delta-payload end bytes before each
-    # block's byte boundary (a varint's last byte is < 0x80)
-    byte_ends = np.flatnonzero(np.frombuffer(d_bytes, dtype=np.uint8) < 128)
-    bounds = np.cumsum([len(blk.doc_deltas) for blk in c.blocks])
-    counts = np.diff(np.searchsorted(byte_ends, bounds, side="left"), prepend=0)
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    csum = np.cumsum(deltas)
-    base = np.where(starts > 0, csum[starts - 1], 0)
-    docs = csum - np.repeat(base, counts)
-    scores = c.idf * tf / (tf + c.k1 * (1 - c.b + c.b * dl / c.avgdl))
-    return docs, scores
+    """(docs, BM25 scores) of ALL of a cursor's postings: the term's
+    decoded arrays (:meth:`TermPostings.decode`, decoded once per
+    entry), scored in one numpy expression."""
+    p = c.postings.decode()
+    tf = p.tfs.astype(np.float64)
+    dl = p.dls.astype(np.float64)
+    return p.docs, c.idf * tf / (tf + c.k1 * (1 - c.b + c.b * dl / c.avgdl))
 
 
 def _taat_topk(cursors: list[TermCursor], k: int) -> list[tuple[int, float]]:
@@ -580,8 +699,7 @@ def wand_topk(
     if strategy == "taat" or (
         strategy == "auto"
         and cursors
-        and sum(len(b.doc_deltas) for c in cursors for b in c.blocks)
-        <= TAAT_MAX_BYTES
+        and sum(c.postings.doc_bytes for c in cursors) <= TAAT_MAX_BYTES
     ):
         return _taat_topk(cursors, k) if cursors else []
     heap: list[tuple[float, int]] = []  # min-heap of (score, -doc_id)

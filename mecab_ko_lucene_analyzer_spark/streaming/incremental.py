@@ -344,9 +344,12 @@ def compact_incremental(
     Deltas are doc-disjoint by construction (per-batch doc bases), so
     the union of the partials deltas IS the corpus partials. Compaction
     writes it to ``partials`` and runs the batch build's own stats+blocks
-    stage (``index/build.py::_stats_and_blocks``): the blocks are
-    byte-identical to a from-scratch ``doc_order="url"`` batch build
-    over the same corpus (``test_compact_incremental_equals_batch_build``).
+    stage (``index/build.py::_stats_and_blocks``): every table holds
+    the same rows as a from-scratch ``doc_order="url"`` batch build over
+    the same corpus, block payloads byte for byte
+    (``test_compact_incremental_equals_batch_build``). The split of
+    those rows into part files can differ, as the blocks exchange's
+    range sampler is seeded from the RDD id.
 
     Serving-concurrency contract (round-3 verdict ask #4): with the
     default ``out_path=None``, each compaction builds into a FRESH

@@ -403,11 +403,11 @@ def test_direct_block_reader_identical_to_spark_fetch(spark, materialized, block
         cursors = [
             TermCursor(
                 term=t,
-                idf=lucene_idf(corpus["n_docs"], df),
-                blocks=blks,
+                idf=lucene_idf(corpus["n_docs"], p.df),
+                blocks=p.blocks,
                 avgdl=corpus["avgdl"],
             )
-            for t, (blks, df) in cache.get(terms).items()
+            for t, p in cache.get(terms).items()
         ]
         got = wand_topk(cursors, k=10)
         want_cursors = load_query_cursors(
@@ -762,3 +762,47 @@ def test_blocks_params_change_invalidates_manifest(spark, tmp_path):
         m2 = json.load(f)
     assert m2["config"]["hot_min_df"] == 1 and m2["config"]["salt_shift"] == 3
     assert {f: os.path.getmtime(f) for f in glob.glob(f"{base}/blocks/*")} != mt
+
+
+def test_hot_terms_skip_the_job_when_no_term_can_be_hot(spark):
+    """``df <= n_docs``, so a hot threshold above ``n_docs`` salts
+    nothing: building blocks issues no Spark job before the blocks
+    action. A reachable threshold still collects exactly the terms at
+    or above it, ``n_docs`` itself included."""
+    import pyspark.sql.functions as F
+    from test_engine_api import _spark_jobs
+
+    from mecab_ko_lucene_analyzer_spark.index.blocks import HOT_SHARE, _hot_terms
+    from mecab_ko_lucene_analyzer_spark.index.build import (
+        _stats_from_partials,
+        partials_from_tokens,
+    )
+
+    texts = [f"공통 짝{i % 2} 다섯{i % 5} 열{i % 10} 문서{i}" for i in range(50)]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    toks = docs.select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("position", "term")
+    )
+    partials = partials_from_tokens(toks).persist()
+    term_stats = _stats_from_partials(partials)[0].persist()
+    try:
+        dfs = {r["term"]: r["df"] for r in term_stats.collect()}
+        built = []
+        jobs = _spark_jobs(
+            spark,
+            lambda: built.append(
+                build_blocks_from_partials(partials, term_stats, 50, 5.0, hot_min_df=10**9)
+            ),
+        )
+        assert jobs == 0
+        assert sorted(r["term"] for r in built[0].select("term").collect()) == sorted(dfs)
+        assert _spark_jobs(spark, lambda: _hot_terms(term_stats, 50, 51)) == 0
+        assert _hot_terms(term_stats, 50, 51) == []
+        for min_df in (1, 5, 10, 25, 50):
+            thresh = max(int(50 * HOT_SHARE), min_df)
+            want = sorted(t for t, df in dfs.items() if df >= thresh)
+            assert sorted(_hot_terms(term_stats, 50, min_df)) == want, min_df
+        assert _hot_terms(term_stats, 50, 50) == ["공통"]
+    finally:
+        term_stats.unpersist()
+        partials.unpersist()

@@ -1,0 +1,313 @@
+"""The serving cache's decoded postings: a warm search decodes nothing,
+the cache stays inside its byte budget, warm and cold engines answer
+bit for bit alike, and a cursor over raw blocks decodes only the
+blocks it reads."""
+
+import random
+import shutil
+
+import numpy as np
+import pytest
+
+from mecab_ko_lucene_analyzer_spark.analysis.dictionary import (
+    AnalyzerOption,
+    SynonymDictionary,
+)
+from mecab_ko_lucene_analyzer_spark.engine import SearchEngine
+from mecab_ko_lucene_analyzer_spark.index import build_and_write
+from mecab_ko_lucene_analyzer_spark.index.codec import encode_block, encode_varints
+from mecab_ko_lucene_analyzer_spark.query import wand as wand_mod
+from mecab_ko_lucene_analyzer_spark.query.ast import And, Or, Phrase, Term
+from mecab_ko_lucene_analyzer_spark.query.bm25 import lucene_idf
+from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast_cursors
+from mecab_ko_lucene_analyzer_spark.query.wand import (
+    BlockCache,
+    DirectBlockReader,
+    TermCursor,
+    TermPostings,
+    _Block,
+    load_query_cursors,
+    wand_topk,
+)
+from mecab_ko_lucene_analyzer_spark.sources import synthesize_webpages
+
+BASE = "/tmp/test_decoded_postings_cache"
+K1, B = 1.2, 0.75
+
+#: (text, conjunctive): AND, disjunctive bag, single term, and a
+#: synonym-OR group (the option below maps 검색 to 엔진)
+SEARCHES = [
+    ("검색 엔진", True),
+    ("데이터 처리 문서", True),
+    ("검색 엔진 문서 색인", False),
+    ("데이터", True),
+    ("색인", False),
+    ("검색 데이터", True),
+]
+
+#: structured queries: phrase filters and a nested synonym group
+ASTS = [
+    And((Term("검색"), Phrase(("검색", "엔진")))),
+    Phrase(("데이터", "처리")),
+    And((Or((Term("문서"), Term("색인"))), Term("데이터"))),
+]
+
+
+def _option():
+    return AnalyzerOption(synonyms=SynonymDictionary({"검색": ["엔진"]}))
+
+
+@pytest.fixture(scope="module")
+def index_path(spark):
+    shutil.rmtree(BASE, ignore_errors=True)
+    pages = synthesize_webpages(spark, 120, partitions=4)
+    build_and_write(pages, BASE, lang_filter=None, with_blocks=True)
+    return BASE
+
+
+def _hits(rows):
+    return [(h["doc_id"], h["score"]) for h in rows]
+
+
+def _count_decodes(monkeypatch) -> list:
+    """Count ``decode_varints`` calls through every module that binds
+    the name (the codec's own helpers look it up in the codec)."""
+    import importlib
+
+    calls = []
+    for name in (
+        "mecab_ko_lucene_analyzer_spark.index.codec",
+        "mecab_ko_lucene_analyzer_spark.query.wand",
+        "mecab_ko_lucene_analyzer_spark.query.executor",
+        "mecab_ko_lucene_analyzer_spark.query.router",
+        "mecab_ko_lucene_analyzer_spark.engine",
+    ):
+        mod = importlib.import_module(name)
+        original = getattr(mod, "decode_varints", None)
+        if original is None:
+            continue
+
+        def counted(data, _original=original):
+            calls.append(len(data))
+            return _original(data)
+
+        monkeypatch.setattr(mod, "decode_varints", counted)
+    return calls
+
+
+def test_second_warm_search_decodes_nothing(spark, index_path, monkeypatch):
+    engine = SearchEngine(spark, index_path, _option())
+    first = {q: _hits(engine.search(q, k=10, conjunctive=c)) for q, c in SEARCHES}
+    counts = {"검색 엔진": engine.count("검색 엔진"), "색인": engine.count("색인")}
+    calls = _count_decodes(monkeypatch)
+    for q, c in SEARCHES:
+        assert _hits(engine.search(q, k=10, conjunctive=c)) == first[q], q
+    assert {q: engine.count(q) for q in counts} == counts
+    assert engine.last_route == "driver"
+    assert calls == []
+    # the guard really counts: a fresh engine's first search decodes
+    fresh = SearchEngine(spark, index_path, _option())
+    assert _hits(fresh.search("검색 엔진", k=10)) == first["검색 엔진"]
+    assert calls
+
+
+def test_decoded_cache_stays_inside_its_byte_budget(spark, index_path):
+    terms = [
+        r["term"]
+        for r in spark.read.parquet(f"{index_path}/term_stats")
+        .orderBy("df", ascending=False)
+        .limit(40)
+        .collect()
+    ]
+    blocks = spark.read.parquet(f"{index_path}/blocks")
+    direct = DirectBlockReader(f"{index_path}/blocks")
+    sizes = {}
+    probe = BlockCache(blocks, direct=direct)
+    for t in terms:
+        sizes[t] = probe.get([t])[t].decode().nbytes
+    # room for about three decoded terms of the 40
+    cache = BlockCache(blocks, direct=direct)
+    cache.cache_bytes = 3 * max(sizes.values())
+    order = []
+    for t in terms:
+        ent = cache.get([t])[t]
+        assert ent.docs is None  # decoding waits for a scorer
+        ent.decode()
+        order.append(t)
+        assert cache._bytes <= cache.cache_bytes
+        assert cache._bytes == sum(e.nbytes for e in cache._cache.values())
+        # what is left is the most recently used tail of the order
+        kept = [key[0] for key in cache._cache]
+        assert kept == order[len(order) - len(kept):]
+    assert 2 <= len(cache._cache) < len(terms)
+    # a term decoded by a cursor after its eviction no longer counts
+    gone = cache.get([terms[0]])[terms[0]]
+    for t in terms[1:8]:
+        cache.get([t])[t].decode()
+    assert (terms[0], False) not in cache._cache
+    before = cache._bytes
+    gone.decode()
+    assert cache._bytes == before <= cache.cache_bytes
+    # the entry-count bound still holds as well
+    small = BlockCache(blocks, max_terms=5, direct=direct)
+    small.get(terms[:12])
+    assert list(small._cache) == [(t, False) for t in sorted(terms[:12])[-5:]]
+
+
+def test_warm_and_cold_engines_answer_bit_for_bit(spark, index_path):
+    warm = SearchEngine(spark, index_path, _option())
+    for _ in range(2):
+        warm_hits = {q: _hits(warm.search(q, k=50, conjunctive=c)) for q, c in SEARCHES}
+        warm_ast = [_hits(warm.search_ast(ast, k=50)) for ast in ASTS]
+    assert any(e.docs is not None for e in warm.block_cache._cache.values())
+    for q, c in SEARCHES:
+        cold = SearchEngine(spark, index_path, _option())
+        assert _hits(cold.search(q, k=50, conjunctive=c)) == warm_hits[q], q
+        assert warm_hits[q], q
+    for ast, want in zip(ASTS, warm_ast):
+        cold = SearchEngine(spark, index_path, _option())
+        assert _hits(cold.search_ast(ast, k=50)) == want, ast
+
+
+@pytest.mark.parametrize("strategy", ["tree", "vectorized", "wand", "taat"])
+def test_forced_strategies_warm_equals_cold(spark, index_path, strategy):
+    engine = SearchEngine(spark, index_path, _option())
+    asts = [
+        And((Term("검색"), Term("엔진"))),
+        And((Or((Term("검색"), Term("엔진"))), Term("데이터"))),
+        And((Term("데이터"),)),
+    ]
+    bags = [["검색", "엔진", "문서"], ["데이터", "처리"], ["색인"]]
+
+    def cursors(terms, cache):
+        return load_query_cursors(
+            engine.blocks, None, engine.n_docs, engine.avgdl, terms, cache=cache
+        )
+
+    def run(cache):
+        out = []
+        if strategy in ("tree", "vectorized"):
+            for ast in asts:
+                terms = sorted({t for g in _groups(ast) for t in g})
+                cs = {c.term: c for c in cursors(terms, cache)}
+                out.append(execute_ast_cursors(ast, cs, k=30, strategy=strategy))
+        else:
+            for terms in bags:
+                out.append(wand_topk(cursors(terms, cache), k=30, strategy=strategy))
+        return out
+
+    # a new cache: the cursors start from raw, undecoded blocks
+    cold = run(BlockCache(engine.blocks, direct=DirectBlockReader(f"{index_path}/blocks")))
+    cache = engine.block_cache
+    first = run(cache)
+    for terms in bags + [["검색", "엔진", "데이터"]]:
+        for p in cache.get(terms).values():
+            p.decode()
+    assert run(cache) == first == cold
+    assert all(r for r in cold)
+
+
+def _groups(ast):
+    if isinstance(ast, Term):
+        return [[ast.term]]
+    if isinstance(ast, Or):
+        return [[c.term for c in ast.children]]
+    return [g for c in ast.children for g in _groups(c)]
+
+
+def _raw_term(rng, n_docs, block_size):
+    docs = sorted(rng.sample(range(n_docs), rng.randint(1, n_docs)))
+    tfs = [rng.randint(1, 4) for _ in docs]
+    dls = [rng.randint(4, 40) for _ in docs]
+    positions = [sorted(rng.sample(range(dl), tf)) for tf, dl in zip(tfs, dls)]
+    blocks = []
+    for i in range(0, len(docs), block_size):
+        sl = slice(i, i + block_size)
+        dd, tt, pp = encode_block(
+            np.array(docs[sl]), np.array(tfs[sl]), [np.array(p) for p in positions[sl]]
+        )
+        impacts = [
+            tf / (tf + K1 * (1 - B + B * dl / 10.0))
+            for tf, dl in zip(tfs[sl], dls[sl])
+        ]
+        blocks.append(_Block(docs[i], dd, tt, encode_varints(dls[sl]), max(impacts), pp))
+    rng.shuffle(blocks)  # the cursor sorts them by first_doc
+    return docs, tfs, dls, positions, blocks
+
+
+def test_cursor_over_raw_blocks_matches_decoded_entry(monkeypatch):
+    """A cursor built from raw ``_Block`` lists (batch scoring, explain,
+    the property tests) walks, scores and yields positions exactly like
+    a cursor over a decoded cache entry, and like the postings it was
+    built from."""
+    opened = []
+    real = wand_mod.decode_block_arrays
+
+    def counted(*a, **kw):
+        opened.append(a[0])
+        return real(*a, **kw)
+
+    monkeypatch.setattr(wand_mod, "decode_block_arrays", counted)
+    rng = random.Random(7)
+    for trial in range(60):
+        docs, tfs, dls, positions, blocks = _raw_term(rng, 200, rng.choice([1, 2, 3, 128]))
+        idf = lucene_idf(250, len(docs))
+        raw = TermCursor(term="t", idf=idf, blocks=list(blocks), avgdl=10.0)
+        entry = TermPostings(blocks, len(docs)).decode()
+        assert entry.docs.tolist() == docs
+        decoded = TermCursor(term="t", idf=idf, blocks=entry.blocks, avgdl=10.0,
+                             postings=entry)
+        for _ in range(40):
+            opened.clear()
+            if rng.random() < 0.5:
+                target = rng.randint(0, 210)
+                decoded.next_geq(target)
+                assert opened == []  # the decoded entry is sliced
+                before = raw.cur_doc  # a cursor never moves back
+                raw.next_geq(target)
+                want = next((d for d in docs if d >= max(target, before)), None)
+                if want is not None:
+                    assert raw.cur_doc == want
+            elif not raw.exhausted():
+                decoded.advance()
+                assert opened == []
+                raw.advance()
+            assert raw.cur_doc == decoded.cur_doc
+            if raw.exhausted():
+                assert decoded.exhausted()
+                break
+            i = docs.index(raw.cur_doc)
+            tf, dl = float(tfs[i]), float(dls[i])
+            want_score = idf * tf / (tf + K1 * (1 - B + B * dl / 10.0))
+            opened.clear()
+            assert decoded.score_current() == want_score
+            assert decoded.positions_current().tolist() == positions[i]
+            assert opened == []
+            assert raw.score_current() == want_score
+            assert raw.tf_dl_current() == (tfs[i], dls[i])
+            assert raw.positions_current().tolist() == positions[i]
+            # the raw cursor reads only the block holding its doc
+            assert set(opened) <= {b.doc_deltas for b in blocks}
+            assert len(opened) <= 1
+
+
+def test_cursor_opens_blocks_lazily(monkeypatch):
+    """Moving onto a block decodes nothing: its first doc is known from
+    the block metadata. Skipping to the last block's first doc decodes
+    no block; scoring there decodes that block alone."""
+    opened = []
+    real = wand_mod.decode_block_arrays
+
+    def counted(*a, **kw):
+        opened.append(a[0])
+        return real(*a, **kw)
+
+    monkeypatch.setattr(wand_mod, "decode_block_arrays", counted)
+    docs, tfs, dls, _, blocks = _raw_term(random.Random(3), 400, 4)
+    cursor = TermCursor(term="t", idf=1.0, blocks=blocks, avgdl=10.0)
+    assert opened == [] and cursor.cur_doc == docs[0]
+    last = cursor.blocks[-1]
+    cursor.next_geq(last.first_doc)
+    assert opened == [] and cursor.cur_doc == last.first_doc
+    cursor.score_current()
+    assert opened == [last.doc_deltas]
