@@ -2421,9 +2421,10 @@ def _q_phrase_match(spark, sf_dir):
     """Positional phrase retrieval through the SERVING engine (Q4
     semantics, `DanawaSearchQueryBuilder.java:287-291` match_phrase):
     builds the positions-carrying block index, evaluates each Phrase
-    AST via the production cursor tree (`_PhraseNode` consecutive-
-    position check over varint pos_deltas), and returns every matching
-    doc. Phrase score is 0 by contract, so k = n_docs yields the full
+    AST via the production driver evaluator (`executor._phrase_docs`:
+    the terms' intersected docs, then the `phrase_reach` position check
+    over varint pos_deltas decoded per candidate block), and returns
+    every matching doc. Phrase score is 0 by contract, so k = n_docs yields the full
     doc set ordered by doc_id. Oracle: DuckDB token-adjacency
     self-joins on unnest ordinality — exercising I2/I3 position
     encoding end-to-end under the driver's hash gate."""
@@ -2446,7 +2447,7 @@ def _q_phrase_match_distributed(spark, sf_dir):
     ``router.phrase_match_docs`` (executor-side position decode +
     doc_id-keyed aggregate + shared ``phrase_reach`` DP, with the
     rarest-term broadcast prune engaged through real df stats) instead
-    of the driver cursor tree. Same oracle as ``phrase_match`` — the
+    of the driver evaluator. Same oracle as ``phrase_match`` — the
     two paths must agree doc-for-doc."""
     from mecab_ko_lucene_analyzer_spark.query.router import (
         phrase_match_docs,
@@ -2589,8 +2590,8 @@ def _q_synonym_or_topk(spark, sf_dir):
     ``And(Or(group...), Term(required))`` over the block index, scored
     with the production semantics — a doc matches iff the required term
     AND at least one group member appear; the group contributes the MAX
-    over its matching members' BM25 partials (``_OrNode.score``), the
-    doc score is the sum over clauses (``_AndNode.score``). This is the
+    over its matching members' BM25 partials (the evaluator's ``Or``),
+    the doc score is the sum over clauses (its ``And``). This is the
     exact AST ``build_query_ast`` emits for a synonym-bearing token, so
     the driver gate now covers Q2's scoring, not just its construction.
     Oracle: per-term BM25 partials, ``max`` within the group, ``+`` the
@@ -3567,8 +3568,8 @@ def _synonym_or_topk_sql(k: int = SYNONYM_K) -> str:
     """Q2 oracle: BM25 partials per (term, doc); the synonym group
     contributes ``max(partial)`` over its matching members, the
     required term its own partial; docs must match both clauses
-    (inner join) — the executor's ``_OrNode``/``_AndNode`` semantics
-    in ANSI SQL."""
+    (inner join) — the executor's ``Or``/``And`` semantics in ANSI
+    SQL."""
     group_list = ", ".join(f"'{t}'" for t in SYNONYM_GROUP)
     all_terms = ", ".join(
         f"'{t}'" for t in (*SYNONYM_GROUP, SYNONYM_REQUIRED)

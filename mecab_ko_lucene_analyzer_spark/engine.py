@@ -187,10 +187,14 @@ class SearchEngine:
         docID range covers ``doc_id`` (``max_by(first_doc)`` under a
         pushed ``term IN`` + ``first_doc <= doc_id`` filter), so the
         driver reads O(|terms|) block rows at ANY df, hot josa terms
-        included. The per-term partials come from the SAME cursor
-        arithmetic the serving scorer runs (``TermCursor.score_current``
-        inputs), so the explained total matches the served score
-        bit-for-bit (tested)."""
+        included. The per-term partials are the SAME BM25 expression
+        the serving scorers run (``bm25.bm25_partial`` over the cursor's
+        tf and doc_len), one per distinct term, added in term order. So
+        the explained total matches the driver-served disjunctive bag
+        score (``search(conjunctive=False)``) bit-for-bit (tested). A
+        conjunctive search adds one partial per query token in query
+        order: there a repeated token counts once here, and the last
+        bit of the sum can differ."""
         from .query.explain import explanation_tree
         from .query.wand import TermCursor, _Block, lucene_idf
 
@@ -265,7 +269,7 @@ class SearchEngine:
 
     def _ast_hits(self, ast, fetch: int) -> list[tuple[int, float]]:
         """Route + execute an AST: hot queries take the distributed
-        scorer, cold queries run the driver cursor tree."""
+        scorer, cold queries run the driver AST evaluator."""
         from .query.ast import ast_terms
         from .query.router import distributed_ast_topk
 
@@ -1198,7 +1202,7 @@ class SearchEngine:
         filters included, the reference's count semantics for its own
         emitted query shape). ``query`` is an AST node or its Q6 JSON
         rendering. Hot routable queries count distributed (one row to
-        the driver); everything else walks the driver cursor tree."""
+        the driver); everything else runs the driver AST evaluator."""
         from .query.ast import ast_terms, from_json
         from .query.executor import count_ast as exec_count_ast
         from .query.router import count_ast_blocks
@@ -1229,9 +1233,9 @@ class SearchEngine:
 
         * single term: df = sum of block ``n_docs`` (exact, ZERO decode
           and zero Spark jobs on a warm :class:`BlockCache`);
-        * multi term: the terms' decoded docID arrays (one term-pruned
-          scan at most; each cache entry decodes once) intersected or
-          unioned in NumPy.
+        * multi term: the size of the AST evaluator's match set over an
+          ``And`` (or ``Or``) of the terms (``executor.count_ast``; one
+          term-pruned read at most, each cache entry decodes once).
 
         ``exclude`` text counts with must_not semantics through the
         full AST evaluator (:meth:`count_ast` — conjunctive only, the
@@ -1239,8 +1243,6 @@ class SearchEngine:
 
         Round 1 ran a groupBy over the full row-postings parquet per
         call — an avoidable whole-table scan at serving time."""
-        import numpy as np
-
         if exclude:
             if not conjunctive:
                 raise ValueError(
@@ -1266,20 +1268,14 @@ class SearchEngine:
                 return 0
             return match_count_blocks(self.blocks, terms, conjunctive)
         self.last_route = "driver"
-        by_term = self.block_cache.get(terms)
-        if conjunctive and len(by_term) < len(terms):
-            return 0  # a required term matches nothing
-        if not by_term:
-            return 0
         if len(terms) == 1:
-            return by_term[terms[0]].df
-        doc_sets = [p.decode().docs for p in by_term.values()]
-        doc_sets.sort(key=len)
-        if conjunctive:
-            acc = doc_sets[0]
-            for d in doc_sets[1:]:
-                acc = np.intersect1d(acc, d, assume_unique=True)
-                if acc.size == 0:
-                    return 0
-            return int(acc.size)
-        return int(np.unique(np.concatenate(doc_sets)).size)
+            entry = self.block_cache.get(terms).get(terms[0])
+            return entry.df if entry is not None else 0
+        from .query.ast import And, Or, Term
+        from .query.executor import count_ast
+
+        node = (And if conjunctive else Or)(tuple(Term(t) for t in terms))
+        return count_ast(
+            node, self.blocks, self.term_stats, self.n_docs, self.avgdl,
+            cache=self.block_cache,
+        )

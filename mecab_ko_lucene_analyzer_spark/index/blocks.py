@@ -47,7 +47,6 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-from .build import B, K1
 from .codec import BLOCK_SIZE, decode_varints, encode_varint_groups_concat
 
 __all__ = [
@@ -413,6 +412,8 @@ def _reblock_stage_arrow(avgdl: float):
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        from ..query.bm25 import bm25_partial
+
         chunks = [c for c in batches if c.num_rows]
         if not chunks:
             return
@@ -437,9 +438,8 @@ def _reblock_stage_arrow(avgdl: float):
         starts, sizes, payload = encode_blocks(
             run_start, docs, tfs, dls, pos_data, pos_lens
         )
-        tfs_f = tfs.astype(np.float64)
-        impacts = tfs_f / (
-            tfs_f + K1 * (1 - B + B * dls.astype(np.float64) / avgdl)
+        impacts = bm25_partial(
+            1.0, tfs.astype(np.float64), dls.astype(np.float64), avgdl
         )
         cols = [
             batch.column("term").take(pa.array(row[starts])).cast(pa.string()),

@@ -102,7 +102,7 @@ class Not:
 def validate_ast(node) -> None:
     """Raise ``ValueError`` on malformed ``Not`` placement (see
     :class:`Not`). Called by both evaluators' entry points so the
-    driver cursor tree and the distributed scorer reject exactly the
+    driver evaluator and the distributed scorer reject exactly the
     same shapes."""
 
     def no_not(n):
@@ -110,8 +110,7 @@ def validate_ast(node) -> None:
             raise ValueError("nested Not is not supported")
         # DisMax included: a Not smuggled under a DisMax inside a
         # negated subtree must fail validation here, not diverge
-        # between the cursor tree (build-time crash) and the
-        # distributed scorer (silent evaluation)
+        # between the driver evaluator and the distributed scorer
         if isinstance(n, (And, Or, DisMax)):
             for c in n.children:
                 no_not(c)

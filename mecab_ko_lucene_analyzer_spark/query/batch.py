@@ -195,9 +195,9 @@ def ast_topk_batch(
     DISTRIBUTED (one mapInPandas pass → distinct term collect, bounded
     by the batch's vocabulary, not its query count), ONE term-pruned
     fetch loads the union postings — with positions only if any query
-    contains a phrase — and the broadcast payload feeds per-executor
-    cursor trees running the SAME ``execute_ast_cursors`` evaluation
-    the serving path runs (rank-identical by construction)."""
+    contains a phrase — and the broadcast payload feeds the SAME
+    per-executor ``execute_ast_cursors`` evaluation the serving path
+    runs (rank-identical by construction)."""
     from .ast import ast_terms, from_json
     from .executor import _has_phrase, execute_ast_cursors
 

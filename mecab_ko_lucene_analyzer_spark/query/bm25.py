@@ -38,6 +38,7 @@ __all__ = [
     "keyset_page",
     "boosted_bm25_topk",
     "bm25_oracle",
+    "bm25_partial",
     "lucene_idf",
     "score_expr",
 ]
@@ -45,6 +46,15 @@ __all__ = [
 
 def lucene_idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def bm25_partial(idf, tf, dl, avgdl: float, k1: float = K1, b: float = B):
+    """One (term, doc) partial score, ``idf * tf / (tf + k1 * (1 - b +
+    b * dl / avgdl))``, on floats or float64 arrays. Every driver-side
+    scorer, the distributed block decode, ``_explain`` and the block
+    impacts (``idf=1.0``: ``1.0 * tf`` is ``tf`` exactly) evaluate this
+    one expression, so they agree bit for bit."""
+    return idf * tf / (tf + k1 * (1 - b + b * dl / avgdl))
 
 
 def score_expr(k1: float = K1, b: float = B):

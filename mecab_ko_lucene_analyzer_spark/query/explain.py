@@ -24,6 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..index.build import B, InvertedIndex, K1
+from .bm25 import bm25_partial
 
 __all__ = ["explain_terms", "explanation_tree"]
 
@@ -98,8 +99,8 @@ def explanation_tree(
     total = 0.0
     for c in per_term:
         tf, dl, avgdl = float(c["tf"]), float(c["doc_len"]), float(c["avgdl"])
-        norm = tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        partial = c["idf"] * norm
+        norm = bm25_partial(1.0, tf, dl, avgdl, k1, b)
+        partial = bm25_partial(c["idf"], tf, dl, avgdl, k1, b)
         total += partial
         details.append(
             {

@@ -85,7 +85,7 @@ def phrase_highlight_spans(
     compound_noun_min_length: int = 3,
 ) -> list[tuple[int, int]]:
     """Char spans of tokens participating in an in-order phrase window
-    within ``slop`` — the executor's ``_PhraseNode`` semantics (each
+    within ``slop`` — the executor's phrase semantics (each
     next term at a position in ``(prev, prev + 1 + slop]``, EXISTS
     semantics over all candidate chains — greedy first-match is wrong
     for slop >= 1: the earliest candidate in one window can dead-end

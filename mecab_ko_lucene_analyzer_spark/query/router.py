@@ -58,7 +58,7 @@ from pyspark.sql import Column, DataFrame
 
 from ..index.build import B, K1
 from .ast import And, DisMax, Not, Or, Phrase, Term, validate_ast
-from .bm25 import lucene_idf
+from .bm25 import bm25_partial, lucene_idf
 
 __all__ = [
     "term_dfs",
@@ -121,8 +121,9 @@ def _decode_stage(idf_by_term: dict[str, float], avgdl: float, k1: float, b: flo
                 if idf is None:
                     continue
                 docs, tf, dl, _ = decode_block_arrays(bytes(dd), bytes(tfs), bytes(dls))
-                tf, dl = tf.astype(np.float64), dl.astype(np.float64)
-                partial = idf * tf / (tf + k1 * (1 - b + b * dl / avgdl))
+                partial = bm25_partial(
+                    idf, tf.astype(np.float64), dl.astype(np.float64), avgdl, k1, b
+                )
                 docs_out.append(docs)
                 terms_out.extend([term] * len(docs))
                 partial_out.append(partial)
@@ -420,7 +421,7 @@ def _ast_expr(node, scores, phrase_flags=None):
     null unless every child matches; Phrase = 0.0 when its flag column
     (``phrase_flags``, from :func:`phrase_match_docs`) is true, null
     otherwise — the boost-0 match_phrase semantics. Mirrors
-    ``executor.py``'s cursor tree and the scoring spec in ``ast.py``."""
+    ``executor.py``'s evaluator and the scoring spec in ``ast.py``."""
     if isinstance(node, Term):
         return F.element_at(scores, node.term)
     if isinstance(node, Phrase):

@@ -1,11 +1,15 @@
-"""Block-max WAND top-k over compressed postings (I7 query path).
+"""Driver-side postings access and bag-of-terms top-k (I7 query path).
 
 The low-latency counterpart to the distributed scatter-gather scorer
 (``bm25.py``): query terms are few, so their block lists are fetched
-with a term-pruned scan (``blocks.filter(term IN ...)``) and scored on
-the driver document-at-a-time with block-max skipping (WAND, Broder et
-al. 2003; block-max refinement, Ding & Suel 2011). Both engines must be
-rank-identical to the brute-force oracle — tested.
+with a term-pruned read and scored on the driver. The driver has two
+scorers: the vectorized evaluator over each term's decoded postings
+arrays (``executor.py`` for every AST; a bag takes the same union sum
+and top-k, :func:`_union` and :func:`_top_k`, in :func:`_taat_topk`),
+and block-max WAND (Broder et al. 2003; block-max refinement, Ding &
+Suel 2011) for bags whose compressed postings exceed
+``TAAT_MAX_BYTES``, where skipping beats decoding everything. Both
+must be rank-identical to the brute-force oracle — tested.
 
 Tie-break: score desc, doc_id asc. WAND scores candidates in ascending
 docID order, so on equal scores the earlier (smaller) docID stays in
@@ -26,7 +30,7 @@ import pyspark.sql.functions as F
 
 from ..index.build import B, K1
 from ..index.codec import decode_block_arrays, decode_positions, decode_varints
-from .bm25 import lucene_idf
+from .bm25 import bm25_partial, lucene_idf
 
 __all__ = [
     "TermCursor",
@@ -61,12 +65,14 @@ class TermPostings:
     arrays once (block ``i`` owns ``[offsets[i], offsets[i + 1])``);
     later cursors and scorers over the same entry slice them instead
     of decoding again. Until then a cursor decodes only the blocks it
-    opens. ``on_decode(entry, added_bytes)`` tells the owning cache
-    that the entry grew."""
+    opens. A phrase check decodes positions per block, only for the
+    blocks that hold a candidate, and keeps them in the entry
+    (:meth:`positions`). ``on_decode(entry, added_bytes)`` tells the
+    owning cache that the entry grew."""
 
     __slots__ = (
         "blocks", "df", "firsts", "max_impact", "doc_bytes", "nbytes",
-        "docs", "tfs", "dls", "offsets", "on_decode",
+        "docs", "tfs", "dls", "offsets", "pos", "on_decode",
     )
 
     def __init__(self, blocks: list[_Block], df: int = 0, on_decode=None):
@@ -83,7 +89,14 @@ class TermPostings:
             for blk in self.blocks
         )
         self.docs = self.tfs = self.dls = self.offsets = None
+        #: block index → that block's per-doc position arrays
+        self.pos: dict[int, list[np.ndarray]] = {}
         self.on_decode = on_decode
+
+    def _grew(self, added: int) -> None:
+        self.nbytes += added
+        if self.on_decode is not None:
+            self.on_decode(self, added)
 
     def decode(self) -> "TermPostings":
         """Decode every block in three vectorized passes, once per entry.
@@ -112,11 +125,29 @@ class TermPostings:
         self.offsets = offsets
         for arr in (self.docs, self.tfs, self.dls, offsets):
             arr.flags.writeable = False  # shared by every query over the entry
-        added = self.docs.nbytes + self.tfs.nbytes + self.dls.nbytes + offsets.nbytes
-        self.nbytes += added
-        if self.on_decode is not None:
-            self.on_decode(self, added)
+        self._grew(self.docs.nbytes + self.tfs.nbytes + self.dls.nbytes + offsets.nbytes)
         return self
+
+    def positions(self, idx: np.ndarray) -> list[np.ndarray]:
+        """Position arrays of the postings at sorted indexes ``idx``
+        into :attr:`docs` (the entry must hold ``pos_deltas``). A
+        block's positions decode on its first use, once per entry, and
+        count toward :attr:`nbytes` (arrays plus a rough per-array
+        object cost)."""
+        self.decode()
+        out = []
+        for bi, i in zip(
+            (np.searchsorted(self.offsets, idx, side="right") - 1).tolist(), idx.tolist()
+        ):
+            lo = int(self.offsets[bi])
+            block = self.pos.get(bi)
+            if block is None:
+                hi = int(self.offsets[bi + 1])
+                block = decode_positions(self.blocks[bi].pos_deltas, self.tfs[lo:hi])
+                self.pos[bi] = block
+                self._grew(sum(a.nbytes for a in block) + 112 * len(block))
+            out.append(block[i - lo])
+        return out
 
     def block(self, bi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(docs, tfs, doc_lens) of block ``bi``: slices of the decoded
@@ -151,7 +182,6 @@ class TermCursor:
     _docs: np.ndarray | None = None
     _tfs: np.ndarray | None = None
     _dls: np.ndarray | None = None
-    _positions: list | None = None
     _pos: int = 0
     cur_doc: int = _INF
     _firsts: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int64))
@@ -213,17 +243,6 @@ class TermCursor:
     def _read(self) -> None:
         """Read the current block's arrays (once per block visit)."""
         self._docs, self._tfs, self._dls = self.postings.block(self._bi)
-        self._positions = None  # decoded on demand (phrase queries only)
-
-    def positions_current(self) -> np.ndarray:
-        """Positions of the current doc (lazy per-block decode)."""
-        if self._docs is None:
-            self._read()
-        if self._positions is None:
-            self._positions = decode_positions(
-                self.blocks[self._bi].pos_deltas, self._tfs
-            )
-        return self._positions[self._pos]
 
     def advance(self) -> None:
         if self._docs is None:
@@ -258,8 +277,7 @@ class TermCursor:
 
     def score_current(self) -> float:
         tf, dl = self.tf_dl_current()
-        tf, dl = float(tf), float(dl)
-        return self.idf * tf / (tf + self.k1 * (1 - self.b + self.b * dl / self.avgdl))
+        return bm25_partial(self.idf, float(tf), float(dl), self.avgdl, self.k1, self.b)
 
     def exhausted(self) -> bool:
         return self.cur_doc >= _INF
@@ -399,13 +417,18 @@ class _DirectKeyedReader:
     def _spans(self, keys, columns: tuple, as_list: bool = False):
         """Yield ``(key, values, i, j)`` for every wanted key present,
         row groups in file order: the key's rows are ``values[i:j]``
-        of its row group (see :meth:`_row_group`)."""
+        of its row group (see :meth:`_row_group`). Only the row groups
+        whose (min, max) range can hold a wanted key are read; a row
+        group without stats is always read."""
         want = sorted(set(keys))
         if not want:
             return
         for fid, (_, ranges) in enumerate(self._files):
             for rgid, (lo, hi) in enumerate(ranges):
-                sel = want if lo is None else [k for k in want if lo <= k <= hi]
+                if lo is None:
+                    sel = want
+                else:
+                    sel = want[bisect.bisect_left(want, lo) : bisect.bisect_right(want, hi)]
                 if not sel:
                     continue
                 rg_keys, vals, _ = self._row_group(fid, rgid, columns, as_list)
@@ -620,59 +643,58 @@ def load_query_cursors(
     ]
 
 
-def _single_term_topk(c: TermCursor, k: int) -> list[tuple[int, float]]:
-    """Vectorized term-at-a-time top-k for one-term queries: score the
-    term's decoded postings (:func:`_decode_term_postings`) as one
-    array, keep a running candidate pool — no per-posting Python
-    loop."""
-    docs, scores = _decode_term_postings(c)
-    if docs.size == 0:
-        return []
-    if len(docs) > k:
-        idx = np.argpartition(-scores, k - 1)[: max(k * 2, k)]
-    else:
-        idx = np.arange(len(docs))
-    cand = sorted(
-        ((float(scores[i]), -int(docs[i])) for i in idx), reverse=True
-    )[:k]
-    # argpartition may cut ties at the boundary; verify against a full
-    # sort when the kth score has ties beyond the partition
-    if len(docs) > k:
-        kth = cand[-1][0]
-        n_ge = int(np.count_nonzero(scores > kth))
-        n_eq = int(np.count_nonzero(scores == kth))
-        if n_ge + n_eq > len(cand):
-            order = np.lexsort((docs, -scores))[: k]
-            cand = [(float(scores[i]), -int(docs[i])) for i in order]
-    return [(-d, s) for s, d in cand[:k]]
-
-
 def _decode_term_postings(c: TermCursor) -> tuple[np.ndarray, np.ndarray]:
     """(docs, BM25 scores) of ALL of a cursor's postings: the term's
     decoded arrays (:meth:`TermPostings.decode`, decoded once per
     entry), scored in one numpy expression."""
     p = c.postings.decode()
-    tf = p.tfs.astype(np.float64)
-    dl = p.dls.astype(np.float64)
-    return p.docs, c.idf * tf / (tf + c.k1 * (1 - c.b + c.b * dl / c.avgdl))
+    return p.docs, bm25_partial(
+        c.idf, p.tfs.astype(np.float64), p.dls.astype(np.float64), c.avgdl, c.k1, c.b
+    )
+
+
+def _union(parts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Union of ``(sorted unique docs, scores)`` parts → (docs, each
+    doc's matching scores summed, their max). The sum adds the parts in
+    their order, starting from 0.0, so it is bit-equal to ``np.add.at``
+    over the parts' concatenation."""
+    if len(parts) == 1:
+        return parts[0][0], parts[0][1], parts[0][1]
+    docs = np.unique(np.concatenate([p[0] for p in parts]))
+    total = np.zeros(docs.size)
+    best = np.full(docs.size, -np.inf)
+    for p_docs, p_scores in parts:
+        i = np.searchsorted(docs, p_docs)
+        total[i] += p_scores
+        best[i] = np.maximum(best[i], p_scores)
+    return docs, total, best
+
+
+def _top_k(docs: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[int, float]]:
+    """The k best ``(doc_id, score)`` by (score desc, doc_id asc):
+    partition at the k-th score, keep every doc tied with it, then sort
+    only those candidates."""
+    if k <= 0 or docs.size == 0:
+        return []
+    if docs.size > k:
+        keep = scores >= np.partition(scores, docs.size - k)[docs.size - k]
+        docs, scores = docs[keep], scores[keep]
+    order = np.lexsort((docs, -scores))[:k]
+    return [(int(docs[i]), float(scores[i])) for i in order]
 
 
 def _taat_topk(cursors: list[TermCursor], k: int) -> list[tuple[int, float]]:
-    """Vectorized exact term-at-a-time top-k: decode every candidate
-    block, score per term in one numpy expression, sum per doc, take
-    top-k with the (score desc, doc_id asc) tie-break. Rank-identical to
-    the WAND loop (both compute the exact BM25 sum); ~100–1000× faster
-    per posting because no per-doc Python executes. Used when the
-    query's total compressed payload is bounded (see ``wand_topk``) —
-    the regime where decoding everything beats skipping."""
-    parts = [_decode_term_postings(c) for c in cursors]
-    docs = np.concatenate([p[0] for p in parts])
-    scores = np.concatenate([p[1] for p in parts])
-    uniq, inv = np.unique(docs, return_inverse=True)
-    acc = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(acc, inv, scores)
-    order = np.lexsort((uniq, -acc))[:k]
-    return [(int(uniq[i]), float(acc[i])) for i in order if acc[i] > 0.0]
+    """Vectorized exact term-at-a-time top-k: score every term's decoded
+    postings in one numpy expression, sum per doc in cursor order
+    (:func:`_union`), take the top-k. Rank-identical to the WAND loop
+    (both compute the exact BM25 sum in cursor order); ~100–1000×
+    faster per posting because no per-doc Python executes. Used when
+    the query's total compressed payload is bounded (see
+    ``wand_topk``) — the regime where decoding everything beats
+    skipping."""
+    docs, total, _ = _union([_decode_term_postings(c) for c in cursors])
+    keep = total > 0.0
+    return _top_k(docs[keep], total[keep], k)
 
 
 # Above this many compressed payload bytes (~= postings, deltas are
@@ -688,20 +710,26 @@ def wand_topk(
     """Top-k over compressed blocks. Returns [(doc_id, score)]
     ordered by (score desc, doc_id asc), length ≤ k.
 
+    Term scores add in term order, whatever order the cursors come in
+    (a cache, a Spark scan's collect order, a broadcast payload), so a
+    bag's float sum does not depend on the path or the process.
+
     ``strategy``: ``"auto"`` (default) picks the vectorized exact TAAT
-    scorer when the query's total compressed payload is under
-    ``TAAT_MAX_BYTES`` and the document-at-a-time block-max WAND loop
-    otherwise; ``"wand"`` / ``"taat"`` force a path (tests pin both
-    rank-identical)."""
-    cursors = [c for c in cursors if not c.exhausted()]
-    if len(cursors) == 1 and strategy != "wand":
-        return _single_term_topk(cursors[0], k)
+    scorer for one term or when the query's total compressed payload
+    is under ``TAAT_MAX_BYTES``, and the document-at-a-time block-max
+    WAND loop otherwise; ``"wand"`` / ``"taat"`` force a path (tests
+    pin both rank-identical)."""
+    cursors = sorted((c for c in cursors if not c.exhausted()), key=lambda c: c.term)
+    if not cursors:
+        return []
     if strategy == "taat" or (
         strategy == "auto"
-        and cursors
-        and sum(c.postings.doc_bytes for c in cursors) <= TAAT_MAX_BYTES
+        and (
+            len(cursors) == 1
+            or sum(c.postings.doc_bytes for c in cursors) <= TAAT_MAX_BYTES
+        )
     ):
-        return _taat_topk(cursors, k) if cursors else []
+        return _taat_topk(cursors, k)
     heap: list[tuple[float, int]] = []  # min-heap of (score, -doc_id)
 
     def theta() -> float:

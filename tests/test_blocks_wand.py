@@ -142,7 +142,8 @@ def test_wand_rank_identical_to_oracle(spark, materialized, blocks_df, terms):
 def test_taat_rank_identical_to_wand(spark, materialized, blocks_df, terms):
     """The vectorized exact TAAT path (auto-picked for bounded payloads)
     must rank-match the skipping WAND loop on every fixture query —
-    both compute the exact BM25 sum, so docs AND scores agree."""
+    both add the exact BM25 partials in term order, so docs AND score
+    bits agree."""
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
     term_stats = spark.read.parquet(f"{BASE}/term_stats")
 
@@ -153,9 +154,7 @@ def test_taat_rank_identical_to_wand(spark, materialized, blocks_df, terms):
 
     via_wand = wand_topk(cursors(), k=10, strategy="wand")
     via_taat = wand_topk(cursors(), k=10, strategy="taat")
-    assert [d for d, _ in via_taat] == [d for d, _ in via_wand]
-    for (_, s1), (_, s2) in zip(via_taat, via_wand):
-        assert s1 == pytest.approx(s2, abs=1e-9)
+    assert via_taat == via_wand
 
 
 def test_resume_skips_completed_stages(spark, materialized):
@@ -195,11 +194,11 @@ def test_batch_wand_rank_identical_to_serving(spark, materialized, blocks_df):
     qdf = spark.createDataFrame(batch, "query_id long, terms array<string>")
     got = {}
     for r in wand_topk_batch(blocks_df, qdf, n_docs, avgdl, k=7).collect():
-        got.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], round(r["score"], 9)))
+        got.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
     for qid, terms in batch:
         cursors = load_query_cursors(blocks_df, term_stats, n_docs, avgdl, terms)
         want = [
-            (rank, d, round(s, 9))
+            (rank, d, s)
             for rank, (d, s) in enumerate(wand_topk(cursors, 7), start=1)
         ]
         assert sorted(got.get(qid, [])) == sorted(want), terms
@@ -328,42 +327,48 @@ def test_batch_hot_term_routing(spark, materialized, blocks_df, monkeypatch):
     assert not (set(fetched) & hot_terms)
 
 
-def test_vectorized_and_or_identical_to_tree(spark, materialized, blocks_df):
-    """The vectorized AND/OR evaluator (serving fast path) must return
-    exactly what the cursor-tree walk returns — docs AND bit-identical
-    scores (same float addition order) — across conjunctions, synonym
-    ORs, and AND-of-OR mixes, including missing-term branches."""
-    from mecab_ko_lucene_analyzer_spark.query.ast import And, Or, Term
+def test_and_or_evaluator_matches_oracle(spark, materialized, blocks_df):
+    """The AST evaluator (the serving path for every AST) must return
+    exactly what the pure-Python scoring spec over the tokenized corpus
+    returns — docs AND bit-identical scores (same float addition
+    order) — across conjunctions, synonym ORs, DisMax groups and
+    AND-of-OR mixes, including missing-term branches."""
+    from ast_reference import ast_oracle, postings_from_tokens
+
+    from mecab_ko_lucene_analyzer_spark.query.ast import And, DisMax, Or, Term, ast_terms
     from mecab_ko_lucene_analyzer_spark.query.executor import (
+        count_ast_cursors,
         execute_ast_cursors,
     )
 
     term_stats = spark.read.parquet(f"{BASE}/term_stats")
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
     n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
+    pages = synthesize_webpages(spark, N_DOCS, partitions=5)
+    rows = sorted(pages.select("url", "text").collect(), key=lambda r: r["url"])
+    postings, doc_lens = postings_from_tokens(
+        {i: token_records(r["text"]) for i, r in enumerate(rows)}
+    )
     asts = [
         Term("검색"),
         And((Term("검색"), Term("엔진"))),
         Or((Term("검색"), Term("엔진"), Term("삼성전자"))),
         And((Or((Term("검색"), Term("서치"))), Term("엔진"))),
         And((Term("한국어"), Or((Term("문서"), Term("색인"))), Term("는"))),
+        And((DisMax((Term("문서"), Term("색인")), 0.3), Term("데이터"))),
         And((Term("없는단어쿼리"), Term("검색"))),
         Or((Term("없는단어쿼리"), Term("검색"))),
     ]
     for ast in asts:
-        from mecab_ko_lucene_analyzer_spark.query.ast import ast_terms
-
-        def cursors():
-            return {
-                c.term: c
-                for c in load_query_cursors(
-                    blocks_df, term_stats, n_docs, avgdl, sorted(ast_terms(ast))
-                )
-            }
-
-        tree = execute_ast_cursors(ast, cursors(), k=10, strategy="tree")
-        vec = execute_ast_cursors(ast, cursors(), k=10, strategy="vectorized")
-        assert vec == tree, ast
+        cursors = {
+            c.term: c
+            for c in load_query_cursors(
+                blocks_df, term_stats, n_docs, avgdl, sorted(ast_terms(ast))
+            )
+        }
+        want = ast_oracle(ast, postings, doc_lens, n_docs, avgdl)
+        assert execute_ast_cursors(ast, cursors, k=10) == want[:10], ast
+        assert count_ast_cursors(ast, cursors) == len(want), ast
 
 
 def test_direct_block_reader_identical_to_spark_fetch(spark, materialized, blocks_df):

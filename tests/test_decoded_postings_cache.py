@@ -169,28 +169,47 @@ def test_warm_and_cold_engines_answer_bit_for_bit(spark, index_path):
         assert _hits(cold.search_ast(ast, k=50)) == want, ast
 
 
-@pytest.mark.parametrize("strategy", ["tree", "vectorized", "wand", "taat"])
+@pytest.mark.parametrize(
+    "strategy", ["evaluator-and-or", "evaluator-dismax-phrase", "wand", "taat"]
+)
 def test_forced_strategies_warm_equals_cold(spark, index_path, strategy):
+    """Every driver scorer answers bit for bit alike from raw blocks, a
+    decoded cache and an uncached Spark fetch (whose postings arrive in
+    the scan's collect order); the evaluator also equals the scoring
+    spec over the tokenized corpus, for And/Or trees of terms and for
+    trees with DisMax and Phrase nodes."""
+    from ast_reference import ast_oracle, postings_from_tokens
+
+    from mecab_ko_lucene_analyzer_spark.analysis.tokenizer import token_records
+    from mecab_ko_lucene_analyzer_spark.query.ast import DisMax, ast_terms
+
     engine = SearchEngine(spark, index_path, _option())
-    asts = [
-        And((Term("검색"), Term("엔진"))),
-        And((Or((Term("검색"), Term("엔진"))), Term("데이터"))),
-        And((Term("데이터"),)),
-    ]
+    asts = {
+        "evaluator-and-or": [
+            And((Term("검색"), Term("엔진"))),
+            And((Or((Term("검색"), Term("엔진"))), Term("데이터"))),
+            And((Term("데이터"),)),
+        ],
+        "evaluator-dismax-phrase": [
+            And((DisMax((Term("검색"), Term("엔진")), 0.3), Phrase(("데이터", "처리")))),
+            And((Phrase(("데이터", "처리")),)),
+            Or((DisMax((Term("데이터"), Term("처리")), 0.0), Term("엔진"))),
+        ],
+    }.get(strategy, [])
     bags = [["검색", "엔진", "문서"], ["데이터", "처리"], ["색인"]]
 
-    def cursors(terms, cache):
+    def cursors(terms, cache, with_positions=False):
         return load_query_cursors(
-            engine.blocks, None, engine.n_docs, engine.avgdl, terms, cache=cache
+            engine.blocks, None, engine.n_docs, engine.avgdl, terms,
+            with_positions=with_positions, cache=cache,
         )
 
     def run(cache):
         out = []
-        if strategy in ("tree", "vectorized"):
+        if asts:
             for ast in asts:
-                terms = sorted({t for g in _groups(ast) for t in g})
-                cs = {c.term: c for c in cursors(terms, cache)}
-                out.append(execute_ast_cursors(ast, cs, k=30, strategy=strategy))
+                cs = cursors(sorted(ast_terms(ast)), cache, with_positions=True)
+                out.append(execute_ast_cursors(ast, {c.term: c for c in cs}, k=30))
         else:
             for terms in bags:
                 out.append(wand_topk(cursors(terms, cache), k=30, strategy=strategy))
@@ -203,16 +222,19 @@ def test_forced_strategies_warm_equals_cold(spark, index_path, strategy):
     for terms in bags + [["검색", "엔진", "데이터"]]:
         for p in cache.get(terms).values():
             p.decode()
-    assert run(cache) == first == cold
+    assert run(cache) == first == cold == run(None)
     assert all(r for r in cold)
-
-
-def _groups(ast):
-    if isinstance(ast, Term):
-        return [[ast.term]]
-    if isinstance(ast, Or):
-        return [[c.term for c in ast.children]]
-    return [g for c in ast.children for g in _groups(c)]
+    if asts:
+        rows = sorted(
+            synthesize_webpages(spark, 120, partitions=4).select("url", "text").collect(),
+            key=lambda r: r["url"],
+        )
+        postings, doc_lens = postings_from_tokens(
+            {i: token_records(r["text"]) for i, r in enumerate(rows)}
+        )
+        for ast, got in zip(asts, cold):
+            want = ast_oracle(ast, postings, doc_lens, engine.n_docs, engine.avgdl, k=30)
+            assert got == want, ast
 
 
 def _raw_term(rng, n_docs, block_size):
@@ -237,9 +259,9 @@ def _raw_term(rng, n_docs, block_size):
 
 def test_cursor_over_raw_blocks_matches_decoded_entry(monkeypatch):
     """A cursor built from raw ``_Block`` lists (batch scoring, explain,
-    the property tests) walks, scores and yields positions exactly like
-    a cursor over a decoded cache entry, and like the postings it was
-    built from."""
+    the property tests) walks and scores exactly like a cursor over a
+    decoded cache entry, and like the postings it was built from; the
+    entry yields every posting's positions."""
     opened = []
     real = wand_mod.decode_block_arrays
 
@@ -255,6 +277,7 @@ def test_cursor_over_raw_blocks_matches_decoded_entry(monkeypatch):
         raw = TermCursor(term="t", idf=idf, blocks=list(blocks), avgdl=10.0)
         entry = TermPostings(blocks, len(docs)).decode()
         assert entry.docs.tolist() == docs
+        assert [p.tolist() for p in entry.positions(np.arange(len(docs)))] == positions
         decoded = TermCursor(term="t", idf=idf, blocks=entry.blocks, avgdl=10.0,
                              postings=entry)
         for _ in range(40):
@@ -281,11 +304,9 @@ def test_cursor_over_raw_blocks_matches_decoded_entry(monkeypatch):
             want_score = idf * tf / (tf + K1 * (1 - B + B * dl / 10.0))
             opened.clear()
             assert decoded.score_current() == want_score
-            assert decoded.positions_current().tolist() == positions[i]
             assert opened == []
             assert raw.score_current() == want_score
             assert raw.tf_dl_current() == (tfs[i], dls[i])
-            assert raw.positions_current().tolist() == positions[i]
             # the raw cursor reads only the block holding its doc
             assert set(opened) <= {b.doc_deltas for b in blocks}
             assert len(opened) <= 1
@@ -311,3 +332,61 @@ def test_cursor_opens_blocks_lazily(monkeypatch):
     assert opened == [] and cursor.cur_doc == last.first_doc
     cursor.score_current()
     assert opened == [last.doc_deltas]
+
+
+def test_phrase_positions_decode_per_candidate_block(monkeypatch):
+    """Positions decode only for the blocks holding a wanted posting,
+    once per entry, and the entry's byte count grows by what they
+    hold."""
+    decoded = []
+    real = wand_mod.decode_positions
+
+    def counted(pos_deltas, tfs):
+        decoded.append(pos_deltas)
+        return real(pos_deltas, tfs)
+
+    monkeypatch.setattr(wand_mod, "decode_positions", counted)
+    docs, _, _, positions, blocks = _raw_term(random.Random(5), 400, 4)
+    grown = []
+    entry = TermPostings(blocks, len(docs), on_decode=lambda e, n: grown.append(n)).decode()
+    before = entry.nbytes
+    want = [1, 2, len(docs) - 1]  # two in block 0, one in the last block
+    got = entry.positions(np.array(want))
+    assert [p.tolist() for p in got] == [positions[i] for i in want]
+    assert decoded == [entry.blocks[0].pos_deltas, entry.blocks[-1].pos_deltas]
+    assert entry.nbytes - before == sum(grown[1:]) > 0
+    entry.positions(np.array([0, 3]))
+    assert len(decoded) == 2  # block 0 is kept
+
+
+def test_phrase_positions_stay_inside_the_cache_byte_budget(spark, index_path):
+    """Phrase evaluation fills positions into cached entries; the cache
+    counts them and evicts to stay inside its byte bound."""
+    from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast
+
+    engine = SearchEngine(spark, index_path, _option())
+    terms = [
+        r["term"]
+        for r in spark.read.parquet(f"{index_path}/term_stats")
+        .orderBy("df", ascending=False)
+        .limit(12)
+        .collect()
+    ]
+    phrases = [Phrase((a, b), slop=2) for a, b in zip(terms, terms[1:])]
+    cache = BlockCache(engine.blocks, direct=DirectBlockReader(f"{index_path}/blocks"))
+    want = [
+        execute_ast(p, engine.blocks, None, engine.n_docs, engine.avgdl, k=20, cache=cache)
+        for p in phrases
+    ]
+    assert any(want)
+    held = [e for e in cache._cache.values() if e.pos]
+    assert held and cache._bytes == sum(e.nbytes for e in cache._cache.values())
+    # room for about two of the entries with positions
+    small = BlockCache(engine.blocks, direct=DirectBlockReader(f"{index_path}/blocks"))
+    small.cache_bytes = 2 * max(e.nbytes for e in held)
+    for p, w in zip(phrases, want):
+        got = execute_ast(p, engine.blocks, None, engine.n_docs, engine.avgdl, k=20, cache=small)
+        assert got == w
+        assert small._bytes <= small.cache_bytes
+        assert small._bytes == sum(e.nbytes for e in small._cache.values())
+    assert len(small._cache) < len(cache._cache)

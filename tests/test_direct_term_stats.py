@@ -100,3 +100,69 @@ def test_direct_df_reader_equals_term_dfs(spark, fused, tmp_path_factory, kind):
         for fn in glob.glob(f"{eng.base_path}/term_stats/*.parquet"):
             terms = pq.read_table(fn, columns=["term"]).column("term").to_pylist()
             assert terms == sorted(terms), f"{fn} is not term-sorted"
+
+
+def _keyed_table(tmp_path, name: str, rows: list, row_group_size: int) -> str:
+    """``rows`` of (term, df) split over two parquet files of small row
+    groups, in the order given."""
+    path = tmp_path / name
+    path.mkdir()
+    half = len(rows) // 2
+    for i, part in enumerate((rows[:half], rows[half:])):
+        pq.write_table(
+            pa.table({
+                "term": pa.array([t for t, _ in part], pa.string()),
+                "df": pa.array([d for _, d in part], pa.int64()),
+            }),
+            path / f"part-{i}.parquet",
+            row_group_size=row_group_size,
+        )
+    return str(path)
+
+
+def test_direct_reader_visits_only_candidate_row_groups(tmp_path, monkeypatch):
+    """A lookup over many sorted row groups decodes only the row groups
+    whose (min, max) range holds a wanted key — a key whose rows span
+    two row groups visits both — and answers exactly what a full scan
+    answers; shuffled (unsorted) files answer the same."""
+    from mecab_ko_lucene_analyzer_spark.query.wand import _DirectKeyedReader
+
+    # every third term owns two rows, so some keys span a row-group edge
+    rows = []
+    for i in range(600):
+        rows += [(f"t{i:04d}", i)] * (1 + (i % 3 == 0))
+    probe = ["t0000", "t0003", "t0150", "t0299", "t0301", "t0599", "t0450x", "a", "zz"]
+    want: dict = {}
+    for t, d in rows:
+        if t in probe:
+            want.setdefault(t, []).append(d)
+
+    def lookup(reader):
+        got: dict = {}
+        for t, tbl in reader._rows(probe, ("df",)):
+            got.setdefault(t, []).extend(tbl.column("df").to_pylist())
+        return got
+
+    sorted_path = _keyed_table(tmp_path, "sorted", rows, row_group_size=7)
+    reader = _DirectKeyedReader(sorted_path, "term", "term_stats")
+    visited = []
+    real = reader._row_group
+    monkeypatch.setattr(
+        reader, "_row_group", lambda fid, rg, *a: visited.append((fid, rg)) or real(fid, rg, *a)
+    )
+    assert lookup(reader) == want
+    holding = {
+        (fid, rg)
+        for fid, (_, ranges) in enumerate(reader._files)
+        for rg, (lo, hi) in enumerate(ranges)
+        if any(lo <= k <= hi for k in probe)
+    }
+    n_row_groups = sum(len(ranges) for _, ranges in reader._files)
+    assert sorted(visited) == sorted(holding) and len(visited) < n_row_groups / 10
+
+    shuffled = rows[:]
+    random.Random(11).shuffle(shuffled)
+    loose = _DirectKeyedReader(
+        _keyed_table(tmp_path, "shuffled", shuffled, row_group_size=7), "term", "term_stats"
+    )
+    assert {t: sorted(v) for t, v in lookup(loose).items()} == want

@@ -1,5 +1,5 @@
-"""Regression pins for two confirmed cursor-tree executor bugs
-(round-4 self-review):
+"""Regression pins for two bugs a document-at-a-time cursor-tree
+executor had, kept as behaviour tests of the AST evaluator:
 
 1. Cursor ALIASING: one mutable TermCursor shared across every AST
    occurrence of a term let a Phrase/And branch advance it out from
@@ -7,9 +7,9 @@
    wrong scores for the Q2 shape ``Or(Term(t), Phrase((s, t)))``
    (a multi-word synonym containing the token's own word,
    ``DanawaSearchQueryBuilder.java:240-305`` builds exactly this).
-2. Greedy slop alignment: ``_PhraseNode`` took the EARLIEST candidate
-   in each window; for slop >= 1 that can dead-end the next window
-   even though a later candidate completes the chain (Lucene sloppy
+2. Greedy slop alignment: taking the EARLIEST candidate in each
+   window; for slop >= 1 that can dead-end the next window even
+   though a later candidate completes the chain (Lucene sloppy
    phrases are EXISTS-semantics over all chains).
 """
 
@@ -54,25 +54,24 @@ def _score(tf: int, df: int, doc_len: int = 4) -> float:
 
 def test_term_reused_in_phrase_branch_keeps_own_cursor():
     """Or(Term(b), Phrase((a, b))): evaluating the phrase branch must
-    not advance the Term branch's cursor past its own matches."""
+    not lose the Term branch's own matches."""
     cursors = {
         "a": _cursor("a", {10: [0]}),
         "b": _cursor("b", {1: [0, 1, 2], 5: [0, 1], 10: [1]}),
     }
     ast = Or((Term("b"), Phrase(("a", "b"))))
-    for strategy in ("tree",):
-        got = execute_ast_cursors(ast, dict(cursors), k=10, strategy=strategy)
-        docs = [d for d, _ in got]
-        assert docs == [1, 5, 10], got  # doc 5 was silently dropped before
-        scores = dict(got)
-        assert scores[1] == _score(3, 3)
-        assert scores[5] == _score(2, 3)
-        assert scores[10] == _score(1, 3)  # max(term b, phrase 0)
+    got = execute_ast_cursors(ast, dict(cursors), k=10)
+    docs = [d for d, _ in got]
+    assert docs == [1, 5, 10], got  # doc 5 was silently dropped before
+    scores = dict(got)
+    assert scores[1] == _score(3, 3)
+    assert scores[5] == _score(2, 3)
+    assert scores[10] == _score(1, 3)  # max(term b, phrase 0)
 
 
 def test_term_reused_across_and_branches():
-    """And(Term(b), Phrase((a, b))) — the aliased cursor previously
-    made the And's alignment loop interfere with itself."""
+    """And(Term(b), Phrase((a, b))) — an aliased cursor made the
+    And's alignment loop interfere with itself."""
     cursors = {
         "a": _cursor("a", {3: [0], 7: [5]}),
         "b": _cursor("b", {1: [0], 3: [1], 7: [0]}),
@@ -80,7 +79,7 @@ def test_term_reused_across_and_branches():
     # phrase a@pos then b@pos+1: doc 3 matches (0 -> 1); doc 7 has
     # b BEFORE a (no window), doc 1 lacks a entirely
     ast = And((Term("b"), Phrase(("a", "b"))))
-    got = execute_ast_cursors(ast, dict(cursors), k=10, strategy="tree")
+    got = execute_ast_cursors(ast, dict(cursors), k=10)
     assert [d for d, _ in got] == [3]
     assert got[0][1] == _score(1, 3)
 
@@ -95,7 +94,7 @@ def test_phrase_slop_exists_semantics_not_greedy():
         "c": _cursor("c", {1: [4]}),
     }
     got = execute_ast_cursors(
-        Phrase(("a", "b", "c"), slop=1), dict(cursors), k=10, strategy="tree"
+        Phrase(("a", "b", "c"), slop=1), dict(cursors), k=10
     )
     assert [d for d, _ in got] == [1], got
 
@@ -105,7 +104,7 @@ def test_phrase_slop_exists_semantics_not_greedy():
         "b": _cursor("b", {1: [2]}),
     }
     got0 = execute_ast_cursors(
-        Phrase(("a", "b"), slop=0), dict(cursors0), k=10, strategy="tree"
+        Phrase(("a", "b"), slop=0), dict(cursors0), k=10
     )
     assert got0 == []
 

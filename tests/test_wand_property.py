@@ -116,8 +116,8 @@ def test_wand_rank_identical_on_random_postings(data):
 @st.composite
 def and_or_asts(draw):
     """Random AND-of-groups ASTs over the corpus's term universe:
-    each group is a Term or a synonym Or, possibly referencing terms
-    absent from the postings (empty branches)."""
+    each group is a Term, a synonym Or or a DisMax, possibly
+    referencing terms absent from the postings (empty branches)."""
     corpus = draw(corpora())
     n_docs, doc_lens, postings, _query, k, block_size = corpus
     universe = sorted(postings) + ["missing1", "missing2"]
@@ -129,19 +129,24 @@ def and_or_asts(draw):
                 st.sampled_from(universe), min_size=1, max_size=3, unique=True
             )
         )
-        groups.append(members)
+        tie_breaker = draw(st.sampled_from([None, 0.0, 0.3, 1.0]))
+        groups.append((members, tie_breaker))
     return n_docs, doc_lens, postings, groups, k, block_size
 
 
 @settings(max_examples=200, deadline=None)
 @given(and_or_asts())
-def test_vectorized_and_or_property(data):
-    """The vectorized AND/OR evaluator equals the cursor-tree walk —
-    docs, ranks, and scores — over arbitrary random postings and
-    random AND-of-(Term|Or) shapes, including groups whose terms have
-    no postings at all."""
-    from mecab_ko_lucene_analyzer_spark.query.ast import And, Or, Term
+def test_and_or_evaluator_matches_brute_force(data):
+    """The AST evaluator equals the pure-Python scoring spec — docs,
+    ranks and bit-identical scores — over arbitrary random postings
+    and random AND-of-(Term|Or|DisMax) shapes, including groups whose
+    terms have no postings at all; and its count is the spec's full
+    match-set size."""
+    from ast_reference import ast_oracle
+
+    from mecab_ko_lucene_analyzer_spark.query.ast import And, DisMax, Or, Term
     from mecab_ko_lucene_analyzer_spark.query.executor import (
+        count_ast_cursors,
         execute_ast_cursors,
     )
 
@@ -156,16 +161,20 @@ def test_vectorized_and_or_property(data):
                 out[t] = c
         return out
 
-    def node(members):
+    def node(members, tie_breaker):
         if len(members) == 1:
             return Term(members[0])
-        return Or(tuple(Term(m) for m in members))
+        terms = tuple(Term(m) for m in members)
+        return Or(terms) if tie_breaker is None else DisMax(terms, tie_breaker)
 
     ast = (
-        node(groups[0])
+        node(*groups[0])
         if len(groups) == 1
-        else And(tuple(node(g) for g in groups))
+        else And(tuple(node(*g) for g in groups))
     )
-    tree = execute_ast_cursors(ast, cursors(), k=k, strategy="tree")
-    vec = execute_ast_cursors(ast, cursors(), k=k, strategy="vectorized")
-    assert vec == tree
+    spec_postings = {
+        t: {d: [0] * tf for d, tf in tfs.items()} for t, tfs in postings.items()
+    }
+    want = ast_oracle(ast, spec_postings, doc_lens, n_docs, avgdl)
+    assert execute_ast_cursors(ast, cursors(), k=k) == want[:k]
+    assert count_ast_cursors(ast, cursors()) == len(want)
