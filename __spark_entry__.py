@@ -213,6 +213,8 @@ def _q_bm25_topk(spark, sf_dir):
     # broadcast subtrees would each replay a fan-out exchange
     # (measured slower with fan_out at 10x: 1.7 s -> 3.8 s; this
     # shape: 1.25 s).
+    from mecab_ko_lucene_analyzer_spark.query.bm25 import bm25_partial_col, idf_col
+
     toks = _docs(spark, sf_dir).select(
         "doc_id",
         F.explode(
@@ -240,17 +242,8 @@ def _q_bm25_topk(spark, sf_dir):
     ).crossJoin(F.broadcast(scal))
     partials = []
     for i in range(nq):
-        idf = F.log1p(
-            (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5)
-        )
-        p = (
-            idf
-            * F.col(f"tf{i}")
-            / (
-                F.col(f"tf{i}")
-                + K1 * (1 - B + B * F.col("doc_len") / F.col("avgdl"))
-            )
-        )
+        idf = idf_col(F.col("n"), F.col(f"df{i}"))
+        p = bm25_partial_col(idf, F.col(f"tf{i}"), F.col("doc_len"), F.col("avgdl"))
         partials.append(F.when(F.col(f"tf{i}") > 0, p).otherwise(F.lit(0.0)))
     score = F.round(sum(partials[1:], partials[0]), 6)
     return (
@@ -821,6 +814,7 @@ def _q_boosted_bm25_topk(spark, sf_dir):
         host_graph,
         pagerank,
     )
+    from mecab_ko_lucene_analyzer_spark.query.bm25 import bm25_partial_col, idf_col
 
     edges = host_graph(extract_links(_webgraph_pages(spark, sf_dir)))
     ranks = pagerank(edges, weight="n_links", iters=3)
@@ -851,18 +845,11 @@ def _q_boosted_bm25_topk(spark, sf_dir):
         tfs.join(F.broadcast(dfs), "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(scalars))
-        .withColumn(
-            "idf",
-            F.log1p((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
+        .withColumn("idf", idf_col(F.col("n"), F.col("df")))
         .withColumn(
             "partial",
-            F.col("idf")
-            * F.col("tf")
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1 - B) + F.lit(B) * F.col("doc_len") / F.col("avgdl"))
+            bm25_partial_col(
+                F.col("idf"), F.col("tf"), F.col("doc_len"), F.col("avgdl")
             ),
         )
         .groupBy("doc_id")

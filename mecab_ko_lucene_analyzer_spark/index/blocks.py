@@ -22,10 +22,10 @@ position payloads instead of re-encoding them.
 exact BM25 impact is recomputable from (tf, doc_len, avgdl) without a
 doc-stats lookup per candidate.
 
-``block_max_impact`` is the block's max of ``tf/(tf + k1*(1-b+b*dl/avgdl))``
-— the document-dependent BM25 factor — so a block's score upper bound
-for WAND is ``idf(term) * block_max_impact`` (classic Block-Max WAND,
-Ding & Suel 2011).
+``block_max_impact`` is the block's max of the document-dependent BM25
+factor, ``query/bm25.py::bm25_partial`` at idf 1.0 — so a block's
+score upper bound for WAND is ``idf(term) * block_max_impact``
+(classic Block-Max WAND, Ding & Suel 2011).
 
 Skew handling (I4): hot terms (df above a corpus-share threshold — in
 Korean web text exactly the josa/particle terms the reference hardcodes,

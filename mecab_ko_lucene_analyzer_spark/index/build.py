@@ -26,6 +26,8 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans import optimized_plan_probe
+
 __all__ = [
     "InvertedIndex",
     "build_index",
@@ -50,11 +52,9 @@ def _rows_stable_across_jobs(df: DataFrame) -> bool:
     three passes (count, text, url) as independent jobs. Anything with
     an upstream shuffle, join, aggregate, generator, or sample can
     reorder rows between jobs — callers must materialize once
-    instead."""
-    try:
-        return _stable_plan(df._jdf.queryExecution().optimizedPlan())
-    except Exception:
-        return False
+    instead. Fails closed: a plan the private API cannot walk is
+    unstable."""
+    return optimized_plan_probe(df, _stable_plan, False)
 
 
 #: deterministic leaf scans (file relations enumerate rows from

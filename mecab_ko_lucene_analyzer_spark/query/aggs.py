@@ -462,8 +462,6 @@ def sampler_significant_terms(
     k: int = 10,
     min_doc_count: int = 1,
     exclude_query_terms: bool = True,
-    k1: float | None = None,
-    b: float | None = None,
     score_round: int | None = None,
 ) -> DataFrame:
     """ES ``sampler`` aggregation wrapping ``significant_terms`` — the
@@ -482,16 +480,9 @@ def sampler_significant_terms(
     before the cut — set it (e.g. 6) when the sample must be
     reproducible across engines/summation orders; float sums at full
     precision can permute near-tied docs at the sample boundary."""
-    from ..index.build import B as _B
-    from ..index.build import K1 as _K1
     from .bm25 import bm25_scored
 
-    scored = bm25_scored(
-        index,
-        query_terms,
-        k1 if k1 is not None else _K1,
-        b if b is not None else _B,
-    )
+    scored = bm25_scored(index, query_terms)
     if score_round is not None:
         scored = scored.withColumn(
             "score", F.round("score", int(score_round))
@@ -950,8 +941,6 @@ def terms_set_topk(
     query_terms: list[str],
     required: DataFrame,
     k: int = 10,
-    k1: float = None,
-    b: float = None,
 ) -> DataFrame:
     """ES ``terms_set`` query: a doc matches when its DISTINCT
     query-term match count reaches its OWN per-doc threshold (ES's
@@ -967,7 +956,7 @@ def terms_set_topk(
     change other docs' scores, so the join commutes with scoring but
     NOT with the cut)."""
     return (
-        terms_set_scored(index, query_terms, required, k1, b)
+        terms_set_scored(index, query_terms, required)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(int(k))
     )
@@ -977,49 +966,15 @@ def terms_set_scored(
     index: InvertedIndex,
     query_terms: list[str],
     required: DataFrame,
-    k1: float = None,
-    b: float = None,
 ) -> DataFrame:
     """Pre-top-k ``terms_set`` relation ``(doc_id, score)`` — see
     :func:`terms_set_topk` for semantics and plan shape."""
-    from ..index.build import B as _B, K1 as _K1
-    from .bm25 import score_expr
+    from .bm25 import matched_scores
 
-    k1 = _K1 if k1 is None else k1
-    b = _B if b is None else b
-    spark = index.postings.sparkSession
-    terms = sorted(set(query_terms))
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    corpus = index.corpus_stats.first()
-    n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
-    terms_df = spark.createDataFrame([(t,) for t in terms], "term string")
-    idf_df = (
-        index.term_stats.join(F.broadcast(terms_df), "term")
-        .withColumn(
-            "idf",
-            F.log1p((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-        .select("term", "idf")
-    )
-    matched = index.postings.filter(F.col("term").isin(terms))
-    if "doc_len" not in matched.columns:
-        matched = matched.join(index.doc_stats, "doc_id")
-    scored = (
-        matched.join(F.broadcast(idf_df), "term")
-        .withColumn("avgdl", F.lit(avgdl))
-        .withColumn("partial", score_expr(k1, b))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("partial").alias("score"),
-            F.count(F.lit(1)).alias("_n_matched"),
-        )
-    )
     return (
-        scored.join(
-            required.select("doc_id", "required_matches"), "doc_id"
-        )
-        .filter(F.col("_n_matched") >= F.col("required_matches"))
+        matched_scores(index, query_terms)
+        .join(required.select("doc_id", "required_matches"), "doc_id")
+        .filter(F.col("n_matched") >= F.col("required_matches"))
         .select("doc_id", "score")
     )
 

@@ -1,7 +1,8 @@
-"""BM25 top-k scoring (I7 / Q1).
+"""BM25 scoring (I7 / Q1): the one place the BM25 arithmetic is written.
 
 Lucene-parameter BM25 (k1=1.2, b=0.75; the defaults pinned by the
-reference's Lucene 6.3.0/8.5.1 deps, ``pom.xml:52``)::
+reference's Lucene 6.3.0/8.5.1 deps, ``pom.xml:52``, held as the
+constants ``index/build.py::K1``/``B``)::
 
     idf(t)     = ln(1 + (N - df + 0.5) / (df + 0.5))
     score(t,d) = idf(t) * tf / (tf + k1 * (1 - b + b * dl/avgdl))
@@ -9,14 +10,18 @@ reference's Lucene 6.3.0/8.5.1 deps, ``pom.xml:52``)::
 (the Lucene-8 form without the constant (k1+1) numerator factor —
 rank-identical to the Lucene-6 form, which scales every term by k1+1).
 
-Two engines that must agree rank-identically (tested):
+One kernel per backend, in one operation order, ``(idf * tf) / den``:
 
-* :func:`bm25_topk` — the distributed Spark plan: broadcast the query
-  terms into the postings scan (predicate pushdown on ``term``), join
-  stats, partial-aggregate per doc, global top-k via ``orderBy.limit``
-  (Spark executes this as per-partition TakeOrdered + driver merge,
-  never a full sort).
-* :func:`bm25_oracle` — pure-Python brute force over collected rows.
+* numpy / float — :func:`lucene_idf` and :func:`bm25_partial`: the
+  driver scorers, the distributed block decode (``router.py``), the
+  served ``_explain`` and the block impacts (``index/blocks.py``);
+* Spark Column — :func:`idf_col` and :func:`bm25_partial_col`: every
+  DataFrame scorer, through :func:`term_partials` (the IN-pruned
+  postings scan joined to a broadcast idf) or directly where a plan
+  pools its own tfs (``bm25f.py``, the contract entry).
+
+:func:`bm25_oracle` is the pure-Python brute-force reference the
+golden tests compare against.
 
 Tie-break everywhere: score desc, doc_id asc (deterministic ranks).
 """
@@ -26,11 +31,13 @@ from __future__ import annotations
 import math
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from ..index.build import InvertedIndex, K1, B
 
 __all__ = [
+    "term_partials",
+    "matched_scores",
     "bm25_scored",
     "bm25_topk",
     "filtered_topk",
@@ -39,8 +46,9 @@ __all__ = [
     "boosted_bm25_topk",
     "bm25_oracle",
     "bm25_partial",
+    "bm25_partial_col",
     "lucene_idf",
-    "score_expr",
+    "idf_col",
 ]
 
 
@@ -48,28 +56,82 @@ def lucene_idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def bm25_partial(idf, tf, dl, avgdl: float, k1: float = K1, b: float = B):
+def bm25_partial(idf, tf, dl, avgdl: float):
     """One (term, doc) partial score, ``idf * tf / (tf + k1 * (1 - b +
     b * dl / avgdl))``, on floats or float64 arrays. Every driver-side
     scorer, the distributed block decode, ``_explain`` and the block
     impacts (``idf=1.0``: ``1.0 * tf`` is ``tf`` exactly) evaluate this
     one expression, so they agree bit for bit."""
-    return idf * tf / (tf + k1 * (1 - b + b * dl / avgdl))
+    return idf * tf / (tf + K1 * (1 - B + B * dl / avgdl))
 
 
-def score_expr(k1: float = K1, b: float = B):
-    """Column expression for one (term, doc) partial score; inputs are
-    columns ``idf``, ``tf``, ``doc_len``, ``avgdl``."""
-    tf = F.col("tf").cast("double")
-    norm = tf / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.col("avgdl")))
-    return F.col("idf") * norm
+def idf_col(n_docs, df) -> Column:
+    """:func:`lucene_idf` as a Column; ``n_docs`` and ``df`` are
+    Columns or numbers. Spark's ``log1p`` may differ from
+    ``math.log(1 + x)`` in the last bit."""
+    n_docs, df = F.lit(n_docs), F.lit(df)
+    return F.log1p((n_docs - df + 0.5) / (df + 0.5))
+
+
+def bm25_partial_col(idf, tf, dl, avgdl) -> Column:
+    """:func:`bm25_partial` as a Column, in its operation order; every
+    argument is a Column or a number. Bit-equal to the numpy kernel
+    on the same double inputs (tested)."""
+    idf, tf, dl, avgdl = (F.lit(x) for x in (idf, tf, dl, avgdl))
+    return idf * tf / (tf + F.lit(K1) * (F.lit(1 - B) + F.lit(B) * dl / avgdl))
+
+
+def term_partials(index: InvertedIndex, query_terms: list[str]) -> DataFrame:
+    """Every (term, doc) BM25 partial of ``query_terms``:
+    ``(term, doc_id, tf, df, idf, partial)`` — the relation every
+    DataFrame BM25 scorer aggregates or selects.
+
+    Plan shape: postings are filtered with an IN-list on ``term``
+    (pushed to the scan — the posting store is term-partitioned at
+    scale) and the idf of the same IN-pruned ``term_stats`` arrives
+    via a *broadcast* join (a query-sized dim); no exchange of its
+    own. The corpus scalars are one driver read of ``corpus_stats``."""
+    terms = sorted(set(query_terms))
+    corpus = index.corpus_stats.first()
+    n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
+    idf_df = index.term_stats.filter(F.col("term").isin(terms)).select(
+        "term", "df", idf_col(n_docs, F.col("df")).alias("idf")
+    )
+    matched = index.postings.filter(F.col("term").isin(terms))
+    if "doc_len" not in matched.columns:
+        # older row-postings without the denormalized doc_len
+        matched = matched.join(index.doc_stats, "doc_id")
+    partial = bm25_partial_col(
+        F.col("idf"), F.col("tf").cast("double"), F.col("doc_len"), avgdl
+    )
+    return matched.join(F.broadcast(idf_df), "term").select(
+        "term", "doc_id", "tf", "df", "idf", partial.alias("partial")
+    )
+
+
+def matched_scores(index: InvertedIndex, query_terms: list[str]) -> DataFrame:
+    """Per matching doc ``(doc_id, score, n_matched)``: the BM25 sum of
+    :func:`term_partials` and the number of DISTINCT query terms it
+    matches (postings carry one row per (term, doc), so the count is a
+    plain ``count(*)``) — one partial+final hash aggregate. Empty
+    ``query_terms`` give the empty relation."""
+    if not query_terms:
+        return index.postings.sparkSession.createDataFrame(
+            [], "doc_id long, score double, n_matched long"
+        )
+    return (
+        term_partials(index, query_terms)
+        .groupBy("doc_id")
+        .agg(
+            F.sum("partial").alias("score"),
+            F.count(F.lit(1)).alias("n_matched"),
+        )
+    )
 
 
 def bm25_scored(
     index: InvertedIndex,
     query_terms: list[str],
-    k1: float = K1,
-    b: float = B,
     min_should_match: int = 0,
 ) -> DataFrame:
     """Every matching doc's BM25 score ``(doc_id, score)`` — the
@@ -80,48 +142,13 @@ def bm25_scored(
     ``min_should_match`` keeps only docs matching at least that many
     DISTINCT query terms (Elasticsearch's ``minimum_should_match`` for
     an OR query — the precision knob between pure-OR recall and
-    pure-AND strictness). The count rides the existing per-doc hash
-    aggregate (postings carry one row per (term, doc), so it is a
-    plain ``count(*)``) and the filter applies post-aggregate — zero
-    extra exchanges, and at scale it CUTS the top-k heap's input.
-
-    Plan shape: postings are filtered with an IN-list on ``term``
-    (pushed to the scan — the posting store is term-partitioned at
-    scale), idf/corpus stats arrive via *broadcast* joins (tiny dims),
-    the per-doc sum is one partial+final hash aggregate.
+    pure-AND strictness). The count rides the per-doc hash aggregate
+    of :func:`matched_scores` and the filter applies post-aggregate —
+    zero extra exchanges, and at scale it CUTS the top-k heap's input.
     """
-    spark = index.postings.sparkSession
-    if not query_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    corpus = index.corpus_stats.first()
-    n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
-
-    terms_df = spark.createDataFrame([(t,) for t in set(query_terms)], "term string")
-    idf_df = (
-        index.term_stats.join(F.broadcast(terms_df), "term")
-        .withColumn(
-            "idf",
-            F.log1p((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-        .select("term", "idf")
-    )
-    matched = index.postings.filter(F.col("term").isin(list(set(query_terms))))
-    if "doc_len" not in matched.columns:
-        # older row-postings without the denormalized doc_len
-        matched = matched.join(index.doc_stats, "doc_id")
-    scored = (
-        matched
-        .join(F.broadcast(idf_df), "term")
-        .withColumn("avgdl", F.lit(avgdl))
-        .withColumn("partial", score_expr(k1, b))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("partial").alias("score"),
-            F.count(F.lit(1)).alias("_n_matched"),
-        )
-    )
+    scored = matched_scores(index, query_terms)
     if min_should_match > 1:
-        scored = scored.filter(F.col("_n_matched") >= min_should_match)
+        scored = scored.filter(F.col("n_matched") >= min_should_match)
     return scored.select("doc_id", "score")
 
 
@@ -129,8 +156,6 @@ def bm25_topk(
     index: InvertedIndex,
     query_terms: list[str],
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     min_should_match: int = 0,
 ) -> DataFrame:
     """Distributed scatter-gather BM25: returns ``(doc_id, score)``,
@@ -138,7 +163,7 @@ def bm25_topk(
     Top-k is TakeOrdered over :func:`bm25_scored`, not a global sort.
     """
     return (
-        bm25_scored(index, query_terms, k1, b, min_should_match)
+        bm25_scored(index, query_terms, min_should_match)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -149,8 +174,6 @@ def filtered_topk(
     query_terms: list[str],
     filter_docs: DataFrame,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     min_should_match: int = 0,
 ) -> DataFrame:
     """ES bool FILTER context: BM25-scored ``query_terms`` hits
@@ -168,7 +191,7 @@ def filtered_topk(
     predicate scan of the metadata table — AQE picks broadcast when
     the filter is selective, hash otherwise; nothing here forces a
     plan."""
-    scored = bm25_scored(index, query_terms, k1, b, min_should_match)
+    scored = bm25_scored(index, query_terms, min_should_match)
     return (
         scored.join(filter_docs.select("doc_id"), "doc_id", "semi")
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -218,14 +241,12 @@ def bm25_search_after(
     query_terms: list[str],
     after: tuple[float, int] | None = None,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     min_should_match: int = 0,
 ) -> DataFrame:
     """Disjunctive BM25 page AFTER the ``(score, doc_id)`` cursor —
     :func:`bm25_scored` + :func:`keyset_page`. ``after=None`` is page
     one (≡ :func:`bm25_topk`)."""
-    scored = bm25_scored(index, query_terms, k1, b, min_should_match)
+    scored = bm25_scored(index, query_terms, min_should_match)
     s, d = after if after is not None else (None, None)
     return keyset_page(scored, s, d, k)
 
@@ -236,8 +257,6 @@ def boosted_bm25_topk(
     query_terms: list[str],
     w_boost: float = 0.5,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """BM25 blended with a per-document static quality prior —
     ``score' = bm25 + w·boost`` — the classic web-search combination of
@@ -257,7 +276,7 @@ def boosted_bm25_topk(
     co-located join.
     """
     blended = (
-        bm25_scored(index, query_terms, k1, b)
+        bm25_scored(index, query_terms)
         .join(doc_boosts.select("doc_id", "boost"), "doc_id", "left")
         .select(
             "doc_id",
@@ -275,8 +294,6 @@ def bm25_oracle(
     token_lists: dict[int, list[str]],
     query_terms: list[str],
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> list[tuple[int, float]]:
     """Brute-force reference scorer over in-memory token lists
     (doc_id → terms). Defines expected output for the golden tests."""
@@ -295,7 +312,7 @@ def bm25_oracle(
             if tf == 0 or df[t] == 0:
                 continue
             idf = lucene_idf(n, df[t])
-            s += idf * tf / (tf + k1 * (1 - b + b * doc_len[d] / avgdl))
+            s += idf * tf / (tf + K1 * (1 - B + B * doc_len[d] / avgdl))
         if s > 0.0:
             scores[d] = s
     ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))

@@ -40,7 +40,7 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..index.build import K1, B
+from .bm25 import bm25_partial_col, idf_col
 
 __all__ = ["weighted_field_tokens", "bm25f_topk", "bm25f_topk_postings"]
 
@@ -74,8 +74,6 @@ def bm25f_topk(
     fields: Sequence[tuple[DataFrame, float]],
     query_terms: Sequence[str],
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Field-weighted BM25 top-k over ``fields`` = [(tokens, weight)]
     token tables ``(doc_id, term)`` → ``(doc_id, score)``, ``k`` rows,
@@ -105,18 +103,11 @@ def bm25f_topk(
         tfs.join(F.broadcast(dfs), "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(scalars))
-        .withColumn(
-            "idf",
-            F.log1p((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
+        .withColumn("idf", idf_col(F.col("n"), F.col("df")))
         .withColumn(
             "partial",
-            F.col("idf")
-            * F.col("tf")
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.col("avgdl"))
+            bm25_partial_col(
+                F.col("idf"), F.col("tf"), F.col("doc_len"), F.col("avgdl")
             ),
         )
         .groupBy("doc_id")
@@ -130,8 +121,6 @@ def bm25f_topk_postings(
     fields: Sequence[tuple[DataFrame, DataFrame, float, float]],
     query_terms: Sequence[str],
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Combined-field BM25F over a BUILT index (``InvertedIndex``, the
     body field at weight 1) plus any number of extra fields —
@@ -199,19 +188,10 @@ def bm25f_topk_postings(
     return (
         tfs.join(F.broadcast(dfs), "term")
         .join(lens, "doc_id")
-        .withColumn(
-            "idf",
-            F.log1p((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
+        .withColumn("idf", idf_col(float(n_docs), F.col("df")))
         .withColumn(
             "partial",
-            F.col("idf")
-            * F.col("tf")
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("pooled_len") / F.lit(avgdl))
-            ),
+            bm25_partial_col(F.col("idf"), F.col("tf"), F.col("pooled_len"), avgdl),
         )
         .groupBy("doc_id")
         .agg(F.sum("partial").alias("score"))

@@ -44,8 +44,8 @@ from collections.abc import Iterator, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..index.build import B, K1, InvertedIndex
-from .bm25 import score_expr
+from ..index.build import InvertedIndex
+from .bm25 import term_partials
 
 __all__ = [
     "dis_max_scored",
@@ -68,8 +68,6 @@ def dis_max_scored(
     index: InvertedIndex,
     clauses: Sequence[Sequence[str]],
     tie_breaker: float = 0.0,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Every matching doc's DisMax score ``(doc_id, score)``.
 
@@ -91,27 +89,9 @@ def dis_max_scored(
     if not pairs:
         return spark.createDataFrame([], "doc_id long, score double")
     n_clauses = len(clauses)
-    corpus = index.corpus_stats.first()
-    n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
-    all_terms = sorted({t for t, _ in pairs})
-
     cmap = spark.createDataFrame(pairs, "term string, clause int")
-    idf_df = (
-        index.term_stats.filter(F.col("term").isin(all_terms))
-        .withColumn(
-            "idf",
-            F.log1p((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-        .select("term", "idf")
-    )
-    matched = index.postings.filter(F.col("term").isin(all_terms))
-    if "doc_len" not in matched.columns:
-        matched = matched.join(index.doc_stats, "doc_id")
-    partials = (
-        matched.join(F.broadcast(cmap), "term")
-        .join(F.broadcast(idf_df), "term")
-        .withColumn("avgdl", F.lit(avgdl))
-        .withColumn("partial", score_expr(k1, b))
+    partials = term_partials(index, [t for t, _ in pairs]).join(
+        F.broadcast(cmap), "term"
     )
     # one hash aggregate; clause count is query-bounded (tiny)
     per_doc = partials.groupBy("doc_id").agg(
@@ -139,13 +119,11 @@ def dis_max_topk(
     clauses: Sequence[Sequence[str]],
     tie_breaker: float = 0.0,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """TakeOrdered cut of :func:`dis_max_scored` (score desc, doc_id
     asc — the engine-wide deterministic tie-break)."""
     return (
-        dis_max_scored(index, clauses, tie_breaker, k1, b)
+        dis_max_scored(index, clauses, tie_breaker)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(int(k))
     )
@@ -156,14 +134,12 @@ def boosting_scored(
     positive: Sequence[str],
     negative: Sequence[str],
     negative_boost: float = 0.5,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Pre-top-k boosting relation ``(doc_id, score)`` — see
     :func:`boosting_topk` for semantics and plan shape."""
     from .bm25 import bm25_scored
 
-    scored = bm25_scored(index, list(positive), k1, b)
+    scored = bm25_scored(index, list(positive))
     neg = (
         index.postings.filter(F.col("term").isin(sorted(set(negative))))
         .select("doc_id")
@@ -187,8 +163,6 @@ def boosting_topk(
     negative: Sequence[str],
     negative_boost: float = 0.5,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """ES ``boosting`` query: docs are retrieved and scored by the
     ``positive`` OR bag; any doc ALSO matching a ``negative`` term
@@ -203,7 +177,7 @@ def boosting_topk(
     join adds no third shuffle of the big relation at scale because
     the scored side is already doc_id-keyed)."""
     return (
-        boosting_scored(index, positive, negative, negative_boost, k1, b)
+        boosting_scored(index, positive, negative, negative_boost)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(int(k))
     )
@@ -261,8 +235,6 @@ def wildcard_topk(
     pattern: str,
     k: int = 10,
     max_expansions: int = 50,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Wildcard retrieval: expand against the vocabulary, score the
     expansion set as a disjunctive BM25 OR (the engine's documented
@@ -274,7 +246,7 @@ def wildcard_topk(
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
     return (
-        bm25_scored(index, terms, k1, b)
+        bm25_scored(index, terms)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(int(k))
     )

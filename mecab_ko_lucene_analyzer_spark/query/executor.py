@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from .ast import And, DisMax, Not, Or, Phrase, Term, ast_terms, validate_ast
 from .wand import TermCursor, _decode_term_postings, _top_k, _union, load_query_cursors
 
-__all__ = ["execute_ast", "execute_ast_cursors", "topk_and", "topk_or"]
+__all__ = ["execute_ast", "execute_ast_cursors"]
 
 _NO_DOCS = np.empty(0, dtype=np.int64)
 _NO_MATCH = (_NO_DOCS, np.empty(0))
@@ -195,17 +195,3 @@ def count_ast(
     cursors = _load_ast_cursors(ast, blocks, term_stats, n_docs, avgdl, cache)
     return count_ast_cursors(ast, cursors)
 
-
-def topk_or(blocks, term_stats, n_docs, avgdl, terms, k=10):
-    """Disjunctive bag-of-terms → ``wand_topk`` (exact TAAT, or
-    block-max WAND for large bags)."""
-    from .wand import wand_topk
-
-    cursors = load_query_cursors(blocks, term_stats, n_docs, avgdl, terms)
-    return wand_topk(cursors, k)
-
-
-def topk_and(blocks, term_stats, n_docs, avgdl, terms, k=10):
-    """Conjunctive bag-of-terms (the reference's Q1 semantics)."""
-    ast = And(tuple(Term(t) for t in sorted(set(terms))))
-    return execute_ast(ast, blocks, term_stats, n_docs, avgdl, k)

@@ -27,8 +27,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..index.build import InvertedIndex, K1, B
-from .bm25 import bm25_scored
+from ..index.build import InvertedIndex
+from .bm25 import bm25_scored, idf_col
 
 __all__ = [
     "mlt_topk",
@@ -88,8 +88,7 @@ def mlt_seed_terms(
         seed.join(index.term_stats.select("term", "df"), "term")
         .withColumn(
             "tfidf",
-            F.col("tf")
-            * F.log1p((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
+            F.col("tf") * idf_col(n_docs, F.col("df")),
         )
         .orderBy(F.desc("tfidf"), F.asc("term"))
         .limit(int(m_terms))
@@ -102,15 +101,13 @@ def mlt_topk(
     seed_doc_id: int,
     m_terms: int = 10,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """More-like-this: BM25 top-k ``(doc_id, score)`` for the seed
     doc's tf·idf-top ``m_terms`` terms, seed excluded. Rank tie-break:
     score desc, doc_id asc."""
     terms = mlt_seed_terms(index, seed_doc_id, m_terms)
     return (
-        bm25_scored(index, terms, k1, b)
+        bm25_scored(index, terms)
         .filter(F.col("doc_id") != seed_doc_id)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
@@ -186,8 +183,6 @@ def prefix_topk(
     prefix: str,
     k: int = 10,
     max_expansions: int = 50,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Prefix retrieval (Lucene ``PrefixQuery``): expand against the
     vocabulary, then score the expansion set as a disjunctive BM25 OR
@@ -202,7 +197,7 @@ def prefix_topk(
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
     return (
-        bm25_scored(index, terms, k1, b)
+        bm25_scored(index, terms)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(int(k))
     )
@@ -248,8 +243,6 @@ def fuzzy_topk(
     max_edits: int = 2,
     prefix_length: int = 0,
     max_expansions: int = 50,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Fuzzy retrieval (Lucene ``FuzzyQuery``): expand within
     ``max_edits``, score the expansion set as a disjunctive BM25 OR
@@ -266,7 +259,7 @@ def fuzzy_topk(
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
     return (
-        bm25_scored(index, terms, k1, b)
+        bm25_scored(index, terms)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(int(k))
     )
@@ -304,8 +297,6 @@ def regexp_topk(
     pattern: str,
     k: int = 10,
     max_expansions: int = 50,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Regexp retrieval (Lucene ``RegexpQuery``): expand against the
     vocabulary, score the expansion set as a disjunctive BM25 OR (sum
@@ -317,7 +308,7 @@ def regexp_topk(
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
     return (
-        bm25_scored(index, terms, k1, b)
+        bm25_scored(index, terms)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(int(k))
     )

@@ -24,7 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..index.build import B, InvertedIndex, K1
-from .bm25 import bm25_partial
+from .bm25 import bm25_partial, term_partials
 
 __all__ = ["explain_terms", "explanation_tree"]
 
@@ -32,64 +32,38 @@ __all__ = ["explain_terms", "explanation_tree"]
 def explain_terms(
     index: InvertedIndex,
     query_terms: list[str],
-    k1: float = K1,
-    b: float = B,
     round_digits: int | None = None,
 ) -> DataFrame:
     """Per-(doc, term) BM25 partials for ``query_terms``:
-    ``(doc_id, term, tf, df, idf, partial)``.
-
-    Plan shape matches the scorer it explains: IN-pruned postings
-    scan, broadcast idf join, no aggregate at all (the per-doc sum is
-    the caller's to take — ``groupBy(doc_id).sum(partial)`` reproduces
-    ``bm25_scored`` exactly, which the tests pin).
+    ``(doc_id, term, tf, df, idf, partial)`` — a projection of
+    :func:`~.bm25.term_partials`, the relation every DataFrame BM25
+    scorer aggregates, so its plan is the scorer's (IN-pruned postings
+    scan, broadcast idf join) with no aggregate at all. The per-doc
+    sum is the caller's to take: ``groupBy(doc_id).sum(partial)``
+    reproduces ``bm25_scored`` (the tests pin it).
+    ``round_digits`` rounds ``partial``.
     """
     spark = index.postings.sparkSession
     if not query_terms:
         return spark.createDataFrame(
             [], "doc_id long, term string, tf long, df long, idf double, partial double"
         )
-    corpus = index.corpus_stats.first()
-    n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
-    terms = sorted(set(query_terms))
-
-    idf_df = (
-        index.term_stats.filter(F.col("term").isin(terms))
-        .withColumn(
-            "idf",
-            F.log1p((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-        .select("term", "df", "idf")
-    )
-    matched = index.postings.filter(F.col("term").isin(terms))
-    if "doc_len" not in matched.columns:
-        matched = matched.join(index.doc_stats, "doc_id")
-    tf = F.col("tf").cast("double")
-    partial = F.col("idf") * tf / (
-        tf
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl))
-    )
+    partial = F.col("partial")
     if round_digits is not None:
         partial = F.round(partial, round_digits)
-    return (
-        matched.join(F.broadcast(idf_df), "term")
-        .select(
-            "doc_id",
-            "term",
-            F.col("tf").cast("long").alias("tf"),
-            F.col("df").cast("long").alias("df"),
-            "idf",
-            partial.alias("partial"),
-        )
+    return term_partials(index, query_terms).select(
+        "doc_id",
+        "term",
+        F.col("tf").cast("long").alias("tf"),
+        F.col("df").cast("long").alias("df"),
+        "idf",
+        partial.alias("partial"),
     )
 
 
 def explanation_tree(
     per_term: list[dict],
     doc_id: int,
-    k1: float = K1,
-    b: float = B,
 ) -> dict:
     """Lucene-style nested Explanation from per-term component dicts
     ``{term, tf, df, doc_len, idf, avgdl, n_docs}`` (driver-side; the
@@ -99,8 +73,8 @@ def explanation_tree(
     total = 0.0
     for c in per_term:
         tf, dl, avgdl = float(c["tf"]), float(c["doc_len"]), float(c["avgdl"])
-        norm = bm25_partial(1.0, tf, dl, avgdl, k1, b)
-        partial = bm25_partial(c["idf"], tf, dl, avgdl, k1, b)
+        norm = bm25_partial(1.0, tf, dl, avgdl)
+        partial = bm25_partial(c["idf"], tf, dl, avgdl)
         total += partial
         details.append(
             {
@@ -123,7 +97,7 @@ def explanation_tree(
                         "description": (
                             "tf norm, tf / (tf + k1 * (1 - b + b * dl/avgdl))"
                             f" with tf={int(tf)}, dl={int(dl)},"
-                            f" avgdl={avgdl}, k1={k1}, b={b}"
+                            f" avgdl={avgdl}, k1={K1}, b={B}"
                         ),
                         "details": [],
                     },

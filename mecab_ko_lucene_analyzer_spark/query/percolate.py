@@ -38,6 +38,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..plans import optimized_plan_probe
+
 __all__ = ["percolate"]
 
 
@@ -47,21 +49,17 @@ def _registry_fits_broadcast(queries: DataFrame) -> bool:
     walk — no job). Unknown-size plans estimate as
     ``defaultSizeInBytes`` (huge), so they land on the safe,
     non-broadcast side; a non-positive threshold (auto-broadcast
-    disabled) likewise means never broadcast."""
+    disabled) or a plan the private API cannot read likewise means
+    never broadcast."""
     from ..functions.partitioning import _parse_bytes
 
-    try:
-        thresh = _parse_bytes(
-            queries.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        )
-        if thresh <= 0:
-            return False
-        est = int(
-            queries._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        return 0 <= est <= thresh
-    except Exception:
+    thresh = _parse_bytes(
+        queries.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    )
+    if thresh <= 0:
         return False
+    est = optimized_plan_probe(queries, lambda p: int(p.stats().sizeInBytes()), -1)
+    return 0 <= est <= thresh
 
 
 def percolate(

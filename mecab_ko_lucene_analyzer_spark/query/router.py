@@ -56,7 +56,6 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame
 
-from ..index.build import B, K1
 from .ast import And, DisMax, Not, Or, Phrase, Term, validate_ast
 from .bm25 import bm25_partial, lucene_idf
 
@@ -99,7 +98,7 @@ def term_dfs(term_stats: DataFrame, terms: list[str]) -> dict[str, int]:
     return {t: found.get(t, 0) for t in uniq}
 
 
-def _decode_stage(idf_by_term: dict[str, float], avgdl: float, k1: float, b: float):
+def _decode_stage(idf_by_term: dict[str, float], avgdl: float):
     """mapInPandas stage: compressed blocks → (doc_id, term, partial
     BM25) rows, vectorized per block (no per-posting Python)."""
 
@@ -122,7 +121,7 @@ def _decode_stage(idf_by_term: dict[str, float], avgdl: float, k1: float, b: flo
                     continue
                 docs, tf, dl, _ = decode_block_arrays(bytes(dd), bytes(tfs), bytes(dls))
                 partial = bm25_partial(
-                    idf, tf.astype(np.float64), dl.astype(np.float64), avgdl, k1, b
+                    idf, tf.astype(np.float64), dl.astype(np.float64), avgdl
                 )
                 docs_out.append(docs)
                 terms_out.extend([term] * len(docs))
@@ -144,8 +143,6 @@ def _partials(
     dfs: dict[str, int],
     n_docs: int,
     avgdl: float,
-    k1: float,
-    b: float,
 ) -> DataFrame:
     """Term-pruned, column-pruned scan → per-(doc, term) partial scores
     (executor-side decode; every (doc, term) pair appears in exactly
@@ -161,7 +158,7 @@ def _partials(
     pruned = blocks.filter(F.col("term").isin(terms)).select(
         "term", "doc_deltas", "tfs", "doc_lens"
     )
-    return pruned.mapInPandas(_decode_stage(idf, avgdl, k1, b), _PARTIAL_SCHEMA)
+    return pruned.mapInPandas(_decode_stage(idf, avgdl), _PARTIAL_SCHEMA)
 
 
 def bm25_topk_blocks(
@@ -170,14 +167,12 @@ def bm25_topk_blocks(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> list[tuple[int, float]]:
     """Distributed bag-of-terms BM25 over the block index (the
     disjunctive serving semantics: per-doc SUM of matching terms).
     One pruned scan → one hash aggregate → TakeOrdered; the driver
     receives exactly k rows."""
-    parts = _partials(blocks, dfs, n_docs, avgdl, k1, b)
+    parts = _partials(blocks, dfs, n_docs, avgdl)
     rows = (
         parts.groupBy("doc_id")
         .agg(F.sum("partial").alias("score"))
@@ -529,8 +524,6 @@ def _scored_docs_general(
     dfs: dict[str, int],
     n_docs: int,
     avgdl: float,
-    k1: float,
-    b: float,
 ) -> DataFrame | None:
     """General distributed (doc_id, score) relation: handles Phrase
     nodes at ANY tree position (Or-nested multi-word synonyms, phrases
@@ -556,8 +549,6 @@ def _scored_docs_general(
             {t: dfs.get(t, 0) for t in sorted(leaves)},
             n_docs,
             avgdl,
-            k1,
-            b,
         )
         rel = parts.groupBy("doc_id").agg(
             F.map_from_entries(
@@ -599,8 +590,6 @@ def _scored_docs(
     dfs: dict[str, int],
     n_docs: int,
     avgdl: float,
-    k1: float,
-    b: float,
 ) -> DataFrame | None:
     """Distributed (doc_id, score) relation for ANY Term/And/Or/Phrase
     AST — per-doc term→score map (one hash aggregate over the decoded
@@ -616,7 +605,7 @@ def _scored_docs(
     from .ast import ast_terms
 
     if not _fast_shape(ast):
-        return _scored_docs_general(ast, blocks, dfs, n_docs, avgdl, k1, b)
+        return _scored_docs_general(ast, blocks, dfs, n_docs, avgdl)
     scoring_ast, phrases = _split_phrases(ast)
     scored = None
     if scoring_ast is not None:
@@ -626,8 +615,6 @@ def _scored_docs(
             {t: dfs.get(t, 0) for t in score_terms},
             n_docs,
             avgdl,
-            k1,
-            b,
         )
         per_doc = parts.groupBy("doc_id").agg(
             F.map_from_entries(
@@ -655,13 +642,11 @@ def distributed_ast_topk(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> list[tuple[int, float]]:
     """Distributed top-k over :func:`_scored_docs`. Rank-identical to
     ``execute_ast``'s driver cursors on EVERY Term/And/Or/Phrase
     shape (property-tested in ``tests/test_query_router.py``)."""
-    scored = _scored_docs(ast, blocks, dfs, n_docs, avgdl, k1, b)
+    scored = _scored_docs(ast, blocks, dfs, n_docs, avgdl)
     if scored is None:
         return []
     rows = (
@@ -676,12 +661,10 @@ def count_ast_blocks(
     dfs: dict[str, int],
     n_docs: int,
     avgdl: float,
-    k1: float = K1,
-    b: float = B,
 ) -> int:
     """Distributed match count for a routable AST (Q8
     ``trackTotalHits`` over the FULL query tree — synonym Or-groups
     and boost-0 phrase filters included, unlike the bag-of-terms
     :func:`match_count_blocks`). One row to the driver."""
-    scored = _scored_docs(ast, blocks, dfs, n_docs, avgdl, k1, b)
+    scored = _scored_docs(ast, blocks, dfs, n_docs, avgdl)
     return 0 if scored is None else int(scored.count())

@@ -28,7 +28,6 @@ import numpy as np
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from ..index.build import B, K1
 from ..index.codec import decode_block_arrays, decode_positions, decode_varints
 from .bm25 import bm25_partial, lucene_idf
 
@@ -67,12 +66,13 @@ class TermPostings:
     of decoding again. Until then a cursor decodes only the blocks it
     opens. A phrase check decodes positions per block, only for the
     blocks that hold a candidate, and keeps them in the entry
-    (:meth:`positions`). ``on_decode(entry, added_bytes)`` tells the
-    owning cache that the entry grew."""
+    (:meth:`positions`). The BM25 scores of the decoded postings are
+    kept too (:meth:`scores`). ``on_decode(entry, added_bytes)`` tells
+    the owning cache that the entry grew."""
 
     __slots__ = (
         "blocks", "df", "firsts", "max_impact", "doc_bytes", "nbytes",
-        "docs", "tfs", "dls", "offsets", "pos", "on_decode",
+        "docs", "tfs", "dls", "offsets", "pos", "on_decode", "_scores",
     )
 
     def __init__(self, blocks: list[_Block], df: int = 0, on_decode=None):
@@ -83,7 +83,7 @@ class TermPostings:
         #: compressed doc-delta bytes: the scorers' decode-cost proxy
         self.doc_bytes = sum(len(blk.doc_deltas) for blk in self.blocks)
         #: bytes the entry holds: payloads plus a rough per-block object
-        #: cost, and the decoded arrays once filled in
+        #: cost, and the decoded arrays and scores once filled in
         self.nbytes = 256 * len(self.blocks) + sum(
             len(blk.doc_deltas) + len(blk.tfs) + len(blk.doc_lens) + len(blk.pos_deltas)
             for blk in self.blocks
@@ -92,6 +92,8 @@ class TermPostings:
         #: block index → that block's per-doc position arrays
         self.pos: dict[int, list[np.ndarray]] = {}
         self.on_decode = on_decode
+        #: ((idf, avgdl), scores of the decoded postings), once scored
+        self._scores: tuple[tuple[float, float], np.ndarray] | None = None
 
     def _grew(self, added: int) -> None:
         self.nbytes += added
@@ -127,6 +129,24 @@ class TermPostings:
             arr.flags.writeable = False  # shared by every query over the entry
         self._grew(self.docs.nbytes + self.tfs.nbytes + self.dls.nbytes + offsets.nbytes)
         return self
+
+    def scores(self, idf: float, avgdl: float) -> np.ndarray:
+        """BM25 partial of every decoded posting, aligned with
+        :attr:`docs`. k1 and b are constants, so the scores depend only
+        on ``(idf, avgdl)``: they are computed once per key, kept
+        read-only in the entry and counted in :attr:`nbytes` (a new key
+        replaces the old array)."""
+        key = (idf, avgdl)
+        if self._scores is None or self._scores[0] != key:
+            self.decode()
+            arr = bm25_partial(
+                idf, self.tfs.astype(np.float64), self.dls.astype(np.float64), avgdl
+            )
+            arr.flags.writeable = False  # shared by every query over the entry
+            old = 0 if self._scores is None else self._scores[1].nbytes
+            self._scores = (key, arr)
+            self._grew(arr.nbytes - old)
+        return self._scores[1]
 
     def positions(self, idx: np.ndarray) -> list[np.ndarray]:
         """Position arrays of the postings at sorted indexes ``idx``
@@ -174,8 +194,6 @@ class TermCursor:
     term: str
     idf: float
     blocks: list[_Block]
-    k1: float = K1
-    b: float = B
     avgdl: float = 1.0
     postings: TermPostings | None = None
     _bi: int = -1
@@ -277,7 +295,7 @@ class TermCursor:
 
     def score_current(self) -> float:
         tf, dl = self.tf_dl_current()
-        return bm25_partial(self.idf, float(tf), float(dl), self.avgdl, self.k1, self.b)
+        return bm25_partial(self.idf, float(tf), float(dl), self.avgdl)
 
     def exhausted(self) -> bool:
         return self.cur_doc >= _INF
@@ -538,11 +556,11 @@ class BlockCache:
     fetch: a footer-pruned direct Arrow read when ``direct`` is given
     (no Spark job — the serving configuration), else a pruned Spark
     scan. An entry holds the term's compressed blocks and, once a
-    scorer has needed the whole term, its decoded arrays, so a warm
-    query decodes nothing. The cache keeps at most ``max_terms``
-    entries and ``cache_bytes`` bytes (compressed plus decoded): an
-    entry that grows past the budget as it decodes evicts the least
-    recently used terms."""
+    scorer has needed the whole term, its decoded arrays and their BM25
+    scores, so a warm query decodes and scores nothing. The cache keeps
+    at most ``max_terms`` entries and ``cache_bytes`` bytes (compressed
+    plus decoded plus scores): an entry that grows past the budget as
+    it decodes evicts the least recently used terms."""
 
     #: bytes kept (:attr:`TermPostings.nbytes` summed over the entries)
     cache_bytes = 256 << 20
@@ -609,8 +627,6 @@ def load_query_cursors(
     n_docs: int,
     avgdl: float,
     query_terms: list[str],
-    k1: float = K1,
-    b: float = B,
     with_positions: bool = False,
     cache: BlockCache | None = None,
 ) -> list[TermCursor]:
@@ -633,8 +649,6 @@ def load_query_cursors(
             term=t,
             idf=lucene_idf(n_docs, p.df),
             blocks=p.blocks,
-            k1=k1,
-            b=b,
             avgdl=avgdl,
             postings=p,
         )
@@ -645,12 +659,10 @@ def load_query_cursors(
 
 def _decode_term_postings(c: TermCursor) -> tuple[np.ndarray, np.ndarray]:
     """(docs, BM25 scores) of ALL of a cursor's postings: the term's
-    decoded arrays (:meth:`TermPostings.decode`, decoded once per
-    entry), scored in one numpy expression."""
-    p = c.postings.decode()
-    return p.docs, bm25_partial(
-        c.idf, p.tfs.astype(np.float64), p.dls.astype(np.float64), c.avgdl, c.k1, c.b
-    )
+    decoded arrays and their scores, each computed once per entry
+    (:meth:`TermPostings.scores`). Both are read-only."""
+    p = c.postings
+    return p.decode().docs, p.scores(c.idf, c.avgdl)
 
 
 def _union(parts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -111,6 +111,58 @@ def test_second_warm_search_decodes_nothing(spark, index_path, monkeypatch):
     assert calls
 
 
+def test_second_warm_search_scores_nothing(spark, index_path, monkeypatch):
+    """A cached term keeps the BM25 scores of its postings: a repeated
+    warm search calls ``bm25_partial`` zero times and answers bit for
+    bit like a fresh engine. The kept scores are read-only and counted
+    in the cache's bytes."""
+    engine = SearchEngine(spark, index_path, _option())
+    first = {q: _hits(engine.search(q, k=10, conjunctive=c)) for q, c in SEARCHES}
+    first_ast = [_hits(engine.search_ast(ast, k=10)) for ast in ASTS]
+    calls = []
+    real = wand_mod.bm25_partial
+
+    def counted(*args):
+        calls.append(args[0])
+        return real(*args)
+
+    monkeypatch.setattr(wand_mod, "bm25_partial", counted)
+    for q, c in SEARCHES:
+        assert _hits(engine.search(q, k=10, conjunctive=c)) == first[q], q
+    assert [_hits(engine.search_ast(ast, k=10)) for ast in ASTS] == first_ast
+    assert engine.last_route == "driver"
+    assert calls == []
+    cache = engine.block_cache
+    scored = [e for e in cache._cache.values() if e._scores is not None]
+    assert scored
+    for e in scored:
+        arr = e._scores[1]
+        assert not arr.flags.writeable and arr.shape == e.docs.shape
+    assert cache._bytes == sum(e.nbytes for e in cache._cache.values())
+    fresh = SearchEngine(spark, index_path, _option())
+    for q, c in SEARCHES:
+        assert _hits(fresh.search(q, k=10, conjunctive=c)) == first[q], q
+    assert [_hits(fresh.search_ast(ast, k=10)) for ast in ASTS] == first_ast
+    assert calls  # the guard really counts: a fresh engine scores
+
+
+def test_term_scores_count_in_the_entry_bytes():
+    """Scoring an entry adds its score array to the entry's bytes once;
+    rescoring under a new ``(idf, avgdl)`` replaces the array."""
+    docs, tfs, dls, _, blocks = _raw_term(random.Random(9), 300, 8)
+    grown = []
+    entry = TermPostings(blocks, len(docs), on_decode=lambda e, n: grown.append(n)).decode()
+    before = entry.nbytes
+    s1 = entry.scores(1.5, 10.0)
+    assert entry.nbytes - before == s1.nbytes == grown[-1]
+    assert entry.scores(1.5, 10.0) is s1
+    s2 = entry.scores(2.0, 10.0)
+    assert s2 is not s1 and entry.nbytes - before == s2.nbytes
+    assert s2.tolist() == [
+        2.0 * tf / (tf + K1 * (1 - B + B * dl / 10.0)) for tf, dl in zip(tfs, dls)
+    ]
+
+
 def test_decoded_cache_stays_inside_its_byte_budget(spark, index_path):
     terms = [
         r["term"]

@@ -41,8 +41,6 @@ def _cursor(term: str, occurrences: dict[int, list[int]], doc_len: int = 4):
         term=term,
         idf=lucene_idf(N_DOCS, len(docs)),
         blocks=[blk],
-        k1=K1,
-        b=B,
         avgdl=AVGDL,
     )
 

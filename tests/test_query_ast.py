@@ -28,7 +28,7 @@ from mecab_ko_lucene_analyzer_spark.query.ast import (
     validate_ast,
 )
 from mecab_ko_lucene_analyzer_spark.query.bm25 import lucene_idf
-from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast, topk_and
+from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast
 from mecab_ko_lucene_analyzer_spark.sources import synthesize_webpages
 
 BASE = "/tmp/test_index_ast"
@@ -279,7 +279,9 @@ def test_build_query_ast_exclude_tokens():
 
 def test_topk_and_requires_all_terms(env):
     blocks, term_stats, corpus, docs = env
-    got = topk_and(blocks, term_stats, corpus["n_docs"], corpus["avgdl"], ["검색", "엔진", "문서"], k=10)
+    ast = And((Term("검색"), Term("엔진"), Term("문서")))
+    got = execute_ast(ast, blocks, term_stats, corpus["n_docs"], corpus["avgdl"], k=10)
+    assert got
     for d, _ in got:
         terms = {t["term"] for t in docs[d]}
         assert {"검색", "엔진", "문서"} <= terms

@@ -64,8 +64,6 @@ def _build_cursor(term, tfs, doc_lens, n_docs, avgdl, block_size):
         term=term,
         idf=lucene_idf(n_docs, df),
         blocks=blocks,
-        k1=K1,
-        b=B,
         avgdl=avgdl,
     )
 
