@@ -65,12 +65,12 @@ class SearchEngine:
         )
         self._doc_map_direct = direct(DirectDocMapReader, "doc_map")
         self._term_stats_direct = direct(DirectTermStatsReader, "term_stats")
-        #: df cache in front of the Spark fallback only (a direct
-        #: reader's decoded row groups are its own cache); LRU-bounded
-        #: like the adjacent BlockCache — an open-ended query stream
-        #: (typos included) must not grow driver memory monotonically
-        #: (int values are tiny, but 10^8 distinct terms of key strings
-        #: are not)
+        #: term → df memo in front of both df readers (the direct
+        #: term_stats reader and the Spark fallback), so a warm search
+        #: looks each df up once; LRU-bounded like the adjacent
+        #: BlockCache — an open-ended query stream (typos included)
+        #: must not grow driver memory monotonically (int values are
+        #: tiny, but 10^8 distinct terms of key strings are not)
         self._df_cache: "OrderedDict[str, int]" = OrderedDict()
         self._df_cache_max = 100_000
         #: route taken by the last search/count call — "driver" (WAND
@@ -79,19 +79,20 @@ class SearchEngine:
         self.last_route: str | None = None
 
     def _dfs(self, terms: list[str]) -> dict[str, int]:
-        """Per-term df, 0 for terms the index lacks. A locally readable
-        index answers from the term_stats files
-        (:class:`~.query.wand.DirectTermStatsReader`, no Spark job);
-        otherwise misses of the driver-side LRU go through
-        ``router.term_dfs`` — one Spark job, a pushed-down IN filter on
-        ``term_stats`` (≤ |query| rows)."""
-        if self._term_stats_direct is not None:
-            return self._term_stats_direct.fetch(terms)
-        from .query.router import term_dfs
-
+        """Per-term df, 0 for terms the index lacks, answered from the
+        ``_df_cache`` LRU. Only its misses reach a reader: the
+        term_stats files of a locally readable index
+        (:class:`~.query.wand.DirectTermStatsReader`, no Spark job),
+        else ``router.term_dfs`` — one Spark job, a pushed-down IN
+        filter on ``term_stats`` (≤ |query| rows)."""
         misses = sorted({t for t in terms if t not in self._df_cache})
         if misses:
-            fetched = term_dfs(self.term_stats, misses)
+            if self._term_stats_direct is not None:
+                fetched = self._term_stats_direct.fetch(misses)
+            else:
+                from .query.router import term_dfs
+
+                fetched = term_dfs(self.term_stats, misses)
             for t in misses:
                 self._df_cache[t] = fetched.get(t, 0)
         out = {}
@@ -1231,11 +1232,14 @@ class SearchEngine:
         """Match count (Q8 ``trackTotalHits`` equivalent), served from
         the block index — never the row-postings table:
 
-        * single term: df = sum of block ``n_docs`` (exact, ZERO decode
-          and zero Spark jobs on a warm :class:`BlockCache`);
-        * multi term: the size of the AST evaluator's match set over an
-          ``And`` (or ``Or``) of the terms (``executor.count_ast``; one
-          term-pruned read at most, each cache entry decodes once).
+        * single term: its df from the df lookup (:meth:`_dfs`) —
+          no block fetch, no decode;
+        * multi term: 0 when a conjunctive term is absent (before any
+          block fetch), else the size of the AST evaluator's match set
+          over an ``And`` (or ``Or``) of the terms
+          (``executor.count_ast``; one term-pruned read at most, each
+          cache entry decodes once), or the distributed count when a
+          term is hot.
 
         ``exclude`` text counts with must_not semantics through the
         full AST evaluator (:meth:`count_ast` — conjunctive only, the
@@ -1257,20 +1261,17 @@ class SearchEngine:
             return 0
         terms = sorted({t["term"] for t in tokens})
         dfs = self._dfs(terms)
-        if any(df > self.max_driver_df for df in dfs.values()):
+        hot = any(df > self.max_driver_df for df in dfs.values())
+        self.last_route = "distributed" if hot else "driver"
+        if len(terms) == 1:
+            return dfs[terms[0]]
+        if conjunctive and 0 in dfs.values():
+            return 0
+        if hot:
             # hot term: never pull its docID arrays to the driver
             from .query.router import match_count_blocks
 
-            self.last_route = "distributed"
-            if len(terms) == 1:
-                return dfs.get(terms[0], 0)
-            if conjunctive and any(dfs.get(t, 0) == 0 for t in terms):
-                return 0
             return match_count_blocks(self.blocks, terms, conjunctive)
-        self.last_route = "driver"
-        if len(terms) == 1:
-            entry = self.block_cache.get(terms).get(terms[0])
-            return entry.df if entry is not None else 0
         from .query.ast import And, Or, Term
         from .query.executor import count_ast
 

@@ -43,6 +43,21 @@ def phrase_reach(pos_lists, slop: int = 0) -> bool:
     return reach.size > 0
 
 
+def _intersect(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(common docs, their indexes in ``a``, in ``b``) of two sorted,
+    unique doc arrays — the output of ``np.intersect1d(a, b,
+    assume_unique=True, return_indices=True)``. Each doc of the shorter
+    array is looked up in the longer one by binary search, so the cost
+    is O(short · log long) and nothing is re-sorted (the advance() of a
+    Lucene conjunction, vectorized)."""
+    swap = a.size > b.size
+    short, long_ = (b, a) if swap else (a, b)
+    at = np.searchsorted(long_, short)
+    # an empty ``long_`` means an empty ``short``: every index is empty
+    hit = np.flatnonzero(long_[np.minimum(at, long_.size - 1)] == short)
+    return (short[hit], at[hit], hit) if swap else (short[hit], hit, at[hit])
+
+
 def _has_phrase(node) -> bool:
     if isinstance(node, Phrase):
         return True
@@ -63,7 +78,7 @@ def _phrase_docs(node: Phrase, cursors: dict[str, TermCursor]) -> np.ndarray:
     entries = [cursors[t].postings.decode() for t in node.terms]
     docs = entries[0].docs
     for p in entries[1:]:
-        docs = np.intersect1d(docs, p.docs, assume_unique=True)
+        docs = _intersect(docs, p.docs)[0]
     if docs.size == 0:
         return docs
     per_term = [p.positions(np.searchsorted(p.docs, docs)) for p in entries]
@@ -104,15 +119,13 @@ def _evaluate(node, cursors: dict[str, TermCursor], scored: bool = True):
             if docs.size == 0:
                 break
             c_docs, c_scores = _evaluate(child, cursors, scored)
-            if not scored:
-                docs = np.intersect1d(docs, c_docs, assume_unique=True)
-                continue
-            docs, i, j = np.intersect1d(docs, c_docs, assume_unique=True, return_indices=True)
-            acc = acc[i] + c_scores[j]
+            docs, i, j = _intersect(docs, c_docs)
+            if scored:
+                acc = acc[i] + c_scores[j]
         for child in node.children:
             if isinstance(child, Not) and docs.size:
-                keep = ~np.isin(docs, _evaluate(child.child, cursors, False)[0], assume_unique=True)
-                docs, acc = docs[keep], (acc[keep] if scored else None)
+                drop = _intersect(docs, _evaluate(child.child, cursors, False)[0])[1]
+                docs, acc = np.delete(docs, drop), (np.delete(acc, drop) if scored else None)
         return docs, acc
     if not node.children:
         return _NO_MATCH

@@ -537,8 +537,10 @@ class DirectTermStatsReader(_DirectKeyedReader):
     """Serving-node df lookup without a Spark job — the term_stats
     sibling of :class:`DirectDocMapReader`. Every writer sorts
     term_stats by term within each file, so a lookup reads at most one
-    row group per file at any index size; the decoded row groups are
-    the df cache."""
+    row group per file at any index size. The engine asks it only for
+    the misses of its df memo (``SearchEngine._dfs``), so a warm
+    search does not reach it; the decoded row groups it keeps spare
+    those misses the file reads."""
 
     def __init__(self, path: str):
         super().__init__(path, "term", "term_stats")

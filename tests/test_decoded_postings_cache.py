@@ -30,6 +30,7 @@ from mecab_ko_lucene_analyzer_spark.query.wand import (
     wand_topk,
 )
 from mecab_ko_lucene_analyzer_spark.sources import synthesize_webpages
+from mecab_ko_lucene_analyzer_spark.sources.webpages import _HOT_NOUNS
 
 BASE = "/tmp/test_decoded_postings_cache"
 K1, B = 1.2, 0.75
@@ -287,6 +288,57 @@ def test_forced_strategies_warm_equals_cold(spark, index_path, strategy):
         for ast, got in zip(asts, cold):
             want = ast_oracle(ast, postings, doc_lens, engine.n_docs, engine.avgdl, k=30)
             assert got == want, ast
+
+
+def _serving_texts(rng: random.Random, nouns: list[str], numbers: list[str], n: int):
+    """``n`` seeded ``(text, exclude)`` searches shaped like serving
+    traffic: 1–3 nouns, each a hot noun or any corpus noun; every fifth
+    a tail-style noun plus a number (half of them numbers the corpus
+    holds); every seventh excludes a hot noun."""
+    out = []
+    for i in range(n):
+        if i % 5 == 4:
+            num = rng.choice(numbers) if rng.random() < 0.5 else str(rng.randint(1, 9999))
+            text = f"{rng.choice(nouns)} {num}"
+        else:
+            text = " ".join(
+                rng.choice(_HOT_NOUNS if rng.random() < 0.5 else nouns)
+                for _ in range(rng.randint(1, 3))
+            )
+        out.append((text, rng.choice(_HOT_NOUNS) if i % 7 == 6 else None))
+    return out
+
+
+def test_served_top10_equals_the_scoring_spec(spark, index_path):
+    """A seeded stream of ~200 serving-shaped searches through
+    ``engine.search`` — conjunctions of corpus nouns, synonym groups,
+    tail noun + number texts, must_not exclusions — answers the top-10
+    ``(doc_id, score)`` of the scoring spec over the tokenized corpus,
+    bit for bit."""
+    from ast_reference import ast_oracle, postings_from_tokens
+
+    from mecab_ko_lucene_analyzer_spark.analysis.mini_dict import corpus_nouns
+    from mecab_ko_lucene_analyzer_spark.analysis.tokenizer import token_records
+
+    engine = SearchEngine(spark, index_path, _option())
+    rows = sorted(
+        synthesize_webpages(spark, 120, partitions=4).select("url", "text").collect(),
+        key=lambda r: r["url"],
+    )
+    postings, doc_lens = postings_from_tokens(
+        {i: token_records(r["text"]) for i, r in enumerate(rows)}
+    )
+    numbers = sorted(t for t in postings if t.isdigit())
+    texts = _serving_texts(random.Random(811), corpus_nouns(), numbers, 200)
+    non_empty = 0
+    for text, exclude in texts:
+        got = _hits(engine.search(text, k=10, exclude=exclude))
+        ast = engine.build_query(text, exclude)
+        want = ast_oracle(ast, postings, doc_lens, engine.n_docs, engine.avgdl, k=10)
+        assert got == want, (text, exclude)
+        assert engine.last_route == "driver"
+        non_empty += bool(got)
+    assert non_empty >= 100
 
 
 def _raw_term(rng, n_docs, block_size):

@@ -4,7 +4,9 @@ what the Spark lookup ``router.term_dfs`` answers — present terms,
 absent terms as df 0, duplicates, Hangul and digit terms — on every
 index shape the engine serves: a fused build, a compaction opened
 through ``SearchEngine.from_incremental``, and term_stats written
-unsorted across several files by a foreign writer."""
+unsorted across several files by a foreign writer. The engine's df
+memo answers a repeated lookup without the reader, and a count that
+the df decides reads no block."""
 
 import glob
 import os
@@ -19,7 +21,7 @@ from mecab_ko_lucene_analyzer_spark.analysis.dictionary import AnalyzerOption
 from mecab_ko_lucene_analyzer_spark.engine import SearchEngine
 from mecab_ko_lucene_analyzer_spark.index import build_and_write
 from mecab_ko_lucene_analyzer_spark.query.router import term_dfs
-from mecab_ko_lucene_analyzer_spark.query.wand import DirectTermStatsReader
+from mecab_ko_lucene_analyzer_spark.query.wand import DirectBlockReader, DirectTermStatsReader
 from mecab_ko_lucene_analyzer_spark.sources import synthesize_webpages
 from mecab_ko_lucene_analyzer_spark.streaming import incremental_index_stream
 from mecab_ko_lucene_analyzer_spark.streaming.incremental import compact_incremental
@@ -166,3 +168,47 @@ def test_direct_reader_visits_only_candidate_row_groups(tmp_path, monkeypatch):
         _keyed_table(tmp_path, "shuffled", shuffled, row_group_size=7), "term", "term_stats"
     )
     assert {t: sorted(v) for t, v in lookup(loose).items()} == want
+
+
+def _count_calls(monkeypatch, cls) -> list:
+    """Record the arguments of every ``cls.fetch`` call."""
+    calls = []
+    real = cls.fetch
+    monkeypatch.setattr(
+        cls, "fetch", lambda self, *a, **kw: calls.append(a) or real(self, *a, **kw)
+    )
+    return calls
+
+
+def test_warm_repeat_reads_no_term_stats(spark, fused, monkeypatch):
+    """A second identical search or count finds every df in the
+    engine's df memo: it makes no ``DirectTermStatsReader.fetch`` call
+    and answers what the first did."""
+    eng = SearchEngine(spark, fused, AnalyzerOption())
+    calls = _count_calls(monkeypatch, DirectTermStatsReader)
+    texts = ["검색 엔진", "데이터", "색인 98765"]
+    first = [(eng.search(t, k=10), eng.count(t)) for t in texts]
+    assert calls and first[0][0] and first[0][1] > 0
+    calls.clear()
+    assert [(eng.search(t, k=10), eng.count(t)) for t in texts] == first
+    assert calls == []
+
+
+@pytest.mark.parametrize("route", ["driver", "distributed"])
+def test_count_decided_by_df_fetches_no_blocks(spark, fused, monkeypatch, route):
+    """On a fresh engine a single-term count is the term's df — equal
+    to ``router.term_dfs`` — and a conjunctive count with an absent
+    term is 0, on both routes, without a block fetch."""
+    eng = SearchEngine(
+        spark, fused, AnalyzerOption(), max_driver_df=1_000_000 if route == "driver" else 0
+    )
+    fetches = _count_calls(monkeypatch, DirectBlockReader)
+    words = ["검색", "데이터", "98765"]
+    want = term_dfs(eng.term_stats, words)
+    assert want["검색"] > 0 and want["98765"] == 0
+    for w in words:
+        assert eng.count(w) == want[w]
+        if want[w]:
+            assert eng.last_route == route
+    assert eng.count("검색 98765") == 0
+    assert fetches == []

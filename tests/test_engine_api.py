@@ -550,14 +550,19 @@ def test_highlight_synonym_expanded_terms():
     assert "samsung" not in marked
 
 
-def test_df_cache_is_lru_bounded(engine):
+@pytest.mark.parametrize("reader", ["direct", "fallback"])
+def test_df_cache_is_lru_bounded(engine, reader):
     """The per-term df cache must evict (LRU) instead of growing with
     every distinct query term forever — a long-lived serving node sees
     an open-ended term stream (typos included). The cache sits in front
-    of the Spark fallback, so the test takes that path."""
+    of both df readers: the direct term_stats reader of a local index
+    and the Spark fallback."""
     engine._df_cache.clear()
     old_max = engine._df_cache_max
-    direct, engine._term_stats_direct = engine._term_stats_direct, None
+    direct = engine._term_stats_direct
+    assert direct is not None
+    if reader == "fallback":
+        engine._term_stats_direct = None
     try:
         engine._df_cache_max = 4
         for i in range(10):
