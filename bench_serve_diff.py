@@ -1,0 +1,93 @@
+"""Serving exactness snapshot: the replies of a seeded search stream,
+written so that two checkouts can be compared with one ``cmp``.
+
+It builds the ``serve`` workload's index for ``--seed`` (the fused
+index of ``perfbench``'s ``serve``, from the same seeded crawl, at its
+full size), opens a ``SearchEngine`` and warms it as ``serve`` does,
+then sends ``--queries`` searches drawn from ``query_stream`` seeded
+with ``--query-seed`` and writes one JSON line per search: the text and
+its top-10 ``[doc_id, score.hex(), url]``. ``score.hex()`` keeps every
+bit of the float, so equal files mean bit-identical replies.
+
+    python bench_serve_diff.py --seed 952 --queries 3000 --query-seed 811 --out new.jsonl
+    (in the other checkout, same arguments) --out old.jsonl
+    cmp old.jsonl new.jsonl
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import random
+import shutil
+import sys
+import tempfile
+from pathlib import Path
+from types import SimpleNamespace
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--seed", type=int, default=952, help="crawl seed of the index")
+    ap.add_argument("--queries", type=int, default=3000)
+    ap.add_argument("--query-seed", type=int, default=811)
+    ap.add_argument("--out", required=True, help="JSONL path to write")
+    args = ap.parse_args()
+
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
+    from mecab_ko_lucene_analyzer_spark.analysis.dictionary import AnalyzerOption
+    from mecab_ko_lucene_analyzer_spark.analysis.mini_dict import corpus_nouns
+    from mecab_ko_lucene_analyzer_spark.engine import SearchEngine
+    from mecab_ko_lucene_analyzer_spark.index import build_and_write
+    from mecab_ko_lucene_analyzer_spark.plans import get_spark
+    from perfbench.workloads import (
+        HOT_NOUNS,
+        OPEN_QUERY,
+        SERVE_PAGES,
+        SERVE_WARM_QUERIES,
+        _seed_base,
+        _size,
+        query_stream,
+        write_crawl,
+    )
+
+    # the serve workload's crawl (input stream 2) and sizes for this seed
+    run = SimpleNamespace(seed=args.seed, toy=False)
+    work = Path(tempfile.mkdtemp(prefix="serve-diff-"))
+    spark = get_spark(app_name="bench-serve-diff")
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        crawl = write_crawl(
+            work / "crawl", _seed_base(run, 2), _size(run, SERVE_PAGES), tables=False
+        )
+        base = str(work / "index")
+        build_and_write(
+            spark.read.parquet(str(crawl.corpus)), base, lang_filter="ko", with_blocks=True
+        )
+        engine = SearchEngine(spark, base, AnalyzerOption())
+        nouns = list(corpus_nouns())
+        engine.search(OPEN_QUERY, k=10)
+        engine.search(" ".join(HOT_NOUNS + tuple(nouns)), k=10, conjunctive=False)
+        warm = query_stream(random.Random(f"warm-{args.seed}"), nouns)
+        for _ in range(_size(run, SERVE_WARM_QUERIES)):
+            engine.search(next(warm)[1], k=10)
+
+        stream = query_stream(random.Random(args.query_seed), nouns)
+        with open(args.out, "w") as f:
+            for _ in range(args.queries):
+                text = next(stream)[1]
+                hits = [
+                    [h["doc_id"], float(h["score"]).hex(), h["url"]]
+                    for h in engine.search(text, k=10)
+                ]
+                f.write(json.dumps({"text": text, "hits": hits}, ensure_ascii=False) + "\n")
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    main()

@@ -13,8 +13,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .analysis.dictionary import AnalyzerOption, analyze_query
 from .index.build import build_and_write
-from .query.ast import build_query_ast, to_json
+from .query.ast import ast_shape, build_query_ast, to_json
 from .query.executor import execute_ast
+from .query.router import ast_routable, distributed_ast_topk
 from .query.wand import load_query_cursors, wand_topk
 
 __all__ = ["SearchEngine"]
@@ -39,6 +40,7 @@ class SearchEngine:
             DirectBlockReader,
             DirectDocMapReader,
             DirectTermStatsReader,
+            NoLocalParquet,
         )
 
         sp = self.spark
@@ -49,22 +51,26 @@ class SearchEngine:
         self.avgdl = corpus["avgdl"]
         self.doc_map = sp.read.parquet(f"{self.base_path}/doc_map")
 
-        def direct(reader, table: str):
-            # the serving reads (df lookup, cold-path block fetch, URL
-            # resolve) go straight to the parquet files through Arrow —
-            # footer-pruned row groups, zero Spark jobs — when the index
-            # is on a locally readable path; remote/URI paths get None
-            # and fall back to pruned Spark scans
-            try:
-                return reader(f"{self.base_path}/{table}")
-            except Exception:
-                return None
-
-        self.block_cache = BlockCache(
-            self.blocks, direct=direct(DirectBlockReader, "blocks")
-        )
-        self._doc_map_direct = direct(DirectDocMapReader, "doc_map")
-        self._term_stats_direct = direct(DirectTermStatsReader, "term_stats")
+        # the serving reads (df lookup, cold-path block fetch, URL
+        # resolve) go straight to the parquet files through Arrow —
+        # footer-pruned row groups, zero Spark jobs — when the index is
+        # on a locally listable path. A remote/URI or missing path lists
+        # no local parquet file and serves through pruned Spark scans
+        # instead; a listed file that cannot be read (a corrupt footer,
+        # an I/O or permission error) or lacks its key column raises
+        # here.
+        try:
+            readers = (
+                DirectBlockReader(f"{self.base_path}/blocks"),
+                DirectDocMapReader(f"{self.base_path}/doc_map"),
+                DirectTermStatsReader(f"{self.base_path}/term_stats"),
+            )
+        except NoLocalParquet:
+            readers = (None, None, None)
+        #: "direct" (Arrow reads of the local parquet files) or "spark"
+        self.read_path = "spark" if readers[0] is None else "direct"
+        self.block_cache = BlockCache(self.blocks, direct=readers[0])
+        self._doc_map_direct, self._term_stats_direct = readers[1:]
         #: term → df memo in front of both df readers (the direct
         #: term_stats reader and the Spark fallback), so a warm search
         #: looks each df up once; LRU-bounded like the adjacent
@@ -261,8 +267,6 @@ class SearchEngine:
         distributed; EVERY Term/And/Or/Phrase shape routes (router.py;
         nested phrases evaluate as distributed flag columns). Sets
         ``last_route`` as the tested diagnostic."""
-        from .query.router import ast_routable
-
         hot = any(df > self.max_driver_df for df in dfs.values())
         routed = hot and ast_routable(ast)
         self.last_route = "distributed" if routed else "driver"
@@ -271,10 +275,7 @@ class SearchEngine:
     def _ast_hits(self, ast, fetch: int) -> list[tuple[int, float]]:
         """Route + execute an AST: hot queries take the distributed
         scorer, cold queries run the driver AST evaluator."""
-        from .query.ast import ast_terms
-        from .query.router import distributed_ast_topk
-
-        dfs = self._dfs(sorted(ast_terms(ast)))
+        dfs = self._dfs(ast_shape(ast)[0])
         if self._route_distributed(ast, dfs):
             return distributed_ast_topk(
                 ast, self.blocks, dfs, self.n_docs, self.avgdl, fetch

@@ -21,7 +21,8 @@ from __future__ import annotations
 
 import time
 from contextlib import ExitStack, contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from typing import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -532,6 +533,10 @@ class InvertedIndex:
     doc_stats: DataFrame  # doc_id, doc_len
     corpus_stats: DataFrame  # n_docs, avgdl
     forward: DataFrame | None = None  # doc_id, terms array<struct<term,tf>>
+    #: unpersists what a lazy :func:`build_index` pinned to number the
+    #: documents (its input, when that is not stable across jobs); call
+    #: it once done with the tables, which recompute from the input
+    release: Callable[[], None] = field(default=lambda: None, repr=False, compare=False)
 
     def cache(self) -> "InvertedIndex":
         # a lazy build_index result derives every member from its own
@@ -552,8 +557,9 @@ def build_index(
     read as the decoded row-postings view plus partials-derived stats
     (lazy: call ``.cache()`` or use :func:`build_and_write` to avoid
     recomputing tokenization when more than one member table is
-    consumed)."""
-    partials, _, _, _, _ = corpus_partials(
+    consumed). ``release()`` on the result unpersists the docID
+    scaffold that :func:`corpus_partials` pinned."""
+    partials, _, _, _, release = corpus_partials(
         pages, lang_filter, mode, compound_noun_min_length
     )
     term_stats, doc_stats = _stats_from_partials(partials)
@@ -561,7 +567,8 @@ def build_index(
         F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
     )
     return InvertedIndex(
-        postings_from_partials(partials), term_stats, doc_stats, corpus
+        postings_from_partials(partials), term_stats, doc_stats, corpus,
+        release=release,
     )
 
 

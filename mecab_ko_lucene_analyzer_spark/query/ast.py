@@ -35,6 +35,7 @@ __all__ = [
     "Not",
     "build_query_ast",
     "ast_terms",
+    "ast_shape",
     "to_json",
     "from_json",
     "validate_ast",
@@ -182,19 +183,31 @@ def build_query_ast(
 
 
 def ast_terms(node) -> set[str]:
-    """All leaf terms mentioned in the tree (for posting prefetch)."""
-    if isinstance(node, Term):
-        return {node.term}
-    if isinstance(node, Phrase):
-        return set(node.terms)
-    if isinstance(node, Not):
-        # negated terms still need postings: exclusion is evaluated by
-        # probing the negated subtree's match set
-        return ast_terms(node.child)
-    out: set[str] = set()
-    for c in node.children:
-        out |= ast_terms(c)
-    return out
+    """All leaf terms mentioned in the tree (for posting prefetch);
+    negated terms included — exclusion is evaluated by probing the
+    negated subtree's match set."""
+    return set(ast_shape(node)[0])
+
+
+def ast_shape(node) -> tuple[list[str], bool]:
+    """(sorted distinct leaf terms, whether a Phrase node occurs) in
+    one walk — what the driver evaluator needs to load the postings,
+    positions included only for a phrase."""
+    terms: set[str] = set()
+    phrase = False
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if isinstance(n, Term):
+            terms.add(n.term)
+        elif isinstance(n, Phrase):
+            terms.update(n.terms)
+            phrase = True
+        elif isinstance(n, Not):
+            stack.append(n.child)
+        else:
+            stack.extend(n.children)
+    return sorted(terms), phrase
 
 
 def to_json(node) -> str:

@@ -198,8 +198,8 @@ def ast_topk_batch(
     contains a phrase — and the broadcast payload feeds the SAME
     per-executor ``execute_ast_cursors`` evaluation the serving path
     runs (rank-identical by construction)."""
-    from .ast import ast_terms, from_json
-    from .executor import _has_phrase, execute_ast_cursors
+    from .ast import ast_shape, ast_terms, from_json
+    from .executor import execute_ast_cursors
 
     spark = blocks.sparkSession
 
@@ -210,9 +210,9 @@ def ast_topk_batch(
             terms: set[str] = set()
             phrase = False
             for spec in pdf[ast_col]:
-                ast = from_json(spec)
-                terms |= ast_terms(ast)
-                phrase = phrase or _has_phrase(ast)
+                ast_vocab, ast_phrase = ast_shape(from_json(spec))
+                terms.update(ast_vocab)
+                phrase = phrase or ast_phrase
             yield pd.DataFrame(
                 {"term": sorted(terms), "phrase": [phrase] * len(terms)}
             )

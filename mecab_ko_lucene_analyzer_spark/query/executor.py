@@ -1,12 +1,16 @@
 """AST executor: vectorized evaluation of boolean retrieval trees over
 decoded block postings (Q1–Q5 execution).
 
-The driver has two scorers. This evaluator scores every query AST —
-Term, And, Or, DisMax, Phrase and must_not — on each term's decoded
-postings arrays (``wand.TermPostings``); block-max WAND
-(``wand.py::wand_topk``) serves flat disjunctive bags whose postings
-exceed ``TAAT_MAX_BYTES``. Scoring semantics are the engine spec
-documented in ``ast.py``.
+This evaluator scores every query AST — Term, And, Or, DisMax, Phrase
+and must_not — on each term's decoded postings arrays. The serving
+path binds each term's cached ``wand.TermPostings`` entry straight to
+the term's idf (``wand.load_query_postings``), so it builds no
+``TermCursor``, and a warm entry's docs and BM25 scores are arrays it
+already holds. Cursors remain for block-max WAND (``wand.py::wand_topk``,
+flat disjunctive bags whose postings exceed ``TAAT_MAX_BYTES``) and
+for callers that hold cursors already (``execute_ast_cursors``: the
+bulk executor).
+Scoring semantics are the engine spec documented in ``ast.py``.
 """
 
 from __future__ import annotations
@@ -15,8 +19,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
-from .ast import And, DisMax, Not, Or, Phrase, Term, ast_terms, validate_ast
-from .wand import TermCursor, _decode_term_postings, _top_k, _union, load_query_cursors
+from .ast import And, DisMax, Not, Or, Phrase, Term, ast_shape, validate_ast
+from .wand import TermCursor, _top_k, _union, load_query_postings
 
 __all__ = ["execute_ast", "execute_ast_cursors"]
 
@@ -54,28 +58,18 @@ def _intersect(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray, np
     short, long_ = (b, a) if swap else (a, b)
     at = np.searchsorted(long_, short)
     # an empty ``long_`` means an empty ``short``: every index is empty
-    hit = np.flatnonzero(long_[np.minimum(at, long_.size - 1)] == short)
+    hit = np.flatnonzero(long_.take(at, mode="clip") == short)
     return (short[hit], at[hit], hit) if swap else (short[hit], hit, at[hit])
 
 
-def _has_phrase(node) -> bool:
-    if isinstance(node, Phrase):
-        return True
-    if isinstance(node, Not):
-        return _has_phrase(node.child)
-    if isinstance(node, (And, Or, DisMax)):
-        return any(_has_phrase(c) for c in node.children)
-    return False
-
-
-def _phrase_docs(node: Phrase, cursors: dict[str, TermCursor]) -> np.ndarray:
+def _phrase_docs(node: Phrase, bound: dict[str, tuple]) -> np.ndarray:
     """Docs holding every phrase term (``match_phrase(...).boost(0)``,
     DanawaSearchQueryBuilder.java:287-291) at positions that chain
     within the slop. Candidates are the terms' intersected docs; only
     the blocks holding a candidate decode their positions."""
-    if any(t not in cursors for t in node.terms):
+    if any(t not in bound for t in node.terms):
         return _NO_DOCS
-    entries = [cursors[t].postings.decode() for t in node.terms]
+    entries = [bound[t][0].decode() for t in node.terms]
     docs = entries[0].docs
     for p in entries[1:]:
         docs = _intersect(docs, p.docs)[0]
@@ -86,8 +80,10 @@ def _phrase_docs(node: Phrase, cursors: dict[str, TermCursor]) -> np.ndarray:
     return docs[np.array(keep, dtype=bool)]
 
 
-def _evaluate(node, cursors: dict[str, TermCursor], scored: bool = True):
-    """(sorted unique docs matching ``node``, their scores):
+def _evaluate(node, bound: dict[str, tuple], avgdl: float, scored: bool = True):
+    """(sorted unique docs matching ``node``, their scores), over
+    ``bound``: term → (its ``TermPostings``, idf), scored with the
+    index's ``avgdl``:
 
     * Term: its BM25 partials; a term the index lacks matches nothing.
     * And: positive children intersect left to right, their scores
@@ -101,12 +97,13 @@ def _evaluate(node, cursors: dict[str, TermCursor], scored: bool = True):
     must_not subtree) and the scores are None.
     """
     if isinstance(node, Term):
-        c = cursors.get(node.term)
-        if c is None:
+        b = bound.get(node.term)
+        if b is None:
             return _NO_MATCH
-        return _decode_term_postings(c) if scored else (c.postings.decode().docs, None)
+        p = b[0].decode()
+        return p.docs, (p.scores(b[1], avgdl) if scored else None)
     if isinstance(node, Phrase):
-        docs = _phrase_docs(node, cursors)
+        docs = _phrase_docs(node, bound)
         return docs, (np.zeros(docs.size) if scored else None)
     if isinstance(node, Not):
         raise ValueError("Not must be a direct child of And (validate_ast)")
@@ -114,22 +111,22 @@ def _evaluate(node, cursors: dict[str, TermCursor], scored: bool = True):
         positives = [c for c in node.children if not isinstance(c, Not)]
         if not positives:
             return _NO_MATCH
-        docs, acc = _evaluate(positives[0], cursors, scored)
+        docs, acc = _evaluate(positives[0], bound, avgdl, scored)
         for child in positives[1:]:
             if docs.size == 0:
                 break
-            c_docs, c_scores = _evaluate(child, cursors, scored)
+            c_docs, c_scores = _evaluate(child, bound, avgdl, scored)
             docs, i, j = _intersect(docs, c_docs)
             if scored:
                 acc = acc[i] + c_scores[j]
         for child in node.children:
             if isinstance(child, Not) and docs.size:
-                drop = _intersect(docs, _evaluate(child.child, cursors, False)[0])[1]
+                drop = _intersect(docs, _evaluate(child.child, bound, avgdl, False)[0])[1]
                 docs, acc = np.delete(docs, drop), (np.delete(acc, drop) if scored else None)
         return docs, acc
     if not node.children:
         return _NO_MATCH
-    parts = [_evaluate(c, cursors, scored) for c in node.children]
+    parts = [_evaluate(c, bound, avgdl, scored) for c in node.children]
     if not scored:
         return np.unique(np.concatenate([p[0] for p in parts])), None
     docs, total, best = _union(parts)
@@ -138,16 +135,23 @@ def _evaluate(node, cursors: dict[str, TermCursor], scored: bool = True):
     return docs, best
 
 
+def _cursor_binding(cursors: dict[str, TermCursor]) -> tuple[dict[str, tuple], float]:
+    """The :func:`_evaluate` binding and avgdl of prebuilt cursors
+    (every cursor of a query carries the index's avgdl)."""
+    avgdl = next(iter(cursors.values())).avgdl if cursors else 1.0
+    return {t: (c.postings, c.idf) for t, c in cursors.items()}, avgdl
+
+
 def execute_ast_cursors(
     ast, cursors: dict[str, TermCursor], k: int = 10
 ) -> list[tuple[int, float]]:
     """Evaluate an AST over prebuilt term cursors → top-k
-    [(doc_id, score)], tie-break (score desc, doc_id asc). The scoring
-    half of :func:`execute_ast`, shared with the bulk executor path
-    (``batch.py::ast_topk_batch``) where cursors come from a broadcast
-    payload instead of a Spark fetch."""
+    [(doc_id, score)], tie-break (score desc, doc_id asc). The bulk
+    executor path (``batch.py::ast_topk_batch``), whose cursors come
+    from a broadcast payload: each cursor's entry and idf are scored
+    exactly as :func:`execute_ast` scores a cached entry."""
     validate_ast(ast)
-    return _top_k(*_evaluate(ast, cursors), k)
+    return _top_k(*_evaluate(ast, *_cursor_binding(cursors)), k)
 
 
 def count_ast_cursors(ast, cursors: dict[str, TermCursor]) -> int:
@@ -155,29 +159,14 @@ def count_ast_cursors(ast, cursors: dict[str, TermCursor]) -> int:
     match set (Q8 ``trackTotalHits`` with full AST semantics — synonym
     Or-groups and phrase position filters included)."""
     validate_ast(ast)
-    return int(_evaluate(ast, cursors, scored=False)[0].size)
+    return int(_evaluate(ast, *_cursor_binding(cursors), scored=False)[0].size)
 
 
-def _load_ast_cursors(
-    ast, blocks: DataFrame, term_stats: DataFrame, n_docs: int,
-    avgdl: float, cache=None
-) -> dict[str, TermCursor]:
-    """Cursor dict for an AST's terms — positions ride along only when
-    a Phrase node needs them. The one cursor-loading recipe shared by
-    the top-k and count evaluators (and, via them, the engine)."""
-    terms = sorted(ast_terms(ast))
-    return {
-        c.term: c
-        for c in load_query_cursors(
-            blocks,
-            term_stats,
-            n_docs,
-            avgdl,
-            terms,
-            with_positions=_has_phrase(ast),
-            cache=cache,
-        )
-    }
+def _bind(ast, blocks: DataFrame, n_docs: int, cache) -> dict[str, tuple]:
+    """The AST's terms bound by :func:`~.wand.load_query_postings`,
+    positions loaded only when a Phrase node needs them."""
+    terms, phrase = ast_shape(ast)
+    return load_query_postings(blocks, n_docs, terms, phrase, cache)
 
 
 def execute_ast(
@@ -190,9 +179,12 @@ def execute_ast(
     cache=None,
 ) -> list[tuple[int, float]]:
     """Evaluate an AST → top-k [(doc_id, score)], tie-break
-    (score desc, doc_id asc)."""
-    cursors = _load_ast_cursors(ast, blocks, term_stats, n_docs, avgdl, cache)
-    return execute_ast_cursors(ast, cursors, k)
+    (score desc, doc_id asc). Postings come from ``cache`` (no Spark
+    job on a hit, nor on a miss through its direct reader), else from
+    one term-pruned Spark scan. ``term_stats`` is accepted for API
+    compatibility but unused — df derives from block metadata."""
+    validate_ast(ast)
+    return _top_k(*_evaluate(ast, _bind(ast, blocks, n_docs, cache), avgdl), k)
 
 
 def count_ast(
@@ -203,8 +195,8 @@ def count_ast(
     avgdl: float,
     cache=None,
 ) -> int:
-    """Match count sibling of :func:`execute_ast` — same cursor
-    loading, :func:`count_ast_cursors` evaluation."""
-    cursors = _load_ast_cursors(ast, blocks, term_stats, n_docs, avgdl, cache)
-    return count_ast_cursors(ast, cursors)
-
+    """Match count sibling of :func:`execute_ast` — same loading,
+    :func:`count_ast_cursors` semantics."""
+    validate_ast(ast)
+    bound = _bind(ast, blocks, n_docs, cache)
+    return int(_evaluate(ast, bound, avgdl, scored=False)[0].size)

@@ -18,10 +18,11 @@ Plan shape at 10^12 docs/day ingest: the registry explodes to
 projection; matching is one hash aggregate keyed (doc_id, query_id)
 counting matched terms. The registry side's join strategy SWITCHES ON
 ITS SIZE (ES stores percolator queries as an *index* — a real alerting
-workload can hold 10^5–10^6 stored queries): a registry whose Catalyst
-size estimate fits ``spark.sql.autoBroadcastJoinThreshold`` is
-broadcast (zero extra corpus-side exchange — the common
-saved-searches case); a larger one joins as a plain equi-join with the
+workload can hold 10^5–10^6 stored queries): a registry whose
+Catalyst size estimate times the explode's margin fits
+``spark.sql.autoBroadcastJoinThreshold`` is broadcast (zero extra
+corpus-side exchange — the common saved-searches case); a larger or
+unknown-size one joins as a plain equi-join with the
 planner/AQE free to pick the strategy, so an unbounded registry is
 never force-broadcast (the same discipline the r4→r5 rounds applied to
 every corpus-unbounded relation). Either way the aggregate's key space
@@ -43,14 +44,26 @@ from ..plans import optimized_plan_probe
 __all__ = ["percolate"]
 
 
+#: bound on the exploded registry's bytes over the registry's: a term
+#: row (8-byte null bitset, three 8-byte slots, the term's bytes P) is
+#: at most (32 + P) / (8 + P) times the term's share of its array
+#: (8-byte offset/length slot, the bytes P), under 3 for any non-empty
+#: term; Catalyst's estimate of the explode keeps the pre-explode size
+_EXPLODE_MARGIN = 3
+
+
 def _registry_fits_broadcast(queries: DataFrame) -> bool:
-    """True when the registry plan's Catalyst size estimate fits
+    """True when the exploded registry fits
     ``spark.sql.autoBroadcastJoinThreshold`` (driver-side statistics
-    walk — no job). Unknown-size plans estimate as
-    ``defaultSizeInBytes`` (huge), so they land on the safe,
-    non-broadcast side; a non-positive threshold (auto-broadcast
-    disabled) or a plan the private API cannot read likewise means
-    never broadcast."""
+    walk — no job): when the registry plan's Catalyst size estimate
+    times :data:`_EXPLODE_MARGIN` fits. A ``LocalRelation``
+    (``createDataFrame`` over pandas) estimates its exact bytes, so a
+    small one broadcasts. Unknown-size plans — an RDD-backed registry
+    (``createDataFrame`` over a Python list or an RDD, which may grow
+    without bound) included — estimate as ``defaultSizeInBytes``
+    (huge), so they land on the safe, non-broadcast side; a
+    non-positive threshold (auto-broadcast disabled) or a plan the
+    private API cannot read likewise means never broadcast."""
     from ..functions.partitioning import _parse_bytes
 
     thresh = _parse_bytes(
@@ -59,7 +72,7 @@ def _registry_fits_broadcast(queries: DataFrame) -> bool:
     if thresh <= 0:
         return False
     est = optimized_plan_probe(queries, lambda p: int(p.stats().sizeInBytes()), -1)
-    return 0 <= est <= thresh
+    return 0 <= est and est * _EXPLODE_MARGIN <= thresh
 
 
 def percolate(
@@ -80,8 +93,9 @@ def percolate(
     disjunctive ES ``minimum_should_match`` law. Queries with empty
     term arrays never match (ES rejects empty percolator queries).
     ``broadcast_registry``: None (default) broadcasts the exploded
-    registry only when its size estimate fits the session's
-    auto-broadcast threshold (see :func:`_registry_fits_broadcast`);
+    registry only when its size estimate, with the explode's margin,
+    fits the session's auto-broadcast threshold (see
+    :func:`_registry_fits_broadcast`);
     a large registry runs as a plain equi-join instead — never a
     forced broadcast. Pass True/False to override. The result rows
     are identical on every path. Output is deterministic: one row per

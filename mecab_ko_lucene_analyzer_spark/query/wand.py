@@ -2,14 +2,19 @@
 
 The low-latency counterpart to the distributed scatter-gather scorer
 (``bm25.py``): query terms are few, so their block lists are fetched
-with a term-pruned read and scored on the driver. The driver has two
-scorers: the vectorized evaluator over each term's decoded postings
-arrays (``executor.py`` for every AST; a bag takes the same union sum
-and top-k, :func:`_union` and :func:`_top_k`, in :func:`_taat_topk`),
-and block-max WAND (Broder et al. 2003; block-max refinement, Ding &
-Suel 2011) for bags whose compressed postings exceed
-``TAAT_MAX_BYTES``, where skipping beats decoding everything. Both
-must be rank-identical to the brute-force oracle — tested.
+with a term-pruned read and scored on the driver. Every query AST is
+scored by the vectorized evaluator (``executor.py``) directly on each
+term's cached :class:`TermPostings`; a flat disjunctive bag takes the
+same union sum and top-k (:func:`_union`, :func:`_top_k`) in
+:func:`_taat_topk`, or, when its compressed postings exceed
+``TAAT_MAX_BYTES``, block-max WAND over :class:`TermCursor` s (Broder
+et al. 2003; block-max refinement, Ding & Suel 2011), where skipping
+beats decoding everything. Both must be rank-identical to the
+brute-force oracle — tested. The direct readers
+(:class:`DirectBlockReader`, :class:`DirectDocMapReader`,
+:class:`DirectTermStatsReader`) serve cache misses, df lookups and
+URL resolves from the local parquet files, with no Spark job, by
+bisecting footer ranges sorted once at open.
 
 Tie-break: score desc, doc_id asc. WAND scores candidates in ascending
 docID order, so on equal scores the earlier (smaller) docID stays in
@@ -36,6 +41,7 @@ __all__ = [
     "TermPostings",
     "wand_topk",
     "load_query_cursors",
+    "load_query_postings",
     "fetch_term_blocks",
     "BlockCache",
     "DirectBlockReader",
@@ -337,13 +343,21 @@ def fetch_term_blocks(
     return out
 
 
+class NoLocalParquet(ValueError):
+    """The path lists no parquet file on the local file system (a
+    remote URI, a missing or empty directory): the caller serves
+    through Spark instead."""
+
+
 def _footer_index(path: str, stats_col: str, what: str) -> list:
     """Shared scaffold for the direct (no-Spark-job) parquet readers:
     open every file under ``path`` and load per-row-group (min, max)
     statistics of ``stats_col`` from the footers (a few KB per file).
     Returns ``[(ParquetFile, [(min, max) per row group]), ...]``;
     row groups without usable stats get ``(None, None)`` (always
-    read). Raises when the directory holds no parquet files."""
+    read). Raises :class:`NoLocalParquet` when the directory lists no
+    parquet file; a file that is not readable parquet, or lacks
+    ``stats_col``, raises its own error."""
     import glob as _glob
 
     import pyarrow.parquet as pq
@@ -355,10 +369,15 @@ def _footer_index(path: str, stats_col: str, what: str) -> list:
             continue
         rg0 = pf.metadata.row_group(0)
         col_idx = next(
-            i
-            for i in range(rg0.num_columns)
-            if rg0.column(i).path_in_schema == stats_col
+            (
+                i
+                for i in range(rg0.num_columns)
+                if rg0.column(i).path_in_schema == stats_col
+            ),
+            None,
         )
+        if col_idx is None:
+            raise ValueError(f"{what} file {fn!r} has no {stats_col!r} column")
         ranges = []
         for rg in range(pf.metadata.num_row_groups):
             st = pf.metadata.row_group(rg).column(col_idx).statistics
@@ -368,103 +387,140 @@ def _footer_index(path: str, stats_col: str, what: str) -> list:
                 ranges.append((st.min, st.max))
         files.append((pf, ranges))
     if not files:
-        raise ValueError(f"no local parquet {what} files under {path!r}")
+        raise NoLocalParquet(f"no local parquet {what} files under {path!r}")
     return files
 
 
 class _DirectKeyedReader:
     """Point lookups by ``key`` straight from a parquet table via Arrow
-    — NO Spark job. Footer (min, max) statistics of ``key`` prune each
-    lookup to the row groups whose range can hold a wanted key; each
-    such row group decodes once into a byte-bounded LRU cache (a
-    10^12-doc table can't accrete unboundedly on one serving node) and
-    answers later lookups with a binary search over its keys. A row
-    group whose keys are not sorted (a foreign writer) is sorted once
-    as it decodes — a stable sort, so a key's rows keep their file
-    order: still exact, it just prunes less. A key may own several
-    rows (a term's blocks). A one-value lookup (a df, a URL) keeps the
-    row group's value column as a Python list in the same entry, so a
-    hit is a bisect plus a list index. Lookups are per key, not
-    vectorized: a serving request asks for a handful of keys, where
-    numpy's per-call overhead would dominate."""
+    — NO Spark job. At open the footer (min, max) range of every row
+    group of every file goes into one table sorted by min, with the
+    running max of the maxes beside it; a key bisects the mins once
+    and compares only the ranges that can hold it
+    (:meth:`_by_row_group`), so a lookup costs the same whatever the
+    file count. Where the ranges are disjoint (doc_map, term-sorted
+    block files) that is one range per key; where they overlap (a
+    term's blocks across a row-group edge, term_stats files that each
+    span the whole term range, a foreign writer's unsorted files) it is
+    every range that holds the key. A row group without stats is a
+    candidate for every key.
+
+    The wanted keys are grouped by candidate row group, and each row
+    group is taken from a byte-bounded LRU cache (a 10^12-doc table
+    can't accrete unboundedly on one serving node), decoded on its
+    first use, once per lookup:
+
+    * a multi-row lookup (a term's blocks, :meth:`_rows`) keeps the
+      row group's keys sorted — a foreign writer's unsorted row group
+      is stably sorted once as it decodes, so a key's rows keep their
+      file order — and slices each key's rows by bisection;
+    * a one-value lookup (a df, a URL, :meth:`_values`) keeps the row
+      group as a ``{key: value}`` dict, so each key is one ``get``.
+
+    :attr:`ranges_examined` counts the row-group ranges the lookups
+    compared a key against, the cost the sorted table bounds."""
 
     #: decoded bytes kept per reader (Arrow buffers plus a rough
-    #: per-item cost of the Python key and value lists)
+    #: per-item cost of the Python keys, values and dict slots)
     cache_bytes = 256 << 20
 
     def __init__(self, path: str, key: str, what: str):
         from collections import OrderedDict
+        from itertools import accumulate
 
         self._files = _footer_index(path, key, what)
         self._key = key
-        self._rg_cache: "OrderedDict[tuple, tuple[list, object, int]]" = OrderedDict()
+        rgs = [
+            (lo, hi, fid, rgid)
+            for fid, (_, ranges) in enumerate(self._files)
+            for rgid, (lo, hi) in enumerate(ranges)
+        ]
+        table = sorted(r for r in rgs if r[0] is not None)
+        self._mins = [r[0] for r in table]
+        self._maxs = [r[1] for r in table]
+        #: running max of the maxes: nondecreasing, so bisectable
+        self._reach = list(accumulate(self._maxs, max))
+        #: (file, row group) of each table entry, then of every row
+        #: group without stats
+        self._where = [r[2:] for r in table] + [r[2:] for r in rgs if r[0] is None]
+        self.ranges_examined = 0
+        self._rg_cache: "OrderedDict[tuple, tuple[object, int]]" = OrderedDict()
         self._rg_bytes = 0
 
-    def _row_group(
-        self, fid: int, rgid: int, columns: tuple, as_list: bool
-    ) -> tuple[list, object, int]:
-        """(sorted keys, the values in key order, cached bytes) of one
-        row group, from the cache or decoded once. The values are an
-        Arrow table of ``columns``, or with ``as_list`` the one
-        column's Python list."""
+    def _by_row_group(self, keys) -> dict[int, list]:
+        """``{index into _where: the wanted keys its range can hold}``.
+        A key's candidates are the table rows whose min does not pass
+        it, walked down from the last one while the running max still
+        reaches it — one row when the ranges are disjoint."""
+        mins, maxs, reach = self._mins, self._maxs, self._reach
+        unpruned = range(len(mins), len(self._where))
+        groups: dict[int, list] = {}
+        examined = 0
+        for k in set(keys):
+            i = bisect.bisect_right(mins, k) - 1
+            while i >= 0 and reach[i] >= k:
+                examined += 1
+                if maxs[i] >= k:
+                    groups.setdefault(i, []).append(k)
+                i -= 1
+            for i in unpruned:
+                groups.setdefault(i, []).append(k)
+            examined += len(unpruned)
+        self.ranges_examined += examined
+        return groups
+
+    def _row_group(self, fid: int, rgid: int, columns: tuple, as_dict: bool):
+        """One row group from the cache, or decoded once: with
+        ``as_dict`` the ``{key: value}`` dict of the one value column,
+        else (sorted keys, Arrow table of ``columns`` in key order)."""
         import pyarrow.compute as pc
 
-        ck = (fid, rgid, columns, as_list)
+        ck = (fid, rgid, columns, as_dict)
         ent = self._rg_cache.get(ck)
         if ent is not None:
             self._rg_cache.move_to_end(ck)
-            return ent
+            return ent[0]
         tbl = self._files[fid][0].read_row_groups([rgid], columns=[self._key, *columns])
         keys = tbl.column(self._key)
         n = tbl.num_rows
-        if n > 1 and not pc.all(
-            pc.less_equal(keys.slice(0, n - 1), keys.slice(1))
-        ).as_py():
-            tbl = tbl.take(pc.sort_indices(keys))
-        vals = tbl.select(list(columns))
-        nbytes = vals.nbytes + 64 * n
-        if as_list:
-            vals, nbytes = vals.column(0).to_pylist(), nbytes + 64 * n
-        ent = (tbl.column(self._key).to_pylist(), vals, nbytes)
-        while self._rg_cache and self._rg_bytes + ent[2] > self.cache_bytes:
-            self._rg_bytes -= self._rg_cache.popitem(last=False)[1][2]
-        self._rg_cache[ck] = ent
-        self._rg_bytes += ent[2]
-        return ent
-
-    def _spans(self, keys, columns: tuple, as_list: bool = False):
-        """Yield ``(key, values, i, j)`` for every wanted key present,
-        row groups in file order: the key's rows are ``values[i:j]``
-        of its row group (see :meth:`_row_group`). Only the row groups
-        whose (min, max) range can hold a wanted key are read; a row
-        group without stats is always read."""
-        want = sorted(set(keys))
-        if not want:
-            return
-        for fid, (_, ranges) in enumerate(self._files):
-            for rgid, (lo, hi) in enumerate(ranges):
-                if lo is None:
-                    sel = want
-                else:
-                    sel = want[bisect.bisect_left(want, lo) : bisect.bisect_right(want, hi)]
-                if not sel:
-                    continue
-                rg_keys, vals, _ = self._row_group(fid, rgid, columns, as_list)
-                for k in sel:
-                    i = bisect.bisect_left(rg_keys, k)
-                    j = bisect.bisect_right(rg_keys, k, i)
-                    if i < j:
-                        yield k, vals, i, j
+        if as_dict:
+            payload = dict(zip(keys.to_pylist(), tbl.column(columns[0]).to_pylist()))
+            nbytes = tbl.nbytes + 192 * n
+        else:
+            if n > 1 and not pc.all(
+                pc.less_equal(keys.slice(0, n - 1), keys.slice(1))
+            ).as_py():
+                tbl = tbl.take(pc.sort_indices(keys))
+            vals = tbl.select(list(columns))
+            payload = (tbl.column(self._key).to_pylist(), vals)
+            nbytes = vals.nbytes + 64 * n
+        while self._rg_cache and self._rg_bytes + nbytes > self.cache_bytes:
+            self._rg_bytes -= self._rg_cache.popitem(last=False)[1][1]
+        self._rg_cache[ck] = (payload, nbytes)
+        self._rg_bytes += nbytes
+        return payload
 
     def _rows(self, keys, columns: tuple):
         """Yield ``(key, Arrow table of its rows)`` for every wanted key
-        present, row groups in file order."""
-        for k, tbl, i, j in self._spans(keys, columns):
-            yield k, tbl.slice(i, j - i)
+        present, one row group at a time."""
+        for i, want in self._by_row_group(keys).items():
+            rg_keys, tbl = self._row_group(*self._where[i], columns, False)
+            for k in want:
+                lo = bisect.bisect_left(rg_keys, k)
+                hi = bisect.bisect_right(rg_keys, k, lo)
+                if lo < hi:
+                    yield k, tbl.slice(lo, hi - lo)
 
     def _values(self, keys, value: str) -> dict:
         """``{key: value}`` for the wanted keys present (one row each)."""
-        return {k: vals[i] for k, vals, i, _ in self._spans(keys, (value,), as_list=True)}
+        out = {}
+        columns = (value,)
+        for i, want in self._by_row_group(keys).items():
+            d = self._row_group(*self._where[i], columns, True)
+            for k in want:
+                if k in d:
+                    out[k] = d[k]
+        return out
 
 
 _BLOCK_COLS = ("first_doc", "n_docs", "doc_deltas", "tfs", "doc_lens", "block_max_impact")
@@ -520,10 +576,11 @@ class DirectBlockReader(_DirectKeyedReader):
 class DirectDocMapReader(_DirectKeyedReader):
     """Serving-node URL resolution without a Spark job — the doc_map
     sibling of :class:`DirectBlockReader`. ``build.py::_doc_map_df``
-    writes ascending, per-partition-contiguous doc_ids, so parquet
-    row-group statistics prune a k-id lookup to the row groups that
-    can contain them. Replaces the ``doc_map.filter(isin).collect()``
-    URL-resolve job of ``engine.search``."""
+    writes ascending, per-partition-contiguous doc_ids, so the row
+    groups' doc_id ranges are disjoint: each id of a k-id lookup seeks
+    its one row group, which answers from its cached ``{doc_id: url}``
+    dict. Replaces the ``doc_map.filter(isin).collect()`` URL-resolve
+    job of ``engine.search``."""
 
     def __init__(self, path: str):
         super().__init__(path, "doc_id", "doc_map")
@@ -623,20 +680,18 @@ class BlockCache:
             self._bytes -= self._cache.popitem(last=False)[1].nbytes
 
 
-def load_query_cursors(
+def load_query_postings(
     blocks: DataFrame,
-    term_stats: DataFrame | None,
     n_docs: int,
-    avgdl: float,
     query_terms: list[str],
     with_positions: bool = False,
     cache: BlockCache | None = None,
-) -> list[TermCursor]:
-    """Build driver-side cursors for the query terms. Postings come from
-    ``cache`` when given — no Spark job on a hit, nor on a miss when
-    the cache has a :class:`DirectBlockReader` — else from one
-    term-pruned Spark scan. ``term_stats`` is accepted for API
-    compatibility but unused — df derives from block metadata."""
+) -> dict[str, tuple[TermPostings, float]]:
+    """term → (its :class:`TermPostings`, idf) for the query terms the
+    index holds — the one postings loader of the driver scorers.
+    Postings come from ``cache`` when given — no Spark job on a hit,
+    nor on a miss when the cache has a :class:`DirectBlockReader` —
+    else from one term-pruned Spark scan."""
     if cache is not None:
         by_term = cache.get(list(query_terms), with_positions)
     else:
@@ -646,16 +701,26 @@ def load_query_cursors(
                 blocks, list(query_terms), with_positions
             ).items()
         }
+    return {t: (p, lucene_idf(n_docs, p.df)) for t, p in by_term.items() if p.df > 0}
+
+
+def load_query_cursors(
+    blocks: DataFrame,
+    term_stats: DataFrame | None,
+    n_docs: int,
+    avgdl: float,
+    query_terms: list[str],
+    with_positions: bool = False,
+    cache: BlockCache | None = None,
+) -> list[TermCursor]:
+    """Driver-side cursors over :func:`load_query_postings`' entries.
+    ``term_stats`` is accepted for API compatibility but unused — df
+    derives from block metadata."""
     return [
-        TermCursor(
-            term=t,
-            idf=lucene_idf(n_docs, p.df),
-            blocks=p.blocks,
-            avgdl=avgdl,
-            postings=p,
-        )
-        for t, p in by_term.items()
-        if p.df > 0
+        TermCursor(term=t, idf=idf, blocks=p.blocks, avgdl=avgdl, postings=p)
+        for t, (p, idf) in load_query_postings(
+            blocks, n_docs, query_terms, with_positions, cache
+        ).items()
     ]
 
 
@@ -694,7 +759,7 @@ def _top_k(docs: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[int, floa
         keep = scores >= np.partition(scores, docs.size - k)[docs.size - k]
         docs, scores = docs[keep], scores[keep]
     order = np.lexsort((docs, -scores))[:k]
-    return [(int(docs[i]), float(scores[i])) for i in order]
+    return list(zip(docs[order].tolist(), scores[order].tolist()))
 
 
 def _taat_topk(cursors: list[TermCursor], k: int) -> list[tuple[int, float]]:

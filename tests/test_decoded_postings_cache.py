@@ -494,3 +494,51 @@ def test_phrase_positions_stay_inside_the_cache_byte_budget(spark, index_path):
         assert small._bytes <= small.cache_bytes
         assert small._bytes == sum(e.nbytes for e in small._cache.values())
     assert len(small._cache) < len(cache._cache)
+
+
+def test_warm_search_builds_no_cursor(spark, index_path, monkeypatch):
+    """A repeated warm ``search``/``count`` over AND, OR, synonym and
+    phrase queries scores the cached entries directly: it builds no
+    ``TermCursor``, reads no block or df, and takes each doc_map row
+    group it resolves from the reader's cache once per search."""
+    engine = SearchEngine(spark, index_path, _option())
+    asts = [And((Term("데이터"), Phrase(("데이터", "처리")))), Or((Term("문서"), Term("색인")))]
+
+    def run():
+        return (
+            [_hits(engine.search(q, k=10)) for q in ("검색 엔진", "데이터 처리 문서", "검색")],
+            [_hits(engine.search_ast(ast, k=10)) for ast in asts],
+            [engine.count(q, conjunctive=c) for q, c in (("검색 엔진", True), ("문서 색인", False))],
+            engine.count_ast(asts[0]),
+        )
+
+    first = run()
+    built = []
+    real_init = TermCursor.__post_init__
+    monkeypatch.setattr(
+        TermCursor, "__post_init__", lambda self: built.append(self.term) or real_init(self)
+    )
+    reads = []
+    for reader in (engine.block_cache.direct, engine._term_stats_direct):
+        monkeypatch.setattr(reader, "_row_group", lambda *a: reads.append(a))
+    doc_map = engine._doc_map_direct
+    calls = []
+    real_rg = doc_map._row_group
+    monkeypatch.setattr(
+        doc_map, "_row_group", lambda fid, rg, *a: calls.append((fid, rg)) or real_rg(fid, rg, *a)
+    )
+    for text in ("검색 엔진", "데이터 처리 문서", "검색"):
+        calls.clear()
+        hits = engine.search(text, k=10)
+        holding = {
+            doc_map._where[i] for i, (lo, hi) in enumerate(zip(doc_map._mins, doc_map._maxs))
+            if any(lo <= h["doc_id"] <= hi for h in hits)
+        }
+        assert hits and sorted(calls) == sorted(holding)
+    assert run() == first
+    assert built == [] and reads == []
+    assert engine.last_route == "driver"
+    # the guard really counts: a disjunctive bag (no synonym) still
+    # scores through cursors
+    engine.search("데이터 처리", k=10, conjunctive=False)
+    assert built

@@ -12,6 +12,7 @@ import glob
 import os
 import random
 import shutil
+import struct
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -212,3 +213,57 @@ def test_count_decided_by_df_fetches_no_blocks(spark, fused, monkeypatch, route)
             assert eng.last_route == route
     assert eng.count("검색 98765") == 0
     assert fetches == []
+
+
+def test_uri_index_serves_through_spark(spark, fused):
+    """An index opened by URI lists no local parquet file: the engine
+    serves it through the Spark readers and answers what the direct
+    readers answer on its local path."""
+    local = SearchEngine(spark, fused, AnalyzerOption())
+    remote = SearchEngine(spark, f"file://{fused}", AnalyzerOption())
+    assert (local.read_path, remote.read_path) == ("direct", "spark")
+    assert remote.block_cache.direct is None and remote._doc_map_direct is None
+    for text in ["검색 엔진", "데이터", "색인 98765"]:
+        assert remote.search(text, k=10) == local.search(text, k=10)
+        assert remote.count(text) == local.count(text)
+
+
+def test_unreadable_local_files_raise_at_open(spark, fused, tmp_path):
+    """A local index whose parquet cannot serve is an error at open,
+    not a silent switch to Spark: a truncated doc_map part file, one
+    whose footer is corrupt behind intact magic bytes, or term_stats
+    files without their key column."""
+    base = str(tmp_path / "truncated")
+    shutil.copytree(fused, base)
+    part = sorted(glob.glob(f"{base}/doc_map/*.parquet"))[-1]
+    with open(part, "rb") as f:
+        data = f.read()
+    with open(part, "wb") as f:
+        f.write(data[: len(data) // 2])
+    with pytest.raises(pa.ArrowInvalid):
+        SearchEngine(spark, base, AnalyzerOption())
+
+    base = str(tmp_path / "corrupt_footer")
+    shutil.copytree(fused, base)
+    part = sorted(glob.glob(f"{base}/doc_map/*.parquet"))[-1]
+    with open(part, "rb") as f:
+        data = bytearray(f.read())
+    # layout: ... footer | footer length (4 bytes LE) | b"PAR1"
+    assert data[-4:] == b"PAR1"
+    n = struct.unpack("<I", data[-8:-4])[0]
+    data[-8 - n : -8] = b"\xff" * n
+    with open(part, "wb") as f:
+        f.write(data)
+    with pytest.raises(OSError):
+        SearchEngine(spark, base, AnalyzerOption())
+
+    base = str(tmp_path / "keyless")
+    shutil.copytree(fused, base)
+    shutil.rmtree(f"{base}/term_stats")
+    os.makedirs(f"{base}/term_stats")
+    pq.write_table(
+        pa.table({"word": ["검색"], "df": pa.array([3], pa.int64())}),
+        f"{base}/term_stats/part-00000.parquet",
+    )
+    with pytest.raises(ValueError, match="no 'term' column"):
+        SearchEngine(spark, base, AnalyzerOption())

@@ -221,3 +221,25 @@ def test_build_index_cli_extract_html(spark, pages, tmp_path, monkeypatch):
     got = spark.read.parquet(f"{out}/term_stats").orderBy("term").collect()
     want = spark.read.parquet(f"{ref}/term_stats").orderBy("term").collect()
     assert got == want and len(got) > 0
+
+
+def test_lazy_build_index_releases_its_docid_scaffold(spark):
+    """Over an input that is not stable across jobs (shuffled pages)
+    the lazy ``build_index`` pins the input to number its documents;
+    ``release()`` on the index unpersists it, leaving nothing cached
+    that was not cached before."""
+    import pyspark.sql.functions as F
+
+    sc = spark.sparkContext
+
+    def persisted() -> set:
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = persisted()
+    shuffled = synthesize_webpages(spark, 30, partitions=3).orderBy(F.rand(seed=3))
+    index = build_index(shuffled, lang_filter=None)
+    assert persisted() - before  # the docID scaffold is pinned
+    n_docs = index.corpus_stats.first()["n_docs"]
+    assert n_docs == 30
+    index.release()
+    assert persisted() == before

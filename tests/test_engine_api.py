@@ -369,13 +369,13 @@ def test_search_runs_no_spark_job_on_a_local_index(spark):
 def test_dfs_fall_back_to_term_dfs_when_the_index_is_not_local(
     spark, engine, monkeypatch
 ):
-    """Where the term_stats files cannot be opened directly (a remote
+    """Where the term_stats path lists no local parquet file (a remote
     index), ``_dfs`` answers through the Spark lookup ``term_dfs``."""
     import mecab_ko_lucene_analyzer_spark.query.wand as wand_mod
     from mecab_ko_lucene_analyzer_spark.query import router
 
     def unreadable(path):
-        raise OSError(f"not a local path: {path}")
+        raise wand_mod.NoLocalParquet(f"not a local path: {path}")
 
     monkeypatch.setattr(wand_mod, "DirectTermStatsReader", unreadable)
     remote = SearchEngine(spark, BASE, AnalyzerOption())
