@@ -2545,15 +2545,20 @@ def _q_highlight_spans(spark, sf_dir):
 
 
 def _q_batch_bm25_topk(spark, sf_dir):
-    """Bulk retrieval: a 4-query batch scored in ONE Spark job via
-    block-max WAND over a block index built from the whitespace tokens
-    (one term-pruned fetch + broadcast + executor-parallel WAND) —
-    rank-identical to per-query serving, exactly replicable in SQL."""
-    from mecab_ko_lucene_analyzer_spark.query import wand_topk_batch
+    """Bulk retrieval: a 4-query batch scored in ONE Spark job by the
+    AST evaluator over a block index built from the whitespace tokens
+    (one term-pruned fetch + broadcast + executor-parallel evaluation
+    of each bag's ``Sum``) — rank-identical to per-query serving,
+    exactly replicable in SQL."""
+    from mecab_ko_lucene_analyzer_spark.query import ast_topk_batch
+    from mecab_ko_lucene_analyzer_spark.query.ast import bag_ast, to_json
 
     blocks, _, n, avgdl = _ws_block_index(spark, sf_dir)
-    qdf = spark.createDataFrame(BATCH_QUERIES, "query_id long, terms array<string>")
-    out = wand_topk_batch(blocks, qdf, n, avgdl, k=10)
+    qdf = spark.createDataFrame(
+        [(qid, to_json(bag_ast(terms))) for qid, terms in BATCH_QUERIES],
+        "query_id long, query_json string",
+    )
+    out = ast_topk_batch(blocks, qdf, n, avgdl, k=10)
     result = out.select(
         "query_id", "rank", "doc_id", F.round("score", 6).alias("score")
     ).cache()
@@ -2729,7 +2734,7 @@ def _q_search_after_page(spark, sf_dir):
 
 
 #: Q8 scroll contract: page 2 of the flagship BM25 query (ranks 11-25)
-#: through the serving WAND path — the ``engine.search(offset=...)``
+#: through the serving evaluator — the ``engine.search(offset=...)``
 #: deep-paging shape (``SearchUtil.java:136-150`` scroll equivalent).
 SCROLL_OFFSET = 10
 SCROLL_PAGE_K = 15
@@ -2737,20 +2742,20 @@ SCROLL_PAGE_K = 15
 
 def _q_scroll_page(spark, sf_dir):
     """Q8 scroll paging under the driver gate: fetch ``offset + k``
-    via block-max WAND over the serving cursors (the exact
-    ``engine.search`` paging contract) and slice — returning ranks
+    by evaluating the query's bag (a ``Sum`` AST) over the serving
+    postings (the exact ``engine.search`` paging contract) and slice —
+    returning ranks
     11..25 of the same disjunctive query ``bm25_topk`` gates at ranks
     1..10, so the serving path's scores are oracle-checked BEYOND the
     head page. Oracle: full ranking with ``row_number``, sliced by
     rank."""
-    from mecab_ko_lucene_analyzer_spark.query.wand import (
-        load_query_cursors,
-        wand_topk,
-    )
+    from mecab_ko_lucene_analyzer_spark.query.ast import bag_ast
+    from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast
 
     blocks, term_stats, n, avgdl = _ws_block_index(spark, sf_dir)
-    cursors = load_query_cursors(blocks, term_stats, n, avgdl, BM25_QUERY)
-    hits = wand_topk(cursors, SCROLL_OFFSET + SCROLL_PAGE_K)[SCROLL_OFFSET:]
+    fetch = SCROLL_OFFSET + SCROLL_PAGE_K
+    hits = execute_ast(bag_ast(BM25_QUERY), blocks, term_stats, n, avgdl, fetch)
+    hits = hits[SCROLL_OFFSET:]
     rows = [
         (SCROLL_OFFSET + i + 1, int(d), round(s, 6))
         for i, (d, s) in enumerate(hits)

@@ -6,8 +6,13 @@ index of ``perfbench``'s ``serve``, from the same seeded crawl, at its
 full size), opens a ``SearchEngine`` and warms it as ``serve`` does,
 then sends ``--queries`` searches drawn from ``query_stream`` seeded
 with ``--query-seed`` and writes one JSON line per search: the text and
-its top-10 ``[doc_id, score.hex(), url]``. ``score.hex()`` keeps every
-bit of the float, so equal files mean bit-identical replies.
+its top-10 ``[doc_id, score.hex(), url]``. After them come 300 seeded
+replies of each disjunctive-bag API, one line each tagged with the API
+name: ``search(conjunctive=False)`` over the same stream's texts,
+``search_prefix`` (a drawn noun's first syllable), ``search_fuzzy``
+(the noun), ``search_regexp`` (first syllable + ``.*``) and
+``search_wildcard`` (first syllable + ``*``). ``score.hex()`` keeps
+every bit of the float, so equal files mean bit-identical replies.
 
     python bench_serve_diff.py --seed 952 --queries 3000 --query-seed 811 --out new.jsonl
     (in the other checkout, same arguments) --out old.jsonl
@@ -75,15 +80,28 @@ def main() -> None:
         for _ in range(_size(run, SERVE_WARM_QUERIES)):
             engine.search(next(warm)[1], k=10)
 
+        def line(hits, **tags) -> str:
+            tags["hits"] = [[h["doc_id"], float(h["score"]).hex(), h["url"]] for h in hits]
+            return json.dumps(tags, ensure_ascii=False) + "\n"
+
         stream = query_stream(random.Random(args.query_seed), nouns)
         with open(args.out, "w") as f:
             for _ in range(args.queries):
                 text = next(stream)[1]
-                hits = [
-                    [h["doc_id"], float(h["score"]).hex(), h["url"]]
-                    for h in engine.search(text, k=10)
-                ]
-                f.write(json.dumps({"text": text, "hits": hits}, ensure_ascii=False) + "\n")
+                f.write(line(engine.search(text, k=10), text=text))
+            bags = query_stream(random.Random(f"bag-{args.query_seed}"), nouns)
+            rng = random.Random(f"noun-{args.query_seed}")
+            apis = {
+                "search": lambda: (next(bags)[1], {"conjunctive": False}),
+                "search_prefix": lambda: (rng.choice(nouns)[0], {}),
+                "search_fuzzy": lambda: (rng.choice(nouns), {}),
+                "search_regexp": lambda: (rng.choice(nouns)[0] + ".*", {}),
+                "search_wildcard": lambda: (rng.choice(nouns)[0] + "*", {}),
+            }
+            for api, draw in apis.items():
+                for _ in range(300):
+                    arg, kw = draw()
+                    f.write(line(getattr(engine, api)(arg, k=10, **kw), api=api, text=arg))
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)

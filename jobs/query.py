@@ -1,5 +1,6 @@
-"""spark-submit job: query a built index (analyze → AST → block-max
-WAND / AST executor → top-k with URLs).
+"""spark-submit job: query a built index (analyze → AST — a disjunctive
+bag is a ``Sum`` of its terms → the AST evaluator on the driver, or the
+distributed scorer for hot terms → top-k with URLs).
 
     spark-submit jobs/query.py --index /path/index --query "검색 엔진" -k 10
 """

@@ -13,12 +13,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .analysis.dictionary import AnalyzerOption, analyze_query
 from .index.build import build_and_write
-from .query.ast import ast_shape, build_query_ast, to_json
+from .query.ast import And, Term, ast_shape, bag_ast, build_query_ast, to_json
 from .query.executor import execute_ast
 from .query.router import ast_routable, distributed_ast_topk
-from .query.wand import load_query_cursors, wand_topk
 
 __all__ = ["SearchEngine"]
+
+
+def _query_ast(tokens: list[dict], conjunctive: bool, exclude_tokens=None):
+    """The AST ``search`` serves for analyzed ``tokens``: the analyzed
+    query's AST when conjunctive or synonym-bearing, else the
+    disjunctive bag's ``Sum`` (``bag_ast``)."""
+    if conjunctive or any(t.get("synonyms") for t in tokens):
+        return build_query_ast(tokens, exclude_tokens)
+    return bag_ast(t["term"] for t in tokens)
 
 
 @dataclass
@@ -30,7 +38,7 @@ class SearchEngine:
     #: df above which a query term is "hot": its blocks are never
     #: collected to the driver — the whole query routes to the
     #: distributed scorer (``query/router.py``). At 10^12 docs a
-    #: josa-class term owns millions of blocks; the driver WAND path
+    #: josa-class term owns millions of blocks; the driver evaluator
     #: is only for queries whose postings fit serving memory.
     max_driver_df: int = 1_000_000
 
@@ -79,9 +87,9 @@ class SearchEngine:
         #: tiny, but 10^8 distinct terms of key strings are not)
         self._df_cache: "OrderedDict[str, int]" = OrderedDict()
         self._df_cache_max = 100_000
-        #: route taken by the last search/count call — "driver" (WAND
-        #: cursors) or "distributed" (block-table scorer); diagnostics
-        #: + tested routing evidence
+        #: route taken by the last search/count call — "driver" (the AST
+        #: evaluator over cached postings) or "distributed" (block-table
+        #: scorer); diagnostics + tested routing evidence
         self.last_route: str | None = None
 
     def _dfs(self, terms: list[str]) -> dict[str, int]:
@@ -195,25 +203,26 @@ class SearchEngine:
         pushed ``term IN`` + ``first_doc <= doc_id`` filter), so the
         driver reads O(|terms|) block rows at ANY df, hot josa terms
         included. The per-term partials are the SAME BM25 expression
-        the serving scorers run (``bm25.bm25_partial`` over the cursor's
-        tf and doc_len), one per distinct term, added in term order. So
-        the explained total matches the driver-served disjunctive bag
-        score (``search(conjunctive=False)``) bit-for-bit (tested). A
-        conjunctive search adds one partial per query token in query
-        order: there a repeated token counts once here, and the last
-        bit of the sum can differ."""
+        the serving scorers run (``bm25.bm25_partial`` over the doc's
+        tf and doc_len, found in the covering block by binary search),
+        one per distinct term, added in term order. So the explained
+        total matches the disjunctive bag score
+        (``search(conjunctive=False)``, a ``Sum`` of the sorted terms)
+        bit-for-bit (tested). A conjunctive search adds one partial per
+        query token in query order: there a repeated token counts once
+        here, and the last bit of the sum can differ."""
+        import numpy as np
+
+        from .index.codec import decode_block_arrays
+        from .query.bm25 import lucene_idf
         from .query.explain import explanation_tree
-        from .query.wand import TermCursor, _Block, lucene_idf
 
         tokens = self.analyze(text)
         terms = sorted({t["term"] for t in tokens})
         if not terms:
             return explanation_tree([], doc_id)
         dfs = self._dfs(terms)
-        cols = [
-            "term", "first_doc", "n_docs", "doc_deltas", "tfs", "doc_lens",
-            "block_max_impact",
-        ]
+        cols = ["term", "first_doc", "doc_deltas", "tfs", "doc_lens"]
         covering = (
             self.blocks.filter(
                 F.col("term").isin(terms) & (F.col("first_doc") <= doc_id)
@@ -229,31 +238,19 @@ class SearchEngine:
             df = dfs.get(r["term"], 0)
             if df <= 0:
                 continue
-            cursor = TermCursor(
-                term=r["term"],
-                idf=lucene_idf(self.n_docs, df),
-                blocks=[
-                    _Block(
-                        r["first_doc"],
-                        bytes(r["doc_deltas"]),
-                        bytes(r["tfs"]),
-                        bytes(r["doc_lens"]),
-                        r["block_max_impact"],
-                    )
-                ],
-                avgdl=self.avgdl,
+            docs, tfs, dls, _ = decode_block_arrays(
+                bytes(r["doc_deltas"]), bytes(r["tfs"]), bytes(r["doc_lens"])
             )
-            cursor.next_geq(doc_id)
-            if cursor.cur_doc != doc_id:
+            i = int(np.searchsorted(docs, doc_id))
+            if i == docs.size or docs[i] != doc_id:
                 continue  # term does not match this doc
-            tf, doc_len = cursor.tf_dl_current()
             per_term.append(
                 {
                     "term": r["term"],
-                    "tf": tf,
-                    "doc_len": doc_len,
+                    "tf": int(tfs[i]),
+                    "doc_len": int(dls[i]),
                     "df": df,
-                    "idf": cursor.idf,
+                    "idf": lucene_idf(self.n_docs, df),
                     "avgdl": self.avgdl,
                     "n_docs": self.n_docs,
                 }
@@ -264,16 +261,17 @@ class SearchEngine:
     def _route_distributed(self, ast, dfs: dict[str, int]) -> bool:
         """The one routing decision (shared by search and count): hot
         queries — any term's df above ``max_driver_df`` — go
-        distributed; EVERY Term/And/Or/Phrase shape routes (router.py;
-        nested phrases evaluate as distributed flag columns). Sets
-        ``last_route`` as the tested diagnostic."""
+        distributed; EVERY Term/And/Or/Sum/Phrase shape routes
+        (router.py; nested phrases evaluate as distributed flag
+        columns). Sets ``last_route`` as the tested diagnostic."""
         hot = any(df > self.max_driver_df for df in dfs.values())
         routed = hot and ast_routable(ast)
         self.last_route = "distributed" if routed else "driver"
         return routed
 
     def _ast_hits(self, ast, fetch: int) -> list[tuple[int, float]]:
-        """Route + execute an AST: hot queries take the distributed
+        """Route + execute an AST — every search, a disjunctive bag
+        as its ``Sum`` (``bag_ast``): hot queries take the distributed
         scorer, cold queries run the driver AST evaluator."""
         dfs = self._dfs(ast_shape(ast)[0])
         if self._route_distributed(ast, dfs):
@@ -318,7 +316,9 @@ class SearchEngine:
         """Analyze → AST → execute → resolve URLs.
 
         ``conjunctive=True`` is the reference's AND-over-tokens semantics
-        (Q1); ``False`` is classic disjunctive WAND top-k. ``offset``/``k``
+        (Q1); ``False`` is the disjunctive bag (ES ``bool.should``): a
+        ``Sum`` of the distinct terms, each doc scoring the sum of its
+        matching terms' BM25 partials. ``offset``/``k``
         give scroll-style paging (Q8, ``SearchUtil.java:136-150``):
         the engine fetches offset+k and slices — the standard deep-paging
         contract for top-k indexes. ``exclude`` text (analyzed through
@@ -331,17 +331,12 @@ class SearchEngine:
         excl = self.analyze(exclude) if exclude else None
         fetch = offset + k
         if excl and not conjunctive:
-            # the AST Or scores max-of-children (synonym semantics),
-            # not the disjunctive sum — supporting should+must_not
-            # would silently change disjunctive scoring, so refuse
+            # must_not is part of the Q1 conjunctive contract only
             raise ValueError(
                 "exclude requires conjunctive=True (the reference's Q1"
                 " AND-over-tokens semantics)"
             )
-        if conjunctive or any(t.get("synonyms") for t in tokens):
-            hits = self._ast_hits(build_query_ast(tokens, excl), fetch)
-        else:
-            hits = self._bag_hits([t["term"] for t in tokens], fetch)
+        hits = self._ast_hits(_query_ast(tokens, conjunctive, excl), fetch)
         out = self._resolve(hits[offset : offset + k])
         if highlight:
             terms = [t["term"] for t in tokens]
@@ -413,7 +408,7 @@ class SearchEngine:
         postings scan pruned by the query-term IN filter. The extra
         fields are an offline/relevance-mining surface (hard
         negatives, quality-weighted sampling), not the hot serving
-        path; the driver WAND cursors stay body-only by design.
+        path; the driver evaluator stays body-only by design.
         All-zero weights are rank-identical to disjunctive
         :meth:`search` (pinned in tests)."""
         from .query.bm25f import bm25f_topk_postings
@@ -643,7 +638,7 @@ class SearchEngine:
         from .query.expand import prefix_expand_terms
 
         terms = prefix_expand_terms(self.term_stats, prefix, max_expansions)
-        return self._resolve(self._bag_hits(terms, offset + k)[offset:])
+        return self._resolve(self._ast_hits(bag_ast(terms), offset + k)[offset:])
 
     def search_fuzzy(
         self,
@@ -667,7 +662,7 @@ class SearchEngine:
                 max_expansions,
             ).collect()
         ]
-        return self._resolve(self._bag_hits(terms, offset + k)[offset:])
+        return self._resolve(self._ast_hits(bag_ast(terms), offset + k)[offset:])
 
     def search_regexp(
         self,
@@ -684,7 +679,7 @@ class SearchEngine:
         from .query.expand import regexp_expand_terms
 
         terms = regexp_expand_terms(self.term_stats, pattern, max_expansions)
-        return self._resolve(self._bag_hits(terms, offset + k)[offset:])
+        return self._resolve(self._ast_hits(bag_ast(terms), offset + k)[offset:])
 
     def search_wildcard(
         self,
@@ -703,7 +698,7 @@ class SearchEngine:
         from .query.compound import wildcard_expand_terms
 
         terms = wildcard_expand_terms(self.term_stats, pattern, max_expansions)
-        return self._resolve(self._bag_hits(terms, offset + k)[offset:])
+        return self._resolve(self._ast_hits(bag_ast(terms), offset + k)[offset:])
 
     def suggest_phrase(
         self, terms: list[str], max_edits: int = 2, min_df: int = 1
@@ -726,31 +721,6 @@ class SearchEngine:
                 self._body_index(), terms, max_edits=max_edits, min_df=min_df
             ).collect()
         ]
-
-    def _bag_hits(self, terms: list[str], fetch: int) -> list[tuple[int, float]]:
-        """Disjunctive bag-of-terms serving with hot-term routing —
-        the one evaluation recipe behind search(conjunctive=False),
-        search_prefix, and search_fuzzy."""
-        from .query.router import bm25_topk_blocks
-
-        if not terms:
-            return []
-        dfs = self._dfs(terms)
-        if any(df > self.max_driver_df for df in dfs.values()):
-            self.last_route = "distributed"
-            return bm25_topk_blocks(
-                self.blocks, dfs, self.n_docs, self.avgdl, fetch
-            )
-        self.last_route = "driver"
-        cursors = load_query_cursors(
-            self.blocks,
-            None,
-            self.n_docs,
-            self.avgdl,
-            terms,
-            cache=self.block_cache,
-        )
-        return wand_topk(cursors, fetch)
 
     def facets(
         self,
@@ -1139,62 +1109,37 @@ class SearchEngine:
     ) -> DataFrame:
         """Bulk retrieval (the training-data shape: hard-negative
         mining, relevance distillation, eval sweeps): analyze every
-        query through the SAME chain ``search`` uses, then score the
-        whole batch in ONE Spark job — ``ast_topk_batch`` for
-        conjunctive/synonym ASTs (phrases included), ``wand_topk_batch``
-        for disjunctive bag-of-words. Rank-identical per query to the
-        driver serving path by construction (both run the same cursor
-        evaluation executor-side). Returns a DataFrame
+        query through the SAME chain ``search`` uses and build the same
+        AST — the analyzed query's AST for conjunctive/synonym queries
+        (phrases included), the ``Sum`` of its terms (``bag_ast``) for
+        a disjunctive bag — then score the whole batch in ONE Spark job
+        (``ast_topk_batch``). Rank-identical per query to the driver
+        serving path by construction (both run the same AST evaluator,
+        executor-side here). Returns a DataFrame
         (query_id = position in ``texts``, rank, doc_id, score).
         ``offset`` pages every query in the batch (Q8 scroll: fetch
         offset+k, keep ranks offset+1..offset+k — ranks stay absolute,
         matching ``search(offset=...)``)."""
-        from .query.batch import RESULT_SCHEMA, ast_topk_batch, wand_topk_batch
+        from .query.batch import RESULT_SCHEMA, ast_topk_batch
 
-        # per-query routing mirrors search(): conjunctive or
-        # synonym-bearing queries take the AST engine, plain
-        # disjunctive bags take WAND — so each query's ranking matches
-        # its serving-path twin exactly
-        ast_rows, term_rows = [], []
+        rows = []
         for i, text in enumerate(texts):
             toks = self.analyze(text)
             if not toks:
                 continue
-            if conjunctive or any(t.get("synonyms") for t in toks):
-                ast_rows.append((i, to_json(build_query_ast(toks))))
-            else:
-                term_rows.append((i, [t["term"] for t in toks]))
-        parts = []
-        if ast_rows:
-            qdf = self.spark.createDataFrame(
-                ast_rows, "query_id long, query_json string"
-            )
-            parts.append(
-                ast_topk_batch(
-                    self.blocks, qdf, self.n_docs, self.avgdl, offset + k,
-                    term_stats=self.term_stats,
-                    max_broadcast_df=self.max_driver_df,
-                )
-            )
-        if term_rows:
-            qdf = self.spark.createDataFrame(
-                term_rows, "query_id long, terms array<string>"
-            )
-            parts.append(
-                wand_topk_batch(
-                    self.blocks, qdf, self.n_docs, self.avgdl, offset + k,
-                    term_stats=self.term_stats,
-                    max_broadcast_df=self.max_driver_df,
-                )
-            )
-        if not parts:
+            rows.append((i, to_json(_query_ast(toks, conjunctive))))
+        if not rows:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        out = ast_topk_batch(
+            self.blocks,
+            self.spark.createDataFrame(rows, "query_id long, query_json string"),
+            self.n_docs,
+            self.avgdl,
+            offset + k,
+            term_stats=self.term_stats,
+            max_broadcast_df=self.max_driver_df,
+        )
         if offset:
-            import pyspark.sql.functions as F
-
             out = out.filter(F.col("rank") > offset)
         return out
 
@@ -1236,9 +1181,9 @@ class SearchEngine:
         * single term: its df from the df lookup (:meth:`_dfs`) —
           no block fetch, no decode;
         * multi term: 0 when a conjunctive term is absent (before any
-          block fetch), else the size of the AST evaluator's match set
-          over an ``And`` (or ``Or``) of the terms
-          (``executor.count_ast``; one term-pruned read at most, each
+          block fetch), else :meth:`count_ast` of an ``And`` (or, for
+          a disjunctive count, the ``Sum``) of the terms — the driver
+          evaluator's match set (one term-pruned read at most, each
           cache entry decodes once), or the distributed count when a
           term is hot.
 
@@ -1261,23 +1206,9 @@ class SearchEngine:
         if not tokens:
             return 0
         terms = sorted({t["term"] for t in tokens})
+        ast = And(tuple(Term(t) for t in terms)) if conjunctive else bag_ast(terms)
         dfs = self._dfs(terms)
-        hot = any(df > self.max_driver_df for df in dfs.values())
-        self.last_route = "distributed" if hot else "driver"
-        if len(terms) == 1:
-            return dfs[terms[0]]
-        if conjunctive and 0 in dfs.values():
-            return 0
-        if hot:
-            # hot term: never pull its docID arrays to the driver
-            from .query.router import match_count_blocks
-
-            return match_count_blocks(self.blocks, terms, conjunctive)
-        from .query.ast import And, Or, Term
-        from .query.executor import count_ast
-
-        node = (And if conjunctive else Or)(tuple(Term(t) for t in terms))
-        return count_ast(
-            node, self.blocks, self.term_stats, self.n_docs, self.avgdl,
-            cache=self.block_cache,
-        )
+        if len(terms) == 1 or (conjunctive and 0 in dfs.values()):
+            self._route_distributed(ast, dfs)  # the route the count stands for
+            return dfs[terms[0]] if len(terms) == 1 else 0
+        return self.count_ast(ast)

@@ -1,4 +1,4 @@
-from .batch import ast_topk_batch, wand_topk_batch
+from .batch import ast_topk_batch
 from .bm25 import bm25_topk, bm25_oracle, lucene_idf
 from .expand import mlt_topk, related_terms, suggest_terms
 
@@ -6,7 +6,6 @@ __all__ = [
     "bm25_topk",
     "bm25_oracle",
     "lucene_idf",
-    "wand_topk_batch",
     "ast_topk_batch",
     "mlt_topk",
     "related_terms",

@@ -17,8 +17,11 @@ Scoring semantics (documented engine spec, mirrored by the oracle):
 Term scores BM25; OR scores the max of its matching children (synonyms
 behave as one term — Lucene ``SynonymQuery``-style blending is
 approximated by max); AND scores the sum of its children and requires
-all to match; PHRASE matches when the terms occur at consecutive
-positions within ``slop`` and contributes 0 to the score.
+all to match; SUM (ES ``bool.should``) matches when any child matches
+and scores the sum of its matching children, added in child order — a
+disjunctive bag of terms is a SUM (:func:`bag_ast`); PHRASE matches
+when the terms occur at consecutive positions within ``slop`` and
+contributes 0 to the score.
 """
 
 from __future__ import annotations
@@ -31,9 +34,11 @@ __all__ = [
     "Phrase",
     "And",
     "Or",
+    "Sum",
     "DisMax",
     "Not",
     "build_query_ast",
+    "bag_ast",
     "ast_terms",
     "ast_shape",
     "to_json",
@@ -60,6 +65,15 @@ class And:
 
 @dataclass(frozen=True)
 class Or:
+    children: tuple = ()
+
+
+@dataclass(frozen=True)
+class Sum:
+    """ES ``bool.should`` with no parameters: matches when any child
+    matches and scores the sum of the matching children, added in
+    child order from 0.0."""
+
     children: tuple = ()
 
 
@@ -112,7 +126,7 @@ def validate_ast(node) -> None:
         # DisMax included: a Not smuggled under a DisMax inside a
         # negated subtree must fail validation here, not diverge
         # between the driver evaluator and the distributed scorer
-        if isinstance(n, (And, Or, DisMax)):
+        if isinstance(n, (And, Or, Sum, DisMax)):
             for c in n.children:
                 no_not(c)
 
@@ -134,12 +148,8 @@ def validate_ast(node) -> None:
                     no_not(c.child)
                 else:
                     walk(c)
-        elif isinstance(n, Or):
-            for c in n.children:
-                walk(c)
-        elif isinstance(n, DisMax):
-            # dis_max has no exclusion slot: every child must be a
-            # positive scoring clause
+        elif isinstance(n, (Or, Sum, DisMax)):
+            # no exclusion slot: every child must be a positive clause
             for c in n.children:
                 walk(c)
 
@@ -182,6 +192,12 @@ def build_query_ast(
     return And(tuple(clauses))
 
 
+def bag_ast(terms) -> Sum:
+    """The disjunctive bag of ``terms``: a :class:`Sum` of its sorted
+    distinct terms, so a doc's score adds its terms in term order."""
+    return Sum(tuple(Term(t) for t in sorted(set(terms))))
+
+
 def ast_terms(node) -> set[str]:
     """All leaf terms mentioned in the tree (for posting prefetch);
     negated terms included — exclusion is evaluated by probing the
@@ -222,6 +238,8 @@ def to_json(node) -> str:
             return {"and": [conv(c) for c in n.children]}
         if isinstance(n, Or):
             return {"or": [conv(c) for c in n.children]}
+        if isinstance(n, Sum):
+            return {"sum": [conv(c) for c in n.children]}
         if isinstance(n, DisMax):
             return {
                 "dis_max": [conv(c) for c in n.children],
@@ -251,6 +269,8 @@ def from_json(spec: str | dict):
             return And(tuple(conv(c) for c in n["and"]))
         if "or" in n:
             return Or(tuple(conv(c) for c in n["or"]))
+        if "sum" in n:
+            return Sum(tuple(conv(c) for c in n["sum"]))
         if "dis_max" in n:
             return DisMax(
                 tuple(conv(c) for c in n["dis_max"]),

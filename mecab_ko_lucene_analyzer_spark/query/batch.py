@@ -12,8 +12,10 @@ single job. Plan:
    the broadcast feasible),
 2. broadcast the per-term block payloads to the executors,
 3. ``mapInPandas`` over the queries table — each executor runs the
-   SAME block-max WAND the serving path runs (rank-identical by
-   construction), embarrassingly parallel per query.
+   SAME AST evaluator the serving path runs (rank-identical by
+   construction), embarrassingly parallel per query. Every query is an
+   AST in its JSON rendering; a disjunctive bag is a ``Sum``
+   (``ast.bag_ast``).
 
 At 10^12-doc scale the broadcast holds only the batch's query-term
 postings (block-compressed, ~2 bytes/posting); for query batches whose
@@ -30,9 +32,9 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from .bm25 import lucene_idf
-from .wand import TermCursor, _Block, fetch_term_blocks, wand_topk
+from .wand import TermCursor, _Block, fetch_term_blocks
 
-__all__ = ["wand_topk_batch", "ast_topk_batch"]
+__all__ = ["ast_topk_batch"]
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -62,117 +64,6 @@ def _hot_vocab(
     return {t for t, df in dfs.items() if df > max_broadcast_df}
 
 
-def _hot_results_df(spark, rows: list[tuple[int, int, int, float]]):
-    return spark.createDataFrame(rows, RESULT_SCHEMA)
-
-
-def wand_topk_batch(
-    blocks: DataFrame,
-    queries: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-    terms_col: str = "terms",
-    id_col: str = "query_id",
-    term_stats: DataFrame | None = None,
-    max_broadcast_df: int | None = None,
-) -> DataFrame:
-    """Score every query row (``query_id``, ``terms array<string>``)
-    against the block index; returns (query_id, rank, doc_id, score),
-    rank-identical to the serving path's :func:`wand_topk` per query.
-
-    With ``term_stats`` + ``max_broadcast_df``, queries containing a
-    hot term (df above the budget) are routed to the distributed
-    scorer (``router.py::bm25_topk_blocks``) instead of riding the
-    broadcast — one Spark job per hot query, driver traffic O(k).
-    Hot queries are assumed rare in a batch (they are the head of the
-    df distribution, not the head of the query distribution)."""
-    spark = blocks.sparkSession
-    vocab = sorted(
-        {
-            t
-            for r in queries.select(
-                F.explode_outer(terms_col).alias("t")
-            ).distinct().collect()
-            if (t := r["t"]) is not None
-        }
-    )
-    hot = _hot_vocab(term_stats, vocab, max_broadcast_df)
-    hot_part = None
-    if hot:
-        from .router import bm25_topk_blocks, term_dfs
-
-        # only the hot queries come to the driver (distributed filter)
-        hot_lit = F.array(*[F.lit(t) for t in sorted(hot)])
-        hot_rows = [
-            (r[id_col], list(r[terms_col]))
-            for r in queries.filter(
-                F.arrays_overlap(F.col(terms_col), hot_lit)
-            ).select(id_col, terms_col).collect()
-        ]
-        hot_ids = {qid for qid, _t in hot_rows}
-        out_rows: list[tuple[int, int, int, float]] = []
-        for qid, terms in hot_rows:
-            dfs = term_dfs(term_stats, sorted(set(terms)))
-            hits = bm25_topk_blocks(blocks, dfs, n_docs, avgdl, k)
-            out_rows.extend(
-                (int(qid), rank, int(d), float(s))
-                for rank, (d, s) in enumerate(hits, start=1)
-            )
-        hot_part = _hot_results_df(spark, out_rows)
-        queries = queries.filter(~F.col(id_col).isin(sorted(hot_ids)))
-        vocab = [t for t in vocab if t not in hot]
-    by_term = fetch_term_blocks(blocks, vocab)  # one pruned scan
-    # ship plain tuples, not _Block objects (smaller + no class pickle)
-    payload = {
-        t: ([(b.first_doc, b.doc_deltas, b.tfs, b.doc_lens, b.max_impact)
-             for b in blks], df)
-        for t, (blks, df) in by_term.items()
-    }
-    bc = spark.sparkContext.broadcast((payload, n_docs, avgdl, k))
-
-    def score(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        term_payload, n, adl, kk = bc.value
-        for pdf in batches:
-            qids, ranks, docs, scores = [], [], [], []
-            for qid, terms in zip(pdf[id_col], pdf[terms_col]):
-                cursors = []
-                for t in set(terms):
-                    entry = term_payload.get(t)
-                    if entry is None or entry[1] == 0:
-                        continue
-                    blks = [
-                        _Block(fd, bytes(dd), bytes(tf), bytes(dl), mi)
-                        for fd, dd, tf, dl, mi in entry[0]
-                    ]
-                    cursors.append(
-                        TermCursor(
-                            term=t,
-                            idf=lucene_idf(n, entry[1]),
-                            blocks=blks,
-                            avgdl=adl,
-                        )
-                    )
-                for rank, (d, s) in enumerate(wand_topk(cursors, kk), start=1):
-                    qids.append(int(qid))
-                    ranks.append(rank)
-                    docs.append(int(d))
-                    scores.append(float(s))
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(qids, dtype="int64"),
-                    "rank": pd.Series(ranks, dtype="int32"),
-                    "doc_id": pd.Series(docs, dtype="int64"),
-                    "score": pd.Series(scores, dtype="float64"),
-                }
-            )
-
-    cold = queries.select(id_col, terms_col).mapInPandas(score, RESULT_SCHEMA)
-    return cold.unionByName(hot_part) if hot_part is not None else cold
-
-
 def ast_topk_batch(
     blocks: DataFrame,
     queries: DataFrame,
@@ -190,8 +81,8 @@ def ast_topk_batch(
     per query), scored for a whole DataFrame of queries in ONE job.
 
     ``queries`` carries each query as its JSON rendering (Q6/Q7
-    round-trip format, ``ast.to_json``). Plan mirrors
-    :func:`wand_topk_batch`: the batch vocabulary is extracted
+    round-trip format, ``ast.to_json``; a disjunctive bag is
+    ``to_json(bag_ast(terms))``). The batch vocabulary is extracted
     DISTRIBUTED (one mapInPandas pass → distinct term collect, bounded
     by the batch's vocabulary, not its query count), ONE term-pruned
     fetch loads the union postings — with positions only if any query
@@ -264,14 +155,14 @@ def ast_topk_batch(
                 hits = distributed_ast_topk(ast, blocks, dfs, n_docs, avgdl, k)
             else:
                 # defensive: only an unknown node type is unroutable
-                # now (every Term/And/Or/Phrase shape routes) — keep
+                # now (every Term/And/Or/Sum/Phrase shape routes) — keep
                 # the driver fallback so new AST nodes degrade safely
                 hits = execute_ast(ast, blocks, term_stats, n_docs, avgdl, k)
             out_rows.extend(
                 (int(r["query_id"]), rank, int(d), float(s))
                 for rank, (d, s) in enumerate(hits, start=1)
             )
-        hot_part = _hot_results_df(spark, out_rows)
+        hot_part = spark.createDataFrame(out_rows, RESULT_SCHEMA)
         queries = queries.filter(~F.col(id_col).isin(sorted(hot_ids)))
         vocab = [t for t in vocab if t not in hot]
     by_term = fetch_term_blocks(blocks, vocab, with_positions=needs_positions)

@@ -1,15 +1,15 @@
 """AST executor: vectorized evaluation of boolean retrieval trees over
 decoded block postings (Q1–Q5 execution).
 
-This evaluator scores every query AST — Term, And, Or, DisMax, Phrase
-and must_not — on each term's decoded postings arrays. The serving
+This evaluator scores every driver query — Term, And, Or, Sum, DisMax,
+Phrase and must_not; a disjunctive bag of terms is a ``Sum``
+(``ast.bag_ast``) — on each term's decoded postings arrays. The serving
 path binds each term's cached ``wand.TermPostings`` entry straight to
 the term's idf (``wand.load_query_postings``), so it builds no
 ``TermCursor``, and a warm entry's docs and BM25 scores are arrays it
-already holds. Cursors remain for block-max WAND (``wand.py::wand_topk``,
-flat disjunctive bags whose postings exceed ``TAAT_MAX_BYTES``) and
-for callers that hold cursors already (``execute_ast_cursors``: the
-bulk executor).
+already holds. Callers that hold cursors already (the bulk executor,
+``wand.wand_topk``) bind their entries through
+:func:`execute_ast_cursors`.
 Scoring semantics are the engine spec documented in ``ast.py``.
 """
 
@@ -19,8 +19,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
-from .ast import And, DisMax, Not, Or, Phrase, Term, ast_shape, validate_ast
-from .wand import TermCursor, _top_k, _union, load_query_postings
+from .ast import And, DisMax, Not, Phrase, Sum, Term, ast_shape, validate_ast
+from .wand import TermCursor, load_query_postings
 
 __all__ = ["execute_ast", "execute_ast_cursors"]
 
@@ -62,6 +62,36 @@ def _intersect(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray, np
     return (short[hit], at[hit], hit) if swap else (short[hit], hit, at[hit])
 
 
+def _union(parts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Union of ``(sorted unique docs, scores)`` parts → (docs, each
+    doc's matching scores summed, their max). The sum adds the parts in
+    their order, starting from 0.0, so it is bit-equal to ``np.add.at``
+    over the parts' concatenation."""
+    if len(parts) == 1:
+        return parts[0][0], parts[0][1], parts[0][1]
+    docs = np.unique(np.concatenate([p[0] for p in parts]))
+    total = np.zeros(docs.size)
+    best = np.full(docs.size, -np.inf)
+    for p_docs, p_scores in parts:
+        i = np.searchsorted(docs, p_docs)
+        total[i] += p_scores
+        best[i] = np.maximum(best[i], p_scores)
+    return docs, total, best
+
+
+def _top_k(docs: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[int, float]]:
+    """The k best ``(doc_id, score)`` by (score desc, doc_id asc):
+    partition at the k-th score, keep every doc tied with it, then sort
+    only those candidates."""
+    if k <= 0 or docs.size == 0:
+        return []
+    if docs.size > k:
+        keep = scores >= np.partition(scores, docs.size - k)[docs.size - k]
+        docs, scores = docs[keep], scores[keep]
+    order = np.lexsort((docs, -scores))[:k]
+    return list(zip(docs[order].tolist(), scores[order].tolist()))
+
+
 def _phrase_docs(node: Phrase, bound: dict[str, tuple]) -> np.ndarray:
     """Docs holding every phrase term (``match_phrase(...).boost(0)``,
     DanawaSearchQueryBuilder.java:287-291) at positions that chain
@@ -90,6 +120,7 @@ def _evaluate(node, bound: dict[str, tuple], avgdl: float, scored: bool = True):
       adding in child order; each ``Not`` child removes its subtree's
       docs and adds nothing.
     * Or: the max over the matching children.
+    * Sum: the sum of the matching children, in child order.
     * DisMax: ``best + tb·(Σ matching − best)``, summed in child order.
     * Phrase: the position-checked docs, scoring 0.0.
 
@@ -130,6 +161,8 @@ def _evaluate(node, bound: dict[str, tuple], avgdl: float, scored: bool = True):
     if not scored:
         return np.unique(np.concatenate([p[0] for p in parts])), None
     docs, total, best = _union(parts)
+    if isinstance(node, Sum):
+        return docs, total
     if isinstance(node, DisMax):
         return docs, best + float(node.tie_breaker) * (total - best)
     return docs, best

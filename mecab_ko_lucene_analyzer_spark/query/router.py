@@ -1,8 +1,9 @@
 """High-df query routing: executor-side scoring for hot terms.
 
-The serving path (``wand.py``) collects the query terms' compressed
-blocks to the driver and runs block-max WAND there — the right shape
-for typical queries (a few terms × bounded df → a few MB, p95 ~40 ms).
+The serving path collects the query terms' compressed blocks to the
+driver (``wand.py``) and runs the AST evaluator there
+(``executor.py``) — the right shape for typical queries (a few terms ×
+bounded df → a few MB).
 But the reference's own hardcoded josa list
 (``KoreanWordExtractor.java:62``) says ultra-common particles ARE
 routine query terms, and at 10^12 docs a single josa-class term owns
@@ -17,18 +18,19 @@ query through a DISTRIBUTED scorer over the block table instead:
 1. one term-pruned scan of ``blocks`` (predicate pushdown on ``term``),
 2. ``mapInPandas`` decodes each block executor-side into vectorized
    (doc_id, partial BM25 score) arrays — the same varint/delta codec
-   and Lucene-BM25 arithmetic the driver cursors use,
+   and Lucene-BM25 arithmetic the driver evaluator uses,
 3. per-doc combination is a hash aggregate (map-side partial agg);
-   nested And/Or ASTs score via a term→score map column and a
-   driver-composed Column expression (And = sum, all required;
-   Or = max of matching children — the documented engine semantics),
+   every AST scores via a term→score map column and a driver-composed
+   Column expression (And = sum, all required; Or = max of matching
+   children; Sum = child-order sum of matching children, the
+   disjunctive bag — the documented engine semantics),
 4. top-k is ``orderBy.limit`` = per-partition TakeOrdered + driver
    merge of k rows.
 
 Driver traffic is therefore O(|query| + k) rows regardless of df —
-while scores stay rank-identical to the driver WAND path (same codec,
-same formula, same tie-break; property-tested in
-``tests/test_query_router.py``).
+while scores stay rank-identical to the driver evaluator (same codec,
+same formula, same tie-break, sums in the same order; property-tested
+in ``tests/test_query_router.py``).
 
 Phrase nodes (Q4) need cross-term position alignment. The reference's
 standard emitted query is ``AND(analyzed terms) + boost-0
@@ -37,13 +39,13 @@ term almost always arrives WITH a phrase sibling, and that shape must
 route too: :func:`phrase_match_docs` evaluates each top-level phrase
 as a distributed score-neutral filter (decode positions executor-side,
 one doc_id-keyed shuffle bounded by the phrase terms' df, the same
-``phrase_reach`` DP the driver cursors run), inner-joined against the
+``phrase_reach`` DP the driver evaluator runs), inner-joined against the
 scored docs. A Phrase nested ANYWHERE else (Or-nested multi-word
 synonym expansions, phrases inside nested conjunctions) routes through
 the general evaluator: each distinct Phrase becomes a boolean flag
 column (full-outer-joined doc sets from :func:`phrase_match_docs`) and
 the score expression renders it as ``when(flag, 0.0)`` — the boost-0
-semantics — so EVERY Term/And/Or/Phrase tree now evaluates fully
+semantics — so EVERY Term/And/Or/Sum/Phrase tree evaluates fully
 distributed; no query shape fetches blocks to the driver.
 """
 
@@ -56,12 +58,11 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame
 
-from .ast import And, DisMax, Not, Or, Phrase, Term, validate_ast
+from .ast import And, DisMax, Not, Or, Phrase, Sum, Term, validate_ast
 from .bm25 import bm25_partial, lucene_idf
 
 __all__ = [
     "term_dfs",
-    "bm25_topk_blocks",
     "distributed_ast_topk",
     "count_ast_blocks",
     "phrase_match_docs",
@@ -161,36 +162,10 @@ def _partials(
     return pruned.mapInPandas(_decode_stage(idf, avgdl), _PARTIAL_SCHEMA)
 
 
-def bm25_topk_blocks(
-    blocks: DataFrame,
-    dfs: dict[str, int],
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-) -> list[tuple[int, float]]:
-    """Distributed bag-of-terms BM25 over the block index (the
-    disjunctive serving semantics: per-doc SUM of matching terms).
-    One pruned scan → one hash aggregate → TakeOrdered; the driver
-    receives exactly k rows."""
-    parts = _partials(blocks, dfs, n_docs, avgdl)
-    rows = (
-        parts.groupBy("doc_id")
-        .agg(F.sum("partial").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .collect()
-    )
-    return [(r["doc_id"], r["score"]) for r in rows]
-
-
-def decoded_doc_ids(
-    blocks: DataFrame, terms: list[str], with_term: bool = False
-) -> DataFrame:
+def decoded_doc_ids(blocks: DataFrame, terms: list[str]) -> DataFrame:
     """Term-pruned block scan → decoded docID rows, executor-side —
-    the ONE docs-only varint/delta decode stage (shared by the Q8
-    count and the phrase rarest-term broadcast prune; the codec
-    contract lives here, not in per-caller closures). ``with_term``
-    rides the term string along for per-term set semantics."""
+    the docs-only varint/delta decode stage of the phrase rarest-term
+    broadcast prune."""
 
     def decode(batches: Iterator) -> Iterator:
         import numpy as np
@@ -199,44 +174,15 @@ def decoded_doc_ids(
         from ..index.codec import decode_block_arrays
 
         for pdf in batches:
-            docs_out, terms_out = [], []
-            for term, dd in zip(pdf["term"], pdf["doc_deltas"]):
-                docs = decode_block_arrays(bytes(dd))[0]
-                docs_out.append(docs)
-                if with_term:
-                    terms_out.extend([term] * len(docs))
+            docs_out = [decode_block_arrays(bytes(dd))[0] for dd in pdf["doc_deltas"]]
             if docs_out:
-                out = {"doc_id": np.concatenate(docs_out)}
-                if with_term:
-                    out["term"] = pd.Series(terms_out, dtype="object")
-                yield pd.DataFrame(out)
+                yield pd.DataFrame({"doc_id": np.concatenate(docs_out)})
 
-    schema = "doc_id bigint" + (", term string" if with_term else "")
     return (
         blocks.filter(F.col("term").isin(sorted(set(terms))))
-        .select("term", "doc_deltas")
-        .mapInPandas(decode, schema)
+        .select("doc_deltas")
+        .mapInPandas(decode, "doc_id bigint")
     )
-
-
-def match_count_blocks(
-    blocks: DataFrame, terms: list[str], conjunctive: bool = True
-) -> int:
-    """Distributed match count (Q8) over the block index: decode only
-    docIDs executor-side; conjunctive counts docs containing EVERY
-    term, disjunctive counts distinct matching docs. Driver receives
-    one row."""
-    uniq = sorted(set(terms))
-    if not uniq:
-        return 0
-    matched = decoded_doc_ids(blocks, uniq, with_term=True)
-    if conjunctive:
-        per_doc = matched.groupBy("doc_id").agg(
-            F.countDistinct("term").alias("nt")
-        )
-        row = per_doc.filter(F.col("nt") == len(uniq)).count()
-        return int(row)
-    return int(matched.select("doc_id").distinct().count())
 
 
 def _phrase_free(node) -> bool:
@@ -244,7 +190,7 @@ def _phrase_free(node) -> bool:
         return False
     if isinstance(node, Not):
         return _phrase_free(node.child)
-    if isinstance(node, (And, Or, DisMax)):
+    if isinstance(node, (And, Or, Sum, DisMax)):
         return all(_phrase_free(c) for c in node.children)
     return True
 
@@ -252,7 +198,7 @@ def _phrase_free(node) -> bool:
 def _has_not(node) -> bool:
     if isinstance(node, Not):
         return True
-    if isinstance(node, (And, Or, DisMax)):
+    if isinstance(node, (And, Or, Sum, DisMax)):
         return any(_has_not(c) for c in node.children)
     return False
 
@@ -288,7 +234,7 @@ def ast_routable(node) -> bool:
         return True
     if isinstance(node, Not):
         return ast_routable(node.child)
-    if isinstance(node, (And, Or, DisMax)):
+    if isinstance(node, (And, Or, Sum, DisMax)):
         return all(ast_routable(c) for c in node.children)
     return False
 
@@ -316,7 +262,7 @@ def phrase_match_docs(
     column included) → executor-side vectorized decode (segmented
     position cumsum, no per-posting Python) → ONE doc_id-keyed hash
     aggregate bounded by the phrase terms' df → per-doc
-    ``phrase_reach`` DP (the exact driver-cursor semantics) over only
+    ``phrase_reach`` DP (the exact driver-evaluator semantics) over only
     the docs that contain every phrase term. Driver traffic: zero —
     the result stays distributed for the caller's join.
 
@@ -435,15 +381,17 @@ def _ast_expr(node, scores, phrase_flags=None):
         return F.lit(None).cast("double")
     if isinstance(node, Or):
         return F.greatest(*children) if len(children) > 1 else children[0]
-    if isinstance(node, DisMax):
-        # any matching child matches; blend = max + tb*(sum - max).
-        # Non-matching children coalesce to +0.0 — an exact IEEE
-        # identity, so the driver tree (which sums only matching
-        # children) scores bit-for-bit the same.
+    if isinstance(node, (Sum, DisMax)):
+        # any matching child matches; Sum = the child-order sum, DisMax
+        # = max + tb*(sum - max). Non-matching children coalesce to
+        # +0.0 — an exact IEEE identity, so the driver evaluator (which
+        # sums only matching children) scores bit-for-bit the same.
         any_m = reduce(lambda a, b: a | b, (c.isNotNull() for c in children))
         cz = [F.coalesce(c, F.lit(0.0)) for c in children]
-        best = F.greatest(*cz) if len(cz) > 1 else cz[0]
         total = reduce(lambda a, b: a + b, cz)
+        if isinstance(node, Sum):
+            return F.when(any_m, total)
+        best = F.greatest(*cz) if len(cz) > 1 else cz[0]
         return F.when(
             any_m, best + F.lit(float(node.tie_breaker)) * (total - best)
         )
@@ -475,7 +423,7 @@ def _term_leaves(node) -> set[str]:
         return {node.term}
     if isinstance(node, Not):
         return _term_leaves(node.child)
-    if isinstance(node, (And, Or, DisMax)):
+    if isinstance(node, (And, Or, Sum, DisMax)):
         out: set[str] = set()
         for c in node.children:
             out |= _term_leaves(c)
@@ -491,7 +439,7 @@ def _collect_phrases(node, out: list) -> None:
             out.append(node)
     elif isinstance(node, Not):
         _collect_phrases(node.child, out)
-    elif isinstance(node, (And, Or, DisMax)):
+    elif isinstance(node, (And, Or, Sum, DisMax)):
         for c in node.children:
             _collect_phrases(c, out)
 
@@ -513,7 +461,7 @@ def _required_phrases(node, out: set, required: bool = True) -> None:
     elif isinstance(node, And):
         for c in node.children:
             _required_phrases(c, out, required)
-    elif isinstance(node, (Or, DisMax)):
+    elif isinstance(node, (Or, Sum, DisMax)):
         for c in node.children:
             _required_phrases(c, out, False)
 
@@ -644,8 +592,8 @@ def distributed_ast_topk(
     k: int = 10,
 ) -> list[tuple[int, float]]:
     """Distributed top-k over :func:`_scored_docs`. Rank-identical to
-    ``execute_ast``'s driver cursors on EVERY Term/And/Or/Phrase
-    shape (property-tested in ``tests/test_query_router.py``)."""
+    ``execute_ast`` on EVERY Term/And/Or/Sum/Phrase shape
+    (property-tested in ``tests/test_query_router.py``)."""
     scored = _scored_docs(ast, blocks, dfs, n_docs, avgdl)
     if scored is None:
         return []
@@ -664,7 +612,7 @@ def count_ast_blocks(
 ) -> int:
     """Distributed match count for a routable AST (Q8
     ``trackTotalHits`` over the FULL query tree — synonym Or-groups
-    and boost-0 phrase filters included, unlike the bag-of-terms
-    :func:`match_count_blocks`). One row to the driver."""
+    and boost-0 phrase filters included; a bag is a ``Sum``). One row
+    to the driver."""
     scored = _scored_docs(ast, blocks, dfs, n_docs, avgdl)
     return 0 if scored is None else int(scored.count())

@@ -1,20 +1,22 @@
-"""Driver-side postings access and bag-of-terms top-k (I7 query path).
+"""Driver-side postings access and the block-max WAND loop (I7 query
+path).
 
-The low-latency counterpart to the distributed scatter-gather scorer
-(``bm25.py``): query terms are few, so their block lists are fetched
-with a term-pruned read and scored on the driver. Every query AST is
-scored by the vectorized evaluator (``executor.py``) directly on each
-term's cached :class:`TermPostings`; a flat disjunctive bag takes the
-same union sum and top-k (:func:`_union`, :func:`_top_k`) in
-:func:`_taat_topk`, or, when its compressed postings exceed
-``TAAT_MAX_BYTES``, block-max WAND over :class:`TermCursor` s (Broder
-et al. 2003; block-max refinement, Ding & Suel 2011), where skipping
-beats decoding everything. Both must be rank-identical to the
-brute-force oracle — tested. The direct readers
-(:class:`DirectBlockReader`, :class:`DirectDocMapReader`,
-:class:`DirectTermStatsReader`) serve cache misses, df lookups and
-URL resolves from the local parquet files, with no Spark job, by
-bisecting footer ranges sorted once at open.
+The low-latency counterpart to the distributed scorer (``router.py``):
+query terms are few, so their block lists are fetched with a
+term-pruned read and scored on the driver. Every query — a disjunctive
+bag is a ``Sum`` AST (``ast.bag_ast``) — is scored by the vectorized
+evaluator (``executor.py``) directly on each term's cached
+:class:`TermPostings`, bound by :func:`load_query_postings`.
+:func:`wand_topk` keeps block-max WAND over :class:`TermCursor` s
+(Broder et al. 2003; block-max refinement, Ding & Suel 2011) for
+callers that hold cursors: a bag whose compressed postings exceed
+``TAAT_MAX_BYTES`` takes the skipping loop, a smaller one the
+evaluator. Both must be rank-identical to the brute-force oracle —
+tested. The direct readers (:class:`DirectBlockReader`,
+:class:`DirectDocMapReader`, :class:`DirectTermStatsReader`) serve
+cache misses, df lookups and URL resolves from the local parquet
+files, with no Spark job, by bisecting footer ranges sorted once at
+open.
 
 Tie-break: score desc, doc_id asc. WAND scores candidates in ascending
 docID order, so on equal scores the earlier (smaller) docID stays in
@@ -724,58 +726,6 @@ def load_query_cursors(
     ]
 
 
-def _decode_term_postings(c: TermCursor) -> tuple[np.ndarray, np.ndarray]:
-    """(docs, BM25 scores) of ALL of a cursor's postings: the term's
-    decoded arrays and their scores, each computed once per entry
-    (:meth:`TermPostings.scores`). Both are read-only."""
-    p = c.postings
-    return p.decode().docs, p.scores(c.idf, c.avgdl)
-
-
-def _union(parts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Union of ``(sorted unique docs, scores)`` parts → (docs, each
-    doc's matching scores summed, their max). The sum adds the parts in
-    their order, starting from 0.0, so it is bit-equal to ``np.add.at``
-    over the parts' concatenation."""
-    if len(parts) == 1:
-        return parts[0][0], parts[0][1], parts[0][1]
-    docs = np.unique(np.concatenate([p[0] for p in parts]))
-    total = np.zeros(docs.size)
-    best = np.full(docs.size, -np.inf)
-    for p_docs, p_scores in parts:
-        i = np.searchsorted(docs, p_docs)
-        total[i] += p_scores
-        best[i] = np.maximum(best[i], p_scores)
-    return docs, total, best
-
-
-def _top_k(docs: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[int, float]]:
-    """The k best ``(doc_id, score)`` by (score desc, doc_id asc):
-    partition at the k-th score, keep every doc tied with it, then sort
-    only those candidates."""
-    if k <= 0 or docs.size == 0:
-        return []
-    if docs.size > k:
-        keep = scores >= np.partition(scores, docs.size - k)[docs.size - k]
-        docs, scores = docs[keep], scores[keep]
-    order = np.lexsort((docs, -scores))[:k]
-    return list(zip(docs[order].tolist(), scores[order].tolist()))
-
-
-def _taat_topk(cursors: list[TermCursor], k: int) -> list[tuple[int, float]]:
-    """Vectorized exact term-at-a-time top-k: score every term's decoded
-    postings in one numpy expression, sum per doc in cursor order
-    (:func:`_union`), take the top-k. Rank-identical to the WAND loop
-    (both compute the exact BM25 sum in cursor order); ~100–1000×
-    faster per posting because no per-doc Python executes. Used when
-    the query's total compressed payload is bounded (see
-    ``wand_topk``) — the regime where decoding everything beats
-    skipping."""
-    docs, total, _ = _union([_decode_term_postings(c) for c in cursors])
-    keep = total > 0.0
-    return _top_k(docs[keep], total[keep], k)
-
-
 # Above this many compressed payload bytes (~= postings, deltas are
 # 1–2 bytes each) the skipping WAND loop takes over: decoding
 # everything stops being cheaper than skipping, and truly hot terms
@@ -793,11 +743,14 @@ def wand_topk(
     (a cache, a Spark scan's collect order, a broadcast payload), so a
     bag's float sum does not depend on the path or the process.
 
-    ``strategy``: ``"auto"`` (default) picks the vectorized exact TAAT
-    scorer for one term or when the query's total compressed payload
-    is under ``TAAT_MAX_BYTES``, and the document-at-a-time block-max
-    WAND loop otherwise; ``"wand"`` / ``"taat"`` force a path (tests
-    pin both rank-identical)."""
+    ``strategy``: ``"auto"`` (default) evaluates the bag as a ``Sum``
+    AST (``ast.bag_ast``) over the cursors' entries — the engine's one
+    driver scorer — for one term or when the query's total compressed
+    payload is under ``TAAT_MAX_BYTES``, and runs the
+    document-at-a-time block-max WAND loop otherwise; ``"wand"`` /
+    ``"taat"`` force a path (tests pin both rank-identical). The
+    engine serves every bag through the evaluator; this function
+    remains for callers that hold cursors."""
     cursors = sorted((c for c in cursors if not c.exhausted()), key=lambda c: c.term)
     if not cursors:
         return []
@@ -808,7 +761,12 @@ def wand_topk(
             or sum(c.postings.doc_bytes for c in cursors) <= TAAT_MAX_BYTES
         )
     ):
-        return _taat_topk(cursors, k)
+        from .ast import bag_ast
+        from .executor import execute_ast_cursors
+
+        return execute_ast_cursors(
+            bag_ast(c.term for c in cursors), {c.term: c for c in cursors}, k
+        )
     heap: list[tuple[float, int]] = []  # min-heap of (score, -doc_id)
 
     def theta() -> float:

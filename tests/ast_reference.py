@@ -5,7 +5,7 @@ states them, so the evaluator must match it bit for bit."""
 
 import itertools
 
-from mecab_ko_lucene_analyzer_spark.query.ast import And, DisMax, Not, Or, Phrase, Term
+from mecab_ko_lucene_analyzer_spark.query.ast import And, DisMax, Not, Or, Phrase, Sum, Term
 from mecab_ko_lucene_analyzer_spark.query.bm25 import lucene_idf
 
 K1, B = 1.2, 0.75
@@ -66,10 +66,12 @@ def ast_oracle(ast, postings, doc_lens, n_docs, avgdl, k=None, k1=K1, b=B):
         best = max(matching)
         if isinstance(node, Or):
             return best
-        assert isinstance(node, DisMax)
         total = 0.0
         for s in matching:
             total += s
+        if isinstance(node, Sum):
+            return total
+        assert isinstance(node, DisMax)
         return best + node.tie_breaker * (total - best)
 
     universe = sorted({d for occ in postings.values() for d in occ})

@@ -182,18 +182,22 @@ def test_resume_skips_completed_stages(spark, materialized):
 
 
 def test_batch_wand_rank_identical_to_serving(spark, materialized, blocks_df):
-    """Bulk retrieval (one Spark job, broadcast blocks) must return the
-    SAME ranked lists the serving path's per-query WAND returns."""
-    from mecab_ko_lucene_analyzer_spark.query import wand_topk_batch
+    """Bulk retrieval of disjunctive bags (one Spark job, broadcast
+    blocks, each bag sent as its ``Sum`` AST) must return the SAME
+    ranked lists the serving path's per-query bag top-k returns."""
+    from mecab_ko_lucene_analyzer_spark.query import ast_topk_batch
+    from mecab_ko_lucene_analyzer_spark.query.ast import bag_ast, to_json
     from mecab_ko_lucene_analyzer_spark.query.wand import load_query_cursors
 
     term_stats = spark.read.parquet(f"{BASE}/term_stats")
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
     n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
     batch = [(i, q) for i, q in enumerate(QUERIES)]
-    qdf = spark.createDataFrame(batch, "query_id long, terms array<string>")
+    qdf = spark.createDataFrame(
+        [(i, to_json(bag_ast(q))) for i, q in batch], "query_id long, query_json string"
+    )
     got = {}
-    for r in wand_topk_batch(blocks_df, qdf, n_docs, avgdl, k=7).collect():
+    for r in ast_topk_batch(blocks_df, qdf, n_docs, avgdl, k=7).collect():
         got.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
     for qid, terms in batch:
         cursors = load_query_cursors(blocks_df, term_stats, n_docs, avgdl, terms)
@@ -257,14 +261,12 @@ def test_batch_hot_term_routing(spark, materialized, blocks_df, monkeypatch):
     blocks are NEVER fetched for the broadcast payload, and the
     routed results stay rank-identical to the unrouted run."""
     import mecab_ko_lucene_analyzer_spark.query.batch as batch_mod
-    from mecab_ko_lucene_analyzer_spark.query import (
-        ast_topk_batch,
-        wand_topk_batch,
-    )
+    from mecab_ko_lucene_analyzer_spark.query import ast_topk_batch
     from mecab_ko_lucene_analyzer_spark.query.ast import (
         And,
         Phrase,
         Term,
+        bag_ast,
         to_json,
     )
 
@@ -287,15 +289,17 @@ def test_batch_hot_term_routing(spark, materialized, blocks_df, monkeypatch):
 
     hot_term = sorted(hot_terms)[0]
     bag = [(0, ["검색", "엔진"]), (1, [hot_term, "검색"])]
-    qdf = spark.createDataFrame(bag, "query_id long, terms array<string>")
+    qdf = spark.createDataFrame(
+        [(i, to_json(bag_ast(q))) for i, q in bag], "query_id long, query_json string"
+    )
     unrouted = {
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in wand_topk_batch(blocks_df, qdf, n_docs, avgdl, k=5).collect()
+        (r["query_id"], r["rank"], r["doc_id"], r["score"])
+        for r in ast_topk_batch(blocks_df, qdf, n_docs, avgdl, k=5).collect()
     }
     fetched.clear()
     routed = {
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in wand_topk_batch(
+        (r["query_id"], r["rank"], r["doc_id"], r["score"])
+        for r in ast_topk_batch(
             blocks_df, qdf, n_docs, avgdl, k=5,
             term_stats=term_stats, max_broadcast_df=budget,
         ).collect()

@@ -498,9 +498,11 @@ def test_phrase_positions_stay_inside_the_cache_byte_budget(spark, index_path):
 
 def test_warm_search_builds_no_cursor(spark, index_path, monkeypatch):
     """A repeated warm ``search``/``count`` over AND, OR, synonym and
-    phrase queries scores the cached entries directly: it builds no
-    ``TermCursor``, reads no block or df, and takes each doc_map row
-    group it resolves from the reader's cache once per search."""
+    phrase queries, and over disjunctive bags (``search(conjunctive=
+    False)``, ``search_prefix``, a disjunctive ``count``), scores the
+    cached entries directly: it builds no ``TermCursor``, reads no block
+    or df, and takes each doc_map row group it resolves from the
+    reader's cache once per search."""
     engine = SearchEngine(spark, index_path, _option())
     asts = [And((Term("데이터"), Phrase(("데이터", "처리")))), Or((Term("문서"), Term("색인")))]
 
@@ -510,6 +512,9 @@ def test_warm_search_builds_no_cursor(spark, index_path, monkeypatch):
             [_hits(engine.search_ast(ast, k=10)) for ast in asts],
             [engine.count(q, conjunctive=c) for q, c in (("검색 엔진", True), ("문서 색인", False))],
             engine.count_ast(asts[0]),
+            _hits(engine.search("데이터 처리", k=10, conjunctive=False)),
+            _hits(engine.search_prefix("데이", k=10)),
+            engine.count("데이터 처리", conjunctive=False),
         )
 
     first = run()
@@ -536,9 +541,11 @@ def test_warm_search_builds_no_cursor(spark, index_path, monkeypatch):
         }
         assert hits and sorted(calls) == sorted(holding)
     assert run() == first
+    assert all(first[4:6]) and first[6] > 0
     assert built == [] and reads == []
     assert engine.last_route == "driver"
-    # the guard really counts: a disjunctive bag (no synonym) still
-    # scores through cursors
-    engine.search("데이터 처리", k=10, conjunctive=False)
-    assert built
+    # the guard really counts: cursors over the same warm entries
+    load_query_cursors(
+        engine.blocks, None, engine.n_docs, engine.avgdl, ["데이터"], cache=engine.block_cache
+    )
+    assert built == ["데이터"]

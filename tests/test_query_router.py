@@ -14,16 +14,24 @@ from mecab_ko_lucene_analyzer_spark.analysis.tokenizer import token_records
 from mecab_ko_lucene_analyzer_spark.engine import SearchEngine
 from mecab_ko_lucene_analyzer_spark.index import build_and_write
 from mecab_ko_lucene_analyzer_spark.query import bm25_oracle
-from mecab_ko_lucene_analyzer_spark.query.ast import And, DisMax, Not, Or, Phrase, Term
+from mecab_ko_lucene_analyzer_spark.query.ast import (
+    And,
+    DisMax,
+    Not,
+    Or,
+    Phrase,
+    Sum,
+    Term,
+    bag_ast,
+)
 from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast
 from mecab_ko_lucene_analyzer_spark.query.router import (
     ast_routable,
-    bm25_topk_blocks,
+    count_ast_blocks,
     distributed_ast_topk,
-    match_count_blocks,
     term_dfs,
 )
-from mecab_ko_lucene_analyzer_spark.query.wand import load_query_cursors, wand_topk
+from mecab_ko_lucene_analyzer_spark.query.wand import load_query_cursors
 from mecab_ko_lucene_analyzer_spark.sources import synthesize_webpages
 
 N_DOCS = 120
@@ -55,15 +63,14 @@ def serving(spark, index_base):
 
 @pytest.mark.parametrize("terms", QUERIES, ids=["+".join(q) for q in QUERIES])
 def test_bm25_topk_blocks_rank_identical(spark, serving, terms):
+    """The distributed scorer over a disjunctive bag (its ``Sum``)
+    ranks like the brute-force oracle, and equals the driver evaluator
+    bit for bit: its Column sum adds the same partials in the same
+    order as the evaluator's union (the hot josa query included)."""
     blocks, term_stats, n_docs, avgdl = serving
     dfs = term_dfs(term_stats, terms)
-    got = bm25_topk_blocks(blocks, dfs, n_docs, avgdl, k=10)
-
-    cursors = load_query_cursors(blocks, term_stats, n_docs, avgdl, terms)
-    want = wand_topk(cursors, k=10)
-    assert [d for d, _ in got] == [d for d, _ in want]
-    for (_, s1), (_, s2) in zip(got, want):
-        assert s1 == pytest.approx(s2, abs=1e-9)
+    got = distributed_ast_topk(bag_ast(terms), blocks, dfs, n_docs, avgdl, k=10)
+    assert got == execute_ast(bag_ast(terms), blocks, term_stats, n_docs, avgdl, k=10)
 
     pages = synthesize_webpages(spark, N_DOCS, partitions=5)
     rows = sorted(pages.select("url", "text").collect(), key=lambda r: r["url"])
@@ -121,6 +128,12 @@ ASTS = [
     And((Term("데이터"), DisMax((Term("검색"), Term("엔진")), tie_breaker=0.7))),
     DisMax((Phrase(("데이터", "처리")), Term("검색")), tie_breaker=0.4),
     DisMax((Term("는"), Term("데이터")), tie_breaker=0.2),
+    # Sum (bool.should): a bag with the hot josa, nested under And,
+    # beside a phrase (general flag plan) and beside a must_not
+    Sum((Term("검색"), Term("는"), Term("데이터"))),
+    And((Sum((Term("검색"), Term("엔진"))), Term("데이터"))),
+    Sum((Phrase(("데이터", "처리")), Term("검색"))),
+    And((Sum((Term("데이터"), Term("시스템"))), Not(Term("검색")))),
 ]
 
 
@@ -254,6 +267,8 @@ def test_phrase_match_docs_pruning_is_transparent(spark, serving):
 
 
 def test_match_count_blocks(spark, serving):
+    """The distributed count of an And / Sum of terms equals the size
+    of the decoded doc sets' intersection / union."""
     blocks, term_stats, n_docs, avgdl = serving
     terms = ["데이터", "처리"]
     import numpy as np
@@ -271,13 +286,14 @@ def test_match_count_blocks(spark, serving):
             ]
         )
         sets.append(set(int(d) for d in docs))
-    assert match_count_blocks(blocks, terms, conjunctive=True) == len(
-        sets[0] & sets[1]
-    )
-    assert match_count_blocks(blocks, terms, conjunctive=False) == len(
-        sets[0] | sets[1]
-    )
-    assert match_count_blocks(blocks, [], conjunctive=True) == 0
+    dfs = term_dfs(term_stats, terms)
+
+    def count(ast):
+        return count_ast_blocks(ast, blocks, dfs, n_docs, avgdl)
+
+    assert count(And(tuple(Term(t) for t in terms))) == len(sets[0] & sets[1])
+    assert count(bag_ast(terms)) == len(sets[0] | sets[1])
+    assert count(And(())) == 0 and count(Sum(())) == 0
 
 
 @pytest.fixture(scope="module")
@@ -314,7 +330,7 @@ def test_hot_search_routes_distributed_same_results(engines, monkeypatch):
         assert hot.last_route == "distributed", text
         assert [h["doc_id"] for h in got] == [h["doc_id"] for h in want], text
         for g, w in zip(got, want):
-            assert g["score"] == pytest.approx(w["score"], abs=1e-9)
+            assert g["score"] == w["score"], text
             assert g["url"] == w["url"]
 
 
@@ -373,10 +389,11 @@ def test_hot_multiword_synonym_routes_distributed(engines, monkeypatch):
 def test_hot_expansion_queries_route_distributed(engines, monkeypatch):
     """Round-5: the multi-term REWRITE family (prefix / fuzzy /
     wildcard / regexp) expands against the vocabulary then serves the
-    expansion set through ``_bag_hits`` — when ANY expanded term is
-    hot (a one-char prefix or ``는*`` hits the josa class), the hot
-    engine must answer fully distributed (no driver block fetch) with
-    exactly the cold engine's ranked hits."""
+    expansion set as a disjunctive bag (``bag_ast``) — when ANY
+    expanded term is hot (a one-char prefix or ``는*`` hits the josa
+    class), the hot engine must answer fully distributed (no driver
+    block fetch) with exactly the cold engine's ranked hits and
+    scores."""
     cold, hot = engines
 
     cases = [
@@ -407,7 +424,7 @@ def test_hot_expansion_queries_route_distributed(engines, monkeypatch):
             h["doc_id"] for h in want
         ], name
         for g, w in zip(got, want):
-            assert g["score"] == pytest.approx(w["score"], abs=1e-9)
+            assert g["score"] == w["score"], name
 
 
 # ---------- hypothesis: random trees, distributed vs driver ---------------
@@ -430,6 +447,7 @@ _ast_st = st.recursive(
     lambda ch: st.one_of(
         st.builds(lambda cs: And(tuple(cs)), st.lists(ch, min_size=1, max_size=3)),
         st.builds(lambda cs: Or(tuple(cs)), st.lists(ch, min_size=1, max_size=3)),
+        st.builds(lambda cs: Sum(tuple(cs)), st.lists(ch, min_size=1, max_size=3)),
     ),
     max_leaves=5,
 )

@@ -7,6 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mecab_ko_lucene_analyzer_spark.index.codec import encode_block, encode_varints
+from mecab_ko_lucene_analyzer_spark.query.ast import And, DisMax, Or, Sum, Term
 from mecab_ko_lucene_analyzer_spark.query.bm25 import lucene_idf
 from mecab_ko_lucene_analyzer_spark.query.wand import TermCursor, _Block, wand_topk
 
@@ -113,9 +114,10 @@ def test_wand_rank_identical_on_random_postings(data):
 
 @st.composite
 def and_or_asts(draw):
-    """Random AND-of-groups ASTs over the corpus's term universe:
-    each group is a Term, a synonym Or or a DisMax, possibly
-    referencing terms absent from the postings (empty branches)."""
+    """Random AND- or SUM-of-groups ASTs over the corpus's term
+    universe: each group is a Term, a synonym Or, a Sum (a disjunctive
+    bag) or a DisMax, possibly referencing terms absent from the
+    postings (empty branches)."""
     corpus = draw(corpora())
     n_docs, doc_lens, postings, _query, k, block_size = corpus
     universe = sorted(postings) + ["missing1", "missing2"]
@@ -127,9 +129,10 @@ def and_or_asts(draw):
                 st.sampled_from(universe), min_size=1, max_size=3, unique=True
             )
         )
-        tie_breaker = draw(st.sampled_from([None, 0.0, 0.3, 1.0]))
-        groups.append((members, tie_breaker))
-    return n_docs, doc_lens, postings, groups, k, block_size
+        kind = draw(st.sampled_from(["or", "sum", 0.0, 0.3, 1.0]))
+        groups.append((members, kind))
+    top = draw(st.sampled_from([And, Sum]))
+    return n_docs, doc_lens, postings, groups, top, k, block_size
 
 
 @settings(max_examples=200, deadline=None)
@@ -137,18 +140,17 @@ def and_or_asts(draw):
 def test_and_or_evaluator_matches_brute_force(data):
     """The AST evaluator equals the pure-Python scoring spec — docs,
     ranks and bit-identical scores — over arbitrary random postings
-    and random AND-of-(Term|Or|DisMax) shapes, including groups whose
-    terms have no postings at all; and its count is the spec's full
-    match-set size."""
+    and random AND/SUM-of-(Term|Or|Sum|DisMax) shapes, including groups
+    whose terms have no postings at all; and its count is the spec's
+    full match-set size."""
     from ast_reference import ast_oracle
 
-    from mecab_ko_lucene_analyzer_spark.query.ast import And, DisMax, Or, Term
     from mecab_ko_lucene_analyzer_spark.query.executor import (
         count_ast_cursors,
         execute_ast_cursors,
     )
 
-    n_docs, doc_lens, postings, groups, k, block_size = data
+    n_docs, doc_lens, postings, groups, top, k, block_size = data
     avgdl = sum(doc_lens) / n_docs
 
     def cursors():
@@ -159,17 +161,15 @@ def test_and_or_evaluator_matches_brute_force(data):
                 out[t] = c
         return out
 
-    def node(members, tie_breaker):
+    def node(members, kind):
         if len(members) == 1:
             return Term(members[0])
         terms = tuple(Term(m) for m in members)
-        return Or(terms) if tie_breaker is None else DisMax(terms, tie_breaker)
+        if kind == "or":
+            return Or(terms)
+        return Sum(terms) if kind == "sum" else DisMax(terms, kind)
 
-    ast = (
-        node(*groups[0])
-        if len(groups) == 1
-        else And(tuple(node(*g) for g in groups))
-    )
+    ast = node(*groups[0]) if len(groups) == 1 else top(tuple(node(*g) for g in groups))
     spec_postings = {
         t: {d: [0] * tf for d, tf in tfs.items()} for t, tfs in postings.items()
     }
