@@ -2418,12 +2418,10 @@ def _q_phrase_match(spark, sf_dir):
     from mecab_ko_lucene_analyzer_spark.query.ast import Phrase
     from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast
 
-    blocks, term_stats, n, avgdl = _ws_block_index(spark, sf_dir)
+    blocks, _, n, avgdl = _ws_block_index(spark, sf_dir)
     rows = []
     for terms in PHRASE_QUERIES:
-        hits = execute_ast(
-            Phrase(tuple(terms)), blocks, term_stats, n, avgdl, k=n
-        )
+        hits = execute_ast(Phrase(tuple(terms)), blocks, n, avgdl, k=n)
         rows.extend((" ".join(terms), int(d)) for d, _ in hits)
     return spark.createDataFrame(rows, "phrase string, doc_id long")
 
@@ -2591,11 +2589,11 @@ def _q_synonym_or_topk(spark, sf_dir):
     from mecab_ko_lucene_analyzer_spark.query.ast import And, Or, Term
     from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast
 
-    blocks, term_stats, n, avgdl = _ws_block_index(spark, sf_dir)
+    blocks, _, n, avgdl = _ws_block_index(spark, sf_dir)
     ast = And(
         (Or(tuple(Term(t) for t in SYNONYM_GROUP)), Term(SYNONYM_REQUIRED))
     )
-    hits = execute_ast(ast, blocks, term_stats, n, avgdl, k=SYNONYM_K)
+    hits = execute_ast(ast, blocks, n, avgdl, k=SYNONYM_K)
     rows = [(i + 1, int(d), round(s, 6)) for i, (d, s) in enumerate(hits)]
     return spark.createDataFrame(rows, "rank int, doc_id long, score double")
 
@@ -2752,9 +2750,9 @@ def _q_scroll_page(spark, sf_dir):
     from mecab_ko_lucene_analyzer_spark.query.ast import bag_ast
     from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast
 
-    blocks, term_stats, n, avgdl = _ws_block_index(spark, sf_dir)
+    blocks, _, n, avgdl = _ws_block_index(spark, sf_dir)
     fetch = SCROLL_OFFSET + SCROLL_PAGE_K
-    hits = execute_ast(bag_ast(BM25_QUERY), blocks, term_stats, n, avgdl, fetch)
+    hits = execute_ast(bag_ast(BM25_QUERY), blocks, n, avgdl, fetch)
     hits = hits[SCROLL_OFFSET:]
     rows = [
         (SCROLL_OFFSET + i + 1, int(d), round(s, 6))

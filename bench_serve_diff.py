@@ -11,8 +11,13 @@ replies of each disjunctive-bag API, one line each tagged with the API
 name: ``search(conjunctive=False)`` over the same stream's texts,
 ``search_prefix`` (a drawn noun's first syllable), ``search_fuzzy``
 (the noun), ``search_regexp`` (first syllable + ``.*``) and
-``search_wildcard`` (first syllable + ``*``). ``score.hex()`` keeps
-every bit of the float, so equal files mean bit-identical replies.
+``search_wildcard`` (first syllable + ``*``). Then, over the same 300
+bag texts, one line each of ``count`` with ``conjunctive=True`` and
+``False``, of ``wand_topk`` over ``load_query_cursors`` of the text's
+analyzed terms bound through the engine's block cache, and of one
+``search_bulk(conjunctive=False)`` over all of them (a line per query,
+in text order). ``score.hex()`` keeps every bit of the float, so equal
+files mean bit-identical replies.
 
     python bench_serve_diff.py --seed 952 --queries 3000 --query-seed 811 --out new.jsonl
     (in the other checkout, same arguments) --out old.jsonl
@@ -48,6 +53,7 @@ def main() -> None:
     from mecab_ko_lucene_analyzer_spark.engine import SearchEngine
     from mecab_ko_lucene_analyzer_spark.index import build_and_write
     from mecab_ko_lucene_analyzer_spark.plans import get_spark
+    from mecab_ko_lucene_analyzer_spark.query.wand import load_query_cursors, wand_topk
     from perfbench.workloads import (
         HOT_NOUNS,
         OPEN_QUERY,
@@ -84,15 +90,21 @@ def main() -> None:
             tags["hits"] = [[h["doc_id"], float(h["score"]).hex(), h["url"]] for h in hits]
             return json.dumps(tags, ensure_ascii=False) + "\n"
 
+        def ranked(hits, **tags) -> str:
+            tags["hits"] = [[int(d), float(s).hex()] for d, s in hits]
+            return json.dumps(tags, ensure_ascii=False) + "\n"
+
         stream = query_stream(random.Random(args.query_seed), nouns)
         with open(args.out, "w") as f:
             for _ in range(args.queries):
                 text = next(stream)[1]
                 f.write(line(engine.search(text, k=10), text=text))
             bags = query_stream(random.Random(f"bag-{args.query_seed}"), nouns)
+            bag_texts = [next(bags)[1] for _ in range(300)]
+            texts = iter(bag_texts)
             rng = random.Random(f"noun-{args.query_seed}")
             apis = {
-                "search": lambda: (next(bags)[1], {"conjunctive": False}),
+                "search": lambda: (next(texts), {"conjunctive": False}),
                 "search_prefix": lambda: (rng.choice(nouns)[0], {}),
                 "search_fuzzy": lambda: (rng.choice(nouns), {}),
                 "search_regexp": lambda: (rng.choice(nouns)[0] + ".*", {}),
@@ -102,6 +114,24 @@ def main() -> None:
                 for _ in range(300):
                     arg, kw = draw()
                     f.write(line(getattr(engine, api)(arg, k=10, **kw), api=api, text=arg))
+            for conjunctive in (True, False):
+                for text in bag_texts:
+                    n = engine.count(text, conjunctive=conjunctive)
+                    f.write(json.dumps({"api": "count", "conjunctive": conjunctive,
+                                        "text": text, "count": n}, ensure_ascii=False) + "\n")
+            for text in bag_texts:
+                terms = [t["term"] for t in engine.analyze(text)]
+                cursors = load_query_cursors(
+                    engine.blocks, engine.term_stats, engine.n_docs, engine.avgdl, terms,
+                    cache=engine.block_cache,
+                )
+                f.write(ranked(wand_topk(cursors, k=10), api="wand_topk", text=text))
+            bulk: dict[int, list] = {}
+            for r in engine.search_bulk(bag_texts, k=10, conjunctive=False).collect():
+                bulk.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
+            for i, text in enumerate(bag_texts):
+                hits = [(d, s) for _, d, s in sorted(bulk.get(i, []))]
+                f.write(ranked(hits, api="search_bulk", text=text))
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)

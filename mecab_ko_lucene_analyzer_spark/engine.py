@@ -13,19 +13,33 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .analysis.dictionary import AnalyzerOption, analyze_query
 from .index.build import build_and_write
-from .query.ast import And, Term, ast_shape, bag_ast, build_query_ast, to_json
+from .query.ast import (
+    And,
+    Sum,
+    Term,
+    ast_shape,
+    bag_ast,
+    build_query_ast,
+    to_json,
+    token_ast,
+)
 from .query.executor import execute_ast
-from .query.router import ast_routable, distributed_ast_topk
+from .query.router import distributed_ast_topk
 
 __all__ = ["SearchEngine"]
 
 
 def _query_ast(tokens: list[dict], conjunctive: bool, exclude_tokens=None):
-    """The AST ``search`` serves for analyzed ``tokens``: the analyzed
-    query's AST when conjunctive or synonym-bearing, else the
-    disjunctive bag's ``Sum`` (``bag_ast``)."""
-    if conjunctive or any(t.get("synonyms") for t in tokens):
+    """The one AST ``search``, ``count`` and ``search_bulk`` serve for
+    analyzed ``tokens``: the analyzed query's ``And`` when conjunctive;
+    else the ``Sum`` of the distinct per-token subtrees (a token's
+    synonyms in an ``Or`` group) when a token has synonyms, and the
+    disjunctive bag's ``Sum`` of its distinct terms (``bag_ast``)
+    otherwise."""
+    if conjunctive:
         return build_query_ast(tokens, exclude_tokens)
+    if any(t.get("synonyms") for t in tokens):
+        return Sum(tuple(dict.fromkeys(token_ast(t) for t in tokens)))
     return bag_ast(t["term"] for t in tokens)
 
 
@@ -261,11 +275,10 @@ class SearchEngine:
     def _route_distributed(self, ast, dfs: dict[str, int]) -> bool:
         """The one routing decision (shared by search and count): hot
         queries — any term's df above ``max_driver_df`` — go
-        distributed; EVERY Term/And/Or/Sum/Phrase shape routes
-        (router.py; nested phrases evaluate as distributed flag
-        columns). Sets ``last_route`` as the tested diagnostic."""
-        hot = any(df > self.max_driver_df for df in dfs.values())
-        routed = hot and ast_routable(ast)
+        distributed; every AST shape routes (router.py; nested phrases
+        evaluate as distributed flag columns). Sets ``last_route`` as
+        the tested diagnostic."""
+        routed = any(df > self.max_driver_df for df in dfs.values())
         self.last_route = "distributed" if routed else "driver"
         return routed
 
@@ -279,13 +292,7 @@ class SearchEngine:
                 ast, self.blocks, dfs, self.n_docs, self.avgdl, fetch
             )
         return execute_ast(
-            ast,
-            self.blocks,
-            self.term_stats,
-            self.n_docs,
-            self.avgdl,
-            fetch,
-            cache=self.block_cache,
+            ast, self.blocks, self.n_docs, self.avgdl, fetch, cache=self.block_cache
         )
 
     def _resolve(self, hits: list[tuple[int, float]]) -> list[dict]:
@@ -1110,9 +1117,9 @@ class SearchEngine:
         """Bulk retrieval (the training-data shape: hard-negative
         mining, relevance distillation, eval sweeps): analyze every
         query through the SAME chain ``search`` uses and build the same
-        AST — the analyzed query's AST for conjunctive/synonym queries
-        (phrases included), the ``Sum`` of its terms (``bag_ast``) for
-        a disjunctive bag — then score the whole batch in ONE Spark job
+        AST (``_query_ast``: the analyzed query's ``And`` when
+        conjunctive, phrases included; a disjunctive query's ``Sum``)
+        — then score the whole batch in ONE Spark job
         (``ast_topk_batch``). Rank-identical per query to the driver
         serving path by construction (both run the same AST evaluator,
         executor-side here). Returns a DataFrame
@@ -1148,7 +1155,7 @@ class SearchEngine:
         over the full tree — synonym Or-groups and boost-0 phrase
         filters included, the reference's count semantics for its own
         emitted query shape). ``query`` is an AST node or its Q6 JSON
-        rendering. Hot routable queries count distributed (one row to
+        rendering. Hot queries count distributed (one row to
         the driver); everything else runs the driver AST evaluator."""
         from .query.ast import ast_terms, from_json
         from .query.executor import count_ast as exec_count_ast
@@ -1164,51 +1171,49 @@ class SearchEngine:
                 ast, self.blocks, dfs, self.n_docs, self.avgdl
             )
         return exec_count_ast(
-            ast,
-            self.blocks,
-            self.term_stats,
-            self.n_docs,
-            self.avgdl,
-            cache=self.block_cache,
+            ast, self.blocks, self.n_docs, self.avgdl, cache=self.block_cache
         )
 
     def count(
         self, text: str, conjunctive: bool = True, exclude: str | None = None
     ) -> int:
-        """Match count (Q8 ``trackTotalHits`` equivalent), served from
-        the block index — never the row-postings table:
+        """Match count (Q8 ``trackTotalHits`` equivalent) of the AST
+        :meth:`search` serves for the same arguments (``_query_ast``:
+        synonym groups included), served from the block index — never
+        the row-postings table:
 
-        * single term: its df from the df lookup (:meth:`_dfs`) —
-          no block fetch, no decode;
-        * multi term: 0 when a conjunctive term is absent (before any
-          block fetch), else :meth:`count_ast` of an ``And`` (or, for
-          a disjunctive count, the ``Sum``) of the terms — the driver
-          evaluator's match set (one term-pruned read at most, each
-          cache entry decodes once), or the distributed count when a
-          term is hot.
+        * one term with no synonyms: its df from the df lookup
+          (:meth:`_dfs`) — no block fetch, no decode;
+        * 0 when a conjunctive query's bare term (one without
+          synonyms) is absent — decided by the same df lookup;
+        * else :meth:`count_ast` of that AST — the driver evaluator's
+          match set (one term-pruned read at most, each cache entry
+          decodes once), or the distributed count when a term is hot.
 
-        ``exclude`` text counts with must_not semantics through the
-        full AST evaluator (:meth:`count_ast` — conjunctive only, the
+        ``exclude`` text adds must_not clauses (conjunctive only, the
         :meth:`search` contract).
 
         Round 1 ran a groupBy over the full row-postings parquet per
         call — an avoidable whole-table scan at serving time."""
-        if exclude:
-            if not conjunctive:
-                raise ValueError(
-                    "exclude requires conjunctive=True (the reference's"
-                    " Q1 AND-over-tokens semantics)"
-                )
-            if not self.analyze(text):
-                return 0
-            return self.count_ast(self.build_query(text, exclude))
+        if exclude and not conjunctive:
+            raise ValueError(
+                "exclude requires conjunctive=True (the reference's"
+                " Q1 AND-over-tokens semantics)"
+            )
         tokens = self.analyze(text)
         if not tokens:
             return 0
-        terms = sorted({t["term"] for t in tokens})
-        ast = And(tuple(Term(t) for t in terms)) if conjunctive else bag_ast(terms)
+        excl = self.analyze(exclude) if exclude else None
+        ast = _query_ast(tokens, conjunctive, excl)
+        terms, phrase = ast_shape(ast)
         dfs = self._dfs(terms)
-        if len(terms) == 1 or (conjunctive and 0 in dfs.values()):
-            self._route_distributed(ast, dfs)  # the route the count stands for
-            return dfs[terms[0]] if len(terms) == 1 else 0
-        return self.count_ast(ast)
+        if len(terms) == 1 and not phrase and not excl:
+            n = dfs[terms[0]]
+        elif isinstance(ast, And) and any(
+            isinstance(c, Term) and dfs[c.term] == 0 for c in ast.children
+        ):
+            n = 0
+        else:
+            return self.count_ast(ast)
+        self._route_distributed(ast, dfs)  # the route the count stands for
+        return n

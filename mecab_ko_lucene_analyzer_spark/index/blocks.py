@@ -18,14 +18,16 @@ layout (first doc absolute, then gaps; ``pos_deltas`` is the per-doc
 delta+varint position bytes back to back), so re-blocking slices the
 position payloads instead of re-encoding them.
 
-``doc_lens`` (varint per doc) makes WAND scoring self-contained: the
+``doc_lens`` (varint per doc) makes block scoring self-contained: the
 exact BM25 impact is recomputable from (tf, doc_len, avgdl) without a
 doc-stats lookup per candidate.
 
 ``block_max_impact`` is the block's max of the document-dependent BM25
 factor, ``query/bm25.py::bm25_partial`` at idf 1.0 — so a block's
-score upper bound for WAND is ``idf(term) * block_max_impact``
-(classic Block-Max WAND, Ding & Suel 2011).
+score upper bound is ``idf(term) * block_max_impact`` (the block-max
+metadata of Ding & Suel 2011). The driver's bag top-k bounds each
+term by its largest block bound (``query/executor.py::_bag_top_k``,
+MaxScore).
 
 Skew handling (I4): hot terms (df above a corpus-share threshold — in
 Korean web text exactly the josa/particle terms the reference hardcodes,

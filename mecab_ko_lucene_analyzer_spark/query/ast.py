@@ -39,6 +39,7 @@ __all__ = [
     "Not",
     "build_query_ast",
     "bag_ast",
+    "token_ast",
     "ast_terms",
     "ast_shape",
     "to_json",
@@ -116,9 +117,9 @@ class Not:
 
 def validate_ast(node) -> None:
     """Raise ``ValueError`` on malformed ``Not`` placement (see
-    :class:`Not`). Called by both evaluators' entry points so the
-    driver evaluator and the distributed scorer reject exactly the
-    same shapes."""
+    :class:`Not`) and on a node that is none of this module's types.
+    Called by both evaluators' entry points so the driver evaluator
+    and the distributed scorer reject exactly the same shapes."""
 
     def no_not(n):
         if isinstance(n, Not):
@@ -129,6 +130,8 @@ def validate_ast(node) -> None:
         if isinstance(n, (And, Or, Sum, DisMax)):
             for c in n.children:
                 no_not(c)
+        elif not isinstance(n, (Term, Phrase)):
+            raise ValueError(f"unknown query node: {n!r}")
 
     def walk(n):
         if isinstance(n, Not):
@@ -152,6 +155,8 @@ def validate_ast(node) -> None:
             # no exclusion slot: every child must be a positive clause
             for c in n.children:
                 walk(c)
+        elif not isinstance(n, (Term, Phrase)):
+            raise ValueError(f"unknown query node: {n!r}")
 
     walk(node)
 
@@ -173,23 +178,24 @@ def build_query_ast(
     subtree is an AND refinement; negating it would exclude docs merely
     for containing the refinement words together).
     """
-
-    def token_node(tok, with_extras: bool) -> object:
-        node: object = Term(tok["term"])
-        syns = tok.get("synonyms") or []
-        extras = (tok.get("extra_terms") or []) if with_extras else []
-        alts = [node]
-        for s in syns:
-            words = s.split()
-            alts.append(Phrase(tuple(words)) if len(words) > 1 else Term(s))
-        if extras:
-            alts.append(And(tuple(Term(e) for e in extras)))
-        return alts[0] if len(alts) == 1 else Or(tuple(alts))
-
-    clauses = [token_node(tok, True) for tok in analyzed_tokens]
+    clauses = [token_ast(tok) for tok in analyzed_tokens]
     for tok in exclude_tokens or []:
-        clauses.append(Not(token_node(tok, False)))
+        clauses.append(Not(token_ast(tok, with_extras=False)))
     return And(tuple(clauses))
+
+
+def token_ast(tok: dict, with_extras: bool = True):
+    """One analyzed token's subtree: its Term, or an ``Or`` of the term,
+    its synonyms (a multi-word synonym as a Phrase) and, with
+    ``with_extras``, the ``And`` of its extra terms."""
+    alts: list = [Term(tok["term"])]
+    for s in tok.get("synonyms") or []:
+        words = s.split()
+        alts.append(Phrase(tuple(words)) if len(words) > 1 else Term(s))
+    extras = (tok.get("extra_terms") or []) if with_extras else []
+    if extras:
+        alts.append(And(tuple(Term(e) for e in extras)))
+    return alts[0] if len(alts) == 1 else Or(tuple(alts))
 
 
 def bag_ast(terms) -> Sum:

@@ -11,7 +11,8 @@ single job. Plan:
    vocabularies are small relative to the index — that is what makes
    the broadcast feasible),
 2. broadcast the per-term block payloads to the executors,
-3. ``mapInPandas`` over the queries table — each executor runs the
+3. ``mapInPandas`` over the queries table — each task binds every
+   broadcast term its queries need to one ``TermPostings`` and runs the
    SAME AST evaluator the serving path runs (rank-identical by
    construction), embarrassingly parallel per query. Every query is an
    AST in its JSON rendering; a disjunctive bag is a ``Sum``
@@ -32,7 +33,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 from .bm25 import lucene_idf
-from .wand import TermCursor, _Block, fetch_term_blocks
+from .wand import TermPostings, fetch_term_blocks
 
 __all__ = ["ast_topk_batch"]
 
@@ -87,10 +88,11 @@ def ast_topk_batch(
     by the batch's vocabulary, not its query count), ONE term-pruned
     fetch loads the union postings — with positions only if any query
     contains a phrase — and the broadcast payload feeds the SAME
-    per-executor ``execute_ast_cursors`` evaluation the serving path
-    runs (rank-identical by construction)."""
+    evaluator the serving path runs, per executor task
+    (:func:`_score_queries`; rank-identical by construction). A hot
+    query (a term's df above ``max_broadcast_df``) takes the
+    distributed scorer instead."""
     from .ast import ast_shape, ast_terms, from_json
-    from .executor import execute_ast_cursors
 
     spark = blocks.sparkSession
 
@@ -120,8 +122,7 @@ def ast_topk_batch(
     hot = _hot_vocab(term_stats, vocab, max_broadcast_df)
     hot_part = None
     if hot:
-        from .executor import execute_ast
-        from .router import ast_routable, distributed_ast_topk, term_dfs
+        from .router import distributed_ast_topk, term_dfs
 
         # flag hot queries DISTRIBUTED (the parse runs executor-side);
         # only those rows come to the driver
@@ -151,13 +152,7 @@ def ast_topk_batch(
         for r in hot_rows:
             ast = from_json(r["query_json"])
             dfs = term_dfs(term_stats, sorted(ast_terms(ast)))
-            if ast_routable(ast):
-                hits = distributed_ast_topk(ast, blocks, dfs, n_docs, avgdl, k)
-            else:
-                # defensive: only an unknown node type is unroutable
-                # now (every Term/And/Or/Sum/Phrase shape routes) — keep
-                # the driver fallback so new AST nodes degrade safely
-                hits = execute_ast(ast, blocks, term_stats, n_docs, avgdl, k)
+            hits = distributed_ast_topk(ast, blocks, dfs, n_docs, avgdl, k)
             out_rows.extend(
                 (int(r["query_id"]), rank, int(d), float(s))
                 for rank, (d, s) in enumerate(hits, start=1)
@@ -165,59 +160,56 @@ def ast_topk_batch(
         hot_part = spark.createDataFrame(out_rows, RESULT_SCHEMA)
         queries = queries.filter(~F.col(id_col).isin(sorted(hot_ids)))
         vocab = [t for t in vocab if t not in hot]
-    by_term = fetch_term_blocks(blocks, vocab, with_positions=needs_positions)
-    payload = {
-        t: (
-            [
-                (b.first_doc, b.doc_deltas, b.tfs, b.doc_lens, b.max_impact,
-                 b.pos_deltas)
-                for b in blks
-            ],
-            df,
-        )
-        for t, (blks, df) in by_term.items()
-    }
+    payload = fetch_term_blocks(blocks, vocab, with_positions=needs_positions)
     bc = spark.sparkContext.broadcast((payload, n_docs, avgdl, k))
 
     def score(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        term_payload, n, adl, kk = bc.value
-        for pdf in batches:
-            qids, ranks, docs, scores = [], [], [], []
-            for qid, spec in zip(pdf[id_col], pdf[ast_col]):
-                ast = from_json(spec)
-                cursors = {}
-                for t in sorted(ast_terms(ast)):
-                    entry = term_payload.get(t)
-                    if entry is None or entry[1] == 0:
-                        continue
-                    blks = [
-                        _Block(fd, bytes(dd), bytes(tf), bytes(dl), mi,
-                               bytes(pd_) if pd_ else b"")
-                        for fd, dd, tf, dl, mi, pd_ in entry[0]
-                    ]
-                    cursors[t] = TermCursor(
-                        term=t,
-                        idf=lucene_idf(n, entry[1]),
-                        blocks=blks,
-                        avgdl=adl,
-                    )
-                for rank, (d, s) in enumerate(
-                    execute_ast_cursors(ast, cursors, kk), start=1
-                ):
-                    qids.append(int(qid))
-                    ranks.append(rank)
-                    docs.append(int(d))
-                    scores.append(float(s))
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(qids, dtype="int64"),
-                    "rank": pd.Series(ranks, dtype="int32"),
-                    "doc_id": pd.Series(docs, dtype="int64"),
-                    "score": pd.Series(scores, dtype="float64"),
-                }
-            )
+        return _score_queries(batches, *bc.value, id_col=id_col, ast_col=ast_col)
 
     cold = queries.select(id_col, ast_col).mapInPandas(score, RESULT_SCHEMA)
     return cold.unionByName(hot_part) if hot_part is not None else cold
+
+
+def _score_queries(
+    batches: Iterator,
+    payload: dict,
+    n_docs: int,
+    avgdl: float,
+    k: int,
+    id_col: str = "query_id",
+    ast_col: str = "query_json",
+) -> Iterator:
+    """One task of :func:`ast_topk_batch`: each query of ``batches``
+    (pandas frames of ``id_col``, ``ast_col``) → its top-k rows of
+    :data:`RESULT_SCHEMA`, by the serving evaluator. ``payload`` is the
+    broadcast ``fetch_term_blocks`` result; a term becomes one
+    :class:`TermPostings` the first time a query of the task needs it,
+    so it decodes and scores once per task."""
+    import pandas as pd
+
+    from .ast import ast_shape, from_json, validate_ast
+    from .executor import _execute_bound
+
+    bound: dict[str, tuple] = {}
+    for pdf in batches:
+        qids, ranks, docs, scores = [], [], [], []
+        for qid, spec in zip(pdf[id_col], pdf[ast_col]):
+            ast = from_json(spec)
+            validate_ast(ast)
+            for t in ast_shape(ast)[0]:
+                if t not in bound and t in payload:
+                    blks, df = payload[t]
+                    bound[t] = (TermPostings(blks, df), lucene_idf(n_docs, df))
+            for rank, (d, s) in enumerate(_execute_bound(ast, bound, avgdl, k), start=1):
+                qids.append(int(qid))
+                ranks.append(rank)
+                docs.append(int(d))
+                scores.append(float(s))
+        yield pd.DataFrame(
+            {
+                "query_id": pd.Series(qids, dtype="int64"),
+                "rank": pd.Series(ranks, dtype="int32"),
+                "doc_id": pd.Series(docs, dtype="int64"),
+                "score": pd.Series(scores, dtype="float64"),
+            }
+        )

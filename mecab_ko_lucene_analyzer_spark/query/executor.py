@@ -5,11 +5,15 @@ This evaluator scores every driver query — Term, And, Or, Sum, DisMax,
 Phrase and must_not; a disjunctive bag of terms is a ``Sum``
 (``ast.bag_ast``) — on each term's decoded postings arrays. The serving
 path binds each term's cached ``wand.TermPostings`` entry straight to
-the term's idf (``wand.load_query_postings``), so it builds no
-``TermCursor``, and a warm entry's docs and BM25 scores are arrays it
-already holds. Callers that hold cursors already (the bulk executor,
-``wand.wand_topk``) bind their entries through
-:func:`execute_ast_cursors`.
+the term's idf (``wand.load_query_postings``); the bulk executor
+(``batch.py``) binds one entry per broadcast term per task. A warm
+entry's docs and BM25 scores are arrays it already holds.
+
+The top-k of a bag (a ``Sum`` of two or more ``Term`` s) takes one
+MaxScore step (Turtle & Flood 1995, :func:`_bag_top_k`): the k-th
+best exact score of the highest-bound terms' docs is a cutoff, and
+only docs of the terms needed to reach it are scored. Every other
+root is evaluated in full. Both give the same bits.
 Scoring semantics are the engine spec documented in ``ast.py``.
 """
 
@@ -20,9 +24,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from .ast import And, DisMax, Not, Phrase, Sum, Term, ast_shape, validate_ast
-from .wand import TermCursor, load_query_postings
+from .wand import load_query_postings
 
-__all__ = ["execute_ast", "execute_ast_cursors"]
+__all__ = ["execute_ast", "count_ast"]
 
 _NO_DOCS = np.empty(0, dtype=np.int64)
 _NO_MATCH = (_NO_DOCS, np.empty(0))
@@ -168,31 +172,77 @@ def _evaluate(node, bound: dict[str, tuple], avgdl: float, scored: bool = True):
     return docs, best
 
 
-def _cursor_binding(cursors: dict[str, TermCursor]) -> tuple[dict[str, tuple], float]:
-    """The :func:`_evaluate` binding and avgdl of prebuilt cursors
-    (every cursor of a query carries the index's avgdl)."""
-    avgdl = next(iter(cursors.values())).avgdl if cursors else 1.0
-    return {t: (c.postings, c.idf) for t, c in cursors.items()}, avgdl
+def _sum_at(docs: np.ndarray, parts) -> np.ndarray:
+    """Each of the sorted unique ``docs``' scores summed over the
+    ``(sorted unique docs, scores)`` parts it is found in, added in part
+    order from 0.0 — bit-equal to :func:`_union`'s total for those
+    docs. Every part is looked up by :func:`_intersect`."""
+    total = np.zeros(docs.size)
+    for p_docs, p_scores in parts:
+        _, i, j = _intersect(docs, p_docs)
+        total[i] += p_scores[j]
+    return total
 
 
-def execute_ast_cursors(
-    ast, cursors: dict[str, TermCursor], k: int = 10
-) -> list[tuple[int, float]]:
-    """Evaluate an AST over prebuilt term cursors → top-k
-    [(doc_id, score)], tie-break (score desc, doc_id asc). The bulk
-    executor path (``batch.py::ast_topk_batch``), whose cursors come
-    from a broadcast payload: each cursor's entry and idf are scored
-    exactly as :func:`execute_ast` scores a cached entry."""
-    validate_ast(ast)
-    return _top_k(*_evaluate(ast, *_cursor_binding(cursors)), k)
+def _bag_top_k(children, bound: dict[str, tuple], avgdl: float, k: int):
+    """Top-k of ``Sum(children)``, every child a ``Term``, by one
+    MaxScore step over the terms' upper bounds ``idf × max impact``:
+
+    * the seed is the docs of the highest-bound terms, taken term by
+      term until there are ≥ k (a bag with fewer docs is all seed);
+      they are scored exactly, and θ is the k-th best of those scores;
+    * the non-essential terms are the longest low-bound prefix whose
+      bounds sum below θ: a doc matching only them scores below the
+      k-th best, so it cannot enter the top k, ties included;
+    * the docs of the other terms not in the seed are scored exactly,
+      and the top k is taken over them and the seed.
+
+    Every term is looked up through its decoded entry and its kept
+    scores, as :func:`_evaluate` reads them, so the sums are bit-equal
+    to the full evaluation's."""
+    if k <= 0:
+        return []
+    parts = [_evaluate(c, bound, avgdl) for c in children]
+    ubs = [
+        bound[c.term][1] * bound[c.term][0].max_impact if c.term in bound else 0.0
+        for c in children
+    ]
+    by_ub = sorted(range(len(parts)), key=ubs.__getitem__)
+    seed, taken = _NO_DOCS, len(by_ub)
+    while taken and seed.size < k:
+        taken -= 1
+        docs = parts[by_ub[taken]][0]
+        seed = np.union1d(seed, docs) if seed.size else docs
+    sums = _sum_at(seed, parts)
+    if seed.size < k:
+        return _top_k(seed, sums, k)
+    theta = np.partition(sums, seed.size - k)[seed.size - k]
+    n, bound_sum = 0, 0.0
+    for i in by_ub[:taken]:
+        bound_sum += ubs[i]
+        # the slack covers the last-ulp gap between ``idf × max impact``
+        # and a stored partial, and the rounding of both sums
+        if bound_sum * (1.0 + 1e-9) >= theta:
+            break
+        n += 1
+    more = [parts[i][0] for i in by_ub[n:taken]]
+    if more:
+        extra = np.setdiff1d(np.concatenate(more), seed)
+        seed, sums = np.concatenate((seed, extra)), np.concatenate((sums, _sum_at(extra, parts)))
+    return _top_k(seed, sums, k)
 
 
-def count_ast_cursors(ast, cursors: dict[str, TermCursor]) -> int:
-    """Match count over prebuilt cursors: the size of the evaluator's
-    match set (Q8 ``trackTotalHits`` with full AST semantics — synonym
-    Or-groups and phrase position filters included)."""
-    validate_ast(ast)
-    return int(_evaluate(ast, *_cursor_binding(cursors), scored=False)[0].size)
+def _execute_bound(ast, bound: dict[str, tuple], avgdl: float, k: int):
+    """Top-k [(doc_id, score)] of a validated AST over ``bound``
+    (term → (``TermPostings``, idf)): a bag of two or more terms by
+    :func:`_bag_top_k`, any other root by :func:`_evaluate`."""
+    if (
+        isinstance(ast, Sum)
+        and len(ast.children) > 1
+        and all(isinstance(c, Term) for c in ast.children)
+    ):
+        return _bag_top_k(ast.children, bound, avgdl, k)
+    return _top_k(*_evaluate(ast, bound, avgdl), k)
 
 
 def _bind(ast, blocks: DataFrame, n_docs: int, cache) -> dict[str, tuple]:
@@ -205,7 +255,6 @@ def _bind(ast, blocks: DataFrame, n_docs: int, cache) -> dict[str, tuple]:
 def execute_ast(
     ast,
     blocks: DataFrame,
-    term_stats: DataFrame,
     n_docs: int,
     avgdl: float,
     k: int = 10,
@@ -214,22 +263,22 @@ def execute_ast(
     """Evaluate an AST → top-k [(doc_id, score)], tie-break
     (score desc, doc_id asc). Postings come from ``cache`` (no Spark
     job on a hit, nor on a miss through its direct reader), else from
-    one term-pruned Spark scan. ``term_stats`` is accepted for API
-    compatibility but unused — df derives from block metadata."""
+    one term-pruned Spark scan."""
     validate_ast(ast)
-    return _top_k(*_evaluate(ast, _bind(ast, blocks, n_docs, cache), avgdl), k)
+    return _execute_bound(ast, _bind(ast, blocks, n_docs, cache), avgdl, k)
 
 
 def count_ast(
     ast,
     blocks: DataFrame,
-    term_stats: DataFrame,
     n_docs: int,
     avgdl: float,
     cache=None,
 ) -> int:
-    """Match count sibling of :func:`execute_ast` — same loading,
-    :func:`count_ast_cursors` semantics."""
+    """Match count sibling of :func:`execute_ast` — same loading; the
+    size of the evaluator's match set (Q8 ``trackTotalHits`` with full
+    AST semantics — synonym Or-groups and phrase position filters
+    included)."""
     validate_ast(ast)
     bound = _bind(ast, blocks, n_docs, cache)
     return int(_evaluate(ast, bound, avgdl, scored=False)[0].size)

@@ -10,8 +10,8 @@ Two forms:
   a per-doc REST call.
 * :func:`explanation_tree` / ``SearchEngine.explain`` — the per-hit
   nested Explanation dict Lucene renders (value, description,
-  details), built from the SERVING cursors so the explained value is
-  bit-identical to the score the serving path returned.
+  details), built from the serving block postings so the explained
+  value is bit-identical to the score the serving path returned.
 
 Reference anchor: the reference delegates scoring to Lucene
 ``BM25Similarity`` (``pom.xml:52``), whose ``explain()`` emits the
@@ -67,8 +67,8 @@ def explanation_tree(
 ) -> dict:
     """Lucene-style nested Explanation from per-term component dicts
     ``{term, tf, df, doc_len, idf, avgdl, n_docs}`` (driver-side; the
-    engine feeds it cursor reads so the total equals the served score
-    bit-for-bit)."""
+    engine feeds it the covering blocks' reads so the total equals the
+    served score bit-for-bit)."""
     details = []
     total = 0.0
     for c in per_term:

@@ -66,7 +66,6 @@ __all__ = [
     "distributed_ast_topk",
     "count_ast_blocks",
     "phrase_match_docs",
-    "ast_routable",
 ]
 
 _PARTIAL_SCHEMA = T.StructType(
@@ -223,20 +222,6 @@ def _fast_shape(node) -> bool:
             isinstance(c, Phrase) or _phrase_free(c) for c in node.children
         )
     return _phrase_free(node)
-
-
-def ast_routable(node) -> bool:
-    """Every Term/And/Or/Phrase tree is routable: top-level-And phrases
-    take the inner-join plan, nested phrases the flag-column plan.
-    Kept as the routing predicate so callers stay shape-agnostic (and
-    so a future node type can opt out)."""
-    if isinstance(node, (Term, Phrase)):
-        return True
-    if isinstance(node, Not):
-        return ast_routable(node.child)
-    if isinstance(node, (And, Or, Sum, DisMax)):
-        return all(ast_routable(c) for c in node.children)
-    return False
 
 
 _PHRASE_DECODE_SCHEMA = T.StructType(
@@ -547,8 +532,6 @@ def _scored_docs(
     :func:`phrase_match_docs`; nested phrases route through
     :func:`_scored_docs_general`'s flag columns. ``None`` means the
     empty AST (no docs). Shared by the top-k and count evaluators."""
-    if not ast_routable(ast):
-        raise ValueError(f"unroutable AST node in {ast!r}")
     validate_ast(ast)
     from .ast import ast_terms
 
@@ -610,7 +593,7 @@ def count_ast_blocks(
     n_docs: int,
     avgdl: float,
 ) -> int:
-    """Distributed match count for a routable AST (Q8
+    """Distributed match count for any AST (Q8
     ``trackTotalHits`` over the FULL query tree — synonym Or-groups
     and boost-0 phrase filters included; a bag is a ``Sum``). One row
     to the driver."""

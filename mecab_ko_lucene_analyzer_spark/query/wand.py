@@ -1,33 +1,25 @@
-"""Driver-side postings access and the block-max WAND loop (I7 query
-path).
+"""Driver-side postings access (I7 query path).
 
 The low-latency counterpart to the distributed scorer (``router.py``):
 query terms are few, so their block lists are fetched with a
 term-pruned read and scored on the driver. Every query — a disjunctive
 bag is a ``Sum`` AST (``ast.bag_ast``) — is scored by the vectorized
 evaluator (``executor.py``) directly on each term's cached
-:class:`TermPostings`, bound by :func:`load_query_postings`.
-:func:`wand_topk` keeps block-max WAND over :class:`TermCursor` s
-(Broder et al. 2003; block-max refinement, Ding & Suel 2011) for
-callers that hold cursors: a bag whose compressed postings exceed
-``TAAT_MAX_BYTES`` takes the skipping loop, a smaller one the
-evaluator. Both must be rank-identical to the brute-force oracle —
-tested. The direct readers (:class:`DirectBlockReader`,
+:class:`TermPostings`, bound by :func:`load_query_postings`; a bag's
+top-k skips by MaxScore over the terms' max impacts there.
+:func:`load_query_cursors` and :func:`wand_topk` keep the frozen
+``bench.py`` surface: a binding plus avgdl, and its bag's top-k through
+that one evaluator. The direct readers (:class:`DirectBlockReader`,
 :class:`DirectDocMapReader`, :class:`DirectTermStatsReader`) serve
 cache misses, df lookups and URL resolves from the local parquet
 files, with no Spark job, by bisecting footer ranges sorted once at
 open.
-
-Tie-break: score desc, doc_id asc. WAND scores candidates in ascending
-docID order, so on equal scores the earlier (smaller) docID stays in
-the heap — matching the oracle's deterministic sort.
 """
 
 from __future__ import annotations
 
 import bisect
-import heapq
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import partial
 
 import numpy as np
@@ -35,11 +27,10 @@ import numpy as np
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from ..index.codec import decode_block_arrays, decode_positions, decode_varints
+from ..index.codec import decode_positions, decode_varints
 from .bm25 import bm25_partial, lucene_idf
 
 __all__ = [
-    "TermCursor",
     "TermPostings",
     "wand_topk",
     "load_query_cursors",
@@ -50,8 +41,6 @@ __all__ = [
     "DirectDocMapReader",
     "DirectTermStatsReader",
 ]
-
-_INF = 1 << 62
 
 
 @dataclass
@@ -66,30 +55,27 @@ class _Block:
 
 class TermPostings:
     """One term's postings as the serving cache holds them: the
-    compressed blocks in docID order, the df and the block metadata a
-    cursor skips by. The first scorer that needs the whole term calls
+    compressed blocks in docID order, the df and the term's max impact
+    (the largest ``block_max_impact``, which bounds its BM25 partials
+    at idf 1.0). The first scorer that needs the term calls
     :meth:`decode`, which fills in the decoded doc ID, tf and doc_len
     arrays once (block ``i`` owns ``[offsets[i], offsets[i + 1])``);
-    later cursors and scorers over the same entry slice them instead
-    of decoding again. Until then a cursor decodes only the blocks it
-    opens. A phrase check decodes positions per block, only for the
+    later scorers over the same entry read them instead of decoding
+    again. A phrase check decodes positions per block, only for the
     blocks that hold a candidate, and keeps them in the entry
     (:meth:`positions`). The BM25 scores of the decoded postings are
     kept too (:meth:`scores`). ``on_decode(entry, added_bytes)`` tells
     the owning cache that the entry grew."""
 
     __slots__ = (
-        "blocks", "df", "firsts", "max_impact", "doc_bytes", "nbytes",
+        "blocks", "df", "max_impact", "nbytes",
         "docs", "tfs", "dls", "offsets", "pos", "on_decode", "_scores",
     )
 
     def __init__(self, blocks: list[_Block], df: int = 0, on_decode=None):
         self.blocks = sorted(blocks, key=lambda blk: blk.first_doc)
         self.df = df
-        self.firsts = np.array([blk.first_doc for blk in self.blocks], dtype=np.int64)
         self.max_impact = max((blk.max_impact for blk in self.blocks), default=0.0)
-        #: compressed doc-delta bytes: the scorers' decode-cost proxy
-        self.doc_bytes = sum(len(blk.doc_deltas) for blk in self.blocks)
         #: bytes the entry holds: payloads plus a rough per-block object
         #: cost, and the decoded arrays and scores once filled in
         self.nbytes = 256 * len(self.blocks) + sum(
@@ -176,137 +162,6 @@ class TermPostings:
                 self._grew(sum(a.nbytes for a in block) + 112 * len(block))
             out.append(block[i - lo])
         return out
-
-    def block(self, bi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(docs, tfs, doc_lens) of block ``bi``: slices of the decoded
-        arrays when the entry is decoded, else that block's decode."""
-        if self.docs is not None:
-            lo, hi = self.offsets[bi], self.offsets[bi + 1]
-            return self.docs[lo:hi], self.tfs[lo:hi], self.dls[lo:hi]
-        blk = self.blocks[bi]
-        return decode_block_arrays(blk.doc_deltas, blk.tfs, blk.doc_lens)[:3]
-
-
-@dataclass
-class TermCursor:
-    """Posting-list iterator over one term's compressed blocks, with
-    skipping. ``postings`` is the term's :class:`TermPostings` (a cache
-    entry, shared by every cursor over the term); a cursor built from
-    raw ``blocks`` alone makes its own. Blocks open lazily: a block's
-    first doc is its ``first_doc``, so moving onto a block decodes
-    nothing, and the block's arrays are read (sliced from the decoded
-    entry, or decoded from this one block) only when the cursor must
-    score a doc or look past the first. A skipped block is never
-    decompressed."""
-
-    term: str
-    idf: float
-    blocks: list[_Block]
-    avgdl: float = 1.0
-    postings: TermPostings | None = None
-    _bi: int = -1
-    _docs: np.ndarray | None = None
-    _tfs: np.ndarray | None = None
-    _dls: np.ndarray | None = None
-    _pos: int = 0
-    cur_doc: int = _INF
-    _firsts: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int64))
-
-    def __post_init__(self):
-        if self.postings is None:
-            self.postings = TermPostings(self.blocks)
-        self.blocks = self.postings.blocks
-        self._firsts = self.postings.firsts
-        self.max_impact = self.postings.max_impact
-        self._open(0)
-
-    @property
-    def ub(self) -> float:
-        return self.idf * self.max_impact
-
-    def block_ub(self) -> float:
-        if self._bi >= len(self.blocks):
-            return 0.0
-        return self.idf * self.blocks[self._bi].max_impact
-
-    def _block_index_for(self, doc: int) -> int:
-        """Index of the only block that can contain ``doc`` (may be the
-        cursor's current or a later block); does NOT move the cursor."""
-        bi = int(np.searchsorted(self._firsts, doc, side="right")) - 1
-        return max(bi, self._bi)
-
-    def block_ub_for(self, doc: int) -> float:
-        """Score upper bound for ``doc`` from block-max metadata only —
-        the bound of the block whose range covers ``doc`` (safe
-        overestimate when ``doc`` falls between blocks)."""
-        bi = self._block_index_for(doc)
-        if bi >= len(self.blocks):
-            return 0.0
-        return self.idf * self.blocks[bi].max_impact
-
-    def block_boundary_for(self, doc: int) -> int:
-        """Last docID for which :meth:`block_ub_for`'s bound stays valid:
-        the end of the covering block's range (next block's first - 1).
-        Past the final block the term contributes 0 ≤ the bound forever,
-        so the boundary is +INF."""
-        bi = self._block_index_for(doc)
-        if bi + 1 < len(self.blocks):
-            return int(self._firsts[bi + 1]) - 1
-        return _INF
-
-    def _open(self, bi: int) -> None:
-        """Move onto block ``bi`` (past the last: exhausted) at its first
-        doc, without reading the block."""
-        self._docs = None
-        self._pos = 0
-        if bi >= len(self.blocks):
-            self._bi = len(self.blocks)
-            self.cur_doc = _INF
-            return
-        self._bi = bi
-        self.cur_doc = int(self._firsts[bi])
-
-    def _read(self) -> None:
-        """Read the current block's arrays (once per block visit)."""
-        self._docs, self._tfs, self._dls = self.postings.block(self._bi)
-
-    def advance(self) -> None:
-        if self._docs is None:
-            self._read()
-        self._pos += 1
-        if self._pos < len(self._docs):
-            self.cur_doc = int(self._docs[self._pos])
-        else:
-            self._open(self._bi + 1)
-
-    def next_geq(self, target: int) -> None:
-        target = min(target, _INF)  # an exhausted cursor is past any target
-        if self.cur_doc >= target:
-            return
-        bi = int(np.searchsorted(self._firsts, target, side="right")) - 1
-        if bi > self._bi:
-            self._open(bi)
-        while self.cur_doc < target:
-            if self._docs is None:
-                self._read()
-            if int(self._docs[-1]) >= target:
-                self._pos = int(np.searchsorted(self._docs, target, side="left"))
-                self.cur_doc = int(self._docs[self._pos])
-                return
-            self._open(self._bi + 1)
-
-    def tf_dl_current(self) -> tuple[int, int]:
-        """(tf, doc_len) of the current doc."""
-        if self._docs is None:
-            self._read()
-        return int(self._tfs[self._pos]), int(self._dls[self._pos])
-
-    def score_current(self) -> float:
-        tf, dl = self.tf_dl_current()
-        return bm25_partial(self.idf, float(tf), float(dl), self.avgdl)
-
-    def exhausted(self) -> bool:
-        return self.cur_doc >= _INF
 
 
 def fetch_term_blocks(
@@ -714,115 +569,22 @@ def load_query_cursors(
     query_terms: list[str],
     with_positions: bool = False,
     cache: BlockCache | None = None,
-) -> list[TermCursor]:
-    """Driver-side cursors over :func:`load_query_postings`' entries.
-    ``term_stats`` is accepted for API compatibility but unused — df
-    derives from block metadata."""
-    return [
-        TermCursor(term=t, idf=idf, blocks=p.blocks, avgdl=avgdl, postings=p)
-        for t, (p, idf) in load_query_postings(
-            blocks, n_docs, query_terms, with_positions, cache
-        ).items()
-    ]
-
-
-# Above this many compressed payload bytes (~= postings, deltas are
-# 1–2 bytes each) the skipping WAND loop takes over: decoding
-# everything stops being cheaper than skipping, and truly hot terms
-# have already been routed to the distributed scorer (query/router.py).
-TAAT_MAX_BYTES = 4_000_000
+) -> tuple[dict[str, tuple[TermPostings, float]], float]:
+    """(:func:`load_query_postings`' binding, ``avgdl``): what
+    :func:`wand_topk` scores. ``term_stats`` is accepted for API
+    compatibility but unused — df derives from block metadata."""
+    return load_query_postings(blocks, n_docs, query_terms, with_positions, cache), avgdl
 
 
 def wand_topk(
-    cursors: list[TermCursor], k: int = 10, strategy: str = "auto"
+    cursors: tuple[dict[str, tuple[TermPostings, float]], float], k: int = 10
 ) -> list[tuple[int, float]]:
-    """Top-k over compressed blocks. Returns [(doc_id, score)]
-    ordered by (score desc, doc_id asc), length ≤ k.
+    """Top-k [(doc_id, score)], ordered by (score desc, doc_id asc), of
+    the disjunctive bag of a :func:`load_query_cursors` binding: its
+    ``bag_ast`` through the evaluator's MaxScore step, so term scores
+    add in term order whatever the binding's order."""
+    from .ast import bag_ast
+    from .executor import _execute_bound
 
-    Term scores add in term order, whatever order the cursors come in
-    (a cache, a Spark scan's collect order, a broadcast payload), so a
-    bag's float sum does not depend on the path or the process.
-
-    ``strategy``: ``"auto"`` (default) evaluates the bag as a ``Sum``
-    AST (``ast.bag_ast``) over the cursors' entries — the engine's one
-    driver scorer — for one term or when the query's total compressed
-    payload is under ``TAAT_MAX_BYTES``, and runs the
-    document-at-a-time block-max WAND loop otherwise; ``"wand"`` /
-    ``"taat"`` force a path (tests pin both rank-identical). The
-    engine serves every bag through the evaluator; this function
-    remains for callers that hold cursors."""
-    cursors = sorted((c for c in cursors if not c.exhausted()), key=lambda c: c.term)
-    if not cursors:
-        return []
-    if strategy == "taat" or (
-        strategy == "auto"
-        and (
-            len(cursors) == 1
-            or sum(c.postings.doc_bytes for c in cursors) <= TAAT_MAX_BYTES
-        )
-    ):
-        from .ast import bag_ast
-        from .executor import execute_ast_cursors
-
-        return execute_ast_cursors(
-            bag_ast(c.term for c in cursors), {c.term: c for c in cursors}, k
-        )
-    heap: list[tuple[float, int]] = []  # min-heap of (score, -doc_id)
-
-    def theta() -> float:
-        return heap[0][0] if len(heap) >= k else 0.0
-
-    while True:
-        live = [c for c in cursors if not c.exhausted()]
-        if not live:
-            break
-        live.sort(key=lambda c: c.cur_doc)
-        acc = 0.0
-        pivot_idx = -1
-        for i, c in enumerate(live):
-            acc += c.ub
-            if acc > theta():
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break  # nothing left can beat theta
-        pivot_doc = live[pivot_idx].cur_doc
-        # the covering set must include EVERY cursor positioned at the
-        # pivot doc (ties beyond the pivot index still contribute to its
-        # score), not just the pivot prefix
-        cover_end = pivot_idx + 1
-        while cover_end < len(live) and live[cover_end].cur_doc == pivot_doc:
-            cover_end += 1
-        cover = live[:cover_end]
-        # block-max refinement: bound each covering term by the max
-        # impact of the block COVERING the pivot (peeked, cursors not
-        # moved)
-        if sum(c.block_ub_for(pivot_doc) for c in cover) <= theta():
-            # the bounds hold up to the shallowest covering-block end;
-            # nothing in (cur, boundary] can win — skip past it.
-            boundary = min(c.block_boundary_for(pivot_doc) for c in cover)
-            target = boundary + 1
-            if cover_end < len(live):
-                # docs at/beyond the next cursor's position would need
-                # its contribution re-counted — don't skip past it
-                target = min(target, live[cover_end].cur_doc)
-            live[0].next_geq(max(target, live[0].cur_doc + 1))
-            continue
-        if live[0].cur_doc == pivot_doc:
-            score = 0.0
-            for c in live:
-                if c.cur_doc == pivot_doc:
-                    score += c.score_current()
-            item = (score, -pivot_doc)
-            if len(heap) < k:
-                if score > 0.0:
-                    heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-            for c in live:
-                if c.cur_doc == pivot_doc:
-                    c.advance()
-        else:
-            live[0].next_geq(pivot_doc)
-    ranked = sorted(heap, key=lambda t: (-t[0], -t[1]))
-    return [(-d, s) for s, d in ranked]
+    bound, avgdl = cursors
+    return _execute_bound(bag_ast(bound), bound, avgdl, k)

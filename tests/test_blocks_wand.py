@@ -1,5 +1,6 @@
 """M2/M3 tests: compressed block postings, salted merge equivalence,
-block-max WAND rank-identity, and resumable builds (FIXTURES.md §F4–F6)."""
+rank identity of the driver bag top-k (its MaxScore step over the
+block-max impacts), and resumable builds (FIXTURES.md §F4–F6)."""
 
 import shutil
 
@@ -140,21 +141,22 @@ def test_wand_rank_identical_to_oracle(spark, materialized, blocks_df, terms):
 
 @pytest.mark.parametrize("terms", QUERIES, ids=["+".join(q) for q in QUERIES])
 def test_taat_rank_identical_to_wand(spark, materialized, blocks_df, terms):
-    """The vectorized exact TAAT path (auto-picked for bounded payloads)
-    must rank-match the skipping WAND loop on every fixture query —
-    both add the exact BM25 partials in term order, so docs AND score
-    bits agree."""
+    """The bag top-k that skips (``wand_topk``'s MaxScore step over the
+    built block-max impacts) must give the bits of the bag's full
+    term-at-a-time evaluation on every fixture query, at every k up to
+    beyond the match count — docs AND score bits agree."""
+    from mecab_ko_lucene_analyzer_spark.query.ast import bag_ast
+    from mecab_ko_lucene_analyzer_spark.query.executor import _evaluate, _top_k
+
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
     term_stats = spark.read.parquet(f"{BASE}/term_stats")
-
-    def cursors():
-        return load_query_cursors(
-            blocks_df, term_stats, corpus["n_docs"], corpus["avgdl"], terms
-        )
-
-    via_wand = wand_topk(cursors(), k=10, strategy="wand")
-    via_taat = wand_topk(cursors(), k=10, strategy="taat")
-    assert via_taat == via_wand
+    bound, avgdl = load_query_cursors(
+        blocks_df, term_stats, corpus["n_docs"], corpus["avgdl"], terms
+    )
+    full = _top_k(*_evaluate(bag_ast(terms), bound, avgdl), N_DOCS)
+    for k in (1, 3, 10, len(full), len(full) + 1):
+        got = wand_topk((bound, avgdl), k=k)
+        assert [(d, s.hex()) for d, s in got] == [(d, s.hex()) for d, s in full[:k]]
 
 
 def test_resume_skips_completed_stages(spark, materialized):
@@ -223,7 +225,6 @@ def test_ast_batch_rank_identical_to_serving(spark, materialized, blocks_df):
     )
     from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast
 
-    term_stats = spark.read.parquet(f"{BASE}/term_stats")
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
     n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
     asts = [
@@ -248,11 +249,54 @@ def test_ast_batch_rank_identical_to_serving(spark, materialized, blocks_df):
         want = [
             (rank, d, round(s, 9))
             for rank, (d, s) in enumerate(
-                execute_ast(ast, blocks_df, term_stats, n_docs, avgdl, k=7),
+                execute_ast(ast, blocks_df, n_docs, avgdl, k=7),
                 start=1,
             )
         ]
         assert sorted(got.get(qid, [])) == sorted(want), ast
+
+
+def test_bulk_task_decodes_a_shared_term_once(spark, materialized, blocks_df, monkeypatch):
+    """One bulk task binds each broadcast term to one ``TermPostings``:
+    queries that share a term, spread over two pandas batches of the
+    task, decode it once, and each query ranks as the serving
+    evaluator ranks it."""
+    import pandas as pd
+
+    from mecab_ko_lucene_analyzer_spark.query.ast import And, Term, bag_ast, to_json
+    from mecab_ko_lucene_analyzer_spark.query.batch import _score_queries
+    from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast
+    from mecab_ko_lucene_analyzer_spark.query.wand import TermPostings, fetch_term_blocks
+
+    corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
+    n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
+    asts = [
+        bag_ast(["검색", "엔진"]),
+        And((Term("검색"), Term("데이터"))),
+        Term("검색"),
+        bag_ast(["검색", "문서", "없는단어쿼리"]),
+    ]
+    payload = fetch_term_blocks(blocks_df, ["검색", "데이터", "문서", "엔진"])
+    decoded = []
+    real = TermPostings.decode
+
+    def counted(self):
+        if self.docs is None:
+            decoded.append(id(self))
+        return real(self)
+
+    monkeypatch.setattr(TermPostings, "decode", counted)
+    frames = [
+        pd.DataFrame({"query_id": ids, "query_json": [to_json(asts[i]) for i in ids]})
+        for ids in ([0, 1], [2, 3])
+    ]
+    out = pd.concat(list(_score_queries(iter(frames), payload, n_docs, avgdl, 7)))
+    assert len(decoded) == len(set(decoded)) == len(payload) == 4
+    for qid, ast in enumerate(asts):
+        rows = out[out["query_id"] == qid].sort_values("rank")
+        want = execute_ast(ast, blocks_df, n_docs, avgdl, k=7)
+        assert list(zip(rows["doc_id"], rows["score"])) == want, ast
+        assert rows["rank"].tolist() == list(range(1, len(want) + 1))
 
 
 def test_batch_hot_term_routing(spark, materialized, blocks_df, monkeypatch):
@@ -339,13 +383,9 @@ def test_and_or_evaluator_matches_oracle(spark, materialized, blocks_df):
     AND-of-OR mixes, including missing-term branches."""
     from ast_reference import ast_oracle, postings_from_tokens
 
-    from mecab_ko_lucene_analyzer_spark.query.ast import And, DisMax, Or, Term, ast_terms
-    from mecab_ko_lucene_analyzer_spark.query.executor import (
-        count_ast_cursors,
-        execute_ast_cursors,
-    )
+    from mecab_ko_lucene_analyzer_spark.query.ast import And, DisMax, Or, Term
+    from mecab_ko_lucene_analyzer_spark.query.executor import count_ast, execute_ast
 
-    term_stats = spark.read.parquet(f"{BASE}/term_stats")
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
     n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
     pages = synthesize_webpages(spark, N_DOCS, partitions=5)
@@ -364,29 +404,22 @@ def test_and_or_evaluator_matches_oracle(spark, materialized, blocks_df):
         Or((Term("없는단어쿼리"), Term("검색"))),
     ]
     for ast in asts:
-        cursors = {
-            c.term: c
-            for c in load_query_cursors(
-                blocks_df, term_stats, n_docs, avgdl, sorted(ast_terms(ast))
-            )
-        }
         want = ast_oracle(ast, postings, doc_lens, n_docs, avgdl)
-        assert execute_ast_cursors(ast, cursors, k=10) == want[:10], ast
-        assert count_ast_cursors(ast, cursors) == len(want), ast
+        assert execute_ast(ast, blocks_df, n_docs, avgdl, k=10) == want[:10], ast
+        assert count_ast(ast, blocks_df, n_docs, avgdl) == len(want), ast
 
 
 def test_direct_block_reader_identical_to_spark_fetch(spark, materialized, blocks_df):
     """The serving cold path (footer-pruned direct Arrow read, zero
     Spark jobs) must return byte-identical block payloads and dfs to
-    the pruned Spark scan, and WAND over it must rank identically."""
+    the pruned Spark scan, and the bag top-k over it must rank
+    identically."""
     from mecab_ko_lucene_analyzer_spark.query.wand import (
         BlockCache,
         DirectBlockReader,
-        TermCursor,
         fetch_term_blocks,
         wand_topk,
     )
-    from mecab_ko_lucene_analyzer_spark.query.bm25 import lucene_idf
 
     direct = DirectBlockReader(f"{BASE}/blocks")
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
@@ -409,16 +442,12 @@ def test_direct_block_reader_identical_to_spark_fetch(spark, materialized, block
                 )
         # rank identity through a direct-backed cache
         cache = BlockCache(blocks_df, direct=direct)
-        cursors = [
-            TermCursor(
-                term=t,
-                idf=lucene_idf(corpus["n_docs"], p.df),
-                blocks=p.blocks,
-                avgdl=corpus["avgdl"],
-            )
-            for t, p in cache.get(terms).items()
-        ]
-        got = wand_topk(cursors, k=10)
+        got = wand_topk(
+            load_query_cursors(
+                blocks_df, None, corpus["n_docs"], corpus["avgdl"], terms, cache=cache
+            ),
+            k=10,
+        )
         want_cursors = load_query_cursors(
             blocks_df,
             None,
@@ -447,7 +476,7 @@ def test_direct_block_reader_positions_and_errors(spark, materialized):
 
 
 def _payloads(fetched):
-    """Block payloads per term, order-free (cursors sort by first_doc)."""
+    """Block payloads per term, order-free (entries sort by first_doc)."""
     return {
         t: (df, sorted(
             (b.first_doc, b.doc_deltas, b.tfs, b.doc_lens, b.max_impact, b.pos_deltas)

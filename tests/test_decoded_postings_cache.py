@@ -1,7 +1,7 @@
 """The serving cache's decoded postings: a warm search decodes nothing,
 the cache stays inside its byte budget, warm and cold engines answer
-bit for bit alike, and a cursor over raw blocks decodes only the
-blocks it reads."""
+bit for bit alike, and an entry over raw blocks decodes to the
+postings it was built from."""
 
 import random
 import shutil
@@ -19,14 +19,14 @@ from mecab_ko_lucene_analyzer_spark.index.codec import encode_block, encode_vari
 from mecab_ko_lucene_analyzer_spark.query import wand as wand_mod
 from mecab_ko_lucene_analyzer_spark.query.ast import And, Or, Phrase, Term
 from mecab_ko_lucene_analyzer_spark.query.bm25 import lucene_idf
-from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast_cursors
+from mecab_ko_lucene_analyzer_spark.query.executor import _execute_bound
 from mecab_ko_lucene_analyzer_spark.query.wand import (
     BlockCache,
     DirectBlockReader,
-    TermCursor,
     TermPostings,
     _Block,
     load_query_cursors,
+    load_query_postings,
     wand_topk,
 )
 from mecab_ko_lucene_analyzer_spark.sources import synthesize_webpages
@@ -35,11 +35,13 @@ from mecab_ko_lucene_analyzer_spark.sources.webpages import _HOT_NOUNS
 BASE = "/tmp/test_decoded_postings_cache"
 K1, B = 1.2, 0.75
 
-#: (text, conjunctive): AND, disjunctive bag, single term, and a
+#: (text, conjunctive): AND, a disjunctive bag (its top-k takes the
+#: MaxScore step), a disjunctive synonym query, single terms, and a
 #: synonym-OR group (the option below maps 검색 to 엔진)
 SEARCHES = [
     ("검색 엔진", True),
     ("데이터 처리 문서", True),
+    ("데이터 처리 문서", False),
     ("검색 엔진 문서 색인", False),
     ("데이터", True),
     ("색인", False),
@@ -98,17 +100,17 @@ def _count_decodes(monkeypatch) -> list:
 
 def test_second_warm_search_decodes_nothing(spark, index_path, monkeypatch):
     engine = SearchEngine(spark, index_path, _option())
-    first = {q: _hits(engine.search(q, k=10, conjunctive=c)) for q, c in SEARCHES}
+    first = {(q, c): _hits(engine.search(q, k=10, conjunctive=c)) for q, c in SEARCHES}
     counts = {"검색 엔진": engine.count("검색 엔진"), "색인": engine.count("색인")}
     calls = _count_decodes(monkeypatch)
     for q, c in SEARCHES:
-        assert _hits(engine.search(q, k=10, conjunctive=c)) == first[q], q
+        assert _hits(engine.search(q, k=10, conjunctive=c)) == first[q, c], q
     assert {q: engine.count(q) for q in counts} == counts
     assert engine.last_route == "driver"
     assert calls == []
     # the guard really counts: a fresh engine's first search decodes
     fresh = SearchEngine(spark, index_path, _option())
-    assert _hits(fresh.search("검색 엔진", k=10)) == first["검색 엔진"]
+    assert _hits(fresh.search("검색 엔진", k=10)) == first["검색 엔진", True]
     assert calls
 
 
@@ -118,7 +120,7 @@ def test_second_warm_search_scores_nothing(spark, index_path, monkeypatch):
     bit like a fresh engine. The kept scores are read-only and counted
     in the cache's bytes."""
     engine = SearchEngine(spark, index_path, _option())
-    first = {q: _hits(engine.search(q, k=10, conjunctive=c)) for q, c in SEARCHES}
+    first = {(q, c): _hits(engine.search(q, k=10, conjunctive=c)) for q, c in SEARCHES}
     first_ast = [_hits(engine.search_ast(ast, k=10)) for ast in ASTS]
     calls = []
     real = wand_mod.bm25_partial
@@ -129,7 +131,7 @@ def test_second_warm_search_scores_nothing(spark, index_path, monkeypatch):
 
     monkeypatch.setattr(wand_mod, "bm25_partial", counted)
     for q, c in SEARCHES:
-        assert _hits(engine.search(q, k=10, conjunctive=c)) == first[q], q
+        assert _hits(engine.search(q, k=10, conjunctive=c)) == first[q, c], q
     assert [_hits(engine.search_ast(ast, k=10)) for ast in ASTS] == first_ast
     assert engine.last_route == "driver"
     assert calls == []
@@ -142,7 +144,7 @@ def test_second_warm_search_scores_nothing(spark, index_path, monkeypatch):
     assert cache._bytes == sum(e.nbytes for e in cache._cache.values())
     fresh = SearchEngine(spark, index_path, _option())
     for q, c in SEARCHES:
-        assert _hits(fresh.search(q, k=10, conjunctive=c)) == first[q], q
+        assert _hits(fresh.search(q, k=10, conjunctive=c)) == first[q, c], q
     assert [_hits(fresh.search_ast(ast, k=10)) for ast in ASTS] == first_ast
     assert calls  # the guard really counts: a fresh engine scores
 
@@ -193,7 +195,7 @@ def test_decoded_cache_stays_inside_its_byte_budget(spark, index_path):
         kept = [key[0] for key in cache._cache]
         assert kept == order[len(order) - len(kept):]
     assert 2 <= len(cache._cache) < len(terms)
-    # a term decoded by a cursor after its eviction no longer counts
+    # a term decoded by a scorer after its eviction no longer counts
     gone = cache.get([terms[0]])[terms[0]]
     for t in terms[1:8]:
         cache.get([t])[t].decode()
@@ -210,31 +212,30 @@ def test_decoded_cache_stays_inside_its_byte_budget(spark, index_path):
 def test_warm_and_cold_engines_answer_bit_for_bit(spark, index_path):
     warm = SearchEngine(spark, index_path, _option())
     for _ in range(2):
-        warm_hits = {q: _hits(warm.search(q, k=50, conjunctive=c)) for q, c in SEARCHES}
+        warm_hits = {(q, c): _hits(warm.search(q, k=50, conjunctive=c)) for q, c in SEARCHES}
         warm_ast = [_hits(warm.search_ast(ast, k=50)) for ast in ASTS]
     assert any(e.docs is not None for e in warm.block_cache._cache.values())
     for q, c in SEARCHES:
         cold = SearchEngine(spark, index_path, _option())
-        assert _hits(cold.search(q, k=50, conjunctive=c)) == warm_hits[q], q
-        assert warm_hits[q], q
+        assert _hits(cold.search(q, k=50, conjunctive=c)) == warm_hits[q, c], q
+        assert warm_hits[q, c], q
     for ast, want in zip(ASTS, warm_ast):
         cold = SearchEngine(spark, index_path, _option())
         assert _hits(cold.search_ast(ast, k=50)) == want, ast
 
 
-@pytest.mark.parametrize(
-    "strategy", ["evaluator-and-or", "evaluator-dismax-phrase", "wand", "taat"]
-)
+@pytest.mark.parametrize("strategy", ["evaluator-and-or", "evaluator-dismax-phrase", "bag"])
 def test_forced_strategies_warm_equals_cold(spark, index_path, strategy):
-    """Every driver scorer answers bit for bit alike from raw blocks, a
+    """The driver evaluator answers bit for bit alike from raw blocks, a
     decoded cache and an uncached Spark fetch (whose postings arrive in
-    the scan's collect order); the evaluator also equals the scoring
-    spec over the tokenized corpus, for And/Or trees of terms and for
-    trees with DisMax and Phrase nodes."""
+    the scan's collect order) — for bags through ``wand_topk``'s
+    MaxScore step; it also equals the scoring spec over the tokenized
+    corpus, for bags, And/Or trees of terms and trees with DisMax and
+    Phrase nodes."""
     from ast_reference import ast_oracle, postings_from_tokens
 
     from mecab_ko_lucene_analyzer_spark.analysis.tokenizer import token_records
-    from mecab_ko_lucene_analyzer_spark.query.ast import DisMax, ast_terms
+    from mecab_ko_lucene_analyzer_spark.query.ast import DisMax, ast_terms, bag_ast
 
     engine = SearchEngine(spark, index_path, _option())
     asts = {
@@ -251,24 +252,23 @@ def test_forced_strategies_warm_equals_cold(spark, index_path, strategy):
     }.get(strategy, [])
     bags = [["검색", "엔진", "문서"], ["데이터", "처리"], ["색인"]]
 
-    def cursors(terms, cache, with_positions=False):
-        return load_query_cursors(
-            engine.blocks, None, engine.n_docs, engine.avgdl, terms,
-            with_positions=with_positions, cache=cache,
-        )
-
     def run(cache):
         out = []
         if asts:
             for ast in asts:
-                cs = cursors(sorted(ast_terms(ast)), cache, with_positions=True)
-                out.append(execute_ast_cursors(ast, {c.term: c for c in cs}, k=30))
+                bound = load_query_postings(
+                    engine.blocks, engine.n_docs, sorted(ast_terms(ast)), True, cache
+                )
+                out.append(_execute_bound(ast, bound, engine.avgdl, 30))
         else:
             for terms in bags:
-                out.append(wand_topk(cursors(terms, cache), k=30, strategy=strategy))
+                cursors = load_query_cursors(
+                    engine.blocks, None, engine.n_docs, engine.avgdl, terms, cache=cache
+                )
+                out.append(wand_topk(cursors, k=30))
         return out
 
-    # a new cache: the cursors start from raw, undecoded blocks
+    # a new cache: the scorers start from raw, undecoded blocks
     cold = run(BlockCache(engine.blocks, direct=DirectBlockReader(f"{index_path}/blocks")))
     cache = engine.block_cache
     first = run(cache)
@@ -277,17 +277,16 @@ def test_forced_strategies_warm_equals_cold(spark, index_path, strategy):
             p.decode()
     assert run(cache) == first == cold == run(None)
     assert all(r for r in cold)
-    if asts:
-        rows = sorted(
-            synthesize_webpages(spark, 120, partitions=4).select("url", "text").collect(),
-            key=lambda r: r["url"],
-        )
-        postings, doc_lens = postings_from_tokens(
-            {i: token_records(r["text"]) for i, r in enumerate(rows)}
-        )
-        for ast, got in zip(asts, cold):
-            want = ast_oracle(ast, postings, doc_lens, engine.n_docs, engine.avgdl, k=30)
-            assert got == want, ast
+    rows = sorted(
+        synthesize_webpages(spark, 120, partitions=4).select("url", "text").collect(),
+        key=lambda r: r["url"],
+    )
+    postings, doc_lens = postings_from_tokens(
+        {i: token_records(r["text"]) for i, r in enumerate(rows)}
+    )
+    for ast, got in zip(asts or [bag_ast(t) for t in bags], cold):
+        want = ast_oracle(ast, postings, doc_lens, engine.n_docs, engine.avgdl, k=30)
+        assert got == want, ast
 
 
 def _serving_texts(rng: random.Random, nouns: list[str], numbers: list[str], n: int):
@@ -357,85 +356,29 @@ def _raw_term(rng, n_docs, block_size):
             for tf, dl in zip(tfs[sl], dls[sl])
         ]
         blocks.append(_Block(docs[i], dd, tt, encode_varints(dls[sl]), max(impacts), pp))
-    rng.shuffle(blocks)  # the cursor sorts them by first_doc
+    rng.shuffle(blocks)  # the entry sorts them by first_doc
     return docs, tfs, dls, positions, blocks
 
 
-def test_cursor_over_raw_blocks_matches_decoded_entry(monkeypatch):
-    """A cursor built from raw ``_Block`` lists (batch scoring, explain,
-    the property tests) walks and scores exactly like a cursor over a
-    decoded cache entry, and like the postings it was built from; the
-    entry yields every posting's positions."""
-    opened = []
-    real = wand_mod.decode_block_arrays
-
-    def counted(*a, **kw):
-        opened.append(a[0])
-        return real(*a, **kw)
-
-    monkeypatch.setattr(wand_mod, "decode_block_arrays", counted)
+def test_entry_over_raw_blocks_matches_its_postings():
+    """An entry built from a raw, shuffled ``_Block`` list (what the
+    bulk scorer builds per broadcast term and task) decodes to the
+    postings it was built from — docs, tfs, doc lengths, positions and
+    BM25 scores — and its max impact bounds every partial at idf 1.0."""
     rng = random.Random(7)
-    for trial in range(60):
+    for _ in range(60):
         docs, tfs, dls, positions, blocks = _raw_term(rng, 200, rng.choice([1, 2, 3, 128]))
         idf = lucene_idf(250, len(docs))
-        raw = TermCursor(term="t", idf=idf, blocks=list(blocks), avgdl=10.0)
-        entry = TermPostings(blocks, len(docs)).decode()
+        entry = TermPostings(list(blocks), len(docs)).decode()
         assert entry.docs.tolist() == docs
+        assert (entry.tfs.tolist(), entry.dls.tolist()) == (tfs, dls)
         assert [p.tolist() for p in entry.positions(np.arange(len(docs)))] == positions
-        decoded = TermCursor(term="t", idf=idf, blocks=entry.blocks, avgdl=10.0,
-                             postings=entry)
-        for _ in range(40):
-            opened.clear()
-            if rng.random() < 0.5:
-                target = rng.randint(0, 210)
-                decoded.next_geq(target)
-                assert opened == []  # the decoded entry is sliced
-                before = raw.cur_doc  # a cursor never moves back
-                raw.next_geq(target)
-                want = next((d for d in docs if d >= max(target, before)), None)
-                if want is not None:
-                    assert raw.cur_doc == want
-            elif not raw.exhausted():
-                decoded.advance()
-                assert opened == []
-                raw.advance()
-            assert raw.cur_doc == decoded.cur_doc
-            if raw.exhausted():
-                assert decoded.exhausted()
-                break
-            i = docs.index(raw.cur_doc)
-            tf, dl = float(tfs[i]), float(dls[i])
-            want_score = idf * tf / (tf + K1 * (1 - B + B * dl / 10.0))
-            opened.clear()
-            assert decoded.score_current() == want_score
-            assert opened == []
-            assert raw.score_current() == want_score
-            assert raw.tf_dl_current() == (tfs[i], dls[i])
-            # the raw cursor reads only the block holding its doc
-            assert set(opened) <= {b.doc_deltas for b in blocks}
-            assert len(opened) <= 1
-
-
-def test_cursor_opens_blocks_lazily(monkeypatch):
-    """Moving onto a block decodes nothing: its first doc is known from
-    the block metadata. Skipping to the last block's first doc decodes
-    no block; scoring there decodes that block alone."""
-    opened = []
-    real = wand_mod.decode_block_arrays
-
-    def counted(*a, **kw):
-        opened.append(a[0])
-        return real(*a, **kw)
-
-    monkeypatch.setattr(wand_mod, "decode_block_arrays", counted)
-    docs, tfs, dls, _, blocks = _raw_term(random.Random(3), 400, 4)
-    cursor = TermCursor(term="t", idf=1.0, blocks=blocks, avgdl=10.0)
-    assert opened == [] and cursor.cur_doc == docs[0]
-    last = cursor.blocks[-1]
-    cursor.next_geq(last.first_doc)
-    assert opened == [] and cursor.cur_doc == last.first_doc
-    cursor.score_current()
-    assert opened == [last.doc_deltas]
+        assert entry.scores(idf, 10.0).tolist() == [
+            idf * tf / (tf + K1 * (1 - B + B * dl / 10.0)) for tf, dl in zip(tfs, dls)
+        ]
+        assert entry.max_impact == max(
+            tf / (tf + K1 * (1 - B + B * dl / 10.0)) for tf, dl in zip(tfs, dls)
+        )
 
 
 def test_phrase_positions_decode_per_candidate_block(monkeypatch):
@@ -479,7 +422,7 @@ def test_phrase_positions_stay_inside_the_cache_byte_budget(spark, index_path):
     phrases = [Phrase((a, b), slop=2) for a, b in zip(terms, terms[1:])]
     cache = BlockCache(engine.blocks, direct=DirectBlockReader(f"{index_path}/blocks"))
     want = [
-        execute_ast(p, engine.blocks, None, engine.n_docs, engine.avgdl, k=20, cache=cache)
+        execute_ast(p, engine.blocks, engine.n_docs, engine.avgdl, k=20, cache=cache)
         for p in phrases
     ]
     assert any(want)
@@ -489,7 +432,7 @@ def test_phrase_positions_stay_inside_the_cache_byte_budget(spark, index_path):
     small = BlockCache(engine.blocks, direct=DirectBlockReader(f"{index_path}/blocks"))
     small.cache_bytes = 2 * max(e.nbytes for e in held)
     for p, w in zip(phrases, want):
-        got = execute_ast(p, engine.blocks, None, engine.n_docs, engine.avgdl, k=20, cache=small)
+        got = execute_ast(p, engine.blocks, engine.n_docs, engine.avgdl, k=20, cache=small)
         assert got == w
         assert small._bytes <= small.cache_bytes
         assert small._bytes == sum(e.nbytes for e in small._cache.values())
@@ -500,9 +443,9 @@ def test_warm_search_builds_no_cursor(spark, index_path, monkeypatch):
     """A repeated warm ``search``/``count`` over AND, OR, synonym and
     phrase queries, and over disjunctive bags (``search(conjunctive=
     False)``, ``search_prefix``, a disjunctive ``count``), scores the
-    cached entries directly: it builds no ``TermCursor``, reads no block
-    or df, and takes each doc_map row group it resolves from the
-    reader's cache once per search."""
+    cached entries directly: it builds no per-query postings object (no
+    ``TermPostings``), reads no block or df, and takes each doc_map row
+    group it resolves from the reader's cache once per search."""
     engine = SearchEngine(spark, index_path, _option())
     asts = [And((Term("데이터"), Phrase(("데이터", "처리")))), Or((Term("문서"), Term("색인")))]
 
@@ -519,9 +462,9 @@ def test_warm_search_builds_no_cursor(spark, index_path, monkeypatch):
 
     first = run()
     built = []
-    real_init = TermCursor.__post_init__
+    real_init = TermPostings.__init__
     monkeypatch.setattr(
-        TermCursor, "__post_init__", lambda self: built.append(self.term) or real_init(self)
+        TermPostings, "__init__", lambda self, *a, **kw: built.append(a) or real_init(self, *a, **kw)
     )
     reads = []
     for reader in (engine.block_cache.direct, engine._term_stats_direct):
@@ -544,8 +487,6 @@ def test_warm_search_builds_no_cursor(spark, index_path, monkeypatch):
     assert all(first[4:6]) and first[6] > 0
     assert built == [] and reads == []
     assert engine.last_route == "driver"
-    # the guard really counts: cursors over the same warm entries
-    load_query_cursors(
-        engine.blocks, None, engine.n_docs, engine.avgdl, ["데이터"], cache=engine.block_cache
-    )
-    assert built == ["데이터"]
+    # the guard really counts: an uncached load builds the term's entry
+    load_query_postings(engine.blocks, engine.n_docs, ["데이터"])
+    assert len(built) == 1

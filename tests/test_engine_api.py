@@ -198,7 +198,7 @@ def test_search_ast_phrase_and_paging(engine):
 
     ast = And((Term("검색"), Phrase(("검색", "엔진"))))
     want = execute_ast(
-        ast, engine.blocks, engine.term_stats, engine.n_docs,
+        ast, engine.blocks, engine.n_docs,
         engine.avgdl, k=10, cache=engine.block_cache,
     )
     got = engine.search_ast(to_json(ast), k=10)
@@ -261,7 +261,7 @@ def test_count_ast_matches_executor(engine):
     for ast in asts:
         want = len(
             execute_ast(
-                ast, engine.blocks, engine.term_stats, engine.n_docs,
+                ast, engine.blocks, engine.n_docs,
                 engine.avgdl, k=engine.n_docs, cache=engine.block_cache,
             )
         )

@@ -1,7 +1,7 @@
 """Regression pins for two bugs a document-at-a-time cursor-tree
 executor had, kept as behaviour tests of the AST evaluator:
 
-1. Cursor ALIASING: one mutable TermCursor shared across every AST
+1. Cursor ALIASING: one mutable term cursor shared across every AST
    occurrence of a term let a Phrase/And branch advance it out from
    under a sibling Term branch — dropping matching docs and assigning
    wrong scores for the Q2 shape ``Or(Term(t), Phrase((s, t)))``
@@ -19,15 +19,16 @@ from mecab_ko_lucene_analyzer_spark.index.build import B, K1
 from mecab_ko_lucene_analyzer_spark.index.codec import encode_block, encode_varints
 from mecab_ko_lucene_analyzer_spark.query.ast import And, Or, Phrase, Term
 from mecab_ko_lucene_analyzer_spark.query.bm25 import lucene_idf
-from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast_cursors
-from mecab_ko_lucene_analyzer_spark.query.wand import TermCursor, _Block
+from mecab_ko_lucene_analyzer_spark.query.executor import _execute_bound
+from mecab_ko_lucene_analyzer_spark.query.wand import TermPostings, _Block
 
 N_DOCS = 20
 AVGDL = 4.0
 
 
-def _cursor(term: str, occurrences: dict[int, list[int]], doc_len: int = 4):
-    """TermCursor over {doc_id: [positions]} with real codec payloads."""
+def _posting(occurrences: dict[int, list[int]], doc_len: int = 4):
+    """(TermPostings, idf) of {doc_id: [positions]} with real codec
+    payloads — one term of the evaluator's binding."""
     docs = np.array(sorted(occurrences), dtype=np.uint64)
     tfs = np.array([len(occurrences[int(d)]) for d in docs], dtype=np.uint64)
     pos = [np.array(occurrences[int(d)], dtype=np.uint64) for d in docs]
@@ -37,12 +38,11 @@ def _cursor(term: str, occurrences: dict[int, list[int]], doc_len: int = 4):
         tf / (tf + K1 * (1 - B + B * doc_len / AVGDL)) for tf in tfs.tolist()
     ]
     blk = _Block(int(docs[0]), dd, tt, encode_varints(dls), max(impacts), pp)
-    return TermCursor(
-        term=term,
-        idf=lucene_idf(N_DOCS, len(docs)),
-        blocks=[blk],
-        avgdl=AVGDL,
-    )
+    return TermPostings([blk], len(docs)), lucene_idf(N_DOCS, len(docs))
+
+
+def _run(ast, bound):
+    return _execute_bound(ast, bound, AVGDL, 10)
 
 
 def _score(tf: int, df: int, doc_len: int = 4) -> float:
@@ -53,12 +53,12 @@ def _score(tf: int, df: int, doc_len: int = 4) -> float:
 def test_term_reused_in_phrase_branch_keeps_own_cursor():
     """Or(Term(b), Phrase((a, b))): evaluating the phrase branch must
     not lose the Term branch's own matches."""
-    cursors = {
-        "a": _cursor("a", {10: [0]}),
-        "b": _cursor("b", {1: [0, 1, 2], 5: [0, 1], 10: [1]}),
+    bound = {
+        "a": _posting({10: [0]}),
+        "b": _posting({1: [0, 1, 2], 5: [0, 1], 10: [1]}),
     }
     ast = Or((Term("b"), Phrase(("a", "b"))))
-    got = execute_ast_cursors(ast, dict(cursors), k=10)
+    got = _run(ast, bound)
     docs = [d for d, _ in got]
     assert docs == [1, 5, 10], got  # doc 5 was silently dropped before
     scores = dict(got)
@@ -70,14 +70,14 @@ def test_term_reused_in_phrase_branch_keeps_own_cursor():
 def test_term_reused_across_and_branches():
     """And(Term(b), Phrase((a, b))) — an aliased cursor made the
     And's alignment loop interfere with itself."""
-    cursors = {
-        "a": _cursor("a", {3: [0], 7: [5]}),
-        "b": _cursor("b", {1: [0], 3: [1], 7: [0]}),
+    bound = {
+        "a": _posting({3: [0], 7: [5]}),
+        "b": _posting({1: [0], 3: [1], 7: [0]}),
     }
     # phrase a@pos then b@pos+1: doc 3 matches (0 -> 1); doc 7 has
     # b BEFORE a (no window), doc 1 lacks a entirely
     ast = And((Term("b"), Phrase(("a", "b"))))
-    got = execute_ast_cursors(ast, dict(cursors), k=10)
+    got = _run(ast, bound)
     assert [d for d, _ in got] == [3]
     assert got[0][1] == _score(1, 3)
 
@@ -86,24 +86,20 @@ def test_phrase_slop_exists_semantics_not_greedy():
     """Phrase((a, b, c), slop=1) with a@0, b@[1, 2], c@4: the chain
     a@0 -> b@2 -> c@4 is valid, but greedy first-match picks b@1 and
     dead-ends (c window (1, 3] misses c@4) — the doc must match."""
-    cursors = {
-        "a": _cursor("a", {1: [0]}),
-        "b": _cursor("b", {1: [1, 2]}),
-        "c": _cursor("c", {1: [4]}),
+    bound = {
+        "a": _posting({1: [0]}),
+        "b": _posting({1: [1, 2]}),
+        "c": _posting({1: [4]}),
     }
-    got = execute_ast_cursors(
-        Phrase(("a", "b", "c"), slop=1), dict(cursors), k=10
-    )
+    got = _run(Phrase(("a", "b", "c"), slop=1), bound)
     assert [d for d, _ in got] == [1], got
 
     # and slop=0 stays strict: consecutive only
-    cursors0 = {
-        "a": _cursor("a", {1: [0]}),
-        "b": _cursor("b", {1: [2]}),
+    bound0 = {
+        "a": _posting({1: [0]}),
+        "b": _posting({1: [2]}),
     }
-    got0 = execute_ast_cursors(
-        Phrase(("a", "b"), slop=0), dict(cursors0), k=10
-    )
+    got0 = _run(Phrase(("a", "b"), slop=0), bound0)
     assert got0 == []
 
 

@@ -185,7 +185,7 @@ CASES = [
 def test_execute_ast_matches_brute_force(env, ast):
     blocks, term_stats, corpus, docs = env
     expected = _brute_force(docs, ast, corpus["n_docs"], corpus["avgdl"], k=10)
-    got = execute_ast(ast, blocks, term_stats, corpus["n_docs"], corpus["avgdl"], k=10)
+    got = execute_ast(ast, blocks, corpus["n_docs"], corpus["avgdl"], k=10)
     assert got == expected, to_json(ast)
 
 
@@ -209,7 +209,7 @@ def test_execute_ast_not_matches_brute_force(env, ast):
     blocks, term_stats, corpus, docs = env
     n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
     expected = _brute_force(docs, ast, n_docs, avgdl, k=10)
-    got = execute_ast(ast, blocks, term_stats, n_docs, avgdl, k=10)
+    got = execute_ast(ast, blocks, n_docs, avgdl, k=10)
     assert got == expected, to_json(ast)
 
 
@@ -220,11 +220,11 @@ def test_not_excludes_and_scores_identically(env):
     blocks, term_stats, corpus, docs = env
     n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
     plain = execute_ast(
-        And((Term("검색"),)), blocks, term_stats, n_docs, avgdl, k=len(docs)
+        And((Term("검색"),)), blocks, n_docs, avgdl, k=len(docs)
     )
     negated = execute_ast(
         And((Term("검색"), Not(Term("엔진")))),
-        blocks, term_stats, n_docs, avgdl, k=len(docs),
+        blocks, n_docs, avgdl, k=len(docs),
     )
     has_engine = {
         d for d, toks in docs.items() if any(t["term"] == "엔진" for t in toks)
@@ -280,7 +280,7 @@ def test_build_query_ast_exclude_tokens():
 def test_topk_and_requires_all_terms(env):
     blocks, term_stats, corpus, docs = env
     ast = And((Term("검색"), Term("엔진"), Term("문서")))
-    got = execute_ast(ast, blocks, term_stats, corpus["n_docs"], corpus["avgdl"], k=10)
+    got = execute_ast(ast, blocks, corpus["n_docs"], corpus["avgdl"], k=10)
     assert got
     for d, _ in got:
         terms = {t["term"] for t in docs[d]}
@@ -292,8 +292,7 @@ def test_topk_and_requires_all_terms(env):
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from mecab_ko_lucene_analyzer_spark.query.executor import count_ast_cursors
-from mecab_ko_lucene_analyzer_spark.query.wand import load_query_cursors
+from mecab_ko_lucene_analyzer_spark.query.executor import count_ast
 
 # deliberately mixed dfs: corpus-frequent nouns, the hot josa 는/이
 # (the 10^12-doc skew shape), one absent term — so random trees hit
@@ -344,21 +343,12 @@ def test_random_ast_matches_brute_force(env, ast):
     blocks, term_stats, corpus, docs = env
     n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
     expected = _brute_force(docs, ast, n_docs, avgdl, k=10)
-    got = execute_ast(ast, blocks, term_stats, n_docs, avgdl, k=10)
+    got = execute_ast(ast, blocks, n_docs, avgdl, k=10)
     assert got == expected, to_json(ast)
     # the count path (Q8 trackTotalHits) must agree with the ground
     # truth's full match set, not just the top-k
-    from mecab_ko_lucene_analyzer_spark.query.ast import ast_terms
-
     all_matches = _brute_force(docs, ast, n_docs, avgdl, k=len(docs))
-    cursors = {
-        c.term: c
-        for c in load_query_cursors(
-            blocks, term_stats, n_docs, avgdl,
-            sorted(ast_terms(ast)), with_positions=True,
-        )
-    }
-    assert count_ast_cursors(ast, cursors) == len(all_matches), to_json(ast)
+    assert count_ast(ast, blocks, n_docs, avgdl) == len(all_matches), to_json(ast)
 
 
 @given(ast=_not_ast_st)
@@ -370,19 +360,10 @@ def test_random_not_ast_matches_brute_force(env, ast):
     blocks, term_stats, corpus, docs = env
     n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
     expected = _brute_force(docs, ast, n_docs, avgdl, k=10)
-    got = execute_ast(ast, blocks, term_stats, n_docs, avgdl, k=10)
+    got = execute_ast(ast, blocks, n_docs, avgdl, k=10)
     assert got == expected, to_json(ast)
-    from mecab_ko_lucene_analyzer_spark.query.ast import ast_terms
-
     all_matches = _brute_force(docs, ast, n_docs, avgdl, k=len(docs))
-    cursors = {
-        c.term: c
-        for c in load_query_cursors(
-            blocks, term_stats, n_docs, avgdl,
-            sorted(ast_terms(ast)), with_positions=True,
-        )
-    }
-    assert count_ast_cursors(ast, cursors) == len(all_matches), to_json(ast)
+    assert count_ast(ast, blocks, n_docs, avgdl) == len(all_matches), to_json(ast)
 
 
 # ---------------------------------------------------------------- DisMax
@@ -448,7 +429,7 @@ def test_dismax_tb0_equals_or_and_blend_law(spark):
     blocks = build_blocks_from_partials(
         partials, term_stats, row["n"], float(row["avgdl"]), hot_min_df=10**9
     )
-    args = (blocks, term_stats, row["n"], float(row["avgdl"]))
+    args = (blocks, row["n"], float(row["avgdl"]))
 
     or_hits = dict(execute_ast(Or((Term("a"), Term("c"))), *args, k=10))
     dm0 = dict(execute_ast(DisMax((Term("a"), Term("c")), 0.0), *args, k=10))

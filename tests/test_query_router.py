@@ -1,6 +1,6 @@
 """High-df query routing (round-4): hot terms must never collect their
 blocks to the driver; the distributed scorer must stay rank-identical
-to the driver WAND/cursor paths and the brute-force oracle."""
+to the driver evaluator and the brute-force oracle."""
 
 import shutil
 
@@ -24,14 +24,12 @@ from mecab_ko_lucene_analyzer_spark.query.ast import (
     Term,
     bag_ast,
 )
-from mecab_ko_lucene_analyzer_spark.query.executor import execute_ast
+from mecab_ko_lucene_analyzer_spark.query.executor import count_ast, execute_ast
 from mecab_ko_lucene_analyzer_spark.query.router import (
-    ast_routable,
     count_ast_blocks,
     distributed_ast_topk,
     term_dfs,
 )
-from mecab_ko_lucene_analyzer_spark.query.wand import load_query_cursors
 from mecab_ko_lucene_analyzer_spark.sources import synthesize_webpages
 
 N_DOCS = 120
@@ -70,7 +68,7 @@ def test_bm25_topk_blocks_rank_identical(spark, serving, terms):
     blocks, term_stats, n_docs, avgdl = serving
     dfs = term_dfs(term_stats, terms)
     got = distributed_ast_topk(bag_ast(terms), blocks, dfs, n_docs, avgdl, k=10)
-    assert got == execute_ast(bag_ast(terms), blocks, term_stats, n_docs, avgdl, k=10)
+    assert got == execute_ast(bag_ast(terms), blocks, n_docs, avgdl, k=10)
 
     pages = synthesize_webpages(spark, N_DOCS, partitions=5)
     rows = sorted(pages.select("url", "text").collect(), key=lambda r: r["url"])
@@ -144,7 +142,7 @@ def test_distributed_ast_topk_matches_driver_cursors(spark, serving, ast):
 
     dfs = term_dfs(term_stats, sorted(ast_terms(ast)))
     got = distributed_ast_topk(ast, blocks, dfs, n_docs, avgdl, k=10)
-    want = execute_ast(ast, blocks, term_stats, n_docs, avgdl, k=10)
+    want = execute_ast(ast, blocks, n_docs, avgdl, k=10)
     assert [d for d, _ in got] == [d for d, _ in want]
     for (_, s1), (_, s2) in zip(got, want):
         assert s1 == pytest.approx(s2, abs=1e-9)
@@ -157,43 +155,45 @@ def test_count_ast_blocks_matches_driver_cursors(spark, serving, ast):
     included (a regression that drops 0.0-scoring phrase-only matches
     would silently change counts)."""
     from mecab_ko_lucene_analyzer_spark.query.ast import ast_terms
-    from mecab_ko_lucene_analyzer_spark.query.executor import count_ast_cursors
-    from mecab_ko_lucene_analyzer_spark.query.router import count_ast_blocks
-    from mecab_ko_lucene_analyzer_spark.query.wand import load_query_cursors
 
     blocks, term_stats, n_docs, avgdl = serving
-    terms = sorted(ast_terms(ast))
-    dfs = term_dfs(term_stats, terms)
+    dfs = term_dfs(term_stats, sorted(ast_terms(ast)))
     got = count_ast_blocks(ast, blocks, dfs, n_docs, avgdl)
-    cursors = {
-        c.term: c
-        for c in load_query_cursors(
-            blocks, term_stats, n_docs, avgdl, terms, with_positions=True
-        )
-    }
-    assert got == count_ast_cursors(ast, cursors)
+    assert got == count_ast(ast, blocks, n_docs, avgdl)
 
 
-def test_every_ast_shape_is_routable():
-    """r4: EVERY Term/And/Or/Phrase tree routes (nested phrases take
-    the general flag-column plan); only unknown node types are
-    rejected."""
-    assert ast_routable(
-        And((Or((Term("검색"), Phrase(("데이터", "처리")))), Term("엔진")))
-    )
-    assert ast_routable(And((Or((Term("a"), Term("b"))), Term("c"))))
-    assert ast_routable(Phrase(("a", "b")))
-    assert ast_routable(And((Phrase(("a", "b")), Term("c"))))
-    assert not ast_routable(And((Term("a"), object())))
+def test_every_ast_shape_is_routable(spark, serving):
+    """r4: EVERY Term/And/Or/Sum/DisMax/Phrase tree routes (nested
+    phrases take the general flag-column plan); an unknown node type
+    is rejected by ``validate_ast`` at both evaluators' entry, with
+    the same ``ValueError``."""
+    from mecab_ko_lucene_analyzer_spark.query.ast import validate_ast
+
+    for ast in (
+        And((Or((Term("검색"), Phrase(("데이터", "처리")))), Term("엔진"))),
+        And((Or((Term("a"), Term("b"))), Term("c"))),
+        Phrase(("a", "b")),
+        And((Phrase(("a", "b")), Term("c"))),
+        Sum((DisMax((Term("a"), Term("b")), 0.3), Term("c"))),
+    ):
+        validate_ast(ast)
+    blocks, term_stats, n_docs, avgdl = serving
+    for bad in (And((Term("a"), object())), And((Term("a"), Not(Or((object(),)))))):
+        with pytest.raises(ValueError, match="unknown query node"):
+            validate_ast(bad)
+        with pytest.raises(ValueError, match="unknown query node"):
+            execute_ast(bad, blocks, n_docs, avgdl, k=10)
+        with pytest.raises(ValueError, match="unknown query node"):
+            distributed_ast_topk(bad, blocks, {"a": 1}, n_docs, avgdl, k=10)
 
 
 def test_or_nested_phrase_no_driver_block_fetch(spark, serving, monkeypatch):
     """The general flag-column plan must stay fully distributed too:
     an Or-nested phrase with a hot josa member never pulls blocks to
-    the driver, and ranks identically to the driver cursors."""
+    the driver, and ranks identically to the driver evaluator."""
     blocks, term_stats, n_docs, avgdl = serving
     ast = And((Or((Phrase(("는", "데이터")), Term("검색"))), Term("데이터")))
-    want = execute_ast(ast, blocks, term_stats, n_docs, avgdl, k=10)
+    want = execute_ast(ast, blocks, n_docs, avgdl, k=10)
 
     import mecab_ko_lucene_analyzer_spark.query.wand as wand_mod
 
@@ -215,10 +215,10 @@ def test_hot_phrase_routes_without_driver_block_fetch(
 ):
     """A phrase query containing the hot josa term must evaluate fully
     distributed: the driver never pulls term blocks (phrase positions
-    decode executor-side), and the ranking equals the driver cursors'."""
+    decode executor-side), and the ranking equals the driver evaluator's."""
     blocks, term_stats, n_docs, avgdl = serving
     ast = And((Term("데이터"), Phrase(("는", "데이터"))))
-    want = execute_ast(ast, blocks, term_stats, n_docs, avgdl, k=10)
+    want = execute_ast(ast, blocks, n_docs, avgdl, k=10)
 
     import mecab_ko_lucene_analyzer_spark.query.wand as wand_mod
 
@@ -357,6 +357,31 @@ def test_hot_count_routes_distributed_same_results(engines, monkeypatch):
         assert got == want, text
 
 
+def test_synonym_queries_count_what_search_serves(engines):
+    """With synonyms (``{"검색": ["서치"]}``) ``search``, ``count`` and
+    ``search_bulk`` serve one AST per flag: the conjunctive ``And`` of
+    the per-token subtrees, or their disjunctive ``Sum``. For both
+    flags the count is the number of docs ``search`` returns at
+    k = n_docs, on the driver and on the distributed route, and the
+    disjunctive hits hold the conjunctive ones."""
+    cold, hot = engines
+    for text in ("검색 데이터", "검색", "검색 엔진 문서"):
+        hits = {}
+        for conj in (True, False):
+            got = cold.search(text, k=N_DOCS, conjunctive=conj)
+            hits[conj] = {h["doc_id"] for h in got}
+            assert cold.count(text, conjunctive=conj) == len(got), (text, conj)
+            assert hot.count(text, conjunctive=conj) == len(got), (text, conj)
+            assert hot.last_route == "distributed"
+        assert hits[True] <= hits[False], text
+    assert len(hits[False]) > len(hits[True])
+    bulk = cold.search_bulk(["검색 데이터"], k=10, conjunctive=False).collect()
+    want = cold.search("검색 데이터", k=10, conjunctive=False)
+    assert sorted((r["rank"], r["doc_id"], r["score"]) for r in bulk) == [
+        (i, h["doc_id"], h["score"]) for i, h in enumerate(want, start=1)
+    ]
+
+
 def test_hot_multiword_synonym_routes_distributed(engines, monkeypatch):
     """A multi-word synonym (Or-nested Phrase — the Q2 expansion shape)
     now routes too: the hot engine answers it fully distributed (no
@@ -457,27 +482,19 @@ _ast_st = st.recursive(
 @settings(max_examples=8, deadline=None)
 def test_random_ast_distributed_matches_driver(spark, serving, ast):
     """Random trees through the distributed flag-column/general plan vs
-    the driver cursor tree — extends the 16 hand-picked ASTS to the
+    the driver evaluator — extends the 16 hand-picked ASTS to the
     open tree space (fewer examples: each draw plans + runs Spark
     jobs). Rank and score identity, plus count-path agreement."""
     from mecab_ko_lucene_analyzer_spark.query.ast import ast_terms
-    from mecab_ko_lucene_analyzer_spark.query.executor import count_ast_cursors
-    from mecab_ko_lucene_analyzer_spark.query.router import count_ast_blocks
 
     blocks, term_stats, n_docs, avgdl = serving
     terms = sorted(ast_terms(ast))
     dfs = term_dfs(term_stats, terms)
     got = distributed_ast_topk(ast, blocks, dfs, n_docs, avgdl, k=10)
-    want = execute_ast(ast, blocks, term_stats, n_docs, avgdl, k=10)
+    want = execute_ast(ast, blocks, n_docs, avgdl, k=10)
     assert [d for d, _ in got] == [d for d, _ in want]
     for (_, s1), (_, s2) in zip(got, want):
         assert s1 == pytest.approx(s2, abs=1e-9)
-    cursors = {
-        c.term: c
-        for c in load_query_cursors(
-            blocks, term_stats, n_docs, avgdl, terms, with_positions=True
-        )
-    }
-    assert count_ast_blocks(ast, blocks, dfs, n_docs, avgdl) == count_ast_cursors(
-        ast, cursors
+    assert count_ast_blocks(ast, blocks, dfs, n_docs, avgdl) == count_ast(
+        ast, blocks, n_docs, avgdl
     )

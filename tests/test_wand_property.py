@@ -1,15 +1,23 @@
-"""Property test: block-max WAND is rank-identical to brute-force BM25
-over arbitrary random posting sets (no Spark — cursors built directly
-from encoded blocks, exercising codec + skipping logic together)."""
+"""Property tests of the driver top-k over arbitrary random posting sets
+(no Spark — term postings built directly from encoded blocks,
+exercising codec and scorer together): the bag top-k is rank-identical
+to brute-force BM25, its MaxScore step gives the full evaluation's
+bits, and the AST evaluator equals the scoring spec."""
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mecab_ko_lucene_analyzer_spark.index.codec import encode_block, encode_varints
-from mecab_ko_lucene_analyzer_spark.query.ast import And, DisMax, Or, Sum, Term
+from mecab_ko_lucene_analyzer_spark.query.ast import And, DisMax, Or, Sum, Term, bag_ast
 from mecab_ko_lucene_analyzer_spark.query.bm25 import lucene_idf
-from mecab_ko_lucene_analyzer_spark.query.wand import TermCursor, _Block, wand_topk
+from mecab_ko_lucene_analyzer_spark.query.executor import (
+    _bag_top_k,
+    _evaluate,
+    _execute_bound,
+    _top_k,
+)
+from mecab_ko_lucene_analyzer_spark.query.wand import TermPostings, _Block, wand_topk
 
 K1, B = 1.2, 0.75
 
@@ -43,10 +51,10 @@ def corpora(draw):
     return n_docs, doc_lens, postings, query, k, block_size
 
 
-def _build_cursor(term, tfs, doc_lens, n_docs, avgdl, block_size):
+def _term_blocks(tfs, doc_lens, avgdl, block_size):
+    """``(blocks, df)`` of one term's ``{doc: tf}`` postings, encoded
+    as the index stores them, with the block-max impacts."""
     docs = np.array(sorted(tfs), dtype=np.uint64)
-    if docs.size == 0:
-        return None
     blocks = []
     for i in range(0, len(docs), block_size):
         chunk = docs[i : i + block_size]
@@ -60,18 +68,23 @@ def _build_cursor(term, tfs, doc_lens, n_docs, avgdl, block_size):
         blocks.append(
             _Block(int(chunk[0]), dd, tt, encode_varints(dls), max(impacts))
         )
-    df = len(docs)
-    return TermCursor(
-        term=term,
-        idf=lucene_idf(n_docs, df),
-        blocks=blocks,
-        avgdl=avgdl,
-    )
+    return blocks, len(docs)
+
+
+def _bind(postings, doc_lens, n_docs, avgdl, block_size) -> dict:
+    """term → (its TermPostings, idf) for every term with postings —
+    the evaluator's binding, as ``wand.load_query_postings`` makes it."""
+    out = {}
+    for t, tfs in postings.items():
+        if tfs:
+            blocks, df = _term_blocks(tfs, doc_lens, avgdl, block_size)
+            out[t] = (TermPostings(blocks, df), lucene_idf(n_docs, df))
+    return out
 
 
 def _brute_force(postings, query, doc_lens, n_docs, avgdl, k):
     scores = {}
-    for t in query:
+    for t in sorted(query):
         tfs = postings[t]
         if not tfs:
             continue
@@ -86,30 +99,89 @@ def _brute_force(postings, query, doc_lens, n_docs, avgdl, k):
 @settings(max_examples=300, deadline=None)
 @given(corpora())
 def test_wand_rank_identical_on_random_postings(data):
-    """Every strategy — the skipping WAND loop, the vectorized exact
-    TAAT path, and auto dispatch — must rank-match brute-force BM25.
-    Strategies are forced explicitly: tiny random payloads would
-    otherwise route auto to TAAT only and leave the WAND loop without
-    property coverage."""
+    """``wand_topk`` over a binding of the query's terms (the
+    ``load_query_cursors`` shape) ranks the bag exactly like
+    brute-force BM25, whatever order the binding lists its terms in."""
     n_docs, doc_lens, postings, query, k, block_size = data
     avgdl = sum(doc_lens) / n_docs
-
-    def cursors():
-        return [
-            c
-            for c in (
-                _build_cursor(t, postings[t], doc_lens, n_docs, avgdl, block_size)
-                for t in query
-            )
-            if c is not None
-        ]
-
+    bound = _bind({t: postings[t] for t in query}, doc_lens, n_docs, avgdl, block_size)
     expected = _brute_force(postings, query, doc_lens, n_docs, avgdl, k)
-    for strategy in ("auto", "wand", "taat"):
-        got = wand_topk(cursors(), k, strategy=strategy)
-        assert [d for d, _ in got] == [d for d, _ in expected], strategy
-        for (_, s1), (_, s2) in zip(got, expected):
-            assert abs(s1 - s2) < 1e-9
+    got = wand_topk((bound, avgdl), k)
+    assert got == wand_topk((dict(reversed(list(bound.items()))), avgdl), k)
+    assert [d for d, _ in got] == [d for d, _ in expected]
+    for (_, s1), (_, s2) in zip(got, expected):
+        assert abs(s1 - s2) < 1e-9
+
+
+@st.composite
+def tied_bags(draw):
+    """A random corpus whose query may name absent terms, with some
+    docs cloned from one source doc (same doc length and the same tf in
+    every term), so that equal scores straddle a cutoff."""
+    n_docs, doc_lens, postings, query, _k, block_size = draw(corpora())
+    doc_lens = list(doc_lens)
+    src = draw(st.integers(min_value=0, max_value=n_docs - 1))
+    clones = draw(
+        st.lists(st.integers(min_value=0, max_value=n_docs - 1), unique=True, max_size=8)
+    )
+    for d in clones:
+        if d == src:
+            continue
+        doc_lens[d] = doc_lens[src]
+        for tfs in postings.values():
+            tfs.pop(d, None)
+            if src in tfs:
+                tfs[d] = tfs[src]
+    query = query + draw(st.lists(st.sampled_from(["absent1", "absent2"]), unique=True))
+    return n_docs, doc_lens, postings, query, block_size
+
+
+@settings(max_examples=300, deadline=None)
+@given(tied_bags())
+def test_maxscore_equals_full_evaluation(data):
+    """The MaxScore step of a bag's top-k gives the full evaluation's
+    top-k, ``(doc_id, score.hex())`` for every hit: for k from 1 to
+    beyond the match count and at every k whose cutoff falls inside a
+    group of equal scores; for single-term bags, absent terms and block
+    sizes 2, 3 and 128."""
+    n_docs, doc_lens, postings, query, block_size = data
+    avgdl = sum(doc_lens) / n_docs
+    bound = _bind(postings, doc_lens, n_docs, avgdl, block_size)
+    bag = bag_ast(query)
+    full = _top_k(*_evaluate(bag, bound, avgdl), n_docs + 1)
+    ks = {1, 2, 3, 10, len(full), len(full) + 1, len(full) + 5}
+    # a cutoff inside a run of equal scores: θ is one of the tied scores
+    ks.update(i + 1 for i in range(1, len(full)) if full[i][1] == full[i - 1][1])
+    for k in sorted(ks):
+        want = [(d, s.hex()) for d, s in full[:k]]
+        got = _bag_top_k(bag.children, bound, avgdl, k)
+        assert [(d, s.hex()) for d, s in got] == want, k
+        assert _execute_bound(bag, bound, avgdl, k) == got
+    assert _bag_top_k(bag.children, bound, avgdl, 0) == []
+
+
+def test_maxscore_keeps_a_tie_at_the_cutoff_across_terms():
+    """Two terms with the same df, tf and doc lengths give every doc
+    the same score s, and both terms the same bound ``idf × max
+    impact``, which here rounds one ulp below s. Whichever term seeds
+    θ = s, the other holds the lowest doc ids (which win the tie) in
+    one of the two layouts; a test of its bound against θ without
+    slack would call it non-essential and serve the seed's docs."""
+    from mecab_ko_lucene_analyzer_spark.query.bm25 import bm25_partial
+
+    k, n_docs, avgdl = 4, 40, 1.5
+    doc_lens = [1] * n_docs
+    idf = lucene_idf(n_docs, k + 1)
+    assert idf * bm25_partial(1.0, 1.0, 1.0, avgdl) < bm25_partial(idf, 1.0, 1.0, avgdl)
+    low, high = {d: 1 for d in range(k + 1)}, {d: 1 for d in range(20, 21 + k)}
+    for postings in ({"b": low, "c": high}, {"b": high, "c": low}):
+        for block_size in (2, 3, 128):
+            bound = _bind(postings, doc_lens, n_docs, avgdl, block_size)
+            bag = bag_ast(postings)
+            full = _top_k(*_evaluate(bag, bound, avgdl), k)
+            assert [d for d, _ in full] == list(range(k))
+            got = _bag_top_k(bag.children, bound, avgdl, k)
+            assert [(d, s.hex()) for d, s in got] == [(d, s.hex()) for d, s in full]
 
 
 @st.composite
@@ -145,21 +217,9 @@ def test_and_or_evaluator_matches_brute_force(data):
     full match-set size."""
     from ast_reference import ast_oracle
 
-    from mecab_ko_lucene_analyzer_spark.query.executor import (
-        count_ast_cursors,
-        execute_ast_cursors,
-    )
-
     n_docs, doc_lens, postings, groups, top, k, block_size = data
     avgdl = sum(doc_lens) / n_docs
-
-    def cursors():
-        out = {}
-        for t, tfs in postings.items():
-            c = _build_cursor(t, tfs, doc_lens, n_docs, avgdl, block_size)
-            if c is not None:
-                out[t] = c
-        return out
+    bound = _bind(postings, doc_lens, n_docs, avgdl, block_size)
 
     def node(members, kind):
         if len(members) == 1:
@@ -174,5 +234,5 @@ def test_and_or_evaluator_matches_brute_force(data):
         t: {d: [0] * tf for d, tf in tfs.items()} for t, tfs in postings.items()
     }
     want = ast_oracle(ast, spec_postings, doc_lens, n_docs, avgdl)
-    assert execute_ast_cursors(ast, cursors(), k=k) == want[:k]
-    assert count_ast_cursors(ast, cursors()) == len(want)
+    assert _execute_bound(ast, bound, avgdl, k) == want[:k]
+    assert _evaluate(ast, bound, avgdl, scored=False)[0].size == len(want)
