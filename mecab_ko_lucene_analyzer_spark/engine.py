@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from collections import OrderedDict
 from dataclasses import dataclass
+from functools import cached_property
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -57,45 +58,30 @@ class SearchEngine:
     max_driver_df: int = 1_000_000
 
     def __post_init__(self):
+        import pyarrow.parquet as pq
+
+        from .fs import parquet_parts
         from .query.wand import (
             BlockCache,
             DirectBlockReader,
             DirectDocMapReader,
             DirectTermStatsReader,
-            NoLocalParquet,
         )
 
-        sp = self.spark
-        self.blocks = sp.read.parquet(f"{self.base_path}/blocks")
-        self.term_stats = sp.read.parquet(f"{self.base_path}/term_stats")
-        corpus = sp.read.parquet(f"{self.base_path}/corpus_stats").first()
+        # every serving read and the corpus stats go straight to the
+        # parquet files through Arrow, on whatever file system
+        # ``fs.resolve`` opens for the path — zero Spark jobs; a missing
+        # table, an unrecognized scheme or an unreadable file raises here
+        base = self.base_path
+        self.block_cache = BlockCache(None, direct=DirectBlockReader(f"{base}/blocks"))
+        self._doc_map_direct = DirectDocMapReader(f"{base}/doc_map")
+        self._term_stats_direct = DirectTermStatsReader(f"{base}/term_stats")
+        fs, parts = parquet_parts(f"{base}/corpus_stats")
+        corpus = pq.read_table(parts, filesystem=fs).to_pylist()[0]
         self.n_docs = corpus["n_docs"]
         self.avgdl = corpus["avgdl"]
-        self.doc_map = sp.read.parquet(f"{self.base_path}/doc_map")
-
-        # the serving reads (df lookup, cold-path block fetch, URL
-        # resolve) go straight to the parquet files through Arrow —
-        # footer-pruned row groups, zero Spark jobs — when the index is
-        # on a locally listable path. A remote/URI or missing path lists
-        # no local parquet file and serves through pruned Spark scans
-        # instead; a listed file that cannot be read (a corrupt footer,
-        # an I/O or permission error) or lacks its key column raises
-        # here.
-        try:
-            readers = (
-                DirectBlockReader(f"{self.base_path}/blocks"),
-                DirectDocMapReader(f"{self.base_path}/doc_map"),
-                DirectTermStatsReader(f"{self.base_path}/term_stats"),
-            )
-        except NoLocalParquet:
-            readers = (None, None, None)
-        #: "direct" (Arrow reads of the local parquet files) or "spark"
-        self.read_path = "spark" if readers[0] is None else "direct"
-        self.block_cache = BlockCache(self.blocks, direct=readers[0])
-        self._doc_map_direct, self._term_stats_direct = readers[1:]
-        #: term → df memo in front of both df readers (the direct
-        #: term_stats reader and the Spark fallback), so a warm search
-        #: looks each df up once; LRU-bounded like the adjacent
+        #: term → df memo in front of the term_stats reader, so a warm
+        #: search looks each df up once; LRU-bounded like the adjacent
         #: BlockCache — an open-ended query stream (typos included)
         #: must not grow driver memory monotonically (int values are
         #: tiny, but 10^8 distinct terms of key strings are not)
@@ -106,23 +92,29 @@ class SearchEngine:
         #: scorer); diagnostics + tested routing evidence
         self.last_route: str | None = None
 
+    # the Spark tables, read on first use by the methods that run Spark
+    # (the distributed route, explain, expansions, aggregations, cache())
+    @cached_property
+    def blocks(self) -> DataFrame:
+        return self.spark.read.parquet(f"{self.base_path}/blocks")
+
+    @cached_property
+    def term_stats(self) -> DataFrame:
+        return self.spark.read.parquet(f"{self.base_path}/term_stats")
+
+    @cached_property
+    def doc_map(self) -> DataFrame:
+        return self.spark.read.parquet(f"{self.base_path}/doc_map")
+
     def _dfs(self, terms: list[str]) -> dict[str, int]:
         """Per-term df, 0 for terms the index lacks, answered from the
-        ``_df_cache`` LRU. Only its misses reach a reader: the
-        term_stats files of a locally readable index
-        (:class:`~.query.wand.DirectTermStatsReader`, no Spark job),
-        else ``router.term_dfs`` — one Spark job, a pushed-down IN
-        filter on ``term_stats`` (≤ |query| rows)."""
+        ``_df_cache`` LRU; its misses are read from the term_stats files
+        (:class:`~.query.wand.DirectTermStatsReader`, no Spark job)."""
         misses = sorted({t for t in terms if t not in self._df_cache})
         if misses:
-            if self._term_stats_direct is not None:
-                fetched = self._term_stats_direct.fetch(misses)
-            else:
-                from .query.router import term_dfs
-
-                fetched = term_dfs(self.term_stats, misses)
+            fetched = self._term_stats_direct.fetch(misses)
             for t in misses:
-                self._df_cache[t] = fetched.get(t, 0)
+                self._df_cache[t] = fetched[t]
         out = {}
         for t in set(terms):
             self._df_cache.move_to_end(t)
@@ -132,8 +124,10 @@ class SearchEngine:
         return out
 
     def cache(self) -> "SearchEngine":
-        """Pin the serving tables (blocks + stats) in executor memory —
-        the Lucene searcher-warm state equivalent."""
+        """Pin the distributed route's tables (blocks + term_stats) in
+        executor memory — the Lucene searcher-warm state equivalent.
+        The driver route reads the parquet files and does not use
+        them."""
         self.blocks.cache().count()
         self.term_stats.cache().count()
         return self
@@ -292,23 +286,15 @@ class SearchEngine:
                 ast, self.blocks, dfs, self.n_docs, self.avgdl, fetch
             )
         return execute_ast(
-            ast, self.blocks, self.n_docs, self.avgdl, fetch, cache=self.block_cache
+            ast, None, self.n_docs, self.avgdl, fetch, cache=self.block_cache
         )
 
     def _resolve(self, hits: list[tuple[int, float]]) -> list[dict]:
-        """Attach URLs to ranked hits — direct parquet reader when the
-        index is locally readable (zero Spark jobs), pruned Spark
-        filter otherwise."""
+        """Attach URLs to ranked hits, read from the doc_map files
+        (:class:`~.query.wand.DirectDocMapReader`, no Spark job)."""
         if not hits:
             return []
-        ids = [d for d, _ in hits]
-        if self._doc_map_direct is not None:
-            urls = self._doc_map_direct.fetch(ids)
-        else:
-            urls = {
-                r["doc_id"]: r["url"]
-                for r in self.doc_map.filter(F.col("doc_id").isin(ids)).collect()
-            }
+        urls = self._doc_map_direct.fetch([d for d, _ in hits])
         return [{"doc_id": d, "score": s, "url": urls.get(d)} for d, s in hits]
 
     def search(
@@ -1171,7 +1157,7 @@ class SearchEngine:
                 ast, self.blocks, dfs, self.n_docs, self.avgdl
             )
         return exec_count_ast(
-            ast, self.blocks, self.n_docs, self.avgdl, cache=self.block_cache
+            ast, None, self.n_docs, self.avgdl, cache=self.block_cache
         )
 
     def count(

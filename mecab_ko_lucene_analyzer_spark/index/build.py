@@ -27,6 +27,7 @@ from typing import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..fs import parquet_parts, resolve
 from ..plans import optimized_plan_probe
 
 __all__ = [
@@ -430,34 +431,28 @@ def _write_term_stats(term_stats: DataFrame, path: str) -> None:
 def _write_corpus_stats(spark, path: str, n_docs: int, avgdl: float) -> None:
     """corpus_stats is ONE row, but a Spark write is a full job
     (scheduling + task launch + commit protocol ≈ 0.5 s of pure fixed
-    cost per build). Write the parquet driver-side via pyarrow for
-    local/file paths; object-store paths fall back to the Spark writer
+    cost per build). Write the parquet driver-side via pyarrow where
+    ``fs.resolve`` opens the path on the local file system (a plain
+    path, ``file://``, ``file:/``); other paths take the Spark writer
     (the extra job is noise next to remote IO there)."""
-    import os
-    import shutil as _shutil
+    import pyarrow as pa
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
 
-    local = not ("://" in path and not path.startswith("file://"))
-    if local:
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            p = path[len("file://"):] if path.startswith("file://") else path
-            _shutil.rmtree(p, ignore_errors=True)  # overwrite semantics
-            os.makedirs(p, exist_ok=True)
-            pq.write_table(
-                pa.table(
-                    {
-                        "n_docs": pa.array([int(n_docs)], pa.int64()),
-                        "avgdl": pa.array([float(avgdl)], pa.float64()),
-                    }
-                ),
-                os.path.join(p, "part-00000.parquet"),
-            )
-            open(os.path.join(p, "_SUCCESS"), "w").close()
-            return
-        except ImportError:  # pragma: no cover
-            pass
+    try:
+        fs, root = resolve(path)
+    except (pa.ArrowException, OSError):
+        fs = None
+    if isinstance(fs, pafs.LocalFileSystem):
+        fs.delete_dir_contents(root, missing_dir_ok=True)  # overwrite semantics
+        fs.create_dir(root)
+        pq.write_table(
+            pa.table({"n_docs": [int(n_docs)], "avgdl": [float(avgdl)]}),  # int64, double
+            f"{root}/part-00000.parquet",
+            filesystem=fs,
+        )
+        fs.open_output_stream(f"{root}/_SUCCESS").close()
+        return
     spark.createDataFrame(
         [(int(n_docs), float(avgdl))], "n_docs long, avgdl double"
     ).write.mode("overwrite").parquet(path)
@@ -493,29 +488,20 @@ def _read_stage_table(spark: SparkSession, base_path: str, name: str) -> DataFra
     return spark.read.schema(_READ_SCHEMAS[name]).parquet(f"{base_path}/{name}")
 
 
-def _is_local_path(path: str) -> bool:
-    return not ("://" in path and not path.startswith("file://"))
-
-
 def _footer_row_count(spark: SparkSession, path: str, name: str) -> int:
-    """Row count from parquet footers. Local paths: driver-side pyarrow
-    metadata read (zero Spark jobs — a .count() is a scheduling round
-    trip even when it only scans footers); remote paths fall back to
-    the Spark metadata-only count."""
-    if _is_local_path(path):
-        try:
-            import glob as _glob
+    """Row count from parquet footers, read driver-side through
+    ``fs.parquet_parts`` (zero Spark jobs — a .count() is a scheduling
+    round trip even when it only scans footers). A path pyarrow cannot
+    open (a Hadoop-only scheme such as ``s3a://``, ``hdfs://`` without
+    libhdfs) takes the Spark metadata-only count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-            import pyarrow.parquet as pq
-
-            p = path[len("file://"):] if path.startswith("file://") else path
-            return sum(
-                pq.ParquetFile(f).metadata.num_rows
-                for f in _glob.glob(f"{p}/*.parquet")
-            )
-        except ImportError:  # pragma: no cover
-            pass
-    return _read_stage_table(spark, path.rsplit("/", 1)[0], name).count()
+    try:
+        fs, parts = parquet_parts(path)
+    except (pa.ArrowException, OSError):
+        return _read_stage_table(spark, path.rsplit("/", 1)[0], name).count()
+    return sum(pq.ParquetFile(f, filesystem=fs).metadata.num_rows for f in parts)
 
 
 @dataclass

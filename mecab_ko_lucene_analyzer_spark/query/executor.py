@@ -262,8 +262,8 @@ def execute_ast(
 ) -> list[tuple[int, float]]:
     """Evaluate an AST → top-k [(doc_id, score)], tie-break
     (score desc, doc_id asc). Postings come from ``cache`` (no Spark
-    job on a hit, nor on a miss through its direct reader), else from
-    one term-pruned Spark scan."""
+    job: its direct reader serves the misses, and ``blocks`` is
+    unused), else from one term-pruned Spark scan of ``blocks``."""
     validate_ast(ast)
     return _execute_bound(ast, _bind(ast, blocks, n_docs, cache), avgdl, k)
 

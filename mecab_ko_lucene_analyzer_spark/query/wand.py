@@ -11,9 +11,9 @@ top-k skips by MaxScore over the terms' max impacts there.
 ``bench.py`` surface: a binding plus avgdl, and its bag's top-k through
 that one evaluator. The direct readers (:class:`DirectBlockReader`,
 :class:`DirectDocMapReader`, :class:`DirectTermStatsReader`) serve
-cache misses, df lookups and URL resolves from the local parquet
-files, with no Spark job, by bisecting footer ranges sorted once at
-open.
+cache misses, df lookups and URL resolves from the index's parquet
+files — on any file system ``fs.resolve`` opens, local or not — with
+no Spark job, by bisecting footer ranges sorted once at open.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from ..fs import parquet_parts
 from ..index.codec import decode_positions, decode_varints
 from .bm25 import bm25_partial, lucene_idf
 
@@ -200,28 +201,22 @@ def fetch_term_blocks(
     return out
 
 
-class NoLocalParquet(ValueError):
-    """The path lists no parquet file on the local file system (a
-    remote URI, a missing or empty directory): the caller serves
-    through Spark instead."""
-
-
 def _footer_index(path: str, stats_col: str, what: str) -> list:
     """Shared scaffold for the direct (no-Spark-job) parquet readers:
-    open every file under ``path`` and load per-row-group (min, max)
-    statistics of ``stats_col`` from the footers (a few KB per file).
-    Returns ``[(ParquetFile, [(min, max) per row group]), ...]``;
-    row groups without usable stats get ``(None, None)`` (always
-    read). Raises :class:`NoLocalParquet` when the directory lists no
-    parquet file; a file that is not readable parquet, or lacks
-    ``stats_col``, raises its own error."""
-    import glob as _glob
-
+    open every parquet part under ``path`` — on whatever file system
+    ``fs.parquet_parts`` resolves it to — and load per-row-group (min,
+    max) statistics of ``stats_col`` from the footers (a few KB per
+    file). Returns ``[(ParquetFile, [(min, max) per row group]), ...]``;
+    row groups without usable stats get ``(None, None)`` (always read),
+    and a directory with no row groups gives ``[]``. A missing
+    directory raises ``FileNotFoundError``; a file that is not readable
+    parquet, or lacks ``stats_col``, raises its own error."""
     import pyarrow.parquet as pq
 
+    fs, parts = parquet_parts(path)
     files = []
-    for fn in sorted(_glob.glob(f"{path.rstrip('/')}/*.parquet")):
-        pf = pq.ParquetFile(fn)
+    for fn in parts:
+        pf = pq.ParquetFile(fn, filesystem=fs)
         if pf.metadata.num_row_groups == 0:
             continue
         rg0 = pf.metadata.row_group(0)
@@ -243,8 +238,6 @@ def _footer_index(path: str, stats_col: str, what: str) -> list:
             else:
                 ranges.append((st.min, st.max))
         files.append((pf, ranges))
-    if not files:
-        raise NoLocalParquet(f"no local parquet {what} files under {path!r}")
     return files
 
 
@@ -468,10 +461,10 @@ class DirectTermStatsReader(_DirectKeyedReader):
 
 class BlockCache:
     """Driver-side LRU of (term, with_positions) → :class:`TermPostings`
-    — the serving-node warm cache. Misses batch into one term-pruned
-    fetch: a footer-pruned direct Arrow read when ``direct`` is given
-    (no Spark job — the serving configuration), else a pruned Spark
-    scan. An entry holds the term's compressed blocks and, once a
+    — the serving-node warm cache. Misses batch into one footer-pruned
+    Arrow read through the ``direct`` reader (no Spark job); ``blocks``
+    is accepted for the callers that pass the Spark table, and unused.
+    An entry holds the term's compressed blocks and, once a
     scorer has needed the whole term, its decoded arrays and their BM25
     scores, so a warm query decodes and scores nothing. The cache keeps
     at most ``max_terms`` entries and ``cache_bytes`` bytes (compressed
@@ -483,13 +476,13 @@ class BlockCache:
 
     def __init__(
         self,
-        blocks: DataFrame,
+        blocks: DataFrame | None,
         max_terms: int = 10_000,
-        direct: "DirectBlockReader | None" = None,
+        *,
+        direct: DirectBlockReader,
     ):
         from collections import OrderedDict
 
-        self.blocks = blocks
         self.max_terms = max_terms
         self.direct = direct
         self._cache: "OrderedDict[tuple[str, bool], TermPostings]" = OrderedDict()
@@ -510,10 +503,7 @@ class BlockCache:
             else:
                 misses.append(t)
         if misses:
-            if self.direct is not None:
-                fetched = self.direct.fetch(misses, with_positions)
-            else:
-                fetched = fetch_term_blocks(self.blocks, misses, with_positions)
+            fetched = self.direct.fetch(misses, with_positions)
             for t in misses:
                 key = (t, with_positions)
                 ent = TermPostings(
@@ -546,9 +536,9 @@ def load_query_postings(
 ) -> dict[str, tuple[TermPostings, float]]:
     """term → (its :class:`TermPostings`, idf) for the query terms the
     index holds — the one postings loader of the driver scorers.
-    Postings come from ``cache`` when given — no Spark job on a hit,
-    nor on a miss when the cache has a :class:`DirectBlockReader` —
-    else from one term-pruned Spark scan."""
+    Postings come from ``cache`` when given — no Spark job, its
+    :class:`DirectBlockReader` serving the misses; ``blocks`` is then
+    unused — else from one term-pruned Spark scan of ``blocks``."""
     if cache is not None:
         by_term = cache.get(list(query_terms), with_positions)
     else:

@@ -471,7 +471,7 @@ def test_direct_block_reader_positions_and_errors(spark, materialized):
     )
     assert direct.fetch(["없는단어쿼리"]) == {}
     assert direct.fetch([]) == {}
-    with _pytest.raises(ValueError):
+    with _pytest.raises(FileNotFoundError):
         DirectBlockReader("/tmp/definitely_missing_block_dir_xyz")
 
 
@@ -802,13 +802,12 @@ def test_blocks_params_change_invalidates_manifest(spark, tmp_path):
     assert {f: os.path.getmtime(f) for f in glob.glob(f"{base}/blocks/*")} != mt
 
 
-def test_hot_terms_skip_the_job_when_no_term_can_be_hot(spark):
+def test_hot_terms_skip_the_job_when_no_term_can_be_hot(spark, spark_jobs):
     """``df <= n_docs``, so a hot threshold above ``n_docs`` salts
     nothing: building blocks issues no Spark job before the blocks
     action. A reachable threshold still collects exactly the terms at
     or above it, ``n_docs`` itself included."""
     import pyspark.sql.functions as F
-    from test_engine_api import _spark_jobs
 
     from mecab_ko_lucene_analyzer_spark.index.blocks import HOT_SHARE, _hot_terms
     from mecab_ko_lucene_analyzer_spark.index.build import (
@@ -826,15 +825,14 @@ def test_hot_terms_skip_the_job_when_no_term_can_be_hot(spark):
     try:
         dfs = {r["term"]: r["df"] for r in term_stats.collect()}
         built = []
-        jobs = _spark_jobs(
-            spark,
+        jobs = spark_jobs(
             lambda: built.append(
                 build_blocks_from_partials(partials, term_stats, 50, 5.0, hot_min_df=10**9)
             ),
         )
         assert jobs == 0
         assert sorted(r["term"] for r in built[0].select("term").collect()) == sorted(dfs)
-        assert _spark_jobs(spark, lambda: _hot_terms(term_stats, 50, 51)) == 0
+        assert spark_jobs(lambda: _hot_terms(term_stats, 50, 51)) == 0
         assert _hot_terms(term_stats, 50, 51) == []
         for min_df in (1, 5, 10, 25, 50):
             thresh = max(int(50 * HOT_SHARE), min_df)

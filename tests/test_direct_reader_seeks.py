@@ -3,7 +3,9 @@ the few row-group ranges that can hold it, found by bisecting the
 footer ranges sorted at open, so it costs the same whether the table
 is one file or many. For each of the three readers, the same keys over
 the same rows — written as one file and as 64 files — examine the same
-number of ranges and answer the same."""
+number of ranges and answer the same. Through any file system the path
+resolves to, a reader opens each parquet part once, at open, and no
+file while it answers lookups."""
 
 import random
 
@@ -172,3 +174,61 @@ def test_unpruned_row_groups_are_candidates_for_every_key(tmp_path):
     # terms[3]: the unpruned group only (the second file starts past
     # it); terms[500]: the second file's range and the unpruned group
     assert reader.ranges_examined == 1 + 2
+
+
+def _through_counting_fs(monkeypatch):
+    """Route every path the readers resolve through a counting file
+    system over the local one; returns its handler."""
+    from counting_fs import counting_fs
+
+    import mecab_ko_lucene_analyzer_spark.fs as fs_mod
+
+    fs, handler = counting_fs()
+    monkeypatch.setattr(fs_mod, "resolve", lambda path: (fs, path))
+    return handler
+
+
+@pytest.mark.parametrize("kind", sorted(CASES))
+def test_reader_opens_each_part_once_at_open(tmp_path, monkeypatch, kind):
+    """A keyed reader opens each parquet part once, at open — never a
+    writer's ``_SUCCESS`` or ``.crc`` file — and opens no file during
+    200 lookups, which answer what a local reader answers."""
+    make, reader_cls = CASES[kind]
+    table, cuts = make()
+    path = _write(tmp_path / "t", table, 64, cuts)
+    (tmp_path / "t" / "_SUCCESS").touch()
+    (tmp_path / "t" / ".part-00000.parquet.crc").touch()
+    local = reader_cls(path)
+    handler = _through_counting_fs(monkeypatch)
+    reader = reader_cls(path)
+    parts = sorted(str(p) for p in (tmp_path / "t").glob("part-*.parquet"))
+    assert sorted(handler.opened) == parts
+    handler.opened.clear()
+    keys = sorted(set(table.column(0).to_pylist()))
+    rng = random.Random(3)
+    for _ in range(200):
+        want = rng.sample(keys, 3)
+        got, ref = reader.fetch(want), local.fetch(want)
+        if kind == "blocks":
+            got, ref = _payloads(got), _payloads(ref)
+        assert got == ref and len(got) == 3
+    assert handler.opened == []
+
+
+def test_missing_and_empty_directories(tmp_path, monkeypatch):
+    """A missing table directory raises ``FileNotFoundError`` at open;
+    an existing one with no row groups (a writer's empty part file)
+    gives a reader that answers nothing."""
+    handler = _through_counting_fs(monkeypatch)
+    with pytest.raises(FileNotFoundError):
+        DirectTermStatsReader(str(tmp_path / "missing"))
+    probes = {"doc_map": [0, 7], "term_stats": ["검색"], "blocks": ["검색"]}
+    answers = {"doc_map": {}, "term_stats": {"검색": 0}, "blocks": {}}
+    for kind, (make, reader_cls) in sorted(CASES.items()):
+        empty = tmp_path / kind
+        empty.mkdir()
+        (empty / "_SUCCESS").touch()
+        pq.ParquetWriter(empty / "part-00000.parquet", make()[0].schema).close()
+        assert pq.ParquetFile(empty / "part-00000.parquet").metadata.num_row_groups == 0
+        assert reader_cls(str(empty)).fetch(probes[kind]) == answers[kind]
+        assert handler.opened[-1] == str(empty / "part-00000.parquet")

@@ -6,7 +6,8 @@ index shape the engine serves: a fused build, a compaction opened
 through ``SearchEngine.from_incremental``, and term_stats written
 unsorted across several files by a foreign writer. The engine's df
 memo answers a repeated lookup without the reader, and a count that
-the df decides reads no block."""
+the df decides reads no block. Whatever form names the index's
+location, the engine serves it the same way, with no Spark job."""
 
 import glob
 import os
@@ -215,17 +216,58 @@ def test_count_decided_by_df_fetches_no_blocks(spark, fused, monkeypatch, route)
     assert fetches == []
 
 
-def test_uri_index_serves_through_spark(spark, fused):
-    """An index opened by URI lists no local parquet file: the engine
-    serves it through the Spark readers and answers what the direct
-    readers answer on its local path."""
-    local = SearchEngine(spark, fused, AnalyzerOption())
-    remote = SearchEngine(spark, f"file://{fused}", AnalyzerOption())
-    assert (local.read_path, remote.read_path) == ("direct", "spark")
-    assert remote.block_cache.direct is None and remote._doc_map_direct is None
-    for text in ["검색 엔진", "데이터", "색인 98765"]:
-        assert remote.search(text, k=10) == local.search(text, k=10)
-        assert remote.count(text) == local.count(text)
+def _replies(eng) -> list:
+    """``search``, ``search(conjunctive=False)`` and ``count`` replies
+    over a tail and a head query, hits as ``(doc_id, score.hex(), url)``."""
+    out = []
+    for text in ["색인 98765", "검색 엔진", "데이터"]:
+        for conj in (True, False):
+            hits = eng.search(text, k=10, conjunctive=conj)
+            out.append([(h["doc_id"], h["score"].hex(), h["url"]) for h in hits])
+            out.append(eng.count(text, conjunctive=conj))
+    return out
+
+
+@pytest.mark.parametrize("form", ["abs", "file_uri", "hadoop_file", "relative", "fake_scheme"])
+def test_every_path_form_serves_without_spark(spark, fused, spark_jobs, monkeypatch, form):
+    """The same index opened by its absolute path, as ``file:///abs``,
+    Hadoop's ``file:/abs``, a relative path, or under a made-up scheme
+    whose file system the resolver supplies answers every search and
+    count bit for bit as the local engine does, and runs zero Spark
+    jobs from open through its first searches, counts and URL
+    resolves."""
+    want = _replies(SearchEngine(spark, fused, AnalyzerOption()))
+    assert want[0] == [] and want[2] and want[4] and want[5] > 0  # tail, head
+    if form == "relative":
+        monkeypatch.chdir(os.path.dirname(fused))
+    if form == "fake_scheme":
+        from counting_fs import counting_fs
+
+        import mecab_ko_lucene_analyzer_spark.fs as fs_mod
+
+        fake, handler = counting_fs()
+        monkeypatch.setattr(fs_mod, "resolve", lambda p: (fake, p[len("fake://"):]))
+    path = {
+        "abs": fused,
+        "file_uri": f"file://{fused}",
+        "hadoop_file": f"file:{fused}",
+        "relative": os.path.basename(fused),
+        "fake_scheme": f"fake://{fused}",
+    }[form]
+    got = {}
+
+    def serve():
+        got["replies"] = _replies(SearchEngine(spark, path, AnalyzerOption()))
+
+    assert spark_jobs(serve) == 0
+    assert got["replies"] == want
+    if form == "fake_scheme":
+        assert handler.opened and all(p.startswith(fused) for p in handler.opened)
+
+
+def test_unrecognized_scheme_raises_at_open(spark):
+    with pytest.raises(ValueError, match="nosuch"):
+        SearchEngine(spark, "nosuch://x", AnalyzerOption())
 
 
 def test_unreadable_local_files_raise_at_open(spark, fused, tmp_path):
