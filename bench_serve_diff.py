@@ -16,8 +16,13 @@ bag texts, one line each of ``count`` with ``conjunctive=True`` and
 ``False``, of ``wand_topk`` over ``load_query_cursors`` of the text's
 analyzed terms bound through the engine's block cache, and of one
 ``search_bulk(conjunctive=False)`` over all of them (a line per query,
-in text order). ``score.hex()`` keeps every bit of the float, so equal
-files mean bit-identical replies.
+in text order). Last, over the same bag texts, come one line each of
+``search_msm`` with ``min_should_match`` 2 and then 1, and a
+``search_after`` walk of three pages of 10 (one line a page, each
+page's cursor the last hit before it) for the first 100 texts.
+``score.hex()`` keeps every bit of the float, so equal files mean
+bit-identical replies, and a file of a checkout that writes fewer of
+these groups is a byte prefix of one that writes more.
 
     python bench_serve_diff.py --seed 952 --queries 3000 --query-seed 811 --out new.jsonl
     (in the other checkout, same arguments) --out old.jsonl
@@ -132,6 +137,17 @@ def main() -> None:
             for i, text in enumerate(bag_texts):
                 hits = [(d, s) for _, d, s in sorted(bulk.get(i, []))]
                 f.write(ranked(hits, api="search_bulk", text=text))
+            for m in (2, 1):
+                for text in bag_texts:
+                    hits = engine.search_msm(text, m, k=10)
+                    f.write(line(hits, api="search_msm", min_should_match=m, text=text))
+            for text in bag_texts[:100]:
+                after = None
+                for page in range(3):
+                    hits = engine.search_after(text, after=after, k=10)
+                    f.write(line(hits, api="search_after", page=page, text=text))
+                    if hits:
+                        after = (hits[-1]["score"], hits[-1]["doc_id"])
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)

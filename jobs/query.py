@@ -171,8 +171,8 @@ def main() -> None:
         type=int,
         default=0,
         help="OR-query precision knob: only docs matching at least "
-        "this many distinct query terms score (engine.search_msm; "
-        "distributed scorer)",
+        "this many distinct query terms (a token's synonyms count as "
+        "one) score (engine.search_msm; also pages --search-after)",
     )
     ap.add_argument(
         "--mlt-terms",
@@ -191,8 +191,9 @@ def main() -> None:
         metavar="SCORE,DOC_ID",
         help="keyset deep paging (ES search_after): return the page "
         "strictly after this cursor — the previous page's last hit's "
-        "score and doc_id — at constant cost regardless of depth "
-        "(engine.search_after; disjunctive scoring)",
+        "score and doc_id — without fetching the pages before it "
+        "(engine.search_after; disjunctive scoring, "
+        "--min-should-match applies)",
     )
     ap.add_argument(
         "--max-expansions",
@@ -363,7 +364,10 @@ def main() -> None:
     elif args.search_after is not None and args.query:
         score_s, doc_s = args.search_after.split(",", 1)
         hits = engine.search_after(
-            args.query, after=(float(score_s), int(doc_s)), k=args.k
+            args.query,
+            after=(float(score_s), int(doc_s)),
+            k=args.k,
+            min_should_match=args.min_should_match,
         )
         print(json.dumps(hits, ensure_ascii=False, indent=2))
     else:

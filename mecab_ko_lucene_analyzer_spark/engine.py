@@ -6,7 +6,7 @@ plugin surface (Q10 actions analyze / build-index / search,
 from __future__ import annotations
 
 from collections import OrderedDict
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import cached_property
 
 import pyspark.sql.functions as F
@@ -42,6 +42,14 @@ def _query_ast(tokens: list[dict], conjunctive: bool, exclude_tokens=None):
     if any(t.get("synonyms") for t in tokens):
         return Sum(tuple(dict.fromkeys(token_ast(t) for t in tokens)))
     return bag_ast(t["term"] for t in tokens)
+
+
+def _msm_ast(tokens: list[dict], min_should_match: int) -> Sum:
+    """The disjunctive AST of ``tokens`` (:func:`_query_ast`) matching
+    only docs that match at least ``min_should_match`` of its clauses —
+    distinct terms, or a token's synonym group as one clause; values
+    below 1 mean 1."""
+    return replace(_query_ast(tokens, False), min_should_match=max(min_should_match, 1))
 
 
 @dataclass
@@ -276,17 +284,20 @@ class SearchEngine:
         self.last_route = "distributed" if routed else "driver"
         return routed
 
-    def _ast_hits(self, ast, fetch: int) -> list[tuple[int, float]]:
+    def _ast_hits(self, ast, fetch: int, after=None) -> list[tuple[int, float]]:
         """Route + execute an AST — every search, a disjunctive bag
-        as its ``Sum`` (``bag_ast``): hot queries take the distributed
-        scorer, cold queries run the driver AST evaluator."""
+        as its ``Sum`` (``bag_ast``, ``min_should_match`` included):
+        hot queries take the distributed scorer, cold queries run the
+        driver AST evaluator. Both give the top ``fetch`` hits, of the
+        docs ranked after the ``after = (score, doc_id)`` cursor when
+        one is given."""
         dfs = self._dfs(ast_shape(ast)[0])
         if self._route_distributed(ast, dfs):
             return distributed_ast_topk(
-                ast, self.blocks, dfs, self.n_docs, self.avgdl, fetch
+                ast, self.blocks, dfs, self.n_docs, self.avgdl, fetch, after
             )
         return execute_ast(
-            ast, None, self.n_docs, self.avgdl, fetch, cache=self.block_cache
+            ast, None, self.n_docs, self.avgdl, fetch, cache=self.block_cache, after=after
         )
 
     def _resolve(self, hits: list[tuple[int, float]]) -> list[dict]:
@@ -340,16 +351,12 @@ class SearchEngine:
     def _field_tables(self, name: str):
         """Lazy extra-field tables ``(postings, doc_stats, len_sum)``
         for ``name`` in {'anchor', 'title'} (``with_anchors=True`` /
-        ``with_titles=True`` builds); probed once through the Hadoop
-        FS API (object-store-safe)."""
+        ``with_titles=True`` builds); probed once through ``fs.py``."""
         attr = f"_{name}_field"
         if not hasattr(self, attr):
-            from .streaming.incremental import _fs_and_path
+            from .fs import exists
 
-            fs, jpath, _jvm = _fs_and_path(
-                self.spark, f"{self.base_path}/{name}_postings"
-            )
-            if fs.exists(jpath):
+            if exists(f"{self.base_path}/{name}_postings"):
                 sp = self.spark
                 cs = sp.read.parquet(
                     f"{self.base_path}/{name}_corpus_stats"
@@ -443,16 +450,10 @@ class SearchEngine:
 
     def _boost_table(self):
         if not hasattr(self, "_doc_boosts"):
-            from .streaming.incremental import _fs_and_path
+            from .fs import exists
 
-            fs, jpath, _jvm = _fs_and_path(
-                self.spark, f"{self.base_path}/doc_boosts"
-            )
-            self._doc_boosts = (
-                self.spark.read.parquet(f"{self.base_path}/doc_boosts")
-                if fs.exists(jpath)
-                else None
-            )
+            path = f"{self.base_path}/doc_boosts"
+            self._doc_boosts = self.spark.read.parquet(path) if exists(path) else None
         if self._doc_boosts is None:
             raise FileNotFoundError(
                 f"no doc_boosts under {self.base_path!r} — build with "
@@ -474,7 +475,7 @@ class SearchEngine:
         ``doc_boosts`` table a ``--host-ranks`` build writes). The
         blend applies BEFORE the top-k cut, so this is always the
         DISTRIBUTED scorer (an additive per-doc prior cannot ride
-        WAND's upper-bound pruning); ``w_boost=0`` is rank-identical
+        MaxScore's upper-bound pruning); ``w_boost=0`` is rank-identical
         to disjunctive :meth:`search` (pinned in tests)."""
         from .query.bm25 import boosted_bm25_topk
 
@@ -503,29 +504,21 @@ class SearchEngine:
         highlight: bool = False,
     ) -> list[dict]:
         """Disjunctive retrieval with Elasticsearch's
-        ``minimum_should_match`` precision knob: only docs matching at
-        least ``min_should_match`` distinct query terms score. The
-        match-count filter rides the per-doc aggregate
-        (``query/bm25.py::bm25_scored``), so this is the distributed
-        scorer; ``min_should_match<=1`` is rank-identical to
-        disjunctive :meth:`search` (pinned in tests)."""
-        from .query.bm25 import bm25_topk
-
+        ``minimum_should_match`` precision knob: the disjunctive
+        :meth:`search` query (its ``Sum``) with ``min_should_match``
+        set, so only docs matching at least that many of its clauses
+        score — a clause is a distinct term, or one token's synonym
+        group. Served like every search (``_ast_hits``: the driver
+        evaluator, or the distributed scorer for a hot term), scores
+        unchanged; ``min_should_match<=1`` is :meth:`search` with
+        ``conjunctive=False``, bit for bit."""
         tokens = self.analyze(text)
         if not tokens:
             return []
-        terms = [t["term"] for t in tokens]
-        self.last_route = "distributed"
-        rows = bm25_topk(
-            self._body_index(),
-            terms,
-            k=offset + k,
-            min_should_match=min_should_match,
-        ).collect()
-        out = self._resolve(
-            [(r["doc_id"], r["score"]) for r in rows][offset : offset + k]
-        )
+        hits = self._ast_hits(_msm_ast(tokens, min_should_match), offset + k)
+        out = self._resolve(hits[offset : offset + k])
         if highlight:
+            terms = [t["term"] for t in tokens]
             for hit in out:
                 hit["highlight_terms"] = terms
         return out
@@ -537,27 +530,18 @@ class SearchEngine:
         k: int = 10,
         min_should_match: int = 0,
     ) -> list[dict]:
-        """ES ``search_after`` deep paging: the disjunctive BM25 page
-        strictly after the ``(score, doc_id)`` cursor — pass the last
-        hit's pair back to walk pages at constant cost regardless of
-        depth (``query/bm25.py::keyset_page``; offset paging collects
-        O(depth) rows per page, this collects k). Distributed scorer
-        by construction: the keyset filter sits below the TakeOrdered
-        in the plan."""
-        from .query.bm25 import bm25_search_after
-
+        """ES ``search_after`` deep paging: the :meth:`search_msm`
+        ranking's page of ``k`` hits strictly after the
+        ``(score, doc_id)`` cursor — pass the last hit's pair back to
+        walk the disjunctive ranking without an O(depth) fetch. The
+        cursor cuts the ranked docs before the top-k on either route
+        (``_ast_hits``); ``after=None`` is the first page."""
         tokens = self.analyze(text)
         if not tokens:
             return []
-        self.last_route = "distributed"
-        rows = bm25_search_after(
-            self._body_index(),
-            [t["term"] for t in tokens],
-            after=after,
-            k=k,
-            min_should_match=min_should_match,
-        ).collect()
-        return self._resolve([(r["doc_id"], r["score"]) for r in rows])
+        return self._resolve(
+            self._ast_hits(_msm_ast(tokens, min_should_match), k, after)
+        )
 
     def search_more_like_this(
         self,

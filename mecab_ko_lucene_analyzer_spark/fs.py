@@ -18,6 +18,12 @@ def resolve(path: str) -> tuple[pafs.FileSystem, str]:
     return pafs.LocalFileSystem(), os.path.abspath(path)
 
 
+def exists(path: str) -> bool:
+    """Whether a file or directory is at ``path``."""
+    fs, p = resolve(path)
+    return fs.get_file_info(p).type != pafs.FileType.NotFound
+
+
 def parquet_parts(path: str) -> tuple[pafs.FileSystem, list[str]]:
     """The file system of table directory ``path`` and its parquet parts,
     sorted, skipping names that start with ``_`` or ``.`` (a writer's

@@ -17,9 +17,10 @@ Scoring semantics (documented engine spec, mirrored by the oracle):
 Term scores BM25; OR scores the max of its matching children (synonyms
 behave as one term — Lucene ``SynonymQuery``-style blending is
 approximated by max); AND scores the sum of its children and requires
-all to match; SUM (ES ``bool.should``) matches when any child matches
-and scores the sum of its matching children, added in child order — a
-disjunctive bag of terms is a SUM (:func:`bag_ast`); PHRASE matches
+all to match; SUM (ES ``bool.should``) matches when at least
+``min_should_match`` children match (one by default) and scores the
+sum of its matching children, added in child order — a disjunctive
+bag of terms is a SUM (:func:`bag_ast`); PHRASE matches
 when the terms occur at consecutive positions within ``slop`` and
 contributes 0 to the score.
 """
@@ -71,11 +72,13 @@ class Or:
 
 @dataclass(frozen=True)
 class Sum:
-    """ES ``bool.should`` with no parameters: matches when any child
-    matches and scores the sum of the matching children, added in
+    """ES ``bool.should`` with ``minimum_should_match``: matches when
+    at least ``min_should_match`` children match (any child, at the
+    default 1) and scores the sum of the matching children, added in
     child order from 0.0."""
 
     children: tuple = ()
+    min_should_match: int = 1
 
 
 @dataclass(frozen=True)
@@ -117,13 +120,19 @@ class Not:
 
 def validate_ast(node) -> None:
     """Raise ``ValueError`` on malformed ``Not`` placement (see
-    :class:`Not`) and on a node that is none of this module's types.
+    :class:`Not`), on a ``Sum`` whose ``min_should_match`` is below 1
+    and on a node that is none of this module's types.
     Called by both evaluators' entry points so the driver evaluator
     and the distributed scorer reject exactly the same shapes."""
+
+    def check_sum(n):
+        if isinstance(n, Sum) and n.min_should_match < 1:
+            raise ValueError("Sum.min_should_match must be at least 1")
 
     def no_not(n):
         if isinstance(n, Not):
             raise ValueError("nested Not is not supported")
+        check_sum(n)
         # DisMax included: a Not smuggled under a DisMax inside a
         # negated subtree must fail validation here, not diverge
         # between the driver evaluator and the distributed scorer
@@ -152,6 +161,7 @@ def validate_ast(node) -> None:
                 else:
                     walk(c)
         elif isinstance(n, (Or, Sum, DisMax)):
+            check_sum(n)
             # no exclusion slot: every child must be a positive clause
             for c in n.children:
                 walk(c)
@@ -245,7 +255,10 @@ def to_json(node) -> str:
         if isinstance(n, Or):
             return {"or": [conv(c) for c in n.children]}
         if isinstance(n, Sum):
-            return {"sum": [conv(c) for c in n.children]}
+            out = {"sum": [conv(c) for c in n.children]}
+            if n.min_should_match > 1:
+                out["minimum_should_match"] = n.min_should_match
+            return out
         if isinstance(n, DisMax):
             return {
                 "dis_max": [conv(c) for c in n.children],
@@ -276,7 +289,10 @@ def from_json(spec: str | dict):
         if "or" in n:
             return Or(tuple(conv(c) for c in n["or"]))
         if "sum" in n:
-            return Sum(tuple(conv(c) for c in n["sum"]))
+            return Sum(
+                tuple(conv(c) for c in n["sum"]),
+                int(n.get("minimum_should_match", 1)),
+            )
         if "dis_max" in n:
             return DisMax(
                 tuple(conv(c) for c in n["dis_max"]),

@@ -41,7 +41,6 @@ __all__ = [
     "bm25_scored",
     "bm25_topk",
     "filtered_topk",
-    "bm25_search_after",
     "keyset_page",
     "boosted_bm25_topk",
     "bm25_oracle",
@@ -236,21 +235,6 @@ def keyset_page(
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
 
 
-def bm25_search_after(
-    index: InvertedIndex,
-    query_terms: list[str],
-    after: tuple[float, int] | None = None,
-    k: int = 10,
-    min_should_match: int = 0,
-) -> DataFrame:
-    """Disjunctive BM25 page AFTER the ``(score, doc_id)`` cursor —
-    :func:`bm25_scored` + :func:`keyset_page`. ``after=None`` is page
-    one (≡ :func:`bm25_topk`)."""
-    scored = bm25_scored(index, query_terms, min_should_match)
-    s, d = after if after is not None else (None, None)
-    return keyset_page(scored, s, d, k)
-
-
 def boosted_bm25_topk(
     index: InvertedIndex,
     doc_boosts: DataFrame,
@@ -269,7 +253,7 @@ def boosted_bm25_topk(
 
     The blend joins BEFORE the top-k cut (a boost-heavy doc outside the
     text-only top k must be able to surface), so the additive prior
-    cannot ride WAND's upper-bound pruning — this is a distributed-path
+    cannot ride MaxScore's upper-bound pruning — this is a distributed-path
     scorer by construction. The join is doc_id-keyed against a
     |docs|-sized narrow relation; at 10^12 docs store ``doc_boosts``
     bucketed by doc_id next to doc-partitioned postings for a

@@ -9,11 +9,13 @@ the term's idf (``wand.load_query_postings``); the bulk executor
 (``batch.py``) binds one entry per broadcast term per task. A warm
 entry's docs and BM25 scores are arrays it already holds.
 
-The top-k of a bag (a ``Sum`` of two or more ``Term`` s) takes one
-MaxScore step (Turtle & Flood 1995, :func:`_bag_top_k`): the k-th
-best exact score of the highest-bound terms' docs is a cutoff, and
-only docs of the terms needed to reach it are scored. Every other
-root is evaluated in full. Both give the same bits.
+The top-k of a bag (a ``Sum`` of two or more ``Term`` s, with any
+``min_should_match``) takes one MaxScore step (Turtle & Flood 1995,
+:func:`_bag_top_k`): the k-th best exact score of the highest-bound
+terms' docs is a cutoff, and only docs of the terms needed to reach it
+are scored. Every other root is evaluated in full. Both give the same
+bits. A ``search_after`` cursor ``(score, doc_id)`` cuts the ranking to
+the docs after it before the top-k is taken (:func:`_after`).
 Scoring semantics are the engine spec documented in ``ast.py``.
 """
 
@@ -83,6 +85,30 @@ def _union(parts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return docs, total, best
 
 
+def _min_match(parts, m: int) -> list:
+    """The ``(sorted unique docs, scores)`` parts cut to the docs found
+    in at least ``m`` of them (a ``Sum``'s ``min_should_match``); scores
+    may be None (a match set only)."""
+    docs, n = np.unique(np.concatenate([p[0] for p in parts]), return_counts=True)
+    keep = docs[n >= m]
+    out = []
+    for p_docs, p_scores in parts:
+        i = _intersect(p_docs, keep)[1]
+        out.append((p_docs[i], None if p_scores is None else p_scores[i]))
+    return out
+
+
+def _after(docs: np.ndarray, scores: np.ndarray, after) -> tuple[np.ndarray, np.ndarray]:
+    """The docs strictly after the ``after = (score, doc_id)`` cursor in
+    the (score desc, doc_id asc) order — ``score < s or (score == s and
+    doc > d)``, ES ``search_after``; all of them when ``after`` is None."""
+    if after is None:
+        return docs, scores
+    s, d = float(after[0]), int(after[1])
+    keep = (scores < s) | ((scores == s) & (docs > d))
+    return docs[keep], scores[keep]
+
+
 def _top_k(docs: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[int, float]]:
     """The k best ``(doc_id, score)`` by (score desc, doc_id asc):
     partition at the k-th score, keep every doc tied with it, then sort
@@ -124,7 +150,8 @@ def _evaluate(node, bound: dict[str, tuple], avgdl: float, scored: bool = True):
       adding in child order; each ``Not`` child removes its subtree's
       docs and adds nothing.
     * Or: the max over the matching children.
-    * Sum: the sum of the matching children, in child order.
+    * Sum: the sum of the matching children, in child order, for the
+      docs that match at least ``min_should_match`` of them.
     * DisMax: ``best + tb·(Σ matching − best)``, summed in child order.
     * Phrase: the position-checked docs, scoring 0.0.
 
@@ -162,6 +189,8 @@ def _evaluate(node, bound: dict[str, tuple], avgdl: float, scored: bool = True):
     if not node.children:
         return _NO_MATCH
     parts = [_evaluate(c, bound, avgdl, scored) for c in node.children]
+    if isinstance(node, Sum) and node.min_should_match > 1:
+        parts = _min_match(parts, node.min_should_match)
     if not scored:
         return np.unique(np.concatenate([p[0] for p in parts])), None
     docs, total, best = _union(parts)
@@ -172,36 +201,48 @@ def _evaluate(node, bound: dict[str, tuple], avgdl: float, scored: bool = True):
     return docs, best
 
 
-def _sum_at(docs: np.ndarray, parts) -> np.ndarray:
-    """Each of the sorted unique ``docs``' scores summed over the
-    ``(sorted unique docs, scores)`` parts it is found in, added in part
-    order from 0.0 — bit-equal to :func:`_union`'s total for those
-    docs. Every part is looked up by :func:`_intersect`."""
+def _sum_at(docs: np.ndarray, parts, m: int) -> tuple[np.ndarray, np.ndarray]:
+    """The sorted unique ``docs`` found in at least ``m`` of the
+    ``(sorted unique docs, scores)`` parts, and their scores summed over
+    the parts they are found in, added in part order from 0.0 —
+    bit-equal to :func:`_union`'s total for those docs. Every part is
+    looked up by :func:`_intersect`; matches are counted only for
+    ``m > 1``."""
     total = np.zeros(docs.size)
+    matched = np.zeros(docs.size, dtype=np.int64) if m > 1 else None
     for p_docs, p_scores in parts:
         _, i, j = _intersect(docs, p_docs)
         total[i] += p_scores[j]
-    return total
+        if matched is not None:
+            matched[i] += 1
+    if matched is None:
+        return docs, total
+    keep = matched >= m
+    return docs[keep], total[keep]
 
 
-def _bag_top_k(children, bound: dict[str, tuple], avgdl: float, k: int):
-    """Top-k of ``Sum(children)``, every child a ``Term``, by one
-    MaxScore step over the terms' upper bounds ``idf × max impact``:
+def _bag_top_k(bag: Sum, bound: dict[str, tuple], avgdl: float, k: int, after=None):
+    """Top-k of ``bag``, every child a ``Term``, after the ``after``
+    cursor (:func:`_after`), by one MaxScore step over the terms' upper
+    bounds ``idf × max impact``:
 
     * the seed is the docs of the highest-bound terms, taken term by
       term until there are ≥ k (a bag with fewer docs is all seed);
-      they are scored exactly, and θ is the k-th best of those scores;
+      they are scored exactly, and θ is the k-th best score of the seed
+      docs that match ``min_should_match`` terms and pass the cursor;
     * the non-essential terms are the longest low-bound prefix whose
       bounds sum below θ: a doc matching only them scores below the
       k-th best, so it cannot enter the top k, ties included;
     * the docs of the other terms not in the seed are scored exactly,
       and the top k is taken over them and the seed.
 
-    Every term is looked up through its decoded entry and its kept
-    scores, as :func:`_evaluate` reads them, so the sums are bit-equal
-    to the full evaluation's."""
+    When fewer than k seed docs qualify and the seed is not every doc,
+    the bag is evaluated in full. Every term is looked up through its
+    decoded entry and its kept scores, as :func:`_evaluate` reads them,
+    so the sums are bit-equal to the full evaluation's."""
     if k <= 0:
         return []
+    children, m = bag.children, bag.min_should_match
     parts = [_evaluate(c, bound, avgdl) for c in children]
     ubs = [
         bound[c.term][1] * bound[c.term][0].max_impact if c.term in bound else 0.0
@@ -213,10 +254,12 @@ def _bag_top_k(children, bound: dict[str, tuple], avgdl: float, k: int):
         taken -= 1
         docs = parts[by_ub[taken]][0]
         seed = np.union1d(seed, docs) if seed.size else docs
-    sums = _sum_at(seed, parts)
-    if seed.size < k:
-        return _top_k(seed, sums, k)
-    theta = np.partition(sums, seed.size - k)[seed.size - k]
+    docs, sums = _after(*_sum_at(seed, parts, m), after)
+    if docs.size < k:
+        if taken:
+            docs, sums = _after(*_evaluate(bag, bound, avgdl), after)
+        return _top_k(docs, sums, k)
+    theta = np.partition(sums, docs.size - k)[docs.size - k]
     n, bound_sum = 0, 0.0
     for i in by_ub[:taken]:
         bound_sum += ubs[i]
@@ -227,22 +270,25 @@ def _bag_top_k(children, bound: dict[str, tuple], avgdl: float, k: int):
         n += 1
     more = [parts[i][0] for i in by_ub[n:taken]]
     if more:
-        extra = np.setdiff1d(np.concatenate(more), seed)
-        seed, sums = np.concatenate((seed, extra)), np.concatenate((sums, _sum_at(extra, parts)))
-    return _top_k(seed, sums, k)
+        extra, e_sums = _after(
+            *_sum_at(np.setdiff1d(np.concatenate(more), seed), parts, m), after
+        )
+        docs, sums = np.concatenate((docs, extra)), np.concatenate((sums, e_sums))
+    return _top_k(docs, sums, k)
 
 
-def _execute_bound(ast, bound: dict[str, tuple], avgdl: float, k: int):
+def _execute_bound(ast, bound: dict[str, tuple], avgdl: float, k: int, after=None):
     """Top-k [(doc_id, score)] of a validated AST over ``bound``
-    (term → (``TermPostings``, idf)): a bag of two or more terms by
-    :func:`_bag_top_k`, any other root by :func:`_evaluate`."""
+    (term → (``TermPostings``, idf)) after the ``after`` cursor: a bag
+    of two or more terms by :func:`_bag_top_k`, any other root by
+    :func:`_evaluate`."""
     if (
         isinstance(ast, Sum)
         and len(ast.children) > 1
         and all(isinstance(c, Term) for c in ast.children)
     ):
-        return _bag_top_k(ast.children, bound, avgdl, k)
-    return _top_k(*_evaluate(ast, bound, avgdl), k)
+        return _bag_top_k(ast, bound, avgdl, k, after)
+    return _top_k(*_after(*_evaluate(ast, bound, avgdl), after), k)
 
 
 def _bind(ast, blocks: DataFrame, n_docs: int, cache) -> dict[str, tuple]:
@@ -259,13 +305,16 @@ def execute_ast(
     avgdl: float,
     k: int = 10,
     cache=None,
+    after: tuple[float, int] | None = None,
 ) -> list[tuple[int, float]]:
     """Evaluate an AST → top-k [(doc_id, score)], tie-break
-    (score desc, doc_id asc). Postings come from ``cache`` (no Spark
-    job: its direct reader serves the misses, and ``blocks`` is
-    unused), else from one term-pruned Spark scan of ``blocks``."""
+    (score desc, doc_id asc); with an ``after = (score, doc_id)``
+    cursor, the top-k of the docs ranked after it (ES
+    ``search_after``). Postings come from ``cache`` (no Spark job: its
+    direct reader serves the misses, and ``blocks`` is unused), else
+    from one term-pruned Spark scan of ``blocks``."""
     validate_ast(ast)
-    return _execute_bound(ast, _bind(ast, blocks, n_docs, cache), avgdl, k)
+    return _execute_bound(ast, _bind(ast, blocks, n_docs, cache), avgdl, k, after)
 
 
 def count_ast(

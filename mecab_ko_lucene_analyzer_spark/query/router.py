@@ -22,10 +22,12 @@ query through a DISTRIBUTED scorer over the block table instead:
 3. per-doc combination is a hash aggregate (map-side partial agg);
    every AST scores via a term→score map column and a driver-composed
    Column expression (And = sum, all required; Or = max of matching
-   children; Sum = child-order sum of matching children, the
-   disjunctive bag — the documented engine semantics),
+   children; Sum = child-order sum of matching children when at least
+   ``min_should_match`` match, the disjunctive bag — the documented
+   engine semantics),
 4. top-k is ``orderBy.limit`` = per-partition TakeOrdered + driver
-   merge of k rows.
+   merge of k rows, below which a ``search_after`` cursor filters
+   (``bm25.keyset_page``).
 
 Driver traffic is therefore O(|query| + k) rows regardless of df —
 while scores stay rank-identical to the driver evaluator (same codec,
@@ -59,7 +61,7 @@ import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame
 
 from .ast import And, DisMax, Not, Or, Phrase, Sum, Term, validate_ast
-from .bm25 import bm25_partial, lucene_idf
+from .bm25 import bm25_partial, keyset_page, lucene_idf
 
 __all__ = [
     "term_dfs",
@@ -344,9 +346,10 @@ def _ast_expr(node, scores, phrase_flags=None):
     """AST → Column over the per-doc ``scores`` map (term → partial).
     Null means "does not match": Term is a map lookup; Or = greatest
     (max of matching children — null only when none match); And = sum,
-    null unless every child matches; Phrase = 0.0 when its flag column
-    (``phrase_flags``, from :func:`phrase_match_docs`) is true, null
-    otherwise — the boost-0 match_phrase semantics. Mirrors
+    null unless every child matches; Sum = the sum, null unless at
+    least ``min_should_match`` children match; Phrase = 0.0 when its
+    flag column (``phrase_flags``, from :func:`phrase_match_docs`) is
+    true, null otherwise — the boost-0 match_phrase semantics. Mirrors
     ``executor.py``'s evaluator and the scoring spec in ``ast.py``."""
     if isinstance(node, Term):
         return F.element_at(scores, node.term)
@@ -375,6 +378,9 @@ def _ast_expr(node, scores, phrase_flags=None):
         cz = [F.coalesce(c, F.lit(0.0)) for c in children]
         total = reduce(lambda a, b: a + b, cz)
         if isinstance(node, Sum):
+            if node.min_should_match > 1:
+                n = reduce(lambda a, b: a + b, (c.isNotNull().cast("int") for c in children))
+                return F.when(n >= node.min_should_match, total)
             return F.when(any_m, total)
         best = F.greatest(*cz) if len(cz) > 1 else cz[0]
         return F.when(
@@ -573,16 +579,17 @@ def distributed_ast_topk(
     n_docs: int,
     avgdl: float,
     k: int = 10,
+    after: tuple[float, int] | None = None,
 ) -> list[tuple[int, float]]:
-    """Distributed top-k over :func:`_scored_docs`. Rank-identical to
+    """Distributed top-k over :func:`_scored_docs`, of the docs ranked
+    after the ``after = (score, doc_id)`` cursor when one is given (the
+    keyset filter sits below the TakeOrdered). Rank-identical to
     ``execute_ast`` on EVERY Term/And/Or/Sum/Phrase shape
     (property-tested in ``tests/test_query_router.py``)."""
     scored = _scored_docs(ast, blocks, dfs, n_docs, avgdl)
     if scored is None:
         return []
-    rows = (
-        scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    )
+    rows = keyset_page(scored, *(after or (None, None)), k=k).collect()
     return [(r["doc_id"], r["score"]) for r in rows]
 
 

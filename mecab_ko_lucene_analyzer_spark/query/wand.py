@@ -101,7 +101,10 @@ class TermPostings:
         block's doc-delta chain (its first delta is the absolute docID,
         codec.py::encode_block) is rebased with a segmented cumsum, so
         the cost is O(total bytes), not O(blocks). Blocks cover disjoint
-        docID ranges, so ``docs`` is sorted and unique."""
+        docID ranges, so ``docs`` is sorted and unique.
+
+        The arrays are decoded into locals and ``docs`` is published
+        last: a thread that finds ``docs`` set finds every array set."""
         if self.docs is not None:
             return self
         d_bytes = b"".join(blk.doc_deltas for blk in self.blocks)
@@ -114,15 +117,14 @@ class TermPostings:
         counts = np.diff(offsets)
         csum = np.cumsum(deltas)
         base = np.where(offsets[:-1] > 0, csum[offsets[:-1] - 1], 0)
-        self.docs = csum - np.repeat(base, counts)
-        self.tfs = decode_varints(b"".join(blk.tfs for blk in self.blocks)).astype(np.int64)
-        self.dls = decode_varints(b"".join(blk.doc_lens for blk in self.blocks)).astype(
-            np.int64
-        )
-        self.offsets = offsets
-        for arr in (self.docs, self.tfs, self.dls, offsets):
+        docs = csum - np.repeat(base, counts)
+        tfs = decode_varints(b"".join(blk.tfs for blk in self.blocks)).astype(np.int64)
+        dls = decode_varints(b"".join(blk.doc_lens for blk in self.blocks)).astype(np.int64)
+        for arr in (docs, tfs, dls, offsets):
             arr.flags.writeable = False  # shared by every query over the entry
-        self._grew(self.docs.nbytes + self.tfs.nbytes + self.dls.nbytes + offsets.nbytes)
+        self.tfs, self.dls, self.offsets = tfs, dls, offsets
+        self.docs = docs
+        self._grew(docs.nbytes + tfs.nbytes + dls.nbytes + offsets.nbytes)
         return self
 
     def scores(self, idf: float, avgdl: float) -> np.ndarray:

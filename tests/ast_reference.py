@@ -61,7 +61,7 @@ def ast_oracle(ast, postings, doc_lens, n_docs, avgdl, k=None, k1=K1, b=B):
                     total += s
             return total
         matching = [s for s in children if s is not None]
-        if not matching:
+        if len(matching) < getattr(node, "min_should_match", 1):
             return None
         best = max(matching)
         if isinstance(node, Or):

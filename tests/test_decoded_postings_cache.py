@@ -381,6 +381,41 @@ def test_entry_over_raw_blocks_matches_its_postings():
         )
 
 
+def test_a_decode_in_progress_is_not_seen_half_done(monkeypatch):
+    """Thread A pauses inside the decode of its entry's tfs; thread B,
+    reading the same entry meanwhile, must decode it itself (or find
+    it whole) and score it, never find the doc IDs set and the tfs
+    missing."""
+    import threading
+
+    docs, tfs, dls, _, blocks = _raw_term(random.Random(11), 120, 8)
+    entry = TermPostings(blocks, len(docs))
+    tf_bytes = b"".join(blk.tfs for blk in entry.blocks)
+    inside, release = threading.Event(), threading.Event()
+    real = wand_mod.decode_varints
+
+    def paused(buf):
+        if buf == tf_bytes and threading.current_thread() is thread_a:
+            inside.set()
+            release.wait(10)
+        return real(buf)
+
+    monkeypatch.setattr(wand_mod, "decode_varints", paused)
+    thread_a = threading.Thread(target=entry.decode)
+    thread_a.start()
+    try:
+        assert inside.wait(10)
+        idf = lucene_idf(150, len(docs))
+        scores = entry.decode().scores(idf, 10.0)
+    finally:
+        release.set()
+        thread_a.join(10)
+    assert scores.tolist() == [
+        idf * tf / (tf + K1 * (1 - B + B * dl / 10.0)) for tf, dl in zip(tfs, dls)
+    ]
+    assert entry.docs.tolist() == docs
+
+
 def test_phrase_positions_decode_per_candidate_block(monkeypatch):
     """Positions decode only for the blocks holding a wanted posting,
     once per entry, and the entry's byte count grows by what they

@@ -95,9 +95,7 @@ def test_search_prefix_and_fuzzy(engine, spark):
     search; paging slices the same ranking."""
     hits = engine.search_prefix("검", k=10)
     assert hits
-    pages = synthesize_webpages(spark, 150, partitions=4)
-    rows = sorted(pages.select("url", "text").collect(), key=lambda r: r["url"])
-    toks = {i: {t["term"] for t in engine.analyze(r["text"])} for i, r in enumerate(rows)}
+    toks = _doc_terms(engine, spark)
     for h in hits:
         assert any(t.startswith("검") for t in toks[h["doc_id"]])
     page2 = engine.search_prefix("검", k=5, offset=5)
@@ -126,18 +124,130 @@ def test_search_regexp_anchored_equals_prefix_expansion(engine):
     assert engine.search_regexp("zz+", k=5) == []
 
 
-def test_search_after_walks_the_offset_ranking(engine):
+def _hex(hits):
+    return [(h["doc_id"], float(h["score"]).hex()) for h in hits]
+
+
+def _doc_terms(engine, spark):
+    """doc_id → the doc's analyzed terms (doc ids follow url order)."""
+    pages = synthesize_webpages(spark, 150, partitions=4)
+    rows = sorted(pages.select("url", "text").collect(), key=lambda r: r["url"])
+    return {i: {t["term"] for t in engine.analyze(r["text"])} for i, r in enumerate(rows)}
+
+
+def _clauses_matched(engine, text, terms) -> int:
+    """How many clauses of ``text``'s disjunctive query (a distinct term,
+    or one token's synonym group) occur in the doc terms ``terms``."""
+    from mecab_ko_lucene_analyzer_spark.engine import _query_ast
+
+    n = 0
+    for c in _query_ast(engine.analyze(text), False).children:
+        alts = c.children if isinstance(c, Or) else (c,)
+        n += any(a.term in terms for a in alts)
+    return n
+
+
+def test_search_msm_is_the_disjunctive_sum_cut_by_match_count(engine, spark):
+    """``search_msm`` with ``min_should_match <= 1`` is
+    ``search(conjunctive=False)`` bit for bit; with 2 it keeps exactly
+    the disjunctive ranking's docs that match two query clauses (a
+    synonym group counting once), scores unchanged."""
+    docs = _doc_terms(engine, spark)
+    for text in ("검색 엔진", "데이터 처리 문서", "한국어 형태소 분석"):
+        full = engine.search(text, k=150, conjunctive=False)
+        for m in (-1, 0, 1):
+            assert _hex(engine.search_msm(text, m, k=150)) == _hex(full), (text, m)
+        want = [h for h in full if _clauses_matched(engine, text, docs[h["doc_id"]]) >= 2]
+        got = engine.search_msm(text, 2, k=150)
+        assert want and len(want) < len(full) and _hex(got) == _hex(want), text
+        assert _hex(engine.search_msm(text, 2, k=5, offset=5)) == _hex(want[5:10])
+
+
+def test_msm_and_search_after_serve_like_search(engine, spark, spark_jobs):
+    """From a fresh engine on a local index with no hot term,
+    ``search_msm`` and a ``search_after`` page run no Spark job and
+    take the driver route; below a query term's df they route
+    distributed and return the same bits."""
+    opt = AnalyzerOption(synonyms=SynonymDictionary({"검색": ["서치"]}))
+    text = "데이터 처리"
+    full = engine.search(text, k=10, conjunctive=False)
+    cursor = (full[4]["score"], full[4]["doc_id"])
+    got = {}
+
+    def serve():
+        got["engine"] = fresh = SearchEngine(spark, BASE, opt)
+        got["msm"] = fresh.search_msm(text, 2)
+        got["msm_route"] = fresh.last_route
+        got["after"] = fresh.search_after(text, after=cursor, k=5)
+        got["after_route"] = fresh.last_route
+
+    assert spark_jobs(serve) == 0
+    assert got["msm_route"] == got["after_route"] == "driver"
+    assert got["msm"] and _hex(got["after"]) == _hex(full[5:10])
+    df = got["engine"]._dfs(["데이터"])["데이터"]
+    hot = SearchEngine(spark, BASE, opt, max_driver_df=df - 1)
+    assert _hex(hot.search_msm(text, 2)) == _hex(got["msm"])
+    assert hot.last_route == "distributed"
+    assert _hex(hot.search_after(text, after=cursor, k=5)) == _hex(got["after"])
+    assert hot.last_route == "distributed"
+
+
+def test_search_after_walks_the_offset_ranking(engine, spark):
     """Keyset paging reproduces offset paging's ranking without the
-    O(depth) fetch: cursoring from page 1's last hit returns exactly
-    hits 6-10 of the disjunctive ranking."""
-    full = engine.search("검색 엔진", k=10, conjunctive=False)
-    p1 = engine.search_after("검색 엔진", k=5)
-    assert [(h["doc_id"], round(h["score"], 9)) for h in p1] == [
-        (h["doc_id"], round(h["score"], 9)) for h in full[:5]
-    ]
-    cursor = (p1[-1]["score"], p1[-1]["doc_id"])
-    p2 = engine.search_after("검색 엔진", after=cursor, k=5)
-    assert [h["doc_id"] for h in p2] == [h["doc_id"] for h in full[5:10]]
+    O(depth) fetch, on the driver route and on the distributed one:
+    walking ``search_after`` pages of 5 from no cursor, each page's
+    cursor the last hit before it, gives the top 30 of
+    ``search(conjunctive=False)`` bit for bit — a run of tied scores
+    straddles a page boundary."""
+    opt = AnalyzerOption(synonyms=SynonymDictionary({"검색": ["서치"]}))
+    text = "데이터 처리"
+    full = engine.search(text, k=30, conjunctive=False)
+    assert any(full[i]["score"] == full[i - 1]["score"] for i in range(5, 30, 5))
+    df = engine._dfs(["데이터"])["데이터"]
+    hot = SearchEngine(spark, BASE, opt, max_driver_df=df - 1)
+    for served, route in ((engine, "driver"), (hot, "distributed")):
+        pages, after = [], None
+        for _ in range(6):
+            page = served.search_after(text, after=after, k=5)
+            assert served.last_route == route
+            pages += page
+            after = (page[-1]["score"], page[-1]["doc_id"])
+        assert _hex(pages) == _hex(full), route
+
+
+def test_query_cli_search_after_applies_min_should_match(
+    engine, spark, capsys, monkeypatch
+):
+    """jobs/query.py --search-after with --min-should-match 2: the
+    cursor page holds only docs matching two query clauses, and it is
+    ``engine.search_after`` with that ``min_should_match``."""
+    import json
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path("jobs").resolve()))
+    import query as query_job
+
+    text = "검색 엔진"
+    first = engine.search_msm(text, 2, k=3)
+    after = (first[-1]["score"], first[-1]["doc_id"])
+    monkeypatch.setattr(
+        sys,
+        "argv",
+        ["query.py", "--index", BASE, "--query", text, "-k", "5",
+         "--search-after", f"{after[0]!r},{after[1]}", "--min-should-match", "2"],
+    )
+    monkeypatch.setattr(
+        "mecab_ko_lucene_analyzer_spark.plans.get_spark", lambda **kw: spark
+    )
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    query_job.main()
+    hits = json.loads(capsys.readouterr().out)
+    docs = _doc_terms(engine, spark)
+    assert hits and all(_clauses_matched(engine, text, docs[h["doc_id"]]) >= 2 for h in hits)
+    want = engine.search_after(text, after=after, k=5, min_should_match=2)
+    assert _hex(hits) == _hex(want)
+    assert _hex(hits) == _hex(engine.search_msm(text, 2, k=8)[3:])
 
 
 def test_count_conjunctive_vs_disjunctive(engine):

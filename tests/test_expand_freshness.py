@@ -17,7 +17,6 @@ from mecab_ko_lucene_analyzer_spark.index.build import InvertedIndex
 from mecab_ko_lucene_analyzer_spark.query.bm25 import (
     bm25_oracle,
     bm25_scored,
-    bm25_search_after,
     bm25_topk,
     filtered_topk,
     keyset_page,
@@ -389,28 +388,6 @@ def test_keyset_page_requires_full_cursor(spark):
     scored = spark.createDataFrame([(1, 1.0)], "doc_id long, score double")
     with pytest.raises(ValueError):
         keyset_page(scored, 1.0, None, k=2)
-
-
-def test_bm25_search_after_continues_topk(spark):
-    """Page 2 via the cursor == ranks 3-4 of the full ranking; page 1
-    with no cursor == bm25_topk."""
-    idx = _hand_index(spark)
-    full = [
-        (r.doc_id, r.score) for r in bm25_topk(idx, ["a", "c"], k=10).collect()
-    ]
-    p1 = [
-        (r.doc_id, r.score)
-        for r in bm25_search_after(idx, ["a", "c"], k=2).collect()
-    ]
-    assert p1 == full[:2]
-    last_doc, last_score = p1[-1]
-    p2 = [
-        (r.doc_id, r.score)
-        for r in bm25_search_after(
-            idx, ["a", "c"], after=(last_score, last_doc), k=2
-        ).collect()
-    ]
-    assert p2 == full[2:4]
 
 
 # --------------------------------------------------------------------------

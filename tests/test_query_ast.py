@@ -21,6 +21,7 @@ from mecab_ko_lucene_analyzer_spark.query.ast import (
     Not,
     Or,
     Phrase,
+    Sum,
     Term,
     build_query_ast,
     from_json,
@@ -382,6 +383,24 @@ def test_dismax_json_roundtrip():
     assert from_json(to_json(node)) == node
     # tie_breaker defaults to 0.0 when omitted in the JSON
     assert from_json('{"dis_max": [{"term": "x"}]}') == DisMax((Term("x"),))
+
+
+def test_sum_min_should_match_json_and_validation():
+    """``minimum_should_match`` renders only above 1 (a plain Sum keeps
+    its rendering), parses back, defaults to 1, and must be at least 1
+    — also under a negated subtree."""
+    sum_m = Sum((Term("a"), Term("b"), Term("c")), 2)
+    assert to_json(sum_m) == (
+        '{"sum": [{"term": "a"}, {"term": "b"}, {"term": "c"}], "minimum_should_match": 2}'
+    )
+    assert to_json(Sum((Term("a"),))) == '{"sum": [{"term": "a"}]}'
+    node = And((Term("x"), sum_m, Not(Sum((Term("d"), Term("e")), 2))))
+    assert from_json(to_json(node)) == node
+    assert from_json('{"sum": [{"term": "x"}]}') == Sum((Term("x"),), 1)
+    validate_ast(node)
+    for bad in (Sum((Term("a"),), 0), And((Term("x"), Not(Sum((Term("a"),), 0))))):
+        with pytest.raises(ValueError, match="min_should_match"):
+            validate_ast(bad)
 
 
 def test_dismax_validate_rejects_not_child():

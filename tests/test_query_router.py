@@ -472,29 +472,50 @@ _ast_st = st.recursive(
     lambda ch: st.one_of(
         st.builds(lambda cs: And(tuple(cs)), st.lists(ch, min_size=1, max_size=3)),
         st.builds(lambda cs: Or(tuple(cs)), st.lists(ch, min_size=1, max_size=3)),
-        st.builds(lambda cs: Sum(tuple(cs)), st.lists(ch, min_size=1, max_size=3)),
+        # a Sum with every min_should_match from 1 to one beyond its
+        # children (which matches nothing)
+        st.lists(ch, min_size=1, max_size=3).flatmap(
+            lambda cs: st.builds(
+                lambda m: Sum(tuple(cs), m), st.integers(1, len(cs) + 1)
+            )
+        ),
     ),
     max_leaves=5,
 )
 
 
-@given(ast=_ast_st)
+@pytest.fixture(scope="module")
+def spec_postings(spark):
+    """The index's corpus as the scoring spec reads it: (``{term: {doc:
+    [positions]}}``, ``{doc: doc_len}``)."""
+    from ast_reference import postings_from_tokens
+
+    pages = synthesize_webpages(spark, N_DOCS, partitions=5)
+    rows = sorted(pages.select("url", "text").collect(), key=lambda r: r["url"])
+    return postings_from_tokens({i: token_records(r["text"]) for i, r in enumerate(rows)})
+
+
+@given(ast=_ast_st, cut=st.none() | st.integers(0, 40))
 @settings(max_examples=8, deadline=None)
-def test_random_ast_distributed_matches_driver(spark, serving, ast):
-    """Random trees through the distributed flag-column/general plan vs
-    the driver evaluator — extends the 16 hand-picked ASTS to the
-    open tree space (fewer examples: each draw plans + runs Spark
-    jobs). Rank and score identity, plus count-path agreement."""
+def test_random_ast_distributed_matches_driver(spark, serving, spec_postings, ast, cut):
+    """Random trees — Sums with any ``min_should_match`` among them —
+    through the distributed flag-column/general plan and the driver
+    evaluator, each equal to the scoring spec (``ast_oracle``) bit for
+    bit; extends the hand-picked ASTS to the open tree space (fewer
+    examples: each draw plans + runs Spark jobs). With ``cut``, both
+    serve the page after the spec's hit at that rank (a
+    ``search_after`` cursor, ties included). Both counts are the
+    spec's match-set size."""
+    from ast_reference import ast_oracle
+
     from mecab_ko_lucene_analyzer_spark.query.ast import ast_terms
 
     blocks, term_stats, n_docs, avgdl = serving
-    terms = sorted(ast_terms(ast))
-    dfs = term_dfs(term_stats, terms)
-    got = distributed_ast_topk(ast, blocks, dfs, n_docs, avgdl, k=10)
-    want = execute_ast(ast, blocks, n_docs, avgdl, k=10)
-    assert [d for d, _ in got] == [d for d, _ in want]
-    for (_, s1), (_, s2) in zip(got, want):
-        assert s1 == pytest.approx(s2, abs=1e-9)
-    assert count_ast_blocks(ast, blocks, dfs, n_docs, avgdl) == count_ast(
-        ast, blocks, n_docs, avgdl
-    )
+    full = ast_oracle(ast, *spec_postings, n_docs, avgdl)
+    after = full[cut][::-1] if cut is not None and cut < len(full) else None
+    want = full[cut + 1 :][:10] if after else full[:10]
+    dfs = term_dfs(term_stats, sorted(ast_terms(ast)))
+    assert distributed_ast_topk(ast, blocks, dfs, n_docs, avgdl, 10, after) == want
+    assert execute_ast(ast, blocks, n_docs, avgdl, k=10, after=after) == want
+    assert count_ast_blocks(ast, blocks, dfs, n_docs, avgdl) == len(full)
+    assert count_ast(ast, blocks, n_docs, avgdl) == len(full)

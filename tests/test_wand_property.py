@@ -133,7 +133,8 @@ def tied_bags(draw):
             if src in tfs:
                 tfs[d] = tfs[src]
     query = query + draw(st.lists(st.sampled_from(["absent1", "absent2"]), unique=True))
-    return n_docs, doc_lens, postings, query, block_size
+    m = draw(st.integers(min_value=1, max_value=len(set(query)) + 1))
+    return n_docs, doc_lens, postings, query, block_size, m
 
 
 @settings(max_examples=300, deadline=None)
@@ -142,22 +143,31 @@ def test_maxscore_equals_full_evaluation(data):
     """The MaxScore step of a bag's top-k gives the full evaluation's
     top-k, ``(doc_id, score.hex())`` for every hit: for k from 1 to
     beyond the match count and at every k whose cutoff falls inside a
-    group of equal scores; for single-term bags, absent terms and block
-    sizes 2, 3 and 128."""
-    n_docs, doc_lens, postings, query, block_size = data
+    group of equal scores; for every ``min_should_match`` from 1 to one
+    beyond the terms, with no cursor and with a ``search_after`` cursor
+    at the first, middle and last hit and inside every run of equal
+    scores; for single-term bags, absent terms and block sizes 2, 3
+    and 128."""
+    n_docs, doc_lens, postings, query, block_size, m = data
     avgdl = sum(doc_lens) / n_docs
     bound = _bind(postings, doc_lens, n_docs, avgdl, block_size)
-    bag = bag_ast(query)
+    bag = Sum(bag_ast(query).children, m)
     full = _top_k(*_evaluate(bag, bound, avgdl), n_docs + 1)
+    ties = [i for i in range(1, len(full)) if full[i][1] == full[i - 1][1]]
     ks = {1, 2, 3, 10, len(full), len(full) + 1, len(full) + 5}
     # a cutoff inside a run of equal scores: θ is one of the tied scores
-    ks.update(i + 1 for i in range(1, len(full)) if full[i][1] == full[i - 1][1])
-    for k in sorted(ks):
-        want = [(d, s.hex()) for d, s in full[:k]]
-        got = _bag_top_k(bag.children, bound, avgdl, k)
-        assert [(d, s.hex()) for d, s in got] == want, k
-        assert _execute_bound(bag, bound, avgdl, k) == got
-    assert _bag_top_k(bag.children, bound, avgdl, 0) == []
+    ks.update(i + 1 for i in ties)
+    cuts = {None, 0, len(full) // 2, len(full) - 1} | {i - 1 for i in ties}
+    for cut in cuts:
+        if cut is None or 0 <= cut < len(full):
+            rest = full if cut is None else full[cut + 1 :]
+            after = None if cut is None else full[cut][::-1]
+            for k in sorted(ks):
+                want = [(d, s.hex()) for d, s in rest[:k]]
+                got = _bag_top_k(bag, bound, avgdl, k, after)
+                assert [(d, s.hex()) for d, s in got] == want, (k, cut)
+                assert _execute_bound(bag, bound, avgdl, k, after) == got
+    assert _bag_top_k(bag, bound, avgdl, 0) == []
 
 
 def test_maxscore_keeps_a_tie_at_the_cutoff_across_terms():
@@ -180,7 +190,7 @@ def test_maxscore_keeps_a_tie_at_the_cutoff_across_terms():
             bag = bag_ast(postings)
             full = _top_k(*_evaluate(bag, bound, avgdl), k)
             assert [d for d, _ in full] == list(range(k))
-            got = _bag_top_k(bag.children, bound, avgdl, k)
+            got = _bag_top_k(bag, bound, avgdl, k)
             assert [(d, s.hex()) for d, s in got] == [(d, s.hex()) for d, s in full]
 
 
@@ -202,8 +212,10 @@ def and_or_asts(draw):
             )
         )
         kind = draw(st.sampled_from(["or", "sum", 0.0, 0.3, 1.0]))
-        groups.append((members, kind))
-    top = draw(st.sampled_from([And, Sum]))
+        m = draw(st.integers(min_value=1, max_value=len(members) + 1))
+        groups.append((members, kind, m))
+    top_m = draw(st.integers(min_value=1, max_value=n_groups + 1))
+    top = draw(st.sampled_from([And, lambda cs: Sum(cs, top_m)]))
     return n_docs, doc_lens, postings, groups, top, k, block_size
 
 
@@ -212,22 +224,23 @@ def and_or_asts(draw):
 def test_and_or_evaluator_matches_brute_force(data):
     """The AST evaluator equals the pure-Python scoring spec — docs,
     ranks and bit-identical scores — over arbitrary random postings
-    and random AND/SUM-of-(Term|Or|Sum|DisMax) shapes, including groups
-    whose terms have no postings at all; and its count is the spec's
-    full match-set size."""
+    and random AND/SUM-of-(Term|Or|Sum|DisMax) shapes, each Sum with a
+    ``min_should_match`` from 1 to one beyond its children, including
+    groups whose terms have no postings at all; and its count is the
+    spec's full match-set size."""
     from ast_reference import ast_oracle
 
     n_docs, doc_lens, postings, groups, top, k, block_size = data
     avgdl = sum(doc_lens) / n_docs
     bound = _bind(postings, doc_lens, n_docs, avgdl, block_size)
 
-    def node(members, kind):
+    def node(members, kind, m):
         if len(members) == 1:
             return Term(members[0])
-        terms = tuple(Term(m) for m in members)
+        terms = tuple(Term(t) for t in members)
         if kind == "or":
             return Or(terms)
-        return Sum(terms) if kind == "sum" else DisMax(terms, kind)
+        return Sum(terms, m) if kind == "sum" else DisMax(terms, kind)
 
     ast = node(*groups[0]) if len(groups) == 1 else top(tuple(node(*g) for g in groups))
     spec_postings = {
